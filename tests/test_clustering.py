@@ -303,3 +303,22 @@ def test_semdedup_losers_matches_join(spark):
     assert len(kernel_rows) == len(set(kernel_rows))  # already distinct
     assert set(kernel_rows) == join_rows
     assert len(join_rows) > 0  # fixture actually exercises the rule
+
+
+def test_semdedup_losers_refuses_int64_overflow(spark):
+    """The kernel's near test 25*dot^2 >= 4*va*vb runs in int64: data
+    whose bound 25*(dim*max|q|^2)^2 reaches 2^63 must raise, not wrap
+    silently; data just inside the bound still runs exactly."""
+    from webfilter.clustering import semdedup_cluster_losers
+
+    def asg(amax):
+        qs = [[amax, amax, amax, amax - i] for i in range(3)]
+        return spark.createDataFrame(
+            [(i, 0, float(i), q, sum(x * x for x in q)) for i, q in enumerate(qs)],
+            "vec_id bigint, cluster bigint, ckey double, qv array<bigint>, vv bigint",
+        )
+
+    inside = semdedup_cluster_losers(asg(10_000)).collect()  # 4.0e18 < 2^63
+    assert {(r["vec_id"], r["cluster"]) for r in inside} == {(1, 0), (2, 0)}
+    with pytest.raises(Exception, match="exactness envelope"):
+        semdedup_cluster_losers(asg(20_000)).collect()  # 6.4e19 >= 2^63

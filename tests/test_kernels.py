@@ -189,6 +189,8 @@ def test_scrub_parity_tricky_boundaries(spark):
         "mail zoé@exämple.com x",          # non-ascii email-ish
         "ip 1.2.3.4é and 10.0.0.1 plain",
         "phone (555) 123-4567 nbsp",
+        "10.172.61.131 566-566-9299",     # IP ending in 1, then a phone
+        "3051-3051-3051-3051 452-452-3044",  # card ending in 1, then a phone
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = {r["text"]: r["s"] for r in df.select("text", scrubbed_col(F.col("text")).alias("s")).collect()}
@@ -219,3 +221,7 @@ def test_phone_pattern_never_matches_inside_digit_runs():
     assert scrub_one("call 555 123 4567 now")[0] == "call <PHONE> now"
     assert scrub_one("(555) 123-4567")[0] == "<PHONE>"
     assert scrub_one("+1 555-123-4567")[0] == "<PHONE>"
+    # the optional '1 ' country code must not take the last digit of a
+    # preceding IP or card number (the card would then leak)
+    assert scrub_one("10.172.61.131 566-566-9299")[0] == "<IP> <PHONE>"
+    assert scrub_one("3051-3051-3051-3051 452-452-3044")[0] == "<CC> <PHONE>"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from webfilter.kernels.qualityclf import quality_prob_batch
@@ -117,19 +118,119 @@ def test_und_threshold_follows_config(spark):
     df = spark.createDataFrame(
         [("k j q x z w v b n m g h p q r s t",)], "text string"
     )  # gibberish: a real prediction with low confidence
-    strict = scoring.with_scores(df, "text", und_threshold=0.99).collect()[0]
-    loose = scoring.with_scores(df, "text", und_threshold=0.0).collect()[0]
+    def score(frame, und):
+        return scoring.with_model_scores(
+            frame, "text", extract=False, scrub=False, und_threshold=und
+        )
+
+    strict = score(df, 0.99).collect()[0]
+    loose = score(df, 0.0).collect()[0]
     assert strict["langid"] == "und"
     assert loose["langid"] != "und"
     # and re-scoring a frame that already has score columns works
     # (duplicate-column guard)
-    rescored = scoring.with_scores(
+    rescored = score(
         spark.createDataFrame(
             [("hello world", "xx", 0.1, 1.0, 0.5)],
             "text string, langid string, langid_conf double, "
             "perplexity double, quality_prob double",
         ),
-        "text",
+        0.5,
     )
     assert rescored.columns.count("langid") == 1
     assert rescored.collect()[0]["langid"] != "xx"
+
+
+# ------------------------------------------- the one model-stage UDF
+
+
+def _synth_pages(n: int = 300) -> pd.DataFrame:
+    from webfilter import synth
+
+    b = synth.gen_batch(np.arange(n), n)
+    return b[b["row_kind"] == "main"].reset_index(drop=True)
+
+
+@pytest.mark.parametrize("extract", [True, False])
+@pytest.mark.parametrize("scrub", [True, False])
+def test_score_udf_matches_direct_kernel_calls(extract, scrub):
+    """Every shape of the factory's UDF, run on a local pandas batch
+    (no Spark), equals the kernels called one by one, in schema
+    order."""
+    from webfilter.kernels import langid, perplexity, qualityclf
+    from webfilter.kernels.extract import extract_batch
+    from webfilter.kernels.scrubber import scrub_texts
+    from webfilter.scoring import make_score_udf, score_schema
+
+    html = _synth_pages()["html"]
+    ext = extract_batch(html)
+    text = ext["text"]
+    ids = langid.predict_batch(text)
+    want = pd.DataFrame({
+        "text": text, "title": ext["title"], "extract_err": ext["err"],
+        "langid": ids["langid"], "langid_conf": ids["langid_conf"],
+        "perplexity": perplexity.score_batch(text),
+        "quality_prob": qualityclf.quality_prob_batch(text),
+        "scrubbed_text": scrub_texts(text),
+    })[score_schema(extract, scrub).fieldNames()]
+    udf = make_score_udf(extract, scrub)
+    got = udf.func(html if extract else text)
+    pd.testing.assert_frame_equal(got, want)
+    assert udf.returnType == score_schema(extract, scrub)
+    assert make_score_udf(extract, scrub) is udf  # one UDF per shape
+
+
+def test_pre_extracted_boilerplate_path_scrubs_cleaned_text(spark):
+    """filtered_frame(pre_extracted=True, boilerplate=True): the UDF
+    scores the given text without scrubbing; the JVM scrub chain then
+    scrubs the CLEANED text, byte-identical to the Python scrubber."""
+    from webfilter.boilerplate import clean_text_col
+    from webfilter.kernels.extract import extract_batch
+    from webfilter.kernels.scrubber import scrub_one
+    from webfilter.pipeline import filtered_frame
+
+    b = _synth_pages()
+    b["text"] = extract_batch(b["html"])["text"]
+    pages = spark.createDataFrame(b[["url", "warc_ts", "html", "text", "lang"]])
+    out = filtered_frame(pages, pre_extracted=True, boilerplate=True)
+    rows = out.select(
+        "url", "text", "scrubbed_text", "pii_found", "extract_err"
+    ).collect()
+    want = {
+        r["url"]: r["c"]
+        for r in pages.select(
+            "url", clean_text_col(F.col("text"))["clean_text"].alias("c")
+        ).collect()
+    }
+    assert len(rows) == len(b)
+    for r in rows:
+        assert r["text"] == want[r["url"]]
+        assert r["scrubbed_text"] == scrub_one(r["text"])[0]
+        assert r["pii_found"] == (r["scrubbed_text"] != (r["text"] or ""))
+        assert r["extract_err"] == "pre_extracted"
+    assert any(r["pii_found"] for r in rows)
+    assert any(want[u] != t for u, t in zip(b["url"], b["text"]))  # cleaned
+
+
+def test_benchmark_imported_names_are_pinned():
+    """perfbench/ imports these four names; their signatures and the
+    fused schema's field order are part of the benchmark's contract."""
+    import inspect
+
+    from webfilter import scoring
+
+    assert scoring.EXTRACT_SCORE_SCRUB_SCHEMA.fieldNames() == [
+        "text", "title", "extract_err", "langid", "langid_conf",
+        "perplexity", "quality_prob", "scrubbed_text",
+    ]
+    assert scoring.extract_score_scrub_udf is scoring.make_score_udf(True, True)
+    assert (
+        scoring.extract_score_scrub_udf.returnType
+        == scoring.EXTRACT_SCORE_SCRUB_SCHEMA
+    )
+    for fn in (scoring.with_extract_scores_scrub, scoring.with_extract_and_scores):
+        params = inspect.signature(fn).parameters
+        assert [(p.name, p.default) for p in params.values()] == [
+            ("df", inspect.Parameter.empty), ("html_col", "html"),
+            ("und_threshold", 0.5),
+        ]

@@ -85,8 +85,9 @@ def semdedup_cluster_losers(asg: DataFrame) -> DataFrame:
     an interpreted zip_with/aggregate lambda (O(n^2/k) pairs * dim
     interpreted ops — the r5 bench's single slowest query at sf1,
     80 s) with one int64 Gram matrix per cluster in numpy. All
-    arithmetic stays in the exact integer space (int64 matmul; the
-    module-docstring 2^53 bound applies unchanged), and the loser
+    arithmetic stays in the exact integer space (the module-docstring
+    2^53 bound applies unchanged; data outside the kernel's int64
+    exactness envelope raises ValueError), and the loser
     rule compares the same IEEE doubles Spark computed for ckey, so
     the result set is bit-identical. Blocked matmul bounds memory at
     ~blk * n int64s per task; parallelism = k tasks (cluster-local
@@ -106,25 +107,32 @@ def semdedup_cluster_losers(asg: DataFrame) -> DataFrame:
         ck = pdf["ckey"].to_numpy(dtype=np.float64)
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         loser = np.zeros(n, dtype=bool)
-        # numpy's int64 matmul has no BLAS kernel (opt guide §4.2);
-        # when every pairwise |dot| partial sum is provably < 2^52
-        # (|sum q_a_i*q_b_i| <= dim*amax^2, data-checked per task),
-        # a float64 dgemm produces the EXACT same integers for any
-        # summation order — every intermediate is an exactly
-        # representable integer — so rint-back to int64 is lossless
-        # and the comparison logic below is untouched. Outside the
-        # bound, fall back to the exact int64 matmul.
         amax = int(np.abs(q).max()) if q.size else 0
         dim = q.shape[1] if q.ndim == 2 else 0
-        f64_ok = dim * amax * amax < 2**52
-        qf = q.astype(np.float64) if f64_ok else None
+        # Exactness envelope, data-checked per task. The near test
+        # below squares dot in int64: 25*dot^2 and 4*va*vb are both
+        # <= 25*(dim*amax^2)^2, which must be < 2^63 or the comparison
+        # silently wraps, so such data is refused. Inside the envelope
+        # every pairwise |dot| partial sum (<= dim*amax^2 < 2^30) is
+        # far below 2^52, so a float64 dgemm (numpy's int64 matmul has
+        # no BLAS kernel, opt guide §4.2) produces the EXACT same
+        # integers for any summation order — every intermediate is an
+        # exactly representable integer — and rint-back to int64 is
+        # lossless. The proof assumes a conventional inner-product
+        # dgemm (blocked and/or FMA); a Strassen-type kernel's
+        # intermediates could exceed the bound.
+        if 25 * (dim * amax * amax) ** 2 >= 2**63:
+            raise ValueError(
+                "semdedup_cluster_losers: quantized vectors outside the "
+                f"int64 exactness envelope (dim={dim}, max|q|={amax}: "
+                "25*(dim*max|q|^2)^2 must be < 2^63); lower the "
+                "quantization scale"
+            )
+        qf = q.astype(np.float64)
         blk = 2048
         for i0 in range(0, n, blk):
             i1 = min(i0 + blk, n)
-            if f64_ok:
-                dot = np.rint(qf[i0:i1] @ qf.T).astype(np.int64)
-            else:
-                dot = q[i0:i1] @ q.T  # int64, exact
+            dot = np.rint(qf[i0:i1] @ qf.T).astype(np.int64)
             near = (dot > 0) & (
                 25 * dot * dot >= 4 * v[i0:i1, None] * v[None, :]
             )

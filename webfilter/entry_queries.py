@@ -47,10 +47,6 @@ _WS = r"[ \t\n\v\f\r]"
 _TRIMCHARS = "' '"
 
 
-def _sqltrim(expr: str) -> str:
-    return f"trim({expr}, {_TRIMCHARS})"
-
-
 # DuckDB token expr mirroring rules.tokens_col: maximal runs of
 # non-(ASCII-)whitespace — split the RAW text, drop empty fragments.
 # (split of '' yields [''] on both engines; the filter removes it.)
@@ -899,17 +895,21 @@ CROSS JOIN (VALUES ('min_words'), ('symbol_ratio'), ('stopwords')) AS r(rule_nam
 
 
 def q_langid(spark, sf_dir):
-    from .scoring import with_scores
+    from .scoring import with_model_scores
 
-    return with_scores(_docs(spark, sf_dir)).select(
+    return with_model_scores(
+        _docs(spark, sf_dir), "text", extract=False, scrub=False
+    ).select(
         "doc_id", "langid", r6(F.col("langid_conf")).alias("langid_conf")
     )
 
 
 def q_perplexity(spark, sf_dir):
-    from .scoring import with_scores
+    from .scoring import with_model_scores
 
-    return with_scores(_docs(spark, sf_dir)).select(
+    return with_model_scores(
+        _docs(spark, sf_dir), "text", extract=False, scrub=False
+    ).select(
         "doc_id", r6(F.col("perplexity")).alias("perplexity")
     )
 
@@ -928,7 +928,7 @@ def q_langid_fixture_labels(spark, sf_dir):
     threshold) breaks the multiset match. Low-margin behavior stays
     pytest-covered (tests/test_kernels.py)."""
     from .kernels.corpora import LANGS, WORDLISTS, ZH_CHARS
-    from .scoring import with_scores
+    from .scoring import with_model_scores
 
     def _text(i: int) -> str:
         lang = LANGS[i % 5]
@@ -942,7 +942,8 @@ def q_langid_fixture_labels(spark, sf_dir):
     df = spark.createDataFrame(
         [(i, _text(i)) for i in range(200)], "doc_id long, text string"
     )
-    return with_scores(df).select("doc_id", "langid")
+    scored = with_model_scores(df, "text", extract=False, scrub=False)
+    return scored.select("doc_id", "langid")
 
 
 SQL_LANGID_FIXTURE = """
@@ -996,8 +997,9 @@ def q_perplexity_contrast(spark, sf_dir):
     <= 5.0 vs ppl_gib >= 70,516 for every pair, so the boolean is
     margin-stable. Both sides run through the real scoring kernel in
     one Arrow batch; the oracle is the constant expected truth."""
-    from .scoring import score_udf
+    from .scoring import make_score_udf
 
+    score_udf = make_score_udf(False, False)
     df = _contrast_fixture(spark)
     return df.select(
         "doc_id",
@@ -1018,8 +1020,9 @@ def q_quality_contrast(spark, sf_dir):
     q_perplexity_contrast): vocabulary-like text must score a higher
     quality probability than consonant-soup gibberish on every pair
     (measured min margin 0.0316 — deterministic model, so stable)."""
-    from .scoring import score_udf
+    from .scoring import make_score_udf
 
+    score_udf = make_score_udf(False, False)
     df = _contrast_fixture(spark)
     return df.select(
         "doc_id",
@@ -1042,7 +1045,7 @@ def q_filter_full(spark, sf_dir):
     from . import rules, scoring, scrub
 
     df = _docs(spark, sf_dir)
-    df = scoring.with_scores(df)
+    df = scoring.with_model_scores(df, "text", extract=False, scrub=False)
     df = rules.with_heuristics(df)
     df = rules.model_rule_columns(df)
     df = rules.with_decision(df)

@@ -4,10 +4,12 @@ This fills the reference's unimplemented "TODO: Add redactions"
 (databricks/retriever/pubmed_wf/03_Curate_Articles.py:10). One ordered
 pattern list drives three consumers that must agree byte-for-byte:
 
-1. the Spark JVM-side ``regexp_replace`` chain (webfilter.scrub) —
-   the hot path, whole-stage-codegen'd, zero Python;
-2. this module's ``scrub_one``/``scrub_batch`` — the golden oracle
-   used by pytest;
+1. this module's ``scrub_texts`` — the pipeline's default path, run
+   inside the fused model-stage UDF (webfilter.scoring) — and
+   ``scrub_one``/``scrub_batch``, the golden oracle used by pytest;
+2. the Spark JVM-side ``regexp_replace`` chain (webfilter.scrub) —
+   the pipeline's ``boilerplate=True`` path, which must scrub the
+   cleaned text, and the registry's scrub queries;
 3. DuckDB ``regexp_replace(..., 'g')`` in the driver's oracle SQL.
 
 Pattern dialect rules for that three-way agreement: Java regex,
@@ -51,8 +53,12 @@ SCRUB_PATTERNS: tuple[tuple[str, str, str], ...] = (
         # leading \b on the bare-digit branch: without it the pattern
         # matched INSIDE longer digit runs ('serial 98765 432 1098'
         # -> 'serial 98<PHONE>'), destroying non-PII text (code-review
-        # r4c11 finding #1; the SSN/CC patterns already anchor)
-        r"(?:\+?1[ .\-])?(?:\([0-9]{3}\)[ .\-]?|\b[0-9]{3}[ .\-])[0-9]{3}[ .\-][0-9]{4}\b",
+        # r4c11 finding #1; the SSN/CC patterns already anchor). The
+        # optional '1 ' country code needs a '+' or a \b too: bare, it
+        # took the last digit of a preceding card number or IP
+        # ('3051-3051-3051-3051 452-452-3044' -> '...305<PHONE>', the
+        # card then leaking past the credit_card pattern)
+        r"(?:(?:\+|\b)1[ .\-])?(?:\([0-9]{3}\)[ .\-]?|\b[0-9]{3}[ .\-])[0-9]{3}[ .\-][0-9]{4}\b",
         "<PHONE>",
     ),
     (

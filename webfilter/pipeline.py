@@ -4,11 +4,15 @@ Stage graph (each stage reads/writes tables, never in-memory handoff
 across runs — the reference's table-state architecture,
 SURVEY.md §3):
 
-  pages --latest-per-url--> extract --> score (one Arrow UDF pass)
+  pages --latest-per-url--> model stage (one Arrow UDF pass:
+        extract, langid, perplexity, quality classifier, PII scrub)
         --> heuristic rules (pure Column exprs) --> decision
-        --> scrub (JVM regexp fold) --> decisions table
+        --> decisions table
         +-> per-bucket & per-host audit metrics --> audit table
         +-> manifest DONE marks
+
+With ``boilerplate=True`` the UDF does not scrub: block cleaning runs
+after it, and the JVM regexp fold (scrub.py) scrubs the cleaned text.
 
 Scale notes (100 TB / 10^12 docs):
 * one shuffle total in the hot path (latest-per-url window on url);
@@ -18,7 +22,7 @@ Scale notes (100 TB / 10^12 docs):
   parquet partition dirs);
 * per-host audit aggregation is salted two-phase (hot hosts hold
   ~35% of rows);
-* the scoring UDF sees Arrow batches of 4096 docs; model init is
+* the model-stage UDF sees Arrow batches of 4096 docs; model init is
   once per python worker (module import cache).
 """
 
@@ -97,6 +101,7 @@ def filtered_frame(
     df = latest_per_url(
         pages, cluster_col="bucket_id" if bucket_clustered and not canonical else None
     )
+    src = "text" if pre_extracted else "html"  # the model stage's input
     if cfg.max_payload_bytes is not None:
         # fetch-payload cap (see RuleConfig.max_payload_bytes): NULL
         # out oversize payloads BEFORE the pandas UDF so their bytes
@@ -104,48 +109,31 @@ def filtered_frame(
         # count, so one giant page would otherwise balloon a whole
         # batch in the python worker. NULL-payload rows pass the gate
         # (nothing to ship; extraction surfaces its own null_html err).
-        pcol = "text" if pre_extracted else "html"
         # length() on binary counts bytes; octet_length covers strings
-        size = (
-            F.octet_length(F.col(pcol)) if pre_extracted else F.length(F.col(pcol))
-        )
+        size = F.octet_length(F.col(src)) if pre_extracted else F.length(F.col(src))
         within = F.coalesce(size <= cfg.max_payload_bytes, F.lit(True))
         df = df.withColumn("rule_max_payload_bytes", within).withColumn(
-            pcol, F.when(within, F.col(pcol))
+            src, F.when(within, F.col(src))
         )
-    # Scrub fusion (VERDICT r4 #3): when no boilerplate stage sits
-    # between extraction and scrub, the shipped text IS the extracted
-    # text, so the scrub fold runs inside the same Arrow UDF pass over
-    # the already-in-memory pandas block — each document is traversed
-    # once instead of twice (UDF scores + JVM regexp chain).
-    # pii_found stays a JVM comparison on the way out. With
-    # boilerplate on, scrub must see the CLEANED text, so the staged
-    # path below remains.
-    fuse_scrub = not boilerplate
+    # One Arrow pass runs the whole model stage. Without a boilerplate
+    # stage the shipped text IS the extracted text, so the scrub fold
+    # runs inside the same pass (VERDICT r4 #3) and each document is
+    # traversed once; pii_found stays a JVM comparison on the way out.
+    # With boilerplate on, scrub must see the CLEANED text, so the
+    # JVM chain below runs instead. WET-style input (pre_extracted)
+    # skips extraction and scores the given text with the same
+    # kernels: given identical text, decisions are identical to the
+    # html path (test-proved against the golden labels).
+    df = scoring.with_model_scores(
+        df,
+        src,
+        extract=not pre_extracted,
+        scrub=not boilerplate,
+        und_threshold=cfg.min_langid_conf,
+    )
     if pre_extracted:
-        # WET-style input: text is already extracted (conversion
-        # records carry no html), so run the SAME fused score kernels
-        # over the given text — one Arrow pass, no extraction. Given
-        # identical text, decisions are identical to the html path
-        # (test-proved against the golden labels).
-        if fuse_scrub:
-            df = scoring.with_scores_scrub(
-                df, "text", und_threshold=cfg.min_langid_conf
-            )
-        else:
-            df = scoring.with_scores(
-                df, "text", und_threshold=cfg.min_langid_conf
-            )
         df = df.withColumn("title", F.lit(None).cast("string")).withColumn(
             "extract_err", F.lit("pre_extracted")
-        )
-    elif fuse_scrub:
-        df = scoring.with_extract_scores_scrub(
-            df, und_threshold=cfg.min_langid_conf
-        )
-    else:
-        df = scoring.with_extract_and_scores(
-            df, und_threshold=cfg.min_langid_conf
         )
     if cfg.max_payload_bytes is not None:
         # honest lineage: the extract kernel saw NULL for oversize
@@ -221,7 +209,7 @@ def filtered_frame(
     df = rules.with_heuristics(df, cfg=cfg)
     df = rules.model_rule_columns(df, cfg)
     df = rules.with_decision(df, rules.rule_names_for(cfg))
-    if fuse_scrub:
+    if not boilerplate:
         # scrubbed_text came out of the fused UDF; keep the exact
         # with_scrubbed NULL contract (NULL text -> '' scrubbed) and
         # pii_found comparison, both JVM-side

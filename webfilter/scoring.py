@@ -1,56 +1,100 @@
-"""Vectorized model-scoring stage: langid + perplexity in ONE
-Arrow-batched pandas UDF.
+"""Vectorized model stage: extract, langid, perplexity, quality
+classifier and PII scrub in ONE Arrow-batched pandas UDF.
 
-One UDF (not two) so each text batch crosses the JVM<->Python Arrow
-boundary exactly once; the struct return + single projection apart is
-the reference's nested-struct UDF pattern
-(python/biomed_genai/retriever/pubmed_wf/pmc.py:90-96 projected at
-databricks/retriever/pubmed_wf/03_Curate_Articles.py:67-78), done
-vectorized per the pandas_udf template at
+One UDF body serves every input shape. ``make_score_udf(extract,
+scrub)`` picks the kernels: ``extract`` takes html in and ships back
+the extracted text/title/err; ``scrub`` adds ``scrubbed_text``, which
+is only right when the scored text IS the shipped text (no
+boilerplate stage in between — the pipeline gates that). Each batch
+crosses the JVM<->Python Arrow boundary exactly once, and the struct
+return + single projection apart is the reference's nested-struct UDF
+pattern (python/biomed_genai/retriever/pubmed_wf/pmc.py:90-96
+projected at databricks/retriever/pubmed_wf/03_Curate_Articles.py:67-78),
+done vectorized per the pandas_udf template at
 databricks/model/bc_chat_ift/_setup/utils.py:61-63.
 """
 
 from __future__ import annotations
+
+from functools import cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("langid", T.StringType()),
-        T.StructField("langid_conf", T.DoubleType()),
-        T.StructField("perplexity", T.DoubleType()),
-        T.StructField("quality_prob", T.DoubleType()),
-    ]
+_S, _D = T.StringType(), T.DoubleType()
+_EXTRACT_FIELDS = (("text", _S), ("title", _S), ("extract_err", _S))
+_SCORE_FIELDS = (
+    ("langid", _S), ("langid_conf", _D), ("perplexity", _D), ("quality_prob", _D)
 )
+_SCRUB_FIELDS = (("scrubbed_text", _S),)
 
 
-@F.pandas_udf(SCORE_SCHEMA)
-def score_udf(text: pd.Series) -> pd.DataFrame:
-    # imports inside the UDF so executors train the model once per
-    # python worker (module import is cached), never per batch
-    from webfilter.kernels import langid as _langid
-    from webfilter.kernels import perplexity as _ppl
-    from webfilter.kernels import qualityclf as _qclf
-
-    out = _langid.predict_batch(text)
-    out["perplexity"] = _ppl.score_batch(text)
-    out["quality_prob"] = _qclf.quality_prob_batch(text)
-    return out
+def score_schema(extract: bool, scrub: bool) -> T.StructType:
+    """Return type of ``make_score_udf(extract, scrub)``: the extract,
+    score and scrub field groups, in that order."""
+    fields = (
+        (_EXTRACT_FIELDS if extract else ()) + _SCORE_FIELDS
+        + (_SCRUB_FIELDS if scrub else ())
+    )
+    return T.StructType([T.StructField(n, t) for n, t in fields])
 
 
-_SCORE_COLS = ("langid", "langid_conf", "perplexity", "quality_prob")
+@cache
+def make_score_udf(extract: bool, scrub: bool, /):
+    """The model-stage pandas UDF over html (``extract``) or text.
+    Cached (positional-only, so one key per shape): every caller of
+    one shape shares one UDF object."""
+
+    def score(src: pd.Series) -> pd.DataFrame:
+        # imports inside the UDF so executors train each model once
+        # per python worker (module import is cached), never per batch
+        from webfilter.kernels import langid, perplexity, qualityclf
+
+        cols = {}
+        text = src
+        if extract:
+            from webfilter.kernels.extract import extract_batch
+
+            ext = extract_batch(src)
+            text = ext["text"]
+            cols.update(text=text, title=ext["title"], extract_err=ext["err"])
+        ids = langid.predict_batch(text)
+        cols.update(
+            langid=ids["langid"],
+            langid_conf=ids["langid_conf"],
+            perplexity=perplexity.score_batch(text),
+            quality_prob=qualityclf.quality_prob_batch(text),
+        )
+        if scrub:
+            from webfilter.kernels.scrubber import scrub_texts
+
+            cols["scrubbed_text"] = scrub_texts(text)
+        return pd.DataFrame(cols)
+
+    return F.pandas_udf(score, score_schema(extract, scrub))
 
 
-def _with_und(df: DataFrame, und_threshold: float) -> DataFrame:
-    """Low-confidence language ids are unreliable -> 'und' (the
-    fastText convention).  A COLUMN expression, not UDF logic, so the
-    threshold follows RuleConfig.min_langid_conf instead of being a
-    hardcoded 0.5 that silently floored any lower configured value
-    (code-review r4c6 finding #2)."""
-    return df.withColumn(
+def with_model_scores(
+    df: DataFrame,
+    src_col: str,
+    *,
+    extract: bool,
+    scrub: bool,
+    und_threshold: float = 0.5,
+) -> DataFrame:
+    """Adds the ``score_schema(extract, scrub)`` columns from one Arrow
+    pass over ``src_col``. Pre-existing output columns are replaced,
+    not duplicated (code-review r4c6 finding #6). Low-confidence
+    language ids become 'und' (the fastText convention) as a COLUMN
+    expression, so the threshold follows RuleConfig.min_langid_conf
+    instead of a hardcoded 0.5 (code-review r4c6 finding #2)."""
+    names = score_schema(extract, scrub).fieldNames()
+    keep = [c for c in df.columns if c not in names]
+    out = df.withColumn("_ms", make_score_udf(extract, scrub)(F.col(src_col)))
+    out = out.select(*keep, *(f"_ms.{n}" for n in names))
+    return out.withColumn(
         "langid",
         F.when(
             F.col("langid_conf") < F.lit(float(und_threshold)), F.lit("und")
@@ -58,157 +102,18 @@ def _with_und(df: DataFrame, und_threshold: float) -> DataFrame:
     )
 
 
-def with_scores(
-    df: DataFrame, text_col: str = "text", und_threshold: float = 0.5
-) -> DataFrame:
-    """Adds langid, langid_conf, perplexity via one Arrow round-trip.
-    Pre-existing score columns are replaced, not duplicated (the
-    with_extract_and_scores guard — code-review r4c6 finding #6)."""
-    cols = [c for c in df.columns if c not in _SCORE_COLS]
-    out = df.withColumn("_score", score_udf(F.col(text_col))).select(
-        *cols, "_score.langid", "_score.langid_conf", "_score.perplexity",
-        "_score.quality_prob",
+# ---- names the benchmark (perfbench/) imports: bindings of the above
+extract_score_scrub_udf = make_score_udf(True, True)
+EXTRACT_SCORE_SCRUB_SCHEMA = score_schema(True, True)
+
+
+def with_extract_scores_scrub(df, html_col="html", und_threshold=0.5):
+    return with_model_scores(
+        df, html_col, extract=True, scrub=True, und_threshold=und_threshold
     )
-    return _with_und(out, und_threshold)
 
 
-EXTRACT_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("extract_err", T.StringType()),
-        T.StructField("langid", T.StringType()),
-        T.StructField("langid_conf", T.DoubleType()),
-        T.StructField("perplexity", T.DoubleType()),
-        T.StructField("quality_prob", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(EXTRACT_SCORE_SCHEMA)
-def extract_score_udf(html: pd.Series) -> pd.DataFrame:
-    """Fused extract+score: the html bytes cross the Arrow boundary
-    once and the extracted text never round-trips back to the JVM for
-    a second UDF — one Python hop for the whole model stage (the hot
-    path at 100 TB is Arrow serialization, not the kernels)."""
-    from webfilter.kernels import langid as _langid
-    from webfilter.kernels import perplexity as _ppl
-    from webfilter.kernels import qualityclf as _qclf
-    from webfilter.kernels.extract import extract_batch
-
-    out = extract_batch(html).rename(columns={"err": "extract_err"})
-    scores = _langid.predict_batch(out["text"])
-    out["langid"] = scores["langid"]
-    out["langid_conf"] = scores["langid_conf"]
-    out["perplexity"] = _ppl.score_batch(out["text"])
-    out["quality_prob"] = _qclf.quality_prob_batch(out["text"])
-    return out
-
-
-def with_extract_and_scores(
-    df: DataFrame, html_col: str = "html", und_threshold: float = 0.5
-) -> DataFrame:
-    """html -> text/title/err/langid/conf/ppl in ONE pandas-UDF pass.
-    Replaces with_extracted_text + with_scores in the pipeline."""
-    cols = [
-        c
-        for c in df.columns
-        if c not in ("text", "title", "extract_err", *_SCORE_COLS)
-    ]
-    out = df.withColumn("_es", extract_score_udf(F.col(html_col))).select(
-        *cols,
-        "_es.text", "_es.title", "_es.extract_err",
-        "_es.langid", "_es.langid_conf", "_es.perplexity", "_es.quality_prob",
+def with_extract_and_scores(df, html_col="html", und_threshold=0.5):
+    return with_model_scores(
+        df, html_col, extract=True, scrub=False, und_threshold=und_threshold
     )
-    return _with_und(out, und_threshold)
-
-
-# ---- fully-fused variants: extract + score + SCRUB in one pass ------
-# VERDICT r4 #3: the pipeline used to traverse `text` twice — once
-# inside the fused Arrow UDF (scores) and again in the JVM
-# regexp_replace fold (scrub). These variants scrub inside the same
-# Python hop over the already-in-memory pandas block, so each document
-# is traversed once and `scrubbed_text` rides back across the SAME
-# Arrow boundary. Byte-identity with the JVM fold is pinned by
-# tests/test_kernels.py scrub-parity plus the golden-label suite.
-# Only usable when the shipped text IS the extracted text (i.e. no
-# boilerplate stage between extraction and scrub — pipeline gates it).
-
-EXTRACT_SCORE_SCRUB_SCHEMA = T.StructType(
-    list(EXTRACT_SCORE_SCHEMA.fields)
-    + [T.StructField("scrubbed_text", T.StringType())]
-)
-
-SCORE_SCRUB_SCHEMA = T.StructType(
-    list(SCORE_SCHEMA.fields)
-    + [T.StructField("scrubbed_text", T.StringType())]
-)
-
-
-@F.pandas_udf(EXTRACT_SCORE_SCRUB_SCHEMA)
-def extract_score_scrub_udf(html: pd.Series) -> pd.DataFrame:
-    from webfilter.kernels import langid as _langid
-    from webfilter.kernels import perplexity as _ppl
-    from webfilter.kernels import qualityclf as _qclf
-    from webfilter.kernels.extract import extract_batch
-    from webfilter.kernels.scrubber import scrub_texts
-
-    out = extract_batch(html).rename(columns={"err": "extract_err"})
-    scores = _langid.predict_batch(out["text"])
-    out["langid"] = scores["langid"]
-    out["langid_conf"] = scores["langid_conf"]
-    out["perplexity"] = _ppl.score_batch(out["text"])
-    out["quality_prob"] = _qclf.quality_prob_batch(out["text"])
-    out["scrubbed_text"] = scrub_texts(out["text"])
-    return out
-
-
-@F.pandas_udf(SCORE_SCRUB_SCHEMA)
-def score_scrub_udf(text: pd.Series) -> pd.DataFrame:
-    from webfilter.kernels import langid as _langid
-    from webfilter.kernels import perplexity as _ppl
-    from webfilter.kernels import qualityclf as _qclf
-    from webfilter.kernels.scrubber import scrub_texts
-
-    out = _langid.predict_batch(text)
-    out["perplexity"] = _ppl.score_batch(text)
-    out["quality_prob"] = _qclf.quality_prob_batch(text)
-    out["scrubbed_text"] = scrub_texts(text)
-    return out
-
-
-def with_extract_scores_scrub(
-    df: DataFrame, html_col: str = "html", und_threshold: float = 0.5
-) -> DataFrame:
-    """with_extract_and_scores + scrubbed_text in the same Arrow pass.
-    pii_found stays a JVM-side comparison (pipeline adds it)."""
-    cols = [
-        c
-        for c in df.columns
-        if c
-        not in ("text", "title", "extract_err", "scrubbed_text", *_SCORE_COLS)
-    ]
-    out = df.withColumn(
-        "_es", extract_score_scrub_udf(F.col(html_col))
-    ).select(
-        *cols,
-        "_es.text", "_es.title", "_es.extract_err",
-        "_es.langid", "_es.langid_conf", "_es.perplexity",
-        "_es.quality_prob", "_es.scrubbed_text",
-    )
-    return _with_und(out, und_threshold)
-
-
-def with_scores_scrub(
-    df: DataFrame, text_col: str = "text", und_threshold: float = 0.5
-) -> DataFrame:
-    """with_scores + scrubbed_text in the same Arrow pass (the
-    pre-extracted / WET input path)."""
-    cols = [
-        c for c in df.columns if c not in ("scrubbed_text", *_SCORE_COLS)
-    ]
-    out = df.withColumn("_score", score_scrub_udf(F.col(text_col))).select(
-        *cols, "_score.langid", "_score.langid_conf", "_score.perplexity",
-        "_score.quality_prob", "_score.scrubbed_text",
-    )
-    return _with_und(out, und_threshold)

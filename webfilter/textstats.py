@@ -69,10 +69,6 @@ def quality_score_col(text: Column) -> Column:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("quality_score", quality_score_col(F.col(text_col)))
-
-
 def dup_ngram_fraction_col(text: Column, k: int = 2) -> Column:
     """Gopher-style repetition signal: fraction of word k-gram
     OCCURRENCES that are repeats of an earlier occurrence
@@ -150,15 +146,6 @@ def winnowing_fingerprints_col(
     out = F.when(F.size(kh) < window, F.array(F.array_min(kh))).otherwise(mins)
     empty = F.array().cast("array<bigint>")
     return F.when(n == 0, empty).otherwise(F.array_sort(F.array_distinct(out)))
-
-
-def with_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumns(
-        {
-            "content_fp": content_fingerprint_col(F.col(text_col)),
-            "winnow_fps": winnowing_fingerprints_col(F.col(text_col)),
-        }
-    )
 
 
 def gopher_repetition_signals(
