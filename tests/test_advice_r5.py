@@ -1,18 +1,16 @@
-"""Regression tests for the five ADVICE r4 findings plus the
-unblocked-Jaccard guard (VERDICT r4 next-round #8).  Each test
-reproduces the flagged failure mode and pins the fix:
+"""Regression tests for ADVICE r4 findings plus the unblocked-Jaccard
+guard (VERDICT r4 next-round #8).  Each test reproduces the flagged
+failure mode and pins the fix:
 
 1. snaptable equality-delete seq resolution must fail LOUDLY (not
    open) when the path→seq dim misses a scanned file;
-2. streaming.split_quarantine's batch cache is released by the shared
-   caching registry;
-3. trainprep.frequent_terms' candidate persist is released by the
-   same registry;
-4. dq.verify emits passed=False (never NULL) for a Unique constraint
+2. trainprep.frequent_terms' candidate persist is released by the
+   shared caching registry;
+3. dq.verify emits passed=False (never NULL) for a Unique constraint
    with empty register state;
-5. vacuum never reclaims an orphan whose staging dir is still hot,
+4. vacuum never reclaims an orphan whose staging dir is still hot,
    and jobs/maintain_table.py refuses a sub-floor --grace;
-6. ngram_jaccard_pairs without block_col warns and points at the
+5. ngram_jaccard_pairs without block_col warns and points at the
    subquadratic operators.
 """
 
@@ -24,7 +22,7 @@ import time
 import pytest
 from pyspark.sql import Row, functions as F
 
-from webfilter import caching, streaming
+from webfilter import caching
 from webfilter.snaptable import SnapshotTable
 
 
@@ -64,33 +62,7 @@ def test_eq_delete_seq_miss_raises_instead_of_failing_open(
         t._apply_eq_deletes(df, bogus, dels).collect()
 
 
-# -------------------------------- 2./3. cache-lifecycle registry routing
-
-
-def test_split_quarantine_cache_is_registry_released(spark, tmp_path):
-    """ADVICE r4 #2: the batch-path cache used to leak across calls;
-    it is now tracked by webfilter.caching and dropped by the shared
-    release point."""
-    caching.release_cached()
-    p = tmp_path / "feed.csv"
-    p.write_text(
-        "url,warc_ts,lang,n_chars\n"
-        "http://a/1,2024-01-01T00:00:00,en,120\n"
-        "THIS IS NOT,A,VALID,ROW,AT,ALL,9,9,9\n"
-    )
-    df = (
-        spark.read.schema(streaming.METADATA_CSV_SCHEMA)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(str(tmp_path))
-    )
-    before = caching.cached_count()
-    clean, bad = streaming.split_quarantine(df)
-    assert clean.count() == 1 and bad.count() == 1
-    assert caching.cached_count() == before + 1
-    caching.release_cached()
-    assert caching.cached_count() == 0
+# ------------------------------------ 2. cache-lifecycle registry routing
 
 
 def test_frequent_terms_candidate_persist_is_registry_released(spark):
@@ -118,7 +90,7 @@ def test_dedup_release_cached_is_the_shared_registry():
     assert dedup.release_cached is caching.release_cached
 
 
-# ------------------------------------ 4. dq Unique with empty reg state
+# ------------------------------------ 3. dq Unique with empty reg state
 
 
 def test_unique_with_empty_register_state_reads_failed(spark):
@@ -137,7 +109,7 @@ def test_unique_with_empty_register_state_reads_failed(spark):
     assert row["metric"] is None  # the metric stays honest: unknown
 
 
-# ----------------------------------------- 5. vacuum hot-staging-dir
+# ----------------------------------------- 4. vacuum hot-staging-dir
 
 
 def test_vacuum_spares_orphans_in_hot_staging_dir(spark, tmp_path):
@@ -192,7 +164,7 @@ def test_maintain_table_refuses_sub_floor_grace(tmp_path):
         )
 
 
-# --------------------------------------- 6. unblocked Jaccard warning
+# --------------------------------------- 5. unblocked Jaccard warning
 
 
 def test_unblocked_jaccard_warns_and_points_at_subquadratic(spark):

@@ -19,7 +19,6 @@ from webfilter.boilerplate import (
     STOP_HIGH,
     STOP_LOW,
     justext_blocks,
-    keep_good_text,
 )
 
 GOOD = "the cat sat on the mat and it was a very good day for all of us"
@@ -89,18 +88,6 @@ def test_empty_blocks_never_divide_by_zero(spark):
     mid = rows[1]
     assert mid["n_chars"] == 0 and mid["n_tokens"] == 0
     assert mid["link_density"] == 0.0 and mid["stop_density"] == 0.0
-
-
-def test_keep_good_text_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "\n".join([GOOD, SHORT, PLAIN])), (2, PLAIN)],
-        "doc_id long, text string",
-    )
-    agg = {
-        r["doc_id"]: (r["n_blocks"], r["n_good_blocks"])
-        for r in keep_good_text(justext_blocks(df)).collect()
-    }
-    assert agg == {1: (3, 2), 2: (1, 0)}
 
 
 def test_single_exchange_plan(spark):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from webfilter import pipeline
 from webfilter.manifest import Manifest
-from webfilter.partitioning import salted_repartition
 from webfilter.tables import ParquetCatalog, latest_per_url
 
 
@@ -107,9 +106,15 @@ def test_latest_per_url_stale_rows_ignored(spark, synth_dir, pipeline_out):
 
 
 def test_salting_preserves_row_multiset(spark, synth_dir):
+    """The two-phase salted aggregation (pipeline host audit) counts
+    every url's rows exactly as a plain groupBy does."""
+    from webfilter.partitioning import salted_count_by_key
+
     pages = spark.read.parquet(f"{synth_dir}/pages.parquet")
     before = pages.groupBy("url").count()
-    after = salted_repartition(pages, 16, "url", n_salts=4).groupBy("url").count()
+    after = salted_count_by_key(pages, "url", n_salts=4).withColumnRenamed(
+        "n_rows", "count"
+    )
     assert before.exceptAll(after).count() == 0
     assert after.exceptAll(before).count() == 0
 

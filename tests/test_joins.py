@@ -1,4 +1,4 @@
-"""Temporal join operators (webfilter/joins.py): as-of and range —
+"""Temporal join operator (webfilter/joins.py): as-of —
 hand-computed small cases + composition checks (the sf-scale oracle
 comparison lives in the driver contract: join_asof_latest,
 events_sessionized)."""
@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webfilter.joins import asof_join, range_join_counts
+from webfilter.joins import asof_join
 
 
 def _ts(df, *cols):
@@ -59,33 +59,6 @@ def test_asof_join_respects_key_boundaries(spark):
     )
     out = {r["event_id"]: r["value_r"] for r in asof_join(left, right, "user_id").collect()}
     assert out == {1: 1.0, 2: None}  # user 200 never sees user 100's rows
-
-
-def test_range_join_counts(spark):
-    pts = _ts(
-        spark.createDataFrame(
-            [(1, "2024-01-01 00:01:00"), (1, "2024-01-01 00:02:00"),
-             (1, "2024-01-01 00:30:00"), (2, "2024-01-01 00:01:30")],
-            "user_id long, ts string",
-        ),
-        "ts",
-    )
-    iv = _ts(
-        spark.createDataFrame(
-            [(1, "2024-01-01 00:00:00", "2024-01-01 00:05:00"),
-             (1, "2024-01-01 00:10:00", "2024-01-01 00:20:00"),
-             (2, "2024-01-01 00:00:00", "2024-01-01 00:05:00")],
-            "user_id long, start string, end string",
-        ),
-        "start", "end",
-    )
-    got = {
-        (r["user_id"], str(r["start"])[:19]): r["n_points"]
-        for r in range_join_counts(pts, iv, by="user_id").collect()
-    }
-    assert got[(1, "2024-01-01 00:00:00")] == 2
-    assert got[(1, "2024-01-01 00:10:00")] == 0  # empty interval kept (left outer)
-    assert got[(2, "2024-01-01 00:00:00")] == 1
 
 
 def test_asof_join_null_right_values_not_skipped(spark):

@@ -158,23 +158,6 @@ class TestScrubber:
         assert not hits2
 
 
-def test_xpath_title_on_wellformed_xml(spark):
-    """P12: the built-in xpath_string pulls titles from well-formed
-    XML JVM-side (reference 04_Chunk_Articles_Content.py:96-99)."""
-    from webfilter.extract import with_xml_title
-
-    df = spark.createDataFrame(
-        [
-            ("<article><front><title>Alpha Beta</title></front><body>x</body></article>",),
-            ("<html><head><title>T2</title></head><body/></html>",),
-            ("<doc><body>no title here</body></doc>",),
-        ],
-        "xml string",
-    )
-    got = [r["xml_title"] for r in with_xml_title(df, "xml").collect()]
-    assert got == ["Alpha Beta", "T2", ""]
-
-
 def test_scrub_parity_tricky_boundaries(spark):
     """ADVICE r1: \\b placement around non-ASCII word chars must agree
     between the Python oracle (re.ASCII) and Spark's Java regex."""
@@ -191,11 +174,26 @@ def test_scrub_parity_tricky_boundaries(spark):
         "phone (555) 123-4567 nbsp",
         "10.172.61.131 566-566-9299",     # IP ending in 1, then a phone
         "3051-3051-3051-3051 452-452-3044",  # card ending in 1, then a phone
+        "10.5.146.116 1606-1606-1606-1606",  # IP ending in 1, then a card
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = {r["text"]: r["s"] for r in df.select("text", scrubbed_col(F.col("text")).alias("s")).collect()}
     for t in texts:
         assert got[t] == scrub_one(t)[0], repr(t)
+    assert got["10.5.146.116 1606-1606-1606-1606"] == "<IP> <CC>"
+
+
+def test_perplexity_word_spans_match_reference_tokenizer():
+    """The byte-level batch path splits words exactly as the reference
+    ``perplexity.tokenize`` does on ASCII-whitespace text."""
+    import numpy as np
+
+    texts = ["", "  ", "One two\tthree\nFOUR", " café  naïve\r\x0bend ", "a\x0cb  c"]
+    for t in texts:
+        b = np.frombuffer(t.lower().encode("utf-8"), dtype=np.uint8)
+        starts, ends = perplexity._word_spans(b)
+        words = [bytes(b[s:e]).decode("utf-8") for s, e in zip(starts, ends)]
+        assert words == perplexity.tokenize(t), repr(t)
 
 
 def test_hspace_fast_path_matches_reference():
@@ -225,3 +223,6 @@ def test_phone_pattern_never_matches_inside_digit_runs():
     # preceding IP or card number (the card would then leak)
     assert scrub_one("10.172.61.131 566-566-9299")[0] == "<IP> <PHONE>"
     assert scrub_one("3051-3051-3051-3051 452-452-3044")[0] == "<CC> <PHONE>"
+    # an IP followed by a card: the IP must be scrubbed before the
+    # phone pattern can start at its last octet
+    assert scrub_one("10.5.146.116 1606-1606-1606-1606")[0] == "<IP> <CC>"

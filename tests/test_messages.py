@@ -1,18 +1,11 @@
-"""Complex-nested pandas-UDF return (ARRAY<STRUCT<role,content>>) and
-jsonl sink/source round-trip — the reference's utils.py:61-63 /
-:21-31 patterns."""
+"""Complex-nested pandas-UDF return (ARRAY<STRUCT<role,content>>) —
+the reference's utils.py:61-63 pattern."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webfilter.messages import (
-    SYSTEM_PROMPT,
-    read_jsonl,
-    with_chat_messages,
-    write_jsonl,
-)
+from webfilter.messages import SYSTEM_PROMPT, with_chat_messages
 
 
 def _sample(spark):
@@ -42,15 +35,3 @@ def test_messages_shape(spark):
     assert "ctx one" in m1[1]["content"] and "q one" in m1[1]["content"]
     assert m1[2]["content"] == "a one"
     assert rows[2][2]["content"] == ""  # None-scrub
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    df = with_chat_messages(_sample(spark), "context", "question", "answer").select(
-        "id", "messages"
-    )
-    write_jsonl(df, str(tmp_path / "msgs"))
-    back = read_jsonl(spark, str(tmp_path / "msgs"), schema=df.schema)
-    assert back.count() == 2
-    orig = {r["id"]: r["messages"] for r in df.collect()}
-    got = {r["id"]: r["messages"] for r in back.collect()}
-    assert orig == got

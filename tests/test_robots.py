@@ -251,45 +251,6 @@ def test_parse_sitemaps_per_entry_binding_and_quarantine(spark):
     )
 
 
-def test_robots_harvested_from_warc_archive(spark):
-    """The compliance loop closes from a crawl archive alone: robots
-    responses inside a WARC yield (host, robots_txt) — newest capture
-    per host — and the parsed rules gate urls exactly as if the
-    robots had arrived as a table."""
-    from webfilter import warc as W
-    from webfilter.robots import parse_robots, robots_decisions, robots_from_warc
-
-    pages = spark.createDataFrame(
-        [
-            ("https://a.example/robots.txt", "2024-03-01 00:00:01",
-             b"User-agent: *\nDisallow: /old"),
-            # newer capture supersedes: /x becomes the disallowed path
-            ("https://a.example/robots.txt", "2024-03-02 00:00:01",
-             b"User-agent: *\nDisallow: /x"),
-            ("https://a.example/page1", "2024-03-01 00:00:02",
-             b"<html>not robots</html>"),
-            ("https://b.example/robots.txt", "2024-03-01 00:00:03",
-             b"User-agent: *\nDisallow:"),
-        ],
-        "url string, warc_ts string, html binary",
-    ).select("url", F.to_timestamp("warc_ts").alias("warc_ts"), "html")
-    files = W.warc_files(pages, n_shards=2)
-    robots = robots_from_warc(files)
-    got = {r.host: r.robots_txt for r in robots.collect()}
-    assert got == {
-        "a.example": "User-agent: *\nDisallow: /x",
-        "b.example": "User-agent: *\nDisallow:",
-    }
-    urls = spark.createDataFrame(
-        [("u1", "a.example", "/x/1"), ("u2", "a.example", "/old/1"),
-         ("u3", "b.example", "/anything")],
-        "url string, host string, upath string",
-    )
-    dec = {r.url: r.allowed
-           for r in robots_decisions(urls, parse_robots(robots), "bot").collect()}
-    assert dec == {"u1": False, "u2": True, "u3": True}
-
-
 def test_politeness_schedule_spacing_and_parallelism(spark):
     """Within one host: offsets strictly spaced by the host's delay;
     across hosts: every host starts at offset 0 (fully parallel)."""
@@ -325,28 +286,3 @@ def test_politeness_schedule_deterministic_under_partitioning(spark):
     a = sorted(map(tuple, politeness_schedule(df1.repartition(1)).collect()))
     b = sorted(map(tuple, politeness_schedule(df1.repartition(13)).collect()))
     assert a == b
-
-
-def test_robots_from_warc_keys_and_status(spark):
-    """The harvested rules key by urls.host_col (port stripped — the
-    page-side join key) and a newer NON-200 capture never replaces a
-    valid robots.txt (code-review r4c7 findings #2/#3)."""
-    from webfilter.robots import robots_from_warc
-    from webfilter.warc import warc_files
-
-    rows = [
-        ("http://example.com:8080/robots.txt", "2024-01-01 00:00:00",
-         b"HTTPDUMMY"),  # replaced below with a real container
-    ]
-    # build containers via the writer: one valid 200 robots capture
-    pages = spark.createDataFrame(
-        [("http://example.com:8080/robots.txt", "2024-01-01 00:00:00",
-          b"User-agent: *\nDisallow: /private\n")],
-        "url string, warc_ts string, html binary",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    files = warc_files(pages, n_shards=1)
-    got = robots_from_warc(files).collect()
-    assert len(got) == 1
-    assert got[0]["host"] == "example.com"  # port stripped
-    assert "Disallow: /private" in got[0]["robots_txt"]
-    _ = rows

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from webfilter import streaming, synth
+from webfilter import streaming
 
 
 @pytest.fixture(scope="module")
@@ -43,18 +43,6 @@ def test_windowed_metrics(spark, stream_src, tmp_path):
     tot = m.agg(F.sum("n_pages")).collect()[0][0]
     assert 0 < tot <= src_n
     assert m.filter(F.col("bytes_in") <= 0).count() == 0
-
-
-def test_file_metadata_virtual_columns(spark, synth_dir):
-    """S2: _metadata.file_path/_modification_time/_size project into
-    real provenance columns on a file-source scan."""
-    from webfilter.streaming import with_file_provenance
-
-    df = with_file_provenance(spark.read.parquet(f"{synth_dir}/pages.parquet"))
-    row = df.select("src_file", "src_mtime", "src_size").first()
-    assert row["src_file"].endswith(".parquet")
-    assert row["src_size"] > 0
-    assert row["src_mtime"] is not None
 
 
 def test_stateful_url_dedup_across_batches(spark, tmp_path):
@@ -115,136 +103,6 @@ def test_stateful_url_dedup_across_batches(spark, tmp_path):
     assert len(per_url["http://a/3"]) == 1
 
 
-def test_watermarked_dedup_drops_cross_batch_replays(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: an exact (url, warc_ts) replay
-    arriving in a LATER micro-batch inside the watermark window is
-    dropped; distinct captures of the same url both pass."""
-    import shutil
-
-    src = tmp_path / "src"
-    rows1 = [
-        ("http://w/1", "2024-01-01 00:10:00", b"v1", None, "en"),
-        ("http://w/2", "2024-01-01 00:11:00", b"v1", None, "en"),
-    ]
-    rows2 = [
-        ("http://w/1", "2024-01-01 00:10:00", b"v1", None, "en"),  # exact replay
-        ("http://w/1", "2024-01-01 00:12:00", b"v2", None, "en"),  # new capture
-        ("http://w/3", "2024-01-01 00:12:30", b"v1", None, "en"),
-    ]
-
-    def _write(rows, name):
-        (
-            spark.createDataFrame(
-                rows, "url string, warc_ts string, html binary, text string, lang string"
-            )
-            .withColumn("warc_ts", F.to_timestamp("warc_ts"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(src / name))
-        )
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    for name, rows in [("b1", rows1), ("b2", rows2)]:
-        _write(rows, name)
-        for f in (src / name).glob("*.parquet"):
-            shutil.copy(f, flat / f"{name}.parquet")
-
-    streaming.run_watermarked_dedup_stream(
-        spark, str(flat), "wm_dedup_feed", str(tmp_path / "cp"), max_files=1
-    )
-    feed = spark.sql("SELECT url, warc_ts FROM wm_dedup_feed").collect()
-    got = sorted((r.url, r.warc_ts.isoformat()) for r in feed)
-    assert got == [
-        ("http://w/1", "2024-01-01T00:10:00"),
-        ("http://w/1", "2024-01-01T00:12:00"),
-        ("http://w/2", "2024-01-01T00:11:00"),
-        ("http://w/3", "2024-01-01T00:12:30"),
-    ]
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """The watermarked stream-stream interval join must produce
-    exactly the pairs the equivalent batch join produces (no late data
-    in this fixture, so watermarking drops nothing)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("kind", T.StringType()),
-        ]
-    )
-    rows = []
-    base = "2024-01-01 00:{m:02d}:00"
-    for m, kind, uid in [
-        (0, "view", 1), (4, "click", 1), (20, "click", 1),  # 2nd click too late for the 0-min view
-        (15, "view", 1), (18, "click", 1),
-        (2, "view", 2), (3, "click", 2), (3, "click", 3),   # no view for user 3
-    ]:
-        rows.append((uid, base.format(m=m), kind))
-    df = (
-        spark.createDataFrame(rows, "user_id long, ts string, kind string")
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    src = str(tmp_path / "ev")
-    df.coalesce(2).write.mode("overwrite").parquet(src)
-
-    from webfilter.streaming import stream_stream_interval_join
-
-    def split(stream_df):
-        return (
-            stream_df.filter(F.col("kind") == "click").select("user_id", "ts"),
-            stream_df.filter(F.col("kind") == "view").select("user_id", "ts"),
-        )
-
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    joined = stream_stream_interval_join(*split(s))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssj")
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["user_id"], str(r["left_ts"]), str(r["right_ts"]))
-        for r in spark.sql("SELECT * FROM ssj").collect()
-    }
-    batch = {
-        (r["user_id"], str(r["left_ts"]), str(r["right_ts"]))
-        for r in stream_stream_interval_join(*split(spark.read.parquet(src))).collect()
-    }
-    assert got == batch
-    assert (1, "2024-01-01 00:04:00", "2024-01-01 00:00:00") in got
-    assert (1, "2024-01-01 00:18:00", "2024-01-01 00:15:00") in got
-    assert all(u != 3 for u, _, _ in got)
-
-
-def test_file_metadata_on_streaming_frame(spark, stream_src, tmp_path):
-    """S2 on the STREAM side: _metadata virtual columns project on a
-    readStream file source too (the reference's Auto Loader usage,
-    01_Metadata_Sync.py:52-54)."""
-    from webfilter.streaming import read_pages_stream, with_file_provenance
-
-    s = with_file_provenance(read_pages_stream(spark, stream_src))
-    q = (
-        s.select("url", "src_file", "src_size")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("prov")
-        .option("checkpointLocation", str(tmp_path / "cp_prov"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM prov LIMIT 5").collect()
-    assert rows and all(r["src_file"].endswith(".parquet") and r["src_size"] > 0 for r in rows)
-
-
 def test_streaming_sessionization_matches_batch(spark, synth_dir, tmp_path):
     """Streaming session_window (watermarked, append mode) must be an
     incrementalization of the BATCH session_window aggregation: with
@@ -292,251 +150,6 @@ def test_streaming_sessionization_matches_batch(spark, synth_dir, tmp_path):
     # in that hour: ends are >= gap (30 min) apart, so <= 2 per key
     n_keys = batch.select("lang").distinct().count()
     assert len(batch_rows) - len(got_rows) <= 2 * n_keys
-
-
-def test_streaming_near_dedup_equals_batch(spark, tmp_path):
-    """Online near-dup over a file stream (persisted LSH band state,
-    one micro-batch per file) must keep EXACTLY the docs one-shot
-    batch minhash dedup keeps on the same corpus — arrival order and
-    batch boundaries cannot change the outcome."""
-    from webfilter.dedup import minhash_dedup_pairs
-
-    # corpus with exact dups, near dups and uniques spread across
-    # 3 arrival files so duplicate groups straddle micro-batches
-    base = (
-        "the quick brown fox jumps over the lazy dog and then walks "
-        "away into the quiet forest while the rain keeps falling on "
-        "the old wooden cabin near the river bend every single night"
-    )
-    rows = []
-    for i in range(30):
-        if i % 3 == 0:
-            txt = base  # exact-dup group
-        elif i % 3 == 1:
-            txt = base.replace("quiet", f"word{i}")  # near dups of base
-        else:
-            txt = f"document {i} " + " ".join(
-                f"tok{i}_{j} uniq{j * i}" for j in range(40)
-            )
-        rows.append((f"https://h{i % 5}.example.com/p/{i}", txt))
-
-    src = tmp_path / "src"
-    src.mkdir()
-    import pandas as pd
-
-    for chunk in range(3):
-        part = rows[chunk::3]
-        spark.createDataFrame(
-            pd.DataFrame(part, columns=["url", "text"])
-        ).withColumn("warc_ts", F.current_timestamp()).withColumn(
-            "html", F.lit(None).cast("binary")
-        ).withColumn("lang", F.lit("en")).select(
-            "url", "warc_ts", "html", "text", "lang"
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"chunk{chunk}"))
-
-    out = tmp_path / "state"
-    streaming.run_near_dedup_stream(
-        spark, f"{src}/chunk*", str(out), str(tmp_path / "cp"), max_files=1
-    )
-    streamed_kept = {
-        r["url"] for r in streaming.stream_kept_docs(spark, str(out)).collect()
-    }
-
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["url", "text"]))
-    pairs = minhash_dedup_pairs(
-        corpus, id_col="url", text_col="text", collapse_exact=True
-    )
-    drops = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
-    batch_kept = {u for u, _ in rows} - drops
-
-    assert streamed_kept == batch_kept
-    assert len(streamed_kept) < len(rows)  # dups actually dropped
-
-    # drain again with the same checkpoint: replay-safe, kept set fixed
-    streaming.run_near_dedup_stream(
-        spark, f"{src}/chunk*", str(out), str(tmp_path / "cp"), max_files=1
-    )
-    again = {
-        r["url"] for r in streaming.stream_kept_docs(spark, str(out)).collect()
-    }
-    assert again == streamed_kept
-
-
-def test_streaming_hll_equals_batch(spark, tmp_path):
-    """Per-epoch HLL register partials appended by the stream must
-    max-merge to EXACTLY the batch register state over the same
-    corpus (mergeable-sketch property), and re-draining with the same
-    checkpoint must change nothing (replay safety without DISTINCT:
-    max is idempotent)."""
-    import pandas as pd
-
-    from webfilter.sketches import hll_estimate, hll_registers
-
-    rows = [
-        (
-            f"https://h{i % 4}.example.com/p/{i}",
-            "en" if i % 2 else "de",
-            f"alpha beta{i} gamma delta{i * 7} epsilon zeta eta theta "
-            + " ".join(f"w{i}_{j}" for j in range(30)),
-        )
-        for i in range(24)
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for chunk in range(3):
-        part = rows[chunk::3]
-        spark.createDataFrame(
-            pd.DataFrame(part, columns=["url", "lang", "text"])
-        ).withColumn("warc_ts", F.current_timestamp()).withColumn(
-            "html", F.lit(None).cast("binary")
-        ).select("url", "warc_ts", "html", "text", "lang").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(src / f"chunk{chunk}"))
-
-    out, cp = tmp_path / "state", tmp_path / "cp"
-    streaming.run_hll_stream(spark, f"{src}/chunk*", str(out), str(cp), max_files=1)
-    streamed = {
-        r["lang"]: (r["regs_hit"], r["v_zero"], r["s_denom"], r["hll_estimate"])
-        for r in streaming.stream_hll_estimate(spark, str(out)).collect()
-    }
-
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["url", "lang", "text"]))
-    batch = {
-        r["lang"]: (r["regs_hit"], r["v_zero"], r["s_denom"], r["hll_estimate"])
-        for r in hll_estimate(hll_registers(corpus)).collect()
-    }
-    assert streamed == batch and set(streamed) == {"en", "de"}
-
-    # replay: drain again with the SAME checkpoint — no new epochs, and
-    # even if files re-appended, max-merge would absorb them
-    streaming.run_hll_stream(spark, f"{src}/chunk*", str(out), str(cp), max_files=1)
-    streamed2 = {
-        r["lang"]: (r["regs_hit"], r["v_zero"], r["s_denom"], r["hll_estimate"])
-        for r in streaming.stream_hll_estimate(spark, str(out)).collect()
-    }
-    assert streamed2 == batch
-
-
-def test_streaming_cms_equals_batch(spark, tmp_path):
-    """Per-epoch CMS partials summed after epoch-dedup must equal the
-    batch cells over the same corpus; a FORCED replay (re-appending an
-    epoch's rows) must change nothing — the sum-mergeable sketch's
-    exactly-once bookkeeping, in contrast to HLL's idempotent max."""
-    import pandas as pd
-
-    from webfilter.sketches import cms_cells
-    from webfilter.tables import ParquetCatalog
-
-    rows = [
-        (
-            f"https://h{i % 4}.example.com/p/{i}",
-            "en",
-            "alpha beta gamma " + " ".join(f"w{i}_{j}" for j in range(25)),
-        )
-        for i in range(18)
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for chunk in range(3):
-        part = rows[chunk::3]
-        spark.createDataFrame(
-            pd.DataFrame(part, columns=["url", "lang", "text"])
-        ).withColumn("warc_ts", F.current_timestamp()).withColumn(
-            "html", F.lit(None).cast("binary")
-        ).select("url", "warc_ts", "html", "text", "lang").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(src / f"chunk{chunk}"))
-
-    out, cp = tmp_path / "state", tmp_path / "cp"
-    streaming.run_cms_stream(spark, f"{src}/chunk*", str(out), str(cp), max_files=1)
-
-    def merged():
-        return {
-            (r["r"], r["col"]): r["cell_n"]
-            for r in streaming.stream_cms_cells(spark, str(out)).collect()
-        }
-
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["url", "lang", "text"]))
-    batch = {
-        (r["r"], r["col"]): r["cell_n"] for r in cms_cells(corpus).collect()
-    }
-    got = merged()
-    assert got == batch
-
-    # forced replay: re-append epoch 0's rows verbatim -> merge unchanged
-    catalog = ParquetCatalog(spark, str(out))
-    ep0 = catalog.read("cms_cells").filter(F.col("_epoch") == 0)
-    catalog.append(ep0, "cms_cells")
-    assert merged() == batch
-
-
-_TWS_OK, _TWS_WHY = streaming.tws_available()
-
-
-@pytest.mark.skipif(not _TWS_OK, reason=f"transformWithStateInPandas env-blocked: {_TWS_WHY}")
-def test_tws_url_dedup_across_batches(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas form of the latest-wins
-    dedup (TTL-capable value state, RocksDB store): same contract as
-    the applyInPandasWithState operator across micro-batches."""
-    import shutil
-
-    src = tmp_path / "src"
-    rows1 = [
-        ("http://a/1", "2024-01-01 00:00:00", b"v1", None, "en"),
-        ("http://a/2", "2024-01-01 00:00:00", b"v1", None, "en"),
-    ]
-    rows2 = [
-        ("http://a/1", "2024-01-01 00:00:00", b"v1", None, "en"),  # replay
-        ("http://a/2", "2023-12-01 00:00:00", b"v0", None, "en"),  # stale
-        ("http://a/3", "2024-01-05 00:00:00", b"v1", None, "en"),  # new url
-        ("http://a/1", "2024-02-01 00:00:00", b"v2xx", None, "en"),  # newer
-    ]
-
-    def _write(rows, name):
-        (
-            spark.createDataFrame(
-                rows, "url string, warc_ts string, html binary, text string, lang string"
-            )
-            .withColumn("warc_ts", F.to_timestamp("warc_ts"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(src / name))
-        )
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    for name, rows in [("b1", rows1), ("b2", rows2)]:
-        _write(rows, name)
-        for f in (src / name).glob("*.parquet"):
-            shutil.copy(f, flat / f"{name}.parquet")
-
-    streaming.run_tws_dedup_stream(
-        spark, str(flat), "tws_dedup_feed", str(tmp_path / "cp"), max_files=1
-    )
-    feed = spark.sql("SELECT * FROM tws_dedup_feed").collect()
-    per_url = {}
-    for r in feed:
-        per_url.setdefault(r["url"], []).append(r)
-    assert len(per_url["http://a/1"]) == 2
-    ts = sorted(r["warc_ts"] for r in per_url["http://a/1"])
-    assert ts[0] < ts[1]
-    assert len(per_url["http://a/2"]) == 1
-    assert len(per_url["http://a/3"]) == 1
-
-
-def test_tws_operator_constructs_without_protobuf(spark, tmp_path):
-    """Even where the TWS runtime is env-blocked, the operator must
-    CONSTRUCT (plan-time) — the protobuf requirement bites only at
-    query start, and the registry-wide action-free rule applies to
-    streaming builders too."""
-    src = tmp_path / "one"
-    spark.createDataFrame(
-        [("http://a/1", "2024-01-01 00:00:00", b"v", None, "en")],
-        "url string, warc_ts string, html binary, text string, lang string",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts")).write.parquet(str(src))
-    stream = streaming.read_pages_stream(spark, str(src), 1)
-    df = streaming.tws_url_dedup(stream, state_ttl_ms=3_600_000)
-    assert df.isStreaming and set(df.columns) == {"url", "warc_ts", "lang", "n_bytes"}
 
 
 def test_filter_stream_matches_batch(spark, stream_src, tmp_path):
@@ -619,56 +232,6 @@ def test_filter_stream_boilerplate_matches_batch(spark, stream_src, tmp_path):
     pages = with_bucket(spark.read.parquet(stream_src), 32)
     assert streamed == snap(pipeline.filtered_frame(pages, boilerplate=True))
     assert streamed != snap(pipeline.filtered_frame(pages))
-
-
-def test_csv_metadata_stream_quarantines_corrupt(spark, tmp_path):
-    """S1 parity at the reference's own modality: an incremental CSV
-    metadata feed with PERMISSIVE parsing — malformed lines land in a
-    quarantine table with their raw bytes instead of killing the
-    stream, clean rows flow on typed; replay is checkpoint-protected."""
-    src = tmp_path / "csv"
-    src.mkdir()
-    (src / "a.csv").write_text(
-        "url,warc_ts,lang,n_chars\n"
-        "http://a/1,2024-01-01 00:00:00,en,42\n"
-        "http://a/2,2024-01-02 00:00:00,de,notanint\n"
-    )
-    (src / "b.csv").write_text(
-        "url,warc_ts,lang,n_chars\n"
-        "http://a/3,2024-01-03 00:00:00,fr,7,extra\n"
-        "http://a/4,2024-01-04 00:00:00,ru,9\n"
-    )
-    out = tmp_path / "out"
-    cp = tmp_path / "cp"
-
-    def sink(batch_df, epoch_id):
-        clean, bad = streaming.split_quarantine(batch_df)
-        clean.write.mode("append").parquet(f"{out}/clean.parquet")
-        bad.write.mode("append").parquet(f"{out}/quarantine.parquet")
-
-    def drain():
-        q = (
-            streaming.read_csv_metadata_stream(spark, str(src), max_files=1)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    clean = spark.read.parquet(f"{out}/clean.parquet")
-    bad = spark.read.parquet(f"{out}/quarantine.parquet")
-    assert {r["url"] for r in clean.collect()} == {"http://a/1", "http://a/4"}
-    assert clean.filter("n_chars is null").count() == 0
-    assert clean.schema["warc_ts"].dataType.typeName() == "timestamp"
-    raws = {r["raw_line"] for r in bad.collect()}
-    assert len(raws) == 2 and any("notanint" in x for x in raws)
-    # replay protection: a second drain on the same checkpoint is a no-op
-    n_clean, n_bad = clean.count(), bad.count()
-    drain()
-    assert spark.read.parquet(f"{out}/clean.parquet").count() == n_clean
-    assert spark.read.parquet(f"{out}/quarantine.parquet").count() == n_bad
 
 
 def test_filter_stream_dq_monitoring(spark, stream_src, tmp_path):
@@ -779,28 +342,6 @@ def test_filter_stream_survives_empty_source_file(spark, tmp_path):
     )
     dec = spark.read.parquet(f"{tmp_path}/out/decisions_stream.parquet")
     assert dec.count() == 1
-
-
-def test_split_quarantine_works_on_batch_reads(spark, tmp_path):
-    """Batch CSV reads forbid corrupt-column-only queries; the split
-    must still work for batch backfills (code-review r4c3 finding
-    #3, reproduced pre-fix)."""
-    p = tmp_path / "feed.csv"
-    p.write_text(
-        "url,warc_ts,lang,n_chars\n"
-        "http://a/1,2024-01-01T00:00:00,en,120\n"
-        "THIS IS NOT,A,VALID,ROW,AT,ALL,9,9,9\n"
-    )
-    df = (
-        spark.read.schema(streaming.METADATA_CSV_SCHEMA)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(str(tmp_path))
-    )
-    clean, bad = streaming.split_quarantine(df)
-    assert clean.count() == 1 and bad.count() == 1
-    assert "NOT" in bad.collect()[0]["raw_line"]
 
 
 def test_stateful_dedup_tie_matches_batch_rule(spark, tmp_path):

@@ -211,3 +211,21 @@ def test_anchor_stats_accept_attributed_links(spark):
     ).withColumn("html", F.col("html").cast("string"))
     got = anchor_host_stats(df).collect()
     assert len(got) == 1 and got[0]["n_anchors"] == 2
+
+
+def test_host_audit_key_matches_rank_and_robots_key(spark):
+    """partitioning.host_col IS urls.host_col (code-review r4c6
+    finding #1): case, port, userinfo and no-match all key
+    identically, so host_audit joins back to host_rank/robots."""
+    from webfilter import partitioning
+
+    df = spark.createDataFrame(
+        [("HTTPS://Example.COM/x",),
+         ("http://example.com:8080/y",),
+         ("http://u:p@example.com/z",),
+         ("not-a-url",)],
+        "url string",
+    )
+    a = [r[0] for r in df.select(partitioning.host_col(F.col("url"))).collect()]
+    b = [r[0] for r in df.select(host_col(F.col("url"))).collect()]
+    assert a == b == ["example.com", "example.com", "example.com", None]

@@ -51,8 +51,6 @@ MAX_LINK_DENSITY = 0.2
 STOP_HIGH = 0.30
 STOP_LOW = 0.12
 
-RAW_CLASSES = ("bad", "short", "good", "neargood")
-
 
 def link_chars_col(toks: Column) -> Column:
     """Total characters inside link tokens (tokens that ARE a URL:
@@ -304,18 +302,3 @@ def with_boilerplate_removed(
         text_col,
         F.when(F.col(text_col).isNotNull(), F.array_join(kept, sep)),
     ).drop("_bp_blocks", "_bp_codes", "_bp_final")
-
-
-def keep_good_text(
-    blocks: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document surviving-block counts — the aggregate consumers
-    join back on. (Text reassembly needs the block strings, which
-    ``justext_blocks`` deliberately drops to keep the shuffle rows
-    narrow; callers that want clean_text re-join blocks to the
-    source by (id, block_id), cf. rules.c4_line_filter which keeps
-    text inline because its rows never shuffle.)"""
-    return blocks.groupBy(id_col).agg(
-        F.count("*").alias("n_blocks"),
-        F.count(F.when(F.col("cls_final") == "good", 1)).alias("n_good_blocks"),
-    )

@@ -2,11 +2,10 @@
 
 Several operators persist an intermediate frame that their own plan
 consumes more than once (MinHash signature tables consumed by a
-self-join, the PERMISSIVE-CSV quarantine split, frequent-terms
-candidate sets). Persist without a paired unpersist accumulates
-executor storage memory across repeated invocations in a long-lived
-session (ADVICE r2; ADVICE r4 flagged the same leak in
-``streaming.split_quarantine`` and ``trainprep.frequent_terms``).
+self-join, frequent-terms candidate sets). Persist without a paired
+unpersist accumulates executor storage memory across repeated
+invocations in a long-lived session (ADVICE r2; ADVICE r4 flagged the
+same leak in ``trainprep.frequent_terms``).
 
 This module is the single release point: every operator that persists
 routes the frame through :func:`persist_tracked`, and callers that
@@ -25,14 +24,6 @@ _CACHED_FRAMES: list[DataFrame] = []
 def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for the next release_cached()."""
     df = df.persist()
-    _CACHED_FRAMES.append(df)
-    return df
-
-
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-cached/persisted frame for release_cached()
-    without re-persisting it (for call sites that need ``.cache()``
-    semantics or a specific storage level)."""
     _CACHED_FRAMES.append(df)
     return df
 

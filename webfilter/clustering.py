@@ -273,7 +273,9 @@ def _exact_keys(
 def exact_assign_col(
     qv: Column, cents: list[tuple[int, list[int], int]]
 ) -> Column:
-    """Winning cent_id for a quantized vector (see _exact_keys)."""
+    """Kept as the reference tests/test_clustering.py checks against.
+
+    Winning cent_id for a quantized vector (see _exact_keys)."""
     dists, ids = _exact_keys(qv, cents)
     return F.element_at(
         ids, F.array_position(dists, F.array_min(dists)).cast("int")
@@ -283,7 +285,9 @@ def exact_assign_col(
 def exact_min_key_col(
     qv: Column, cents: list[tuple[int, list[int], int]]
 ) -> Column:
-    """The winning centroid's rational distance key as a double —
+    """Kept as the reference tests/test_clustering.py checks against.
+
+    The winning centroid's rational distance key as a double —
     exact-integer numerator/denominator, one monotonic IEEE division,
     so cross-engine comparisons of this key (e.g. SemDeDup's
     'farther-from-centroid loses') order identically."""

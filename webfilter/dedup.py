@@ -31,9 +31,9 @@ from .rules import tokens_col
 # tables consumed twice by their self-joins) route through the shared
 # package-wide registry in caching.py so one release point covers
 # every persisting module (ADVICE r2; ADVICE r4 extended the same
-# lifecycle to streaming.split_quarantine and trainprep
-# .frequent_terms). `release_cached` stays importable from here —
-# it IS the shared release: pipeline, bench.py and the jobs call it.
+# lifecycle to trainprep.frequent_terms). `release_cached` stays
+# importable from here — it IS the shared release: pipeline, bench.py
+# and the jobs call it.
 from .caching import persist_tracked as _persist  # noqa: E402
 from .caching import release_cached  # noqa: E402,F401
 
@@ -822,7 +822,9 @@ def _span_chunks(
 def span_state_table(
     df: DataFrame, span: int = 4, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Persistable span state for incremental C4 dedup: one row per
+    """Kept for SCALING.md "Robustness guards" (incremental span dedup).
+
+    Persistable span state for incremental C4 dedup: one row per
     distinct full-length span hash with its distinct-doc count.
     ~16 B/row — the compact corpus memory a daily increment joins
     against (the state analog of the minhash band table)."""
@@ -842,7 +844,9 @@ def incremental_remove_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental C4 span dedup — completes the incremental family
+    """Kept for SCALING.md "Robustness guards" (incremental span dedup).
+
+    Incremental C4 span dedup — completes the incremental family
     (minhash bands, simhash chunks, embedding buckets, now spans): a
     new crawl batch is cleaned against the PERSISTED span counts plus
     its own, without re-chunking the historical corpus.
@@ -1207,7 +1211,9 @@ def incremental_simhash_pairs(
     use_kernel: bool = True,
     broadcast_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """SimHash twin of incremental_minhash_pairs: dedup a NEW batch
+    """Kept for SCALING.md "Incremental near-dup" (SimHash family).
+
+    SimHash twin of incremental_minhash_pairs: dedup a NEW batch
     against persisted chunk state without re-fingerprinting the
     corpus. Returns ``(pairs, new_chunks)``; the caller appends
     ``new_chunks`` to the state table.
@@ -1475,7 +1481,9 @@ def component_survivors(
 
 
 def auto_n_planes(n_docs: int, target_bucket: int = 32, floor: int = 6) -> int:
-    """Plane count sized to the corpus: 2^p buckets with expected
+    """Kept for SCALING.md "Dedup family" (embedding row).
+
+    Plane count sized to the corpus: 2^p buckets with expected
     occupancy ~target_bucket, so per-table candidate pairs grow
     ~linearly in n (n * target_bucket / 2) instead of quadratically
     (a FIXED p means E[pairs] = n^2/2^p — the VERDICT r1
@@ -1627,7 +1635,9 @@ def embedding_bucket_table(
     n_tables: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """(id, table_id, bucket) hyperplane-LSH state rows for
+    """Kept for SCALING.md "Incremental near-dup" (embedding family).
+
+    (id, table_id, bucket) hyperplane-LSH state rows for
     INCREMENTAL embedding dedup — the vector twin of
     `band_table` (MinHash) and `simhash_state_table`.
 
@@ -1665,7 +1675,9 @@ def incremental_embedding_pairs(
     dim: int | None = None,
     broadcast_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Embedding twin of incremental_minhash_pairs: dedup a NEW batch
+    """Kept for SCALING.md "Incremental near-dup" (embedding family).
+
+    Embedding twin of incremental_minhash_pairs: dedup a NEW batch
     of vectors against persisted hyperplane-bucket state without
     re-bucketing the corpus (a daily crawl increment must not pay the
     full-corpus LSH join — VERDICT r3 #3 promoted to the vector

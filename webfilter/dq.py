@@ -220,7 +220,9 @@ def refresh(
     changed: list,
     part_col: str = "bucket_id",
 ) -> tuple[DataFrame, DataFrame]:
-    """Differential update: recompute state ONLY for the buckets in
+    """Kept for the ICDE 2019 differential refresh that ROADMAP Direction 2 builds on.
+
+    Differential update: recompute state ONLY for the buckets in
     ``changed`` (from ``df_changed``, which must hold exactly those
     buckets' current rows) and reuse every other bucket's state rows
     verbatim.  Sound because every metric is algebraic over buckets —

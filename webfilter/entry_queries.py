@@ -68,10 +68,18 @@ _TOKS_LOWER = (
 # fires for small inputs (<= _SPREAD_MAX_BYTES compressed), so at
 # real scale — thousands of splits — it is a no-op by construction,
 # not a local[32]-only constant. Metadata is cached per (file, size,
-# mtime); results are never cached.
+# mtime) in a bounded LRU; results are never cached.
 _SPREAD_MIN_BYTES = 2 << 20  # tiny fixtures: exchange buys nothing
 _SPREAD_MAX_BYTES = 64 << 20  # above this the scan already splits
-_RG_CACHE: dict[tuple[str, int, float], int] = {}
+
+
+@functools.lru_cache(maxsize=4096)
+def _row_groups(path: str, size: int, mtime: float) -> int:
+    """Row-group count from one parquet footer; (size, mtime) in the
+    key makes a rewritten file miss the cache."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_row_groups
 
 
 def _scan_layout(path: str) -> tuple[int, int]:
@@ -92,14 +100,7 @@ def _scan_layout(path: str) -> tuple[int, int]:
     for f in files:
         st = os.stat(f)
         total_b += st.st_size
-        key = (f, st.st_size, st.st_mtime)
-        rg = _RG_CACHE.get(key)
-        if rg is None:
-            import pyarrow.parquet as pq
-
-            rg = pq.ParquetFile(f).metadata.num_row_groups
-            _RG_CACHE[key] = rg
-        total_rg += rg
+        total_rg += _row_groups(f, st.st_size, st.st_mtime)
     return total_b, total_rg
 
 
@@ -1848,12 +1849,6 @@ SELECT doc_id, len(fps) AS n_fps, fps[1] AS min_fp, fps[-1] AS max_fp FROM w
 # pipeline: decontamination, vocabulary heavy hitters, bloom-routed
 # frontier anti-join, sequence packing, dataset splits)
 
-# lowercased token-array expr for DuckDB oracles (parallel to _TOKS)
-_TOKS_LOWER = (
-    f"list_filter(regexp_split_to_array(lower(text), '{_WS}+'), x -> x <> '')"
-)
-
-
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: flag corpus docs sharing any word
     3-gram with a (pretend) benchmark suite — here a deterministic
@@ -2176,9 +2171,8 @@ def q_hll_distinct_terms(spark, sf_dir):
 
     At 100 TB this is the mergeable two-level shape: (lang, register)
     partial maxes combine associatively map-side, the final state is
-    256 ints per group — the same sketches.hll_registers state the
-    STREAMING ingestion appends per epoch (streaming.run_hll_stream,
-    tested equal to this batch form)."""
+    256 ints per group: partial states from splits, days or epochs
+    merge by a groupBy-max over (lang, reg)."""
     from .sketches import hll_estimate, hll_registers
 
     docs = _docs(spark, sf_dir)
@@ -7352,9 +7346,8 @@ def q_csv_roundtrip(spark, sf_dir):
     """CSV transport with PERMISSIVE corrupt-record quarantine — the
     reference's ONE streaming source is an Auto Loader CSV metadata
     feed (01_Metadata_Sync.py:38-41); this is its parse surface as a
-    batch oracle query (streaming form: streaming.read_csv_metadata_
-    stream). Lines are serialized in-plan from documents with three
-    planted malformation classes — type-fail field (doc_id%7),
+    batch oracle query. Lines are serialized in-plan from documents
+    with three planted malformation classes — type-fail field (doc_id%7),
     extra token (%11), truncated row (%13) — and re-parsed with
     from_csv (JVM, codegen): PERMISSIVE nulls the bad field, keeps
     what parsed, and captures the raw line in _corrupt. Map-only."""

@@ -1,16 +1,16 @@
 """Temporal join operators the reference lacks (SURVEY §2.3 notes no
 theta/range/as-of joins exist there) but a web-scale event pipeline
-needs: as-of join and range join, both as compositions of existing
-DataFrame ops — no custom physical operators.
+needs: an as-of join, composed of existing DataFrame ops — no custom
+physical operator.
 
-Scale posture: both are one shuffle on (by-key) with sorted-window
-processing inside each partition — the same cost profile as any keyed
-window; no cross product materializes.
+Scale posture: one shuffle on (by-key) with sorted-window processing
+inside each partition — the same cost profile as any keyed window; no
+cross product materializes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -72,30 +72,4 @@ def asof_join(
     return out.select(
         *[F.col("_lrow").getField(c).alias(c) for c in left.columns],
         *[F.col("_rrow").getField(c).alias(f"{c}{suffix}") for c in right_cols],
-    )
-
-
-def range_join_counts(
-    points: DataFrame,
-    intervals: DataFrame,
-    by: str,
-    ts: str = "ts",
-    start: str = "start",
-    end: str = "end",
-) -> DataFrame:
-    """Per-interval point counts: points joined into [start, end]
-    intervals within a key. Expressed as an equi-join on the key plus
-    range predicates — AQE/broadcast pick the strategy; for web-scale
-    dense intervals, pre-bucket both sides by time bucket to make the
-    range predicate partition-local."""
-    p, i = points.alias("p"), intervals.alias("i")
-    cond = (
-        (F.col(f"p.{by}") == F.col(f"i.{by}"))
-        & (F.col(f"p.{ts}") >= F.col(f"i.{start}"))
-        & (F.col(f"p.{ts}") <= F.col(f"i.{end}"))
-    )
-    return (
-        i.join(p, cond, "left_outer")
-        .groupBy(F.col(f"i.{by}").alias(by), F.col(f"i.{start}").alias(start), F.col(f"i.{end}").alias(end))
-        .agg(F.count(F.col(f"p.{ts}")).alias("n_points"))
     )

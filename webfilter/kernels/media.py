@@ -759,7 +759,9 @@ def _lzw_decode(data: bytes, min_code_size: int, limit: int):
 
 
 def make_gif(width: int, height: int, seed: int = 0) -> bytes:
-    """Valid GIF89a with a 256-entry grayscale palette and
+    """Kept as a fixture encoder for tests/test_media_fuzz.py.
+
+    Valid GIF89a with a 256-entry grayscale palette and
     deterministic LCG pixel indices (so decoded gray == the LCG
     stream — the generator ground truth for decode_gif_pixels).
 
@@ -1363,7 +1365,9 @@ def decode_jpeg_pixels(raw: bytes | None):
 
 
 def make_jpeg(width: int, height: int, seed: int = 0, flat_q: bool = False) -> tuple:
-    """Valid baseline-sequential grayscale JFIF with deterministic
+    """Kept as a fixture encoder for tests/test_media_fuzz.py.
+
+    Valid baseline-sequential grayscale JFIF with deterministic
     pixels — a REAL encoder (level shift, float DCT, quantize,
     zigzag, DC-predictor + run/size AC Huffman coding, byte
     stuffing), the generator ground truth for decode_jpeg_pixels.
@@ -1384,7 +1388,9 @@ def make_jpeg_color(
     width: int, height: int, seed: int = 0,
     flat_q: bool = False, subsample: bool = False,
 ) -> tuple:
-    """Valid color JFIF (3 components; 4:4:4, or 4:2:0 when
+    """Kept as a fixture encoder for tests/test_media_fuzz.py.
+
+    Valid color JFIF (3 components; 4:4:4, or 4:2:0 when
     ``subsample``) with deterministic RGB pixels; returns
     (jpeg_bytes, rgb_array)."""
     import numpy as np

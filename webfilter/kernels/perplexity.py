@@ -77,7 +77,9 @@ def _batch_token_ids(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
 
 
 def tokenize(text: str) -> list[str]:
-    """Reference tokenizer (whitespace split, lowercased) — the
+    """Kept as the reference tests/test_kernels.py checks the word split against.
+
+    Reference tokenizer (whitespace split, lowercased) — the
     byte-level batch path implements exactly this for ASCII-ws text."""
     return text.lower().split()
 

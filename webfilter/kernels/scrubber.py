@@ -19,7 +19,12 @@ lookbehind/lookahead, NO backreferences (RE2 has neither).
 
 Order matters: SSN before PHONE (a bare 3-2-4 digit group would
 otherwise be eaten by a loose phone pattern); EMAIL before anything
-that could match its digits.
+that could match its digits; IPV4 before PHONE, because the phone
+pattern's ``\\b1[ .\\-]`` country code can start at an IP's last
+octet ('10.5.146.116 1606-1606-1606-1606' scrubbed to
+'10.5.<PHONE>-1606-1606-1606', and the card leaked). CREDIT_CARD
+stays after PHONE: moved ahead, it changes more golden outputs than
+it fixes.
 """
 
 from __future__ import annotations
@@ -49,6 +54,11 @@ SCRUB_PATTERNS: tuple[tuple[str, str, str], ...] = (
         "<SSN>",
     ),
     (
+        "ipv4",
+        r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b",
+        "<IP>",
+    ),
+    (
         "phone",
         # leading \b on the bare-digit branch: without it the pattern
         # matched INSIDE longer digit runs ('serial 98765 432 1098'
@@ -65,11 +75,6 @@ SCRUB_PATTERNS: tuple[tuple[str, str, str], ...] = (
         "credit_card",
         r"\b[0-9]{4}[ \-][0-9]{4}[ \-][0-9]{4}[ \-][0-9]{4}\b",
         "<CC>",
-    ),
-    (
-        "ipv4",
-        r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b",
-        "<IP>",
     ),
     (
         "toxic",
@@ -97,7 +102,9 @@ _COMPILED = [(name, re.compile(pat), repl) for name, pat, repl in SCRUB_PATTERNS
 
 
 def scrub_one(text: str | None) -> tuple[str, dict[str, int]]:
-    """Scrub one document; returns (scrubbed, {rule: n_hits})."""
+    """Kept as the golden scrub oracle every engine is tested against.
+
+    Scrub one document; returns (scrubbed, {rule: n_hits})."""
     if text is None:
         return "", {}
     hits: dict[str, int] = {}
@@ -109,7 +116,9 @@ def scrub_one(text: str | None) -> tuple[str, dict[str, int]]:
 
 
 def scrub_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized-enough batch scrub (pandas .str.replace per pattern,
+    """Kept as the golden scrub oracle every engine is tested against.
+
+    Vectorized-enough batch scrub (pandas .str.replace per pattern,
     which loops in C over the block) -> DataFrame(scrubbed, pii_hits)."""
     s = texts.fillna("")
     total = pd.Series(0, index=s.index, dtype="int64")

@@ -49,10 +49,6 @@ PA_SCHEMA = pa.schema(
     ]
 )
 
-MANIFEST_SCHEMA = (
-    "run_id string, stage string, bucket_id int, status string, "
-    "attempt int, updated_at timestamp, seq bigint"
-)
 
 PENDING, RUNNING, DONE, ERROR = "PENDING", "RUNNING", "DONE", "ERROR"
 

@@ -2,14 +2,12 @@
 pandas UDF (databricks/model/bc_chat_ift/_setup/utils.py:45-63)
 returns ARRAY<STRUCT<role,content>> from (context, question, answer)
 batches — reproduced here as the complex-nested-return idiom test
-(FIXTURES.md §5 messages_like), plus jsonl sink/source helpers
-(reference S12/S13: write_jsonl_by_line utils.py:21-31 and the
-pd.read_json recovery path 01_seed_generation.py:356)."""
+(FIXTURES.md §5 messages_like)."""
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,17 +46,3 @@ def with_chat_messages(
         "messages",
         to_chat_messages(F.col(context_col), F.col(question_col), F.col(answer_col)),
     )
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """jsonl sink (reference S12) — distributed, None-scrubbed by
-    Spark's json writer (null fields omitted with ignoreNullFields)."""
-    df.write.mode(mode).option("ignoreNullFields", "true").json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """jsonl source (reference S13) — explicit schema preferred."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

@@ -57,20 +57,6 @@ def default_row_entropy() -> Column:
     return F.monotonically_increasing_id()
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    key: str,
-    n_salts: int = 16,
-    salt_from: Column | str | None = None,
-) -> DataFrame:
-    """Repartition by (key, salt): co-locates mostly by key but caps
-    any single key's share of one partition at ~1/n_salts."""
-    ent = F.col(salt_from) if isinstance(salt_from, str) else salt_from
-    ent = default_row_entropy() if ent is None else ent
-    return df.repartition(num_partitions, F.col(key), salt_col(ent, n_salts))
-
-
 def salted_count_by_key(
     df: DataFrame,
     key: str,
@@ -101,52 +87,3 @@ def salted_count_by_key(
         *[F.sum(f"_p_{k}").alias(k) for k in aggs],
     )
     return final
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    path: str,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` as a hash-BUCKETED parquet table (external, at
-    ``path``), registered in the session catalog so later scans carry
-    the bucketing spec into the planner.
-
-    This is the write-once/join-many contract for 100 TB: bucket the
-    big fact tables by their join key (url/host/doc_id) at ingest,
-    and every subsequent equi-join or aggregation on that key is
-    EXCHANGE-FREE — Spark's planner proves co-location from the
-    catalog bucketing spec instead of shuffling 100 TB per query
-    (`colocated_join` + tests/test_bucketed.py assert zero Exchange
-    nodes in the physical plan). The reference's one physical hint is
-    a blind repartition(64) (pmc.py:152) re-paid on every run; a
-    bucketed table pays the partitioning shuffle once, at write time.
-
-    ``sort`` additionally sorts within each bucket file, which lets
-    the parquet reader skip row groups on key predicates and cheapens
-    the SMJ sort. Bucket counts must MATCH across tables that join
-    together (the negative test shows a mismatched side reintroduces
-    its Exchange).
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.option("path", path).saveAsTable(table)
-
-
-def colocated_join(spark, left_table: str, right_table: str, on, how: str = "inner") -> DataFrame:
-    """Join two same-key same-bucket-count tables written by
-    `write_bucketed` without any shuffle: reading via
-    ``spark.table`` (NOT ``read.parquet``, which would drop the
-    bucketing metadata) lets the planner emit a SortMergeJoin whose
-    both children are bucket-aligned FileScans — zero Exchange nodes.
-    The merge hint pins SMJ so plan assertions don't depend on
-    size-based broadcast estimates; with co-located inputs SMJ is
-    also the right physical choice at any scale."""
-    lhs = spark.table(left_table).hint("merge")
-    return lhs.join(spark.table(right_table), on, how)

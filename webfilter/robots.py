@@ -175,49 +175,6 @@ def allowed_expr(upath: Column, rules_col: Column) -> Column:
     return F.coalesce(best["allow"], F.lit(True))
 
 
-def robots_from_warc(files: DataFrame, strict: bool = True) -> DataFrame:
-    """Harvest (host, robots_txt) straight out of a WARC crawl
-    archive: parse response records, keep the ``/robots.txt``
-    captures, decode their body bytes. Closes the compliance loop —
-    a crawl archive alone yields the gate that judges it (compose
-    with ``parse_robots`` + ``rules_dim``). Newest 200-status capture
-    wins per host (one tiny window over robots rows only):
-
-    * the host key is ``urls.host_col`` — the SAME helper that keys
-      the page side of the compliance join, so port/userinfo variants
-      cannot make the rules silently never match (code-review r4c7
-      finding #2);
-    * non-200 captures (redirect bodies, 5xx error pages) are never
-      parsed as rules — RFC 9309 treats them as unreachable, and a
-      newer 503 HTML page must not erase a valid Disallow
-      (finding #3);
-    * exact-timestamp ties break deterministically by body md5 then
-      url (finding #8)."""
-    from .urls import host_col
-    from .warc import parse_warc
-
-    resp = parse_warc(files, strict=strict).filter(
-        F.col("url").rlike(r"^[a-zA-Z][\w+.-]*://[^/?#]+/robots\.txt$")
-        & (F.col("status") == 200)
-    )
-    w = Window.partitionBy("host").orderBy(
-        F.col("warc_ts").desc(),
-        F.md5(F.col("robots_txt")).desc(),
-        F.col("url"),
-    )
-    return (
-        resp.select(
-            host_col(F.col("url")).alias("host"),
-            F.col("warc_ts"),
-            F.col("url"),
-            F.decode(F.col("html"), "utf-8").alias("robots_txt"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("host", "robots_txt")
-    )
-
-
 def parse_sitemaps(
     df: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
 ) -> DataFrame:

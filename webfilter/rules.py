@@ -101,53 +101,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != F.lit(""))
 
 
-def heuristic_columns(text: Column, cfg: RuleConfig = DEFAULT_RULES) -> dict[str, Column]:
-    """Stat + rule boolean columns for one text column.
-
-    Returns a dict {name: Column}; stats first (n_words, n_chars,
-    mean_word_len, symbol_ratio, ...), then rule_<name> booleans.
-    """
-    toks = tokens_col(text)
-    n_words = F.size(toks)
-    n_chars = F.length(text)
-    sum_word_len = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, w: acc + F.length(w)
-    )
-    mean_word_len = F.when(n_words > 0, sum_word_len / n_words).otherwise(F.lit(0.0))
-    n_symbols = n_chars - F.length(F.regexp_replace(text, SYMBOL_CLASS, ""))
-    symbol_ratio = F.when(n_chars > 0, n_symbols / n_chars).otherwise(F.lit(0.0))
-    low_toks = F.transform(toks, F.lower)
-    n_stop = F.size(
-        F.array_intersect(low_toks, F.lit(list(cfg.stopwords)).cast("array<string>"))
-    )
-    n_alpha = F.size(F.filter(toks, lambda w: w.rlike("[A-Za-z]")))
-    alpha_ratio = F.when(n_words > 0, n_alpha / n_words).otherwise(F.lit(0.0))
-    lines = F.split(text, "\n")
-    n_lines = F.size(lines)
-    dup_line_ratio = F.when(
-        n_lines > 0, (n_lines - F.size(F.array_distinct(lines))) / n_lines
-    ).otherwise(F.lit(0.0))
-
-    return {
-        "n_words": n_words.cast("bigint"),
-        "n_chars": n_chars.cast("bigint"),
-        "mean_word_len": mean_word_len.cast("double"),
-        "symbol_ratio": symbol_ratio.cast("double"),
-        "n_stopwords": n_stop.cast("bigint"),
-        "alpha_ratio": alpha_ratio.cast("double"),
-        "dup_line_ratio": dup_line_ratio.cast("double"),
-        "rule_min_words": n_words >= cfg.min_words,
-        "rule_max_words": n_words <= cfg.max_words,
-        "rule_min_chars": n_chars >= cfg.min_chars,
-        "rule_mean_word_len": (mean_word_len >= cfg.mean_word_len_lo)
-        & (mean_word_len <= cfg.mean_word_len_hi),
-        "rule_symbol_ratio": symbol_ratio <= cfg.max_symbol_ratio,
-        "rule_stopwords": n_stop >= cfg.min_distinct_stopwords,
-        "rule_alpha_ratio": alpha_ratio >= cfg.min_alpha_token_ratio,
-        "rule_dup_lines": dup_line_ratio <= cfg.max_dup_line_ratio,
-    }
-
-
 def with_heuristics(
     df: DataFrame, text_col: str = "text", cfg: RuleConfig = DEFAULT_RULES
 ) -> DataFrame:
@@ -157,7 +110,9 @@ def with_heuristics(
     CollapseProject excluded from the optimizer (set by
     webfilter.session.get_spark) or Catalyst re-inlines the arrays —
     measured 1.6x on the rules stage, 2x with the scrub stage.
-    Output columns are identical to heuristic_columns()."""
+    Adds the stat columns (n_words, n_chars, mean_word_len,
+    symbol_ratio, n_stopwords, alpha_ratio, dup_line_ratio), then the
+    rule_<name> booleans."""
     t = F.col(text_col)
     toks, lines = F.col("_toks"), F.col("_lines")
     n_words, n_chars = F.col("n_words"), F.col("n_chars")

@@ -1,11 +1,10 @@
-"""Mergeable sketch algebra shared by the batch registry queries and
-the streaming ingestion path.
+"""Mergeable sketch algebra behind the HLL and Count-Min registry
+queries.
 
 Everything here is PURE Column algebra over the cross-engine
 md5-prefix hash (conv(substr(md5(x),1,15),16,10) — replayable in
-DuckDB as ('0x'||substr(md5(x),1,15))::BIGINT), so batch results are
-hash-checked against an independent engine and the streaming path is
-tested equal to batch. The HLL state (group, register, max rank) is
+DuckDB as ('0x'||substr(md5(x),1,15))::BIGINT), so results are
+hash-checked against an independent engine. The HLL state (group, register, max rank) is
 MERGEABLE: max is idempotent/commutative/associative, so partial
 states from partitions, days, or micro-batch epochs combine by a
 plain groupBy-max — arrival order and replays cannot change it.
@@ -87,13 +86,6 @@ def hll_registers(
     return t.groupBy(group_col, "reg").agg(F.max("rho").alias("m_j"))
 
 
-def merge_registers(regs: DataFrame, group_col: str = "lang") -> DataFrame:
-    """Combine partial register states (any union of per-partition /
-    per-day / per-epoch outputs of hll_registers) into one state:
-    a plain groupBy-max."""
-    return regs.groupBy(group_col, "reg").agg(F.max("m_j").alias("m_j"))
-
-
 def hll_estimate(
     regs: DataFrame, group_col: str = "lang", with_raw: bool = False
 ) -> DataFrame:
@@ -150,7 +142,7 @@ def cms_cells(
     map-side-combining groupBy (constant d*w state regardless of
     corpus size). Unlike HLL registers, CMS cells merge by SUM —
     NOT idempotent, so incremental/streaming use must dedupe epochs
-    before merging (see streaming.stream_cms_cells)."""
+    before merging."""
     e = (
         df.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(F.explode(shingles3_lower(F.col(text_col))).alias("tok"))

@@ -39,84 +39,23 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 16) -> Da
     )
 
 
-# the reference's Auto Loader CSV metadata feed schema shape
-# (01_Metadata_Sync.py:44-57 selects typed cols from the inferred CSV;
-# at 10^12 scale the schema is EXPLICIT — inference re-lists files)
-METADATA_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("_corrupt", T.StringType()),
-    ]
-)
-
-
-def read_csv_metadata_stream(
-    spark: SparkSession, path: str, max_files: int = 16
-) -> DataFrame:
-    """The reference's ONE stream — an Auto Loader incremental CSV
-    feed (cloudFiles, 01_Metadata_Sync.py:38-41) — as an open
-    readStream csv source: checkpointed discovery, per-trigger file
-    cap, explicit schema, header, and PERMISSIVE parsing that
-    captures every malformed line in the `_corrupt` column instead of
-    failing the stream (a 10^12-row feed WILL contain bad rows;
-    FAILFAST turns one of them into a dead pipeline)."""
-    return (
-        spark.readStream.schema(METADATA_CSV_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(path)
+def _drain(writer, checkpoint: str):
+    """Start a stream writer drain-then-stop — trigger(availableNow),
+    the reference's cadence (01_Metadata_Sync.py:79) — and block until
+    the backlog present at start is consumed."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined) split on the PERMISSIVE corrupt column:
-    clean rows drop the marker; quarantined rows keep the RAW line
-    (the only honest lineage for an unparseable record) for a
-    side-table write. Works on batch and streaming frames (both are
-    filters — no state, no shuffle).
-
-    Batch CSV reads forbid a query that references ONLY the corrupt
-    column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN —
-    reproduced on this Spark; code-review r4c3 finding #3), so the
-    batch path caches the parsed frame first — the documented Spark
-    workaround, and a sound one here because both halves of the
-    split re-read it. The cache is registered with the shared
-    caching registry: after materializing both halves, call
-    ``webfilter.caching.release_cached()`` (or the ``dedup``
-    alias) to drop it — repeated calls in a long-lived session
-    otherwise accumulate cached plans (ADVICE r4)."""
-    if not df.isStreaming:
-        from .caching import track
-
-        df = track(df.cache())
-    clean = df.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-    bad = df.filter(F.col("_corrupt").isNotNull()).select(
-        F.col("_corrupt").alias("raw_line")
-    )
-    return clean, bad
-
-
-def with_file_provenance(df: DataFrame) -> DataFrame:
-    """Projects the _metadata virtual columns of a file source into
-    real columns — reference S2 parity (01_Metadata_Sync.py:52-54
-    projects _metadata.file_path/_modification_time/_size into the
-    metadata table). Works on batch AND streaming file-source frames;
-    the columns are scan-provided (no I/O beyond the listing)."""
-    return df.select(
-        "*",
-        F.col("_metadata.file_path").alias("src_file"),
-        F.col("_metadata.file_modification_time").alias("src_mtime"),
-        F.col("_metadata.file_size").alias("src_size"),
-    )
+    q.awaitTermination()
+    return q
 
 
 def upsert_batch(out_root: str):
-    """foreachBatch upsert: batch-local latest-per-url, then append;
+    """Kept for SCALING.md "Streaming" (foreachBatch monotonic upsert).
+
+    foreachBatch upsert: batch-local latest-per-url, then append;
     readers resolve cross-batch conflicts with the same monotonic
     rule (merge-on-read — Iceberg MERGE INTO in production).
 
@@ -315,7 +254,7 @@ def run_filter_stream(
     (proven equal in tests/test_streaming.py); dedup/host-prior stay
     batch-only because their state spans the whole corpus."""
     dq_uid = _dq_stream_uid(checkpoint, out_root) if dq_check else "stream"
-    q = (
+    return _drain(
         read_pages_stream(spark, src_path, max_files=max_files)
         .writeStream.foreachBatch(
             filter_batch(
@@ -323,13 +262,9 @@ def run_filter_stream(
                 boilerplate=boilerplate, dq_check=dq_check,
                 dq_uid=dq_uid,
             )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q
 
 
 def _dq_stream_uid(checkpoint: str, out_root: str) -> str:
@@ -361,17 +296,14 @@ def _dq_stream_uid(checkpoint: str, out_root: str) -> str:
 def run_ingest_stream(
     spark: SparkSession, src_path: str, out_root: str, checkpoint: str
 ):
-    """Drain-then-stop incremental ingest (trigger(availableNow) —
-    the reference's cadence, 01_Metadata_Sync.py:79)."""
-    q = (
-        read_pages_stream(spark, src_path)
-        .writeStream.foreachBatch(upsert_batch(out_root))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drain-then-stop incremental ingest through upsert_batch
+    (SCALING.md "Streaming": foreachBatch monotonic upsert)."""
+    return _drain(
+        read_pages_stream(spark, src_path).writeStream.foreachBatch(
+            upsert_batch(out_root)
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q
 
 
 DEDUP_OUT_SCHEMA = T.StructType(
@@ -406,7 +338,9 @@ def _html_md5(h) -> str:
 
 
 def stateful_url_dedup(pages_stream: DataFrame) -> DataFrame:
-    """Cross-batch latest-wins URL dedup as a CUSTOM STATEFUL
+    """Kept for SCALING.md "Streaming" (cross-batch stateful URL dedup).
+
+    Cross-batch latest-wins URL dedup as a CUSTOM STATEFUL
     streaming operator (applyInPandasWithState) — the streaming form
     of tables.latest_per_url, beyond the reference's streaming
     surface (it has no stateful operators, SURVEY §2.7).
@@ -464,221 +398,20 @@ def run_stateful_dedup_stream(
 ):
     """Drain the file stream through the stateful dedup into an
     in-memory sink (tests); production sink = Iceberg append."""
-    q = (
+    return _drain(
         stateful_url_dedup(read_pages_stream(spark, src_path, max_files))
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def tws_available() -> tuple[bool, str]:
-    """Probe for transformWithStateInPandas availability. The Spark 4
-    API's Python state server speaks protobuf, so the `protobuf`
-    package must be importable by the streaming runner worker;
-    without it the query dies at init with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE (observed in this
-    sandbox: `ImportError: cannot import name 'descriptor' from
-    'google.protobuf'` — no pip and no wheel on disk, so the operator
-    below is implemented and test-gated exactly like the
-    jar-blocked Iceberg MERGE)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True, ""
-    except ImportError as e:
-        return False, (
-            "transformWithStateInPandas needs the python protobuf package "
-            f"for its state-server protocol; import failed: {e}"
-        )
-
-
-def tws_url_dedup(pages_stream: DataFrame, state_ttl_ms: int | None = None) -> DataFrame:
-    """`stateful_url_dedup` re-expressed on Spark 4's
-    transformWithStateInPandas — same latest-wins contract, plus the
-    capability applyInPandasWithState cannot offer: NATIVE STATE TTL
-    (``ttlDurationMs`` on the value state). At 10^12 urls the dedup
-    state is unbounded under the old API unless the operator itself
-    emits timeouts; with TTL the state store (RocksDB provider)
-    expires url entries idle longer than the crawl-revisit horizon,
-    capping state at the active-url working set. Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider and the protobuf wheel
-    (`tws_available`)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl = state_ttl_ms
-
-    class LatestWins(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.best = handle.getValueState(
-                "best_us", DEDUP_STATE_SCHEMA, ttlDurationMs=ttl
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            best = (
-                tuple(self.best.get()) if self.best.exists() else None
-            )
-            out = None
-            for pdf in rows:
-                pdf = pdf.assign(_md5=pdf["html"].map(_html_md5))
-                pdf = pdf.sort_values(["warc_ts", "_md5"])
-                row = pdf.iloc[-1]
-                us = int(row["warc_ts"].value // 1_000)  # ns -> us
-                cand = (us, row["_md5"])
-                if best is None or cand > best:
-                    best = cand
-                    out = pd.DataFrame(
-                        {
-                            "url": [row["url"]],
-                            "warc_ts": [row["warc_ts"]],
-                            "lang": [row["lang"]],
-                            "n_bytes": [
-                                len(row["html"]) if row["html"] is not None else 0
-                            ],
-                        }
-                    )
-            if out is not None:
-                self.best.update(best)
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    # state TTL is only legal in ProcessingTime mode (Spark raises
-    # STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL in
-    # timeMode=None — code-review r4c3 finding #2, confirmed against
-    # the bundled error catalog), so the mode follows the ttl arg
-    return pages_stream.groupBy("url").transformWithStateInPandas(
-        LatestWins(),
-        outputStructType=DEDUP_OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime" if ttl is not None else "None",
-    )
-
-
-def run_tws_dedup_stream(
-    spark: SparkSession,
-    src_path: str,
-    out_table: str,
-    checkpoint: str,
-    max_files: int = 1,
-    state_ttl_ms: int | None = None,
-):
-    """Drain the file stream through the TWS dedup into a memory sink
-    (tests). transformWithState mandates the RocksDB state store —
-    set session-wide before the query starts, restored after."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            tws_url_dedup(
-                read_pages_stream(spark, src_path, max_files), state_ttl_ms
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(out_table)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def watermarked_exact_dedup(
-    pages_stream: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Built-in bounded-state exact replay dedup:
-    `dropDuplicatesWithinWatermark` keys state by (url, warc_ts) and
-    EXPIRES each key once the event-time watermark passes it — the
-    state-GC'd form of dropDuplicates an infinite stream needs (plain
-    streaming dropDuplicates keeps every key forever; at web-crawl
-    rates that state grows without bound).
-
-    Complements stateful_url_dedup: this drops exact replays from
-    at-least-once sources (the same WARC capture delivered twice)
-    with bounded state; the custom stateful op implements
-    latest-WINS semantics with one long of state per url. A real
-    ingest chains both: replay-drop first, then latest-wins merge.
-    """
-    return (
-        pages_stream.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["url", "warc_ts"])
-        .select("url", "warc_ts", "lang")
-    )
-
-
-def run_watermarked_dedup_stream(
-    spark: SparkSession, src_path: str, out_table: str, checkpoint: str, max_files: int = 1
-):
-    """Drain the file stream through the watermark-bounded dedup into
-    an in-memory sink (tests); production sink = Iceberg append."""
-    q = (
-        watermarked_exact_dedup(read_pages_stream(spark, src_path, max_files))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    ts: str = "ts",
-    within: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream INNER interval join (beyond the
-    reference, which has no stream-stream joins — SURVEY §2.7): each
-    left event pairs with right events of the same key whose timestamp
-    falls in [left.ts - within, left.ts]. Watermarks on both sides
-    bound the join state; rows later than the watermark are dropped
-    deterministically, which is the whole point — unbounded
-    stream-stream state is the classic streaming OOM."""
-    l = left.withWatermark(ts, watermark).alias("l")
-    r = right.withWatermark(ts, watermark).alias("r")
-    return l.join(
-        r,
-        F.expr(
-            f"l.{by} = r.{by} AND r.{ts} BETWEEN l.{ts} - INTERVAL {within} AND l.{ts}"
-        ),
-        "inner",
-    ).select(
-        F.col(f"l.{by}").alias(by),
-        F.col(f"l.{ts}").alias("left_ts"),
-        F.col(f"r.{ts}").alias("right_ts"),
+        .queryName(out_table),
+        checkpoint,
     )
 
 
 def windowed_ingest_metrics(pages_stream: DataFrame) -> DataFrame:
-    """Watermarked tumbling-window arrival metrics (late rows beyond
+    """Kept for SCALING.md "Streaming" (watermarked tumbling-window
+    metrics).
+
+    Watermarked tumbling-window arrival metrics (late rows beyond
     10 minutes dropped deterministically)."""
     return (
         pages_stream.withWatermark("warc_ts", "10 minutes")
@@ -696,17 +429,13 @@ def run_metrics_stream(
 ):
     """Windowed metrics to an in-memory sink (tests) — swap format
     for an Iceberg/Kafka sink in production."""
-    q = (
+    return _drain(
         windowed_ingest_metrics(read_pages_stream(spark, src_path))
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(out_table),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q
 
 
 def streaming_sessionized_counts(
@@ -716,7 +445,9 @@ def streaming_sessionized_counts(
     ts: str = "warc_ts",
     key: str = "lang",
 ) -> DataFrame:
-    """Watermarked STREAMING session windows (`F.session_window` in a
+    """Kept for SCALING.md "Streaming" (watermarked sessionization).
+
+    Watermarked STREAMING session windows (`F.session_window` in a
     streaming groupBy — beyond the reference, which has no streaming
     aggregation at all): per-key dynamic-gap sessions whose state is
     GC'd once the watermark passes a session's close. The batch twin
@@ -749,224 +480,12 @@ def run_sessionized_stream(
     """Drain the file stream through streaming sessionization into an
     in-memory sink (tests); production sink = Iceberg append. Append
     mode emits a session only once the watermark closes it."""
-    q = (
-        streaming_sessionized_counts(read_pages_stream(spark, src_path, max_files), gap=gap)
+    return _drain(
+        streaming_sessionized_counts(
+            read_pages_stream(spark, src_path, max_files), gap=gap
+        )
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(out_table),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q
-
-
-# --------------------------------------------- streaming near-dup dedup
-
-
-def near_dedup_batch(out_root: str, threshold: float = 0.7):
-    """foreachBatch handler: ONLINE near-dup ingestion — each
-    micro-batch is signed/banded once and joined against the
-    PERSISTED band state (dedup.incremental_minhash_pairs), never
-    against re-signed history. State tables under ``out_root``:
-
-      * ``dedup_bands``   (url, band_idx, band_hash) of every doc seen
-      * ``stream_docs``   the raw (url, text) feed (verify corpus)
-      * ``stream_pairs``  accumulated verified near-dup pairs
-
-    The streaming form of pipeline.run_near_dedup(incremental=True):
-    batch mode ingests a day of completed filter runs, this ingests
-    micro-batches as files land (availableNow for catch-up cadence).
-    Survivors are derived at READ time (stream_kept_docs) with the
-    same greedy url_b rule, so the drained stream provably equals the
-    one-shot batch dedup on the same corpus (tested) — arrival order
-    cannot change the outcome.
-
-    Exactly-once: the checkpoint tracks consumed files; appends are
-    per-epoch atomic at the file level, and replayed epochs re-append
-    band/pair rows that are consumed via DISTINCT — duplicates cannot
-    change the kept set.
-    """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from .dedup import incremental_minhash_pairs, release_cached
-        from .tables import ParquetCatalog
-
-        spark = batch_df.sparkSession
-        catalog = ParquetCatalog(spark, out_root)
-        docs = batch_df.select("url", "text").filter(F.col("url").isNotNull())
-        if docs.isEmpty():
-            return
-        if catalog.exists("dedup_bands"):
-            old_bands = catalog.read("dedup_bands")
-            corpus = (
-                catalog.read("stream_docs")
-                .select("url", "text")
-                .unionByName(docs)
-                .distinct()
-            )
-        else:
-            old_bands = spark.createDataFrame(
-                [], "url string, band_idx int, band_hash bigint"
-            )
-            corpus = docs
-        pairs, new_bands = incremental_minhash_pairs(
-            docs, old_bands, corpus,
-            id_col="url", text_col="text", threshold=threshold,
-        )
-        catalog.append(
-            pairs.select(
-                F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b"),
-                "jaccard",
-            ).withColumn("_epoch", F.lit(epoch_id)),
-            "stream_pairs",
-        )
-        catalog.append(new_bands, "dedup_bands")
-        catalog.append(docs.withColumn("_epoch", F.lit(epoch_id)), "stream_docs")
-        release_cached()
-
-    return fn
-
-
-def run_near_dedup_stream(
-    spark: SparkSession, src_path: str, out_root: str, checkpoint: str,
-    threshold: float = 0.7, max_files: int = 1,
-):
-    """Drain a pages file-stream through online near-dup ingestion
-    (trigger(availableNow) — catch-up cadence like run_ingest_stream)."""
-    q = (
-        read_pages_stream(spark, src_path, max_files)
-        .writeStream.foreachBatch(near_dedup_batch(out_root, threshold))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_kept_docs(spark: SparkSession, out_root: str) -> DataFrame:
-    """Survivors of the streamed corpus under the greedy rule (url_b
-    of any verified pair drops) — DISTINCT consumption makes epoch
-    replays harmless."""
-    from .tables import ParquetCatalog
-
-    catalog = ParquetCatalog(spark, out_root)
-    docs = catalog.read("stream_docs").select("url", "text").distinct()
-    if not catalog.exists("stream_pairs"):
-        return docs
-    drops = catalog.read("stream_pairs").select(
-        F.col("url_b").alias("url")
-    ).distinct()
-    return docs.join(drops, "url", "left_anti")
-
-
-def hll_ingest_batch(out_root: str, group_col: str = "lang"):
-    """foreachBatch handler: ONLINE distinct-count sketching — each
-    micro-batch contributes its (group, register, max-rank) HLL
-    partial state (sketches.hll_registers) as an APPEND; the merged
-    state is derived at read time with a groupBy-max
-    (stream_hll_estimate). Because max is idempotent/commutative/
-    associative, epoch replays and arrival order cannot change the
-    merged state — the mergeable-sketch property doing the
-    exactly-once work that the pair/band stream above needs DISTINCT
-    consumption for. State grows by <= n_groups * 256 rows per epoch
-    and compacts to n_groups * 256 on merge."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from .sketches import hll_registers
-        from .tables import ParquetCatalog
-
-        spark = batch_df.sparkSession
-        catalog = ParquetCatalog(spark, out_root)
-        # guard on the RAW input, not the aggregate — an isEmpty() on
-        # regs would run the shingle explode + shuffle twice per epoch
-        if batch_df.isEmpty():
-            return
-        regs = hll_registers(batch_df, text_col="text", group_col=group_col)
-        catalog.append(regs.withColumn("_epoch", F.lit(epoch_id)), "hll_registers")
-
-    return fn
-
-
-def run_hll_stream(
-    spark: SparkSession, src_path: str, out_root: str, checkpoint: str,
-    group_col: str = "lang", max_files: int = 1,
-):
-    """Drain a pages file-stream through online HLL sketching
-    (trigger(availableNow) catch-up cadence)."""
-    q = (
-        read_pages_stream(spark, src_path, max_files)
-        .writeStream.foreachBatch(hll_ingest_batch(out_root, group_col))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_hll_estimate(spark: SparkSession, out_root: str, group_col: str = "lang"):
-    """(group, regs_hit, v_zero, s_denom, hll_estimate) from the
-    appended per-epoch register partials — merge then estimate."""
-    from .sketches import hll_estimate, merge_registers
-    from .tables import ParquetCatalog
-
-    catalog = ParquetCatalog(spark, out_root)
-    regs = catalog.read("hll_registers").select(group_col, "reg", "m_j")
-    return hll_estimate(merge_registers(regs, group_col), group_col)
-
-
-def cms_ingest_batch(out_root: str):
-    """foreachBatch handler: ONLINE Count-Min sketching. CMS cells
-    merge by SUM — unlike the HLL registers above, NOT idempotent —
-    so every epoch's partial cells are appended WITH their epoch id
-    and the read-time merge dedupes epochs first (a replayed epoch
-    re-appends identical (r, col, _epoch) rows; groupBy-max over the
-    epoch key absorbs them before the sum). The pair demonstrates the
-    two mergeable-sketch classes: max-mergeable states are replay-free
-    by algebra, sum-mergeable ones need exactly-once bookkeeping."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        from .sketches import cms_cells
-        from .tables import ParquetCatalog
-
-        spark = batch_df.sparkSession
-        catalog = ParquetCatalog(spark, out_root)
-        if batch_df.isEmpty():  # raw-input guard (see hll_ingest_batch)
-            return
-        cells = cms_cells(batch_df, text_col="text")
-        catalog.append(cells.withColumn("_epoch", F.lit(epoch_id)), "cms_cells")
-
-    return fn
-
-
-def run_cms_stream(
-    spark: SparkSession, src_path: str, out_root: str, checkpoint: str,
-    max_files: int = 1,
-):
-    q = (
-        read_pages_stream(spark, src_path, max_files)
-        .writeStream.foreachBatch(cms_ingest_batch(out_root))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_cms_cells(spark: SparkSession, out_root: str) -> DataFrame:
-    """Merged (r, col, cell_n) from the appended per-epoch partials:
-    dedupe epoch replays (max over identical per-epoch rows), THEN
-    sum across epochs."""
-    from .tables import ParquetCatalog
-
-    catalog = ParquetCatalog(spark, out_root)
-    per_epoch = (
-        catalog.read("cms_cells")
-        .groupBy("r", "col", "_epoch")
-        .agg(F.max("cell_n").alias("cell_n"))
-    )
-    return per_epoch.groupBy("r", "col").agg(F.sum("cell_n").alias("cell_n"))

@@ -49,10 +49,6 @@ N_COLD_HOSTS = 5000
 BASE_TS = np.datetime64("2024-01-01T00:00:00", "us")
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-GOLDEN_COLUMNS = [
-    "url", "category", "keep", "heur_reasons", "lang_true", "expected_text",
-    "expected_scrubbed", "dup_group", "has_pii", "title",
-]
 
 _LANG_KEYS = ("en", "de", "fr", "es", "zh")
 

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 # Authoritative Iceberg DDL (applied verbatim when an Iceberg catalog
-# is configured; documentation otherwise). bucket(url) partitioning =
+# is configured; documentation otherwise). Kept for the north-star
+# Iceberg table format; tests/test_iceberg.py parse-validates it. bucket(url) partitioning =
 # the url-hash bucket scheme; decisions/audit partition on bucket_id.
 ICEBERG_DDL: dict[str, str] = {
     "pages": """
@@ -73,7 +74,9 @@ HISTORY_PA_SCHEMA = _pa.schema(
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg runtime is actually on the JVM classpath.
+    """Kept for the Iceberg DDL path (the north-star table format).
+
+    True iff the Iceberg runtime is actually on the JVM classpath.
     The attribute-walk form (`spark._jvm.org.apache.iceberg.Table`)
     NEVER raises — py4j hands back a JavaPackage stub for missing
     classes — so the probe must force class loading (code-review
@@ -372,6 +375,8 @@ def latest_per_url(pages: DataFrame, cluster_col: str | None = None) -> DataFram
     )
 
 
+# Kept with ICEBERG_DDL: the Iceberg upsert, parse-validated by
+# tests/test_iceberg.py.
 MERGE_INTO_SQL = """
 MERGE INTO {ns}.pages t
 USING updates s
@@ -387,7 +392,9 @@ def merge_upsert_pages(
     name: str = "pages",
     n_buckets: int = 64,
 ) -> None:
-    """Keyed monotonic upsert into a url-hash-bucketed catalog table —
+    """Kept for SCALING.md "Snapshot table format" (MERGE cost baseline).
+
+    Keyed monotonic upsert into a url-hash-bucketed catalog table —
     the batch equivalent of MERGE_INTO_SQL for the parquet fallback.
 
     Per-BUCKET merge (VERDICT r1 #5): only the bucket partitions that

@@ -398,7 +398,9 @@ _BINARY_FILE_SCHEMA = T.StructType(
 
 def stream_wet(spark: SparkSession, path: str, max_files: int = 16,
                strict: bool = True) -> DataFrame:
-    """Incremental WET ingestion: the checkpointed file-discovery
+    """Kept for SCALING.md "Web-transport & compliance".
+
+    Incremental WET ingestion: the checkpointed file-discovery
     stream (the Auto Loader analog, streaming.read_pages_stream's S1
     shape) over .wet.gz containers — each trigger picks up only the
     crawl segments that appeared since the last checkpoint, caps
@@ -425,18 +427,6 @@ CDX_JSON_SCHEMA = T.StructType(
         T.StructField("status", T.StringType()),
         T.StructField("digest", T.StringType()),
         T.StructField("length", T.StringType()),
-    ]
-)
-
-CDX_SCHEMA = T.StructType(
-    [
-        T.StructField("surt", T.StringType()),
-        T.StructField("capture_ts", T.TimestampType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("status", T.IntegerType()),
-        T.StructField("digest", T.StringType()),
-        T.StructField("length", T.LongType()),
     ]
 )
 
