@@ -18,6 +18,7 @@ from webfilter.boilerplate import (
     MAX_LINK_DENSITY,
     STOP_HIGH,
     STOP_LOW,
+    final_classes_col,
     justext_blocks,
 )
 
@@ -26,6 +27,19 @@ LINKY = "see http://example.com/aaaa http://example.com/bbbb now"
 PLAIN = "quartz vortex jigsaw plasma nebula cipher krypton zephyr quasar"
 NEARG = "the quartz vortex jigsaw plasma nebula cipher krypton"
 SHORT = "tiny bit"
+
+
+def _good_blocks(text):
+    """Column-form reference for the cleaned text: the good blocks
+    per final_classes_col, re-joined (NULL text stays NULL)."""
+    kept = F.filter(
+        F.zip_with(
+            F.split(text, "\n"), final_classes_col(text),
+            lambda b, c: F.when(c == "good", b),
+        ),
+        lambda b: b.isNotNull(),
+    )
+    return F.when(text.isNotNull(), F.array_join(kept, "\n"))
 
 
 def _blocks(spark, text, doc_id=1):
@@ -113,8 +127,6 @@ def test_map_only_form_equals_window_form(spark):
         "🙂🙂 astral plane\nthe of and to a in it is here today\nx",
         "http://a.example/bbbbbbbbbbbbbbbb",
     ]
-    from webfilter.boilerplate import final_classes_col
-
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
@@ -170,7 +182,6 @@ def test_pipeline_flag_cleans_exactly_the_good_blocks(spark, pages):
     good blocks of the default run's text, n_chars tracks the cleaned
     text, and scores (computed pre-clean by design) are unchanged."""
     from webfilter import pipeline
-    from webfilter.boilerplate import clean_text_col
 
     base = pipeline.filtered_frame(pages).select(
         "url", "text", "n_chars", "langid", "perplexity"
@@ -180,9 +191,7 @@ def test_pipeline_flag_cleans_exactly_the_good_blocks(spark, pages):
     )
     want = {
         r["url"]: r["want"]
-        for r in base.select(
-            "url", clean_text_col(F.col("text"))["clean_text"].alias("want")
-        ).collect()
+        for r in base.select("url", _good_blocks(F.col("text")).alias("want")).collect()
     }
     base_rows = {r["url"]: r for r in base.collect()}
     on_rows = {r["url"]: r for r in on.collect()}
@@ -190,7 +199,7 @@ def test_pipeline_flag_cleans_exactly_the_good_blocks(spark, pages):
     changed = 0
     for url, r in on_rows.items():
         b = base_rows[url]
-        assert r["text"] == (want[url] if b["text"] is not None else None)
+        assert r["text"] == want[url]
         assert r["n_chars"] == (len(r["text"]) if r["text"] is not None else b["n_chars"])
         assert (r["langid"], r["perplexity"]) == (b["langid"], b["perplexity"])
         changed += r["text"] != b["text"]
@@ -218,22 +227,21 @@ def test_sep_is_literal_not_regex(spark):
     """A separator containing regex metacharacters must split
     literally (code-review r4c6 finding #3: '|' used to split
     between every character)."""
-    from webfilter.boilerplate import clean_text_col, with_boilerplate_removed
+    from webfilter.boilerplate import with_boilerplate_removed
 
     good = ("good text with many of the and is to stopwords here "
             "today and more of the same is here to stay for a while.")
     text = f"{good}|{good}"
-    df = spark.createDataFrame([(text,)], "text string")
-    c = df.select(clean_text_col(F.col("text"), sep="|").alias("c")).collect()[0]["c"]
-    assert c["n_blocks"] == 2
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    assert justext_blocks(df, sep="|").count() == 2
     out = with_boilerplate_removed(df, "text", sep="|").collect()[0]["text"]
     assert out == text  # both blocks good, literally re-joined
 
 
 def test_with_boilerplate_removed_matches_column_form(spark, synth_docs=None):
     """The staged (materialized-codes) df form must equal the pure
-    Column form block-for-block."""
-    from webfilter.boilerplate import clean_text_col, with_boilerplate_removed
+    Column form (final_classes_col) block-for-block."""
+    from webfilter.boilerplate import with_boilerplate_removed
 
     rows = [
         ("good text with many of the and is to stopwords here today.\n"
@@ -244,13 +252,5 @@ def test_with_boilerplate_removed_matches_column_form(spark, synth_docs=None):
     ]
     df = spark.createDataFrame(rows, "text string")
     a = [r["text"] for r in with_boilerplate_removed(df, "text").collect()]
-    b = [
-        r[0]
-        for r in df.select(
-            F.when(
-                F.col("text").isNotNull(),
-                clean_text_col(F.col("text"))["clean_text"],
-            )
-        ).collect()
-    ]
+    b = [r[0] for r in df.select(_good_blocks(F.col("text"))).collect()]
     assert a == b

@@ -185,9 +185,12 @@ def test_simhash_kernel_parity_with_column_impl(spark, near_dup_docs):
 def test_simhash_pairs_same_for_both_impls(spark, near_dup_docs):
     docs = near_dup_docs.select("doc_id", "text")
     k = {(r["id_a"], r["id_b"], r["hamming"])
-         for r in dedup.simhash_near_dup_pairs(docs, max_hamming=5, n_chunks=6, use_kernel=True).collect()}
+         for r in dedup.simhash_near_dup_pairs(docs, max_hamming=5, n_chunks=6).collect()}
+    # hash_fn selects the pure Column path (simhash_col) with the
+    # kernel's own token hash
     c = {(r["id_a"], r["id_b"], r["hamming"])
-         for r in dedup.simhash_near_dup_pairs(docs, max_hamming=5, n_chunks=6, use_kernel=False).collect()}
+         for r in dedup.simhash_near_dup_pairs(
+             docs, max_hamming=5, n_chunks=6, hash_fn=F.xxhash64).collect()}
     assert k == c
 
 
@@ -244,11 +247,15 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_component_survivors_exact_minimal(spark):
-    """One survivor per component; untouched rows all survive — vs the
+    """run_near_dedup's policy="components" keeps one survivor per
+    component (its min id); untouched rows all survive — vs the
     greedy rule, chains no longer over-drop."""
-    docs = spark.createDataFrame([(i, f"d{i}") for i in range(1, 8)], "doc_id long, text string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
-    kept = sorted(r["doc_id"] for r in dedup.component_survivors(docs, pairs).collect())
+    from webfilter.pipeline import _drops_from_pairs
+
+    docs = spark.createDataFrame([(i,) for i in range(1, 8)], "url long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "url_a long, url_b long")
+    drops = _drops_from_pairs(pairs, "components")
+    kept = sorted(r["url"] for r in docs.join(drops, "url", "left_anti").collect())
     assert kept == [1, 4, 5, 7]
 
 
@@ -311,10 +318,12 @@ def test_minhash_collapse_survivors_match_plain_path(spark):
         drops = pairs.select(F.col("id_b").alias("doc_id")).distinct()
         return {r["doc_id"] for r in docs.join(drops, "doc_id", "left_anti").collect()}
 
+    def component_losers(pairs):
+        comp = dedup.connected_components(pairs)
+        return {r["id"] for r in comp.filter(F.col("id") != F.col("component")).collect()}
+
     assert greedy_kept(plain) == greedy_kept(coll)
-    kp = {r["doc_id"] for r in dedup.component_survivors(docs, plain).collect()}
-    kc = {r["doc_id"] for r in dedup.component_survivors(docs, coll).collect()}
-    assert kp == kc
+    assert component_losers(plain) == component_losers(coll)
     assert coll.count() < plain.count()  # star < clique on the exact groups
     dedup.release_cached()
 
@@ -376,10 +385,14 @@ def test_kernels_tolerate_null_text(spark):
     sh = dedup.simhash_near_dup_pairs(df, max_hamming=3).collect()
     assert {(r["id_a"], r["id_b"]) for r in sh} == {(2, 4)}
     # signature/state frames: no crash, rows ONLY for token-bearing
-    # docs — all three minhash formulations agree (the kernel path
-    # used to emit _EMPTY_SIG rows the explode paths never had)
+    # docs — both minhash formulations agree (the kernel path used to
+    # emit _EMPTY_SIG rows the hash_fn explode path never had)
     assert dedup.minhash_signature_df(df, k=2).count() == 2
-    assert dedup.minhash_signature_df(df, k=2, use_kernel=False).count() == 2
+
+    def seeded(s, j):
+        return F.xxhash64(s, F.lit(j))
+
+    assert dedup.minhash_signature_df(df, k=2, hash_fn=seeded).count() == 2
     assert dedup.simhash_state_table(df).select("id").distinct().count() == 2
     # with_simhash stays total (a row per input doc): it is the raw
     # fingerprint column, not pair/banding state

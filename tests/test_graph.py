@@ -83,27 +83,6 @@ def test_host_pagerank_from_pages(spark):
     assert got["c.com"] > got["a.com"] and got["c.com"] > got["b.com"]
 
 
-def test_component_survivors_score_policy(spark):
-    from pyspark.sql import functions as F
-
-    from webfilter import dedup
-
-    docs = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.5), (4, 0.7), (5, 0.1)],
-        "doc_id long, quality double",
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    # default: min id (1) survives the {1,2,3} component
-    kept_min = {r["doc_id"] for r in dedup.component_survivors(docs, pairs).collect()}
-    assert kept_min == {1, 4, 5}
-    # score policy: highest quality (2) survives instead
-    kept_q = {
-        r["doc_id"]
-        for r in dedup.component_survivors(docs, pairs, score_col="quality").collect()
-    }
-    assert kept_q == {2, 4, 5}
-
-
 def test_triangle_count_canonicalizes_and_counts(spark):
     """Self-loops, duplicate edges and both-direction edges must not
     change counts; per-node counts match hand-enumerated triangles.

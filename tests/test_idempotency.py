@@ -125,7 +125,8 @@ def test_salt_spreads_hot_key(spark, synth_dir):
     no-op. Assert the hottest host's rows land on several salts."""
     from pyspark.sql import functions as F
 
-    from webfilter.partitioning import host_col, salt_col
+    from webfilter.partitioning import salt_col
+    from webfilter.urls import host_col
 
     pages = spark.read.parquet(f"{synth_dir}/pages.parquet")
     hot = (

@@ -1,11 +1,10 @@
 """Multimodal plumbing: binary columns through Arrow batches, decode
-metadata, feature extraction, frame sampling — deterministic stub
-kernels, real Spark plumbing."""
+metadata, pixel/sample decoders, frame sampling, perceptual-hash
+near-dups — real Spark plumbing."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from webfilter import multimodal
 
@@ -87,14 +86,6 @@ def test_media_kernel_headers_pure():
     assert (w["n_frames"], w["sample_rate"], w["duration_ms"]) == (4000, 16000, 250)
 
 
-def test_features_normalized(media):
-    feats = multimodal.extract_features(media).collect()
-    assert all(len(r["feature"]) == multimodal.EMBED_DIM for r in feats)
-    for r in feats[:10]:
-        norm = sum(x * x for x in r["feature"]) ** 0.5
-        assert abs(norm - 1.0) < 1e-3
-
-
 def test_frame_sampling_explodes(media):
     frames = multimodal.sample_frames(media.limit(20), every_ms=1000)
     pdf = frames.toPandas()
@@ -103,21 +94,6 @@ def test_frame_sampling_explodes(media):
     for _, g in pdf.groupby("media_id"):
         ts = g.sort_values("frame_idx")["frame_ts_ms"].tolist()
         assert ts == sorted(ts) and len(set(ts)) == len(ts)
-
-
-def test_feature_similarity_composes_with_simsearch(spark, media):
-    """media features flow into the same ANN operators as text
-    embeddings (schema compatibility check)."""
-    from webfilter.simsearch import brute_force_topk
-
-    feats = multimodal.extract_features(media).withColumnRenamed("media_id", "vec_id") \
-        .withColumnRenamed("feature", "embedding")
-    q = feats.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    top = brute_force_topk(feats, q, k=2)
-    rows = top.filter(F.col("rank") == 1).collect()
-    assert all(r["query_id"] == r["vec_id"] for r in rows)
 
 
 def _expected_png_pixels(width, height, seed):
@@ -206,28 +182,6 @@ def test_png_unfilter_all_filter_types():
     assert np.array_equal(px, img)
 
 
-def test_png_features_use_decoded_pixels(spark):
-    """A PNG's embedding must be the decoded-pixel histogram, not the
-    compressed-byte histogram: compare against a histogram computed
-    from the generator's ground-truth pixels."""
-    import numpy as np
-    import pandas as pd
-
-    from webfilter.kernels.media import make_png
-
-    pdf = pd.DataFrame(
-        {"media_id": [1], "kind": ["image"], "bytes": [make_png(24, 13, seed=6)],
-         "meta_ts": [pd.Timestamp("2024-01-01", tz="UTC")]}
-    )
-    df = spark.createDataFrame(pdf[["media_id", "bytes"]])
-    feat = multimodal.extract_features(df).collect()[0]["feature"]
-    exp_pixels = _expected_png_pixels(24, 13, 6).reshape(-1)
-    hist, _ = np.histogram(exp_pixels, bins=multimodal.EMBED_DIM, range=(0, 256))
-    v = hist.astype(np.float32)
-    v /= np.linalg.norm(v)
-    assert np.allclose(np.array(feat, dtype=np.float32), v, atol=1e-6)
-
-
 def test_gif_pixel_decode_matches_generator():
     """decode_gif_pixels reconstructs the EXACT palette indices
     make_gif wrote — through REAL LZW (dictionary references and
@@ -258,29 +212,6 @@ def test_gif_decode_rejects_malformed():
     g = bytearray(make_gif(9, 4, seed=2))
     g[30] ^= 0xFF  # corrupt a palette/structure byte: must not raise
     decode_gif_pixels(bytes(g))
-
-
-def test_extract_features_uses_real_gif_pixels(spark):
-    """A GIF and a PNG with the SAME LCG pixel stream must produce
-    the SAME feature histogram (both decode to real pixels), and
-    differ from the byte-histogram fallback on the GIF bytes."""
-    import numpy as np
-
-    from webfilter.kernels.media import make_gif, make_png
-    from webfilter.multimodal import EMBED_DIM, extract_features
-
-    gif, png = make_gif(31, 17, seed=6), make_png(31, 17, seed=6)
-    df = spark.createDataFrame(
-        [(1, gif), (2, png)], ["media_id", "bytes"]
-    )
-    out = {r["media_id"]: r["feature"] for r in extract_features(df).collect()}
-    assert np.allclose(out[1], out[2], atol=1e-6)
-    byte_hist, _ = np.histogram(
-        np.frombuffer(gif[:4096], dtype=np.uint8), bins=EMBED_DIM, range=(0, 256)
-    )
-    v = byte_hist.astype(np.float32)
-    v /= np.linalg.norm(v) or 1.0
-    assert not np.allclose(out[1], v.tolist(), atol=1e-3)
 
 
 def test_mp4_probe_roundtrip():
@@ -348,35 +279,6 @@ def test_jpeg_pixel_decode_real_entropy_data():
     i = mono.find(b"\xff\xc0")
     prog[i + 1] = 0xC2  # rewrite SOF0 -> SOF2 (progressive)
     assert decode_jpeg_pixels(bytes(prog)) is None
-
-
-def test_jpeg_features_use_decoded_pixels(spark):
-    """A grayscale JPEG's embedding must come from DECODED pixels:
-    cosine vs the ground-truth pixel histogram ~1, and far from the
-    compressed-byte histogram."""
-    import numpy as np
-    import pandas as pd
-
-    from webfilter.kernels.media import make_jpeg
-
-    raw, px = make_jpeg(32, 24, seed=9, flat_q=True)
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_id": [1], "bytes": [raw]})
-    )
-    feat = np.array(
-        multimodal.extract_features(df).collect()[0]["feature"], dtype=np.float32
-    )
-    hist, _ = np.histogram(px.reshape(-1), bins=multimodal.EMBED_DIM, range=(0, 256))
-    v = hist.astype(np.float32)
-    v /= np.linalg.norm(v)
-    assert float(feat @ v) > 0.999
-    bhist, _ = np.histogram(
-        np.frombuffer(raw[:4096], dtype=np.uint8),
-        bins=multimodal.EMBED_DIM, range=(0, 256),
-    )
-    b = bhist.astype(np.float32)
-    b /= np.linalg.norm(b)
-    assert float(feat @ b) < 0.9
 
 
 def test_jpeg_420_decode_matches_subsampling_model():
@@ -572,48 +474,14 @@ def test_decode_wav_samples_pcm16_and_malformed():
     assert mk.decode_wav_samples(bytes(bad)) is None
 
 
-def test_audio_features_use_decoded_samples(spark):
-    """extract_features embeds WAV (PCM16 AND ADPCM) from decoded
-    int16 samples: recompute the expected histogram locally and
-    require exact equality; a byte-histogram of the same blob must
-    differ."""
-    import numpy as np
-
-    from webfilter.kernels import media as mk
-
-    audio = multimodal.synth_media(spark, 15, kind="audio")
-    feats = {r["media_id"]: r["feature"] for r in multimodal.extract_features(audio).collect()}
-    raws = {r["media_id"]: bytes(r["bytes"]) for r in audio.collect()}
-    assert len(feats) == 15
-    for i, raw in raws.items():
-        smp = mk.decode_wav_samples(raw)
-        assert smp is not None, i
-        hist, _ = np.histogram(
-            smp.reshape(-1), bins=multimodal.EMBED_DIM, range=(-32768, 32768)
-        )
-        v = hist.astype(np.float32)
-        want = v / (float(np.linalg.norm(v)) or 1.0)
-        np.testing.assert_allclose(feats[i], want, rtol=1e-6)
-        bhist, _ = np.histogram(
-            np.frombuffer(raw[:4096], dtype=np.uint8),
-            bins=multimodal.EMBED_DIM,
-            range=(0, 256),
-        )
-        bv = bhist.astype(np.float32)
-        assert not np.allclose(feats[i], bv / (float(np.linalg.norm(bv)) or 1.0))
-
-
 # ------------------------------------------------- image near-dup dedup
 
 
 def test_bmp_pixel_roundtrip_and_features(spark):
-    """decode_bmp_pixels inverts encode_bmp exactly, and
-    extract_features embeds BMP from REAL pixels now (same histogram
-    as the PNG encoding of the same pixels)."""
+    """decode_bmp_pixels inverts encode_bmp exactly."""
     import numpy as np
 
     from webfilter.kernels import media as m
-    from webfilter.multimodal import extract_features
 
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, size=(20, 30, 3), dtype=np.uint8)
@@ -621,12 +489,6 @@ def test_bmp_pixel_roundtrip_and_features(spark):
     assert back is not None and (back == px).all()
     # make_bmp output decodes too (bottom-up padded rows)
     assert m.decode_bmp_pixels(m.make_bmp(17, 9, seed=3)).shape == (9, 17, 3)
-    df = spark.createDataFrame(
-        [(0, m.encode_bmp(px)), (1, m.encode_png(px))],
-        "media_id long, bytes binary",
-    )
-    feats = {r.media_id: r.feature for r in extract_features(df).collect()}
-    assert feats[0] == feats[1]
 
 
 def test_dhash_cross_codec_and_perceptual(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from webfilter.kernels.qualityclf import quality_prob_batch
 
@@ -57,12 +56,13 @@ def test_quality_classifier_batch_invariant():
 
 
 def test_quality_prob_spark_stage(spark):
-    from webfilter.quality import with_quality_prob
+    from webfilter.scoring import with_model_scores
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(GOOD + SPAM)], "doc_id long, text string"
     )
-    rows = {r["doc_id"]: r["quality_prob"] for r in with_quality_prob(df).collect()}
+    scored = with_model_scores(df, "text", extract=False, scrub=False)
+    rows = {r["doc_id"]: r["quality_prob"] for r in scored.collect()}
     local = quality_prob_batch(pd.Series(GOOD + SPAM))
     for i in range(len(GOOD + SPAM)):
         assert abs(rows[i] - local[i]) < 1e-9
@@ -184,7 +184,7 @@ def test_pre_extracted_boilerplate_path_scrubs_cleaned_text(spark):
     """filtered_frame(pre_extracted=True, boilerplate=True): the UDF
     scores the given text without scrubbing; the JVM scrub chain then
     scrubs the CLEANED text, byte-identical to the Python scrubber."""
-    from webfilter.boilerplate import clean_text_col
+    from webfilter.boilerplate import with_boilerplate_removed
     from webfilter.kernels.extract import extract_batch
     from webfilter.kernels.scrubber import scrub_one
     from webfilter.pipeline import filtered_frame
@@ -197,10 +197,8 @@ def test_pre_extracted_boilerplate_path_scrubs_cleaned_text(spark):
         "url", "text", "scrubbed_text", "pii_found", "extract_err"
     ).collect()
     want = {
-        r["url"]: r["c"]
-        for r in pages.select(
-            "url", clean_text_col(F.col("text"))["clean_text"].alias("c")
-        ).collect()
+        r["url"]: r["text"]
+        for r in with_boilerplate_removed(pages, "text").select("url", "text").collect()
     }
     assert len(rows) == len(b)
     for r in rows:

@@ -1,4 +1,5 @@
-"""Every top-level definition in webfilter/ and jobs/ is reached from a
+"""Every top-level definition and every method of a top-level class
+(``module.Class.method``) in webfilter/ and jobs/ is reached from a
 real entry point, or is listed in KEEP with the reason it stays.
 
 Roots: each job's ``main``, ``entry_queries.REGISTRY``, module-level
@@ -19,7 +20,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 _SCALING = 'SCALING.md "{}"'
-_PENDING = "pending Direction 4"
+# methods a framework calls by protocol, never by name
+_PROTOCOL = {"eval"}
 
 # "module.name" -> why it stays although no entry point reaches it.
 # A reason is a SCALING.md section, the Iceberg DDL, or the test that
@@ -27,6 +29,7 @@ _PENDING = "pending Direction 4"
 KEEP: dict[str, str] = {
     # SCALING.md claims
     "dedup.auto_n_planes": _SCALING.format("Dedup family"),
+    "dedup.embedding_candidate_pairs": _SCALING.format("Dedup family"),
     "dedup.incremental_simhash_pairs": _SCALING.format("Incremental near-dup"),
     "dedup.incremental_embedding_pairs": _SCALING.format("Incremental near-dup"),
     "dedup.embedding_bucket_table": _SCALING.format("Incremental near-dup"),
@@ -34,6 +37,8 @@ KEEP: dict[str, str] = {
     "dedup.span_state_table": _SCALING.format("Robustness guards"),
     "warc.stream_wet": _SCALING.format("Web-transport & compliance"),
     "tables.merge_upsert_pages": _SCALING.format("Snapshot table format"),
+    "snaptable.SnapshotTable.merge_upsert": _SCALING.format("Snapshot table format"),
+    "tables.ParquetCatalog.compact": _SCALING.format("Layout & retrieval"),
     "streaming.upsert_batch": _SCALING.format("Streaming"),
     "streaming.run_ingest_stream": _SCALING.format("Streaming"),
     "streaming.windowed_ingest_metrics": _SCALING.format("Streaming"),
@@ -53,19 +58,13 @@ KEEP: dict[str, str] = {
     "kernels.extract._HSPACE": "tests/test_kernels.py whitespace-collapse reference",
     "clustering.exact_assign_col": "tests/test_clustering.py exact-assign reference",
     "clustering.exact_min_key_col": "tests/test_clustering.py exact-assign reference",
+    "boilerplate.final_classes_col": "tests/test_boilerplate.py map-vs-window reference",
     "kernels.media.make_gif": "tests/test_media_fuzz.py fixture encoder",
     "kernels.media.make_jpeg": "tests/test_media_fuzz.py fixture encoder",
     "kernels.media.make_jpeg_color": "tests/test_media_fuzz.py fixture encoder",
     "caching.cached_count": "tests/test_advice_r5.py cache-leak regression probe",
     "dq.refresh": "tests/test_dq.py differential refresh (ICDE 2019), "
     "which ROADMAP Direction 2 builds on",
-    # test-only code a later change deletes or wires in
-    "dedup.component_survivors": _PENDING,
-    "dedup.embedding_candidate_pairs": _PENDING,
-    "simsearch.hyperplane_bucket_col": _PENDING,
-    "simsearch.with_hyperplane_bucket": _PENDING,
-    "simsearch._bucket_cols": _PENDING,
-    "multimodal.extract_features": _PENDING,
 }
 
 
@@ -75,6 +74,25 @@ def _names(node: ast.AST) -> set[str]:
         for n in ast.walk(node)
         if isinstance(n, (ast.Name, ast.Attribute))
     }
+
+
+def _class_defs(qual: str, cls: ast.ClassDef) -> dict[str, set[str]]:
+    """``qual`` -> names its bases, decorators, class-level statements
+    and protocol methods use, plus ``qual.method`` -> names for every
+    other method. Protocol methods (dunders, the UDTF ``eval``) are
+    called by the framework, never by name, so they count as reached
+    with their class."""
+    out = {qual: set()}
+    for n in (*cls.bases, *cls.keywords, *cls.decorator_list):
+        out[qual] |= _names(n)
+    for st in cls.body:
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+            st.name in _PROTOCOL or st.name.startswith("__")
+        ):
+            out[f"{qual}.{st.name}"] = _names(st)
+        else:
+            out[qual] |= _names(st)
+    return out
 
 
 def _scan():
@@ -93,7 +111,9 @@ def _scan():
                     else [st.target] if isinstance(st, ast.AnnAssign)
                     else []
                 )
-                if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if isinstance(st, ast.ClassDef):
+                    defs.update(_class_defs(f"{mod}.{st.name}", st))
+                elif isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     defs[f"{mod}.{st.name}"] = _names(st)
                 elif targets and all(isinstance(t, ast.Name) for t in targets):
                     # NAME = value defines NAME; REGISTRY[k] = ... is a root
@@ -155,4 +175,4 @@ def test_keep_entries_are_live_and_justified():
             test_file = REPO / why.split()[0]
             assert name in test_file.read_text(), (q, why)
         else:
-            assert why in ("Iceberg DDL", _PENDING), (q, why)
+            assert why == "Iceberg DDL", (q, why)

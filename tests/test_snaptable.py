@@ -383,76 +383,6 @@ def test_schema_evolution_rejects_non_nullable_addition(spark, table):
 # ----------------------------------------------------- streaming sink
 
 
-def test_streaming_merge_sink_epochs_and_replay(spark, table, tmp_path):
-    """S7 on the snapshot format: a file stream foreachBatch-merged
-    into the table — each epoch is one atomic snapshot, the final
-    state equals the batch latest-per-key over all files, and a full
-    checkpoint-wipe replay (at-least-once delivery) converges to the
-    SAME visible content (idempotent merge)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.LongType()),
-            T.StructField("payload", T.StringType()),
-        ]
-    )
-    src = str(tmp_path / "src")
-    batches = [
-        [("u1", 10, "a"), ("u2", 10, "b")],
-        [("u1", 20, "a2"), ("u3", 10, "c")],
-        [("u2", 5, "stale"), ("u3", 30, "c2")],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def run(cp):
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withColumn(
-                "bucket_id", (F.abs(F.xxhash64("url")) % 4).cast("int")
-            )
-        )
-        q = (
-            s.writeStream.foreachBatch(
-                table.foreach_batch_merge(
-                    ["url"], ["warc_ts", "payload"], part_col="bucket_id"
-                )
-            )
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run(str(tmp_path / "cp1"))
-    want = {"u1": (20, "a2"), "u2": (10, "b"), "u3": (30, "c2")}
-    got = {
-        r["url"]: (r["warc_ts"], r["payload"])
-        for r in table.read().collect()
-    }
-    assert got == want
-    n_epoch_snaps = table.current_snapshot()
-    assert n_epoch_snaps >= 1  # one snapshot per non-empty epoch
-    # full replay from a fresh checkpoint: at-least-once redelivery
-    # of every file — content must converge to the same state
-    run(str(tmp_path / "cp2"))
-    got2 = {
-        r["url"]: (r["warc_ts"], r["payload"])
-        for r in table.read().collect()
-    }
-    assert got2 == want
-    # and history kept every epoch as a snapshot (time travel works)
-    assert table.current_snapshot() > n_epoch_snaps
-    first = table.read(snapshot=0).collect()
-    assert {r["url"] for r in first} <= {"u1", "u2", "u3"}
-
-
 def test_compact_manifests_metadata_only(spark, table):
     """rewrite_manifests analog: after N commits the snapshot's
     manifest list folds to length 1, zero data files move, reads are

@@ -214,11 +214,10 @@ def test_anchor_stats_accept_attributed_links(spark):
 
 
 def test_host_audit_key_matches_rank_and_robots_key(spark):
-    """partitioning.host_col IS urls.host_col (code-review r4c6
-    finding #1): case, port, userinfo and no-match all key
-    identically, so host_audit joins back to host_rank/robots."""
-    from webfilter import partitioning
-
+    """The host audit keys on urls.host_col, the same key as the
+    host_rank and robots joins (code-review r4c6 finding #1): case,
+    port, userinfo and no-match all key identically, so host_audit
+    joins back to host_rank/robots."""
     df = spark.createDataFrame(
         [("HTTPS://Example.COM/x",),
          ("http://example.com:8080/y",),
@@ -226,6 +225,5 @@ def test_host_audit_key_matches_rank_and_robots_key(spark):
          ("not-a-url",)],
         "url string",
     )
-    a = [r[0] for r in df.select(partitioning.host_col(F.col("url"))).collect()]
-    b = [r[0] for r in df.select(host_col(F.col("url"))).collect()]
-    assert a == b == ["example.com", "example.com", "example.com", None]
+    got = [r[0] for r in df.select(host_col(F.col("url"))).collect()]
+    assert got == ["example.com", "example.com", "example.com", None]

@@ -182,19 +182,11 @@ def justext_blocks(
 
 
 def _raw_class_of_block(b: Column) -> Column:
-    """Context-free class of ONE block string — the lambda-body form
-    of block_features + classify_raw (each feature references only
-    the element, so no captured-array re-evaluation)."""
-    toks = tokens_col(b)
-    n_chars = F.length(b)
-    n_toks = F.size(toks)
-    link_density = F.when(
-        n_chars > 0, link_chars_col(toks) / n_chars
-    ).otherwise(F.lit(0.0))
-    stop_density = F.when(
-        n_toks > 0, stopword_count_col(toks) / n_toks
-    ).otherwise(F.lit(0.0))
-    return classify_raw(n_chars, link_density, stop_density)
+    """Context-free class of ONE block string: block_features +
+    classify_raw as a lambda body (each feature references only the
+    element, so no captured-array re-evaluation)."""
+    f = block_features(b)
+    return classify_raw(f["n_chars"], f["link_density"], f["stop_density"])
 
 
 def _scan_last_unambiguous(codes: Column) -> Column:
@@ -238,9 +230,12 @@ def _final_from_codes(codes: Column) -> Column:
 
 
 def final_classes_col(text: Column, sep: str = "\n") -> Column:
-    """Array of final good/bad classes for the ``sep``-separated
+    """Kept as the class-level reference tests/test_boilerplate.py
+    compares with the window form.
+
+    Array of final good/bad classes for the ``sep``-separated
     blocks of ``text`` — the MAP-ONLY form of the jusText context
-    pass. The window form (justext_blocks) shuffles once on doc_id
+    pass (with_boilerplate_removed stages the same pass). The window form (justext_blocks) shuffles once on doc_id
     because its output is per-block rows; when the consumer only
     needs the per-document cleaned text, the whole scan lives inside
     the row (prefix scan forward + prefix scan over the reversed
@@ -249,25 +244,6 @@ def final_classes_col(text: Column, sep: str = "\n") -> Column:
     pytest-proven block-for-block."""
     blocks = F.split(text, _sep_pattern(sep))
     return _final_from_codes(F.transform(blocks, _raw_class_of_block))
-
-
-def clean_text_col(text: Column, sep: str = "\n") -> Column:
-    """struct(clean_text, n_blocks, n_good_blocks): ``sep``-joined
-    good blocks plus block counts, all map-side. A document whose
-    every block is boilerplate yields clean_text '' — the downstream
-    length gates then drop it honestly rather than this stage
-    deciding keep/drop itself."""
-    blocks = F.split(text, _sep_pattern(sep))
-    final = final_classes_col(text, sep)
-    kept = F.filter(
-        F.zip_with(blocks, final, lambda b, c: F.when(c == "good", b)),
-        lambda b: b.isNotNull(),
-    )
-    return F.struct(
-        F.array_join(kept, sep).alias("clean_text"),
-        F.size(blocks).cast("bigint").alias("n_blocks"),
-        F.size(kept).cast("bigint").alias("n_good_blocks"),
-    )
 
 
 def with_boilerplate_removed(
@@ -281,9 +257,9 @@ def with_boilerplate_removed(
     The per-block classification is staged in a real column:
     CollapseProject does not inline a non-cheap alias referenced
     more than once, so ``_bp_codes`` is computed ONCE per row instead
-    of once per consuming subtree — the Column-only form
-    (clean_text_col) re-derives it up to three times (code-review
-    r4c6 finding #5), which the hot path must not pay."""
+    of once per consuming subtree — a Column-only form re-derives it
+    up to three times (code-review r4c6 finding #5), which the hot
+    path must not pay."""
     pat = _sep_pattern(sep)
     staged = df.withColumn(
         "_bp_blocks", F.split(F.col(text_col), pat)

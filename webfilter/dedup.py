@@ -238,7 +238,6 @@ def minhash_signature_df(
     text_col: str = "text",
     k: int = 3,
     n_hashes: int = 64,
-    use_kernel: bool = True,
     hash_fn=None,
 ) -> DataFrame:
     """(id, sig array<bigint>) — n_hashes minhash values per doc.
@@ -250,18 +249,14 @@ def minhash_signature_df(
     n_hashes min-aggs + shuffle. min over a multiset equals min over
     the set, so distinctness upstream is only a size optimization.
 
-    use_kernel=False keeps the all-JVM explode+agg formulation (the
-    fallback when Python workers are undesirable; same LSH behavior,
-    different — equally valid — hash family).
-
-    hash_fn (implies use_kernel=False): a (shingle_string_col, seed)
-    -> bigint Column family replacing xxhash64, applied to the
+    hash_fn: a (shingle_string_col, seed) -> bigint Column family
+    replacing the kernel with an explode + n_hashes min-aggs over the
     human-readable shingle STRINGS (shingles_col, not the hashed
     form). The minhash/banding ALGEBRA is hash-agnostic; passing a
     cross-engine family (md5-prefix) lets a DuckDB oracle replay the
     exact signatures — the winnow_fingerprints recipe applied to LSH.
     Production keeps the kernel's splitmix64 family (faster, and
-    8-byte shingle hashes instead of strings in the explode).
+    8-byte shingle hashes instead of strings).
     """
     if hash_fn is not None:
         sh = df.select(
@@ -276,47 +271,35 @@ def minhash_signature_df(
         return agg.select(
             id_col, F.array(*[F.col(f"h{j}") for j in range(n_hashes)]).alias("sig")
         )
-    if use_kernel:
-        import pandas as pd
-        from pyspark.sql import types as T
+    import pandas as pd
+    from pyspark.sql import types as T
 
-        def _fn(hashes):
-            sig = _minhash_kernel(hashes.tolist(), n_hashes)
-            return pd.Series(list(sig), index=hashes.index)
+    def _fn(hashes):
+        sig = _minhash_kernel(hashes.tolist(), n_hashes)
+        return pd.Series(list(sig), index=hashes.index)
 
-        # asNondeterministic: the sentinel filter right below references
-        # the UDF's output column, and the optimizer otherwise pushes a
-        # COPY of the whole ArrowEvalPython (plus its shingle-hash
-        # input subtree) beneath the filter — two full signature
-        # evaluations per pass, measured 4.3 s vs 0.7 s at sf1.0 (opt
-        # guide §4.4; plan showed 2x ArrowEvalPython). The kernel is
-        # semantically deterministic — the flag only forbids the
-        # optimizer from duplicating/reordering it.
-        udf = F.pandas_udf(_fn, T.ArrayType(T.LongType())).asNondeterministic()
-        out = df.select(
-            F.col(id_col), udf(shingle_hashes_col(F.col(text_col), k)).alias("sig")
-        )
-        # Drop the _EMPTY_SIG sentinel rows (zero-shingle docs) so the
-        # kernel path matches the explode paths, where empty docs
-        # simply produce no group. Without this every content-free doc
-        # shares identical bands and the banding self-join emits
-        # m^2/2 candidate pairs for them BEFORE any verify can reject
-        # — a one-bucket quadratic blow-up at crawl scale. Post-UDF
-        # sentinel test (int64 view of uint64-max is -1) avoids
-        # re-evaluating the shingle hashes for a pre-filter; a real
-        # minimum of -1 needs xxhash64 to hit 2^64-1, P ~ n/2^64.
-        return out.filter(F.element_at("sig", 1) != F.lit(-1))
-    sh = df.select(
-        F.col(id_col),
-        F.explode(shingle_hashes_col(F.col(text_col), k)).alias("shingle"),
+    # asNondeterministic: the sentinel filter right below references
+    # the UDF's output column, and the optimizer otherwise pushes a
+    # COPY of the whole ArrowEvalPython (plus its shingle-hash
+    # input subtree) beneath the filter — two full signature
+    # evaluations per pass, measured 4.3 s vs 0.7 s at sf1.0 (opt
+    # guide §4.4; plan showed 2x ArrowEvalPython). The kernel is
+    # semantically deterministic — the flag only forbids the
+    # optimizer from duplicating/reordering it.
+    udf = F.pandas_udf(_fn, T.ArrayType(T.LongType())).asNondeterministic()
+    out = df.select(
+        F.col(id_col), udf(shingle_hashes_col(F.col(text_col), k)).alias("sig")
     )
-    mins = [
-        F.min(F.xxhash64("shingle", F.lit(j))).alias(f"h{j}") for j in range(n_hashes)
-    ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        id_col, F.array(*[F.col(f"h{j}") for j in range(n_hashes)]).alias("sig")
-    )
+    # Drop the _EMPTY_SIG sentinel rows (zero-shingle docs) so the
+    # kernel path matches the hash_fn explode path, where empty docs
+    # simply produce no group. Without this every content-free doc
+    # shares identical bands and the banding self-join emits
+    # m^2/2 candidate pairs for them BEFORE any verify can reject
+    # — a one-bucket quadratic blow-up at crawl scale. Post-UDF
+    # sentinel test (int64 view of uint64-max is -1) avoids
+    # re-evaluating the shingle hashes for a pre-filter; a real
+    # minimum of -1 needs xxhash64 to hit 2^64-1, P ~ n/2^64.
+    return out.filter(F.element_at("sig", 1) != F.lit(-1))
 
 
 def band_table(
@@ -535,7 +518,6 @@ def incremental_minhash_pairs(
     n_hashes: int = 64,
     n_bands: int = 16,
     threshold: float = 0.7,
-    broadcast_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a NEW batch against persisted band state without
     re-banding the corpus (VERDICT r3 #3: a daily crawl increment must
@@ -561,14 +543,11 @@ def incremental_minhash_pairs(
     Scale shape: the increment's band rows (|new| × n_bands, ~24 B
     each) broadcast to the corpus band table, so the 100 TB side is
     ONE narrow scan with a map-side join — no corpus shuffle, no
-    corpus re-signing. Set ``broadcast_new=False`` when the increment
-    itself is huge; the join degrades to a sort-merge on
-    (band_idx, band_hash), still never all-pairs."""
+    corpus re-signing."""
     reps, star = _collapse_exact(new_df, id_col, text_col)
     sig = _persist(minhash_signature_df(reps, id_col, text_col, k, n_hashes))
     nb = _persist(band_table(sig, id_col, n_bands, n_hashes // n_bands))
-    probe = F.broadcast(nb) if broadcast_new else nb
-    a, b = probe.alias("a"), old_bands.alias("b")
+    a, b = F.broadcast(nb).alias("a"), old_bands.alias("b")
     cross = a.join(
         b,
         (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -1146,7 +1125,6 @@ def simhash_state_table(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_chunks: int = 4,
-    use_kernel: bool = True,
     bits: int = 64,
     hash_fn=None,
 ) -> DataFrame:
@@ -1158,6 +1136,10 @@ def simhash_state_table(
     the corpus text at all — unlike minhash, whose exact-Jaccard
     verify must re-shingle candidate texts.
 
+    The default 64-bit xxhash64 fingerprint runs as the numpy kernel
+    (with_simhash); other ``bits`` or a ``hash_fn`` (the oracle
+    hooks) take the pure Column path (simhash_col).
+
     Zero-token docs (NULL/empty/whitespace text) get NO fingerprint
     state — the repo-wide zero-token contract (cf. shingles_col,
     jaccard_verify). Without the gate every content-free doc shares
@@ -1168,9 +1150,7 @@ def simhash_state_table(
     absorb. Gating here covers every caller: the one-shot pairs
     path, the incremental path, and direct state-table persists."""
     df = df.filter(F.size(tokens_col(F.col(text_col))) > 0)
-    if hash_fn is not None or bits != 64:
-        use_kernel = False
-    if use_kernel:
+    if hash_fn is None and bits == 64:
         fp = with_simhash(
             df.select(F.col(id_col).alias("id"), text_col), text_col
         ).select("id", "fp")
@@ -1208,8 +1188,6 @@ def incremental_simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     n_chunks: int = 4,
-    use_kernel: bool = True,
-    broadcast_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Kept for SCALING.md "Incremental near-dup" (SimHash family).
 
@@ -1223,17 +1201,10 @@ def incremental_simhash_pairs(
     hamming verify reads fps straight from the state — full-recompute
     equivalence is exact (tested), with NO corpus text scan: the
     100 TB side is one narrow (id, fp, chunk) scan with a map-side
-    join against the broadcast increment. Set ``broadcast_new=False``
-    for huge increments (degrades to a sort-merge on the chunk key,
-    still never all-pairs)."""
+    join against the broadcast increment."""
     _pigeonhole_recall_guard(max_hamming, n_chunks)
-    nc = _persist(
-        simhash_state_table(
-            new_df, id_col, text_col, n_chunks=n_chunks, use_kernel=use_kernel
-        )
-    )
-    probe = F.broadcast(nc) if broadcast_new else nc
-    a, b = probe.alias("a"), old_chunks.alias("b")
+    nc = _persist(simhash_state_table(new_df, id_col, text_col, n_chunks=n_chunks))
+    a, b = F.broadcast(nc).alias("a"), old_chunks.alias("b")
     swap = F.col("a.id") > F.col("b.id")
     cross = a.join(
         b,
@@ -1309,7 +1280,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     n_chunks: int = 4,
-    use_kernel: bool = True,
     bits: int = 64,
     hash_fn=None,
 ) -> DataFrame:
@@ -1327,8 +1297,7 @@ def simhash_near_dup_pairs(
     """
     _pigeonhole_recall_guard(max_hamming, n_chunks)
     chunks = simhash_state_table(
-        df, id_col, text_col, n_chunks=n_chunks,
-        use_kernel=use_kernel, bits=bits, hash_fn=hash_fn,
+        df, id_col, text_col, n_chunks=n_chunks, bits=bits, hash_fn=hash_fn
     )
     # hamming verify inside the join, distinct only over survivors
     # (see _chunk_within_pairs max_hamming note)
@@ -1442,41 +1411,6 @@ def connected_components(
     return labels.select("id", F.col("label").alias("component"))
 
 
-def component_survivors(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    score_col: str | None = None,
-) -> DataFrame:
-    """Keep exactly one row per near-dup component plus every row
-    that appears in no pair, built on connected_components.
-
-    Default policy: the min id survives (exact-minimal,
-    deterministic). With ``score_col``: the HIGHEST-scoring member of
-    each component survives (ties broken by min id) — the curation-
-    quality policy: when recrawl variants near-duplicate each other,
-    keep the one the quality classifier likes best, not whichever id
-    sorts first. One extra broadcast-scale join on the component dim
-    (components ≪ corpus); the component labeling cost is unchanged.
-    """
-    comp = connected_components(pairs)
-    if score_col is None:
-        losers = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias(id_col)
-        )
-        return df.join(losers, id_col, "left_anti")
-    scored = comp.join(
-        df.select(F.col(id_col).alias("id"), F.col(score_col).alias("_s")), "id"
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.col("_s").desc_nulls_last(), F.col("id")
-    )
-    losers = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") > 1)
-        .select(F.col("id").alias(id_col))
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 # --------------------------------------------- embedding cosine near-dup
 
 
@@ -1501,7 +1435,10 @@ def embedding_candidate_pairs(
     n_tables: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """Candidate (id_a, id_b) pairs sharing a hyperplane sign-pattern
+    """Kept for SCALING.md "Dedup family" (embedding row: candidates
+    stay ~linear under auto_n_planes).
+
+    Candidate (id_a, id_b) pairs sharing a hyperplane sign-pattern
     bucket in ANY of n_tables independent tables — the MinHash
     banding pattern applied to hyperplane bits. The equi-join is on
     the short (table_id, bucket) key; vectors do NOT travel through
@@ -1673,7 +1610,6 @@ def incremental_embedding_pairs(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int | None = None,
-    broadcast_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Kept for SCALING.md "Incremental near-dup" (embedding family).
 
@@ -1696,16 +1632,13 @@ def incremental_embedding_pairs(
     to the one-shot run is exact (deterministic seeded planes);
     verify cosine reads corpus vectors by id. Scale shape: the
     increment's bucket rows broadcast against the state scan — no
-    corpus shuffle, no corpus re-bucketing; ``broadcast_new=False``
-    degrades to a sort-merge on (table_id, bucket), still never
-    all-pairs."""
+    corpus shuffle, no corpus re-bucketing."""
     from .simsearch import cosine_sim_col, with_norm
 
     nb = _persist(
         embedding_bucket_table(new_emb, id_col, vec_col, n_planes, n_tables, dim)
     )
-    probe = F.broadcast(nb) if broadcast_new else nb
-    a, b = probe.alias("a"), old_buckets.alias("b")
+    a, b = F.broadcast(nb).alias("a"), old_buckets.alias("b")
     cross = a.join(
         b,
         (F.col("a.table_id") == F.col("b.table_id"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from .kernels.corpora import EN_STOPWORDS
 from .kernels.scrubber import SCRUB_PATTERNS
 from .rules import SYMBOL_CLASS, tokens_col
+from .sketches import SQL_MD5_LSH_BUCKETS, md5_prefix_hash, shingles3_lower
 
 # ---------------------------------------------------------------- utils
 
@@ -409,14 +410,6 @@ WHERE len(list_intersect(a.tk, b.tk))::DOUBLE
 """
 
 
-def _md5_prefix_hash(s, n_hex: int = 15):
-    """Cross-engine bigint hash (sketches.md5_prefix_hash). DuckDB
-    replay: ('0x' || substr(md5(s),1,15))::BIGINT."""
-    from .sketches import md5_prefix_hash
-
-    return md5_prefix_hash(s, n_hex)
-
-
 def q_minhash_md5(spark, sf_dir):
     """The FULL MinHash-LSH near-dup pipeline (sign -> band ->
     candidate equi-join -> exact-Jaccard verify) under the
@@ -437,11 +430,11 @@ def q_minhash_md5(spark, sf_dir):
     docs = _docs(spark, sf_dir).filter(F.size(tokens_col(F.col("text"))) > 0)
 
     def seed_hash(s, j):
-        return _md5_prefix_hash(F.concat_ws("|", s, F.lit(str(j))))
+        return md5_prefix_hash(F.concat_ws("|", s, F.lit(str(j))))
 
     sig = minhash_signature_df(docs, k=3, n_hashes=16, hash_fn=seed_hash)
     pairs = lsh_candidate_pairs(
-        sig, n_bands=4, rows_per_band=4, band_hash_fn=_md5_prefix_hash
+        sig, n_bands=4, rows_per_band=4, band_hash_fn=md5_prefix_hash
     )
     return jaccard_verify(docs, pairs, k=3, threshold=0.6).select(
         "id_a", "id_b", r6(F.col("jaccard")).alias("jaccard")
@@ -502,7 +495,7 @@ def q_simhash_md5(spark, sf_dir):
 
     docs = _docs(spark, sf_dir).filter(F.size(tokens_col(F.col("text"))) > 0)
     return simhash_near_dup_pairs(
-        docs, max_hamming=3, n_chunks=4, bits=32, hash_fn=_md5_prefix_hash
+        docs, max_hamming=3, n_chunks=4, bits=32, hash_fn=md5_prefix_hash
     )
 
 
@@ -587,15 +580,6 @@ FROM r WHERE rank <= 3
 # (webfilter/trainprep.py — the post-filter stages of a pretraining
 # pipeline: decontamination, vocabulary heavy hitters, bloom-routed
 # frontier anti-join, sequence packing, dataset splits)
-
-# lowercased token-array expr for DuckDB oracles (parallel to _TOKS)
-
-
-# DuckDB replay of _shingles3_lower given `toks` ({_TOKS_LOWER})
-
-
-from .sketches import SQL_MD5_LSH_BUCKETS  # noqa: E402
-
 
 def q_agg_lang_source(spark, sf_dir):
     return (
@@ -2127,19 +2111,13 @@ def q_approx_distinct_terms(spark, sf_dir):
     )
 
 
-def _shingles3_lower(text_col):
-    """Word 3-grams (sketches.shingles3_lower). Shared universe for
-    the sketch queries below: the synthetic corpus has a ~31-word
-    vocabulary, so single tokens are a degenerate cardinality-31
-    universe while 3-grams give thousands of distinct elements."""
-    from .sketches import shingles3_lower
-
-    return shingles3_lower(text_col)
-
-
-# DuckDB replay of _shingles3_lower given `toks` ({_TOKS_LOWER});
-# zero tokens -> no shingles (text-fuzz: whitespace-only docs must
-# not contribute a phantom '' element to the sketch universe)
+# Word 3-grams are the shared universe of the sketch queries below:
+# the synthetic corpus has a ~31-word vocabulary, so single tokens are
+# a degenerate cardinality-31 universe while 3-grams give thousands of
+# distinct elements. DuckDB replay of sketches.shingles3_lower given
+# `toks` ({_TOKS_LOWER}); zero tokens -> no shingles (text-fuzz:
+# whitespace-only docs must not contribute a phantom '' element to
+# the sketch universe)
 _SQL_SHINGLES3 = (
     "CASE WHEN len(toks) = 0 THEN []::VARCHAR[] "
     "WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')] "
@@ -2178,7 +2156,7 @@ def q_hll_distinct_terms(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     e = (
         docs.filter(F.length(F.trim(F.col("text"))) > 0)
-        .select("lang", F.explode(_shingles3_lower(F.col("text"))).alias("tok"))
+        .select("lang", F.explode(shingles3_lower(F.col("text"))).alias("tok"))
     )
     est = hll_estimate(
         hll_registers(docs, text_col="text", group_col="lang"),
@@ -2259,11 +2237,11 @@ def q_cms_term_counts(spark, sf_dir):
     from .sketches import cms_cells
 
     docs = _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0)
-    e = docs.select(F.explode(_shingles3_lower(F.col("text"))).alias("tok"))
+    e = docs.select(F.explode(shingles3_lower(F.col("text"))).alias("tok"))
     rc = F.posexplode(
         F.transform(
             F.sequence(F.lit(0), F.lit(3)),
-            lambda r: _md5_prefix_hash(
+            lambda r: md5_prefix_hash(
                 F.concat_ws("#", F.col("tok"), r.cast("string"))
             ) % 512,
         )
@@ -3957,7 +3935,7 @@ def q_cdc_chunk_dedup(spark, sf_dir):
     )
     gram_hash = F.transform(
         z,
-        lambda s: _md5_prefix_hash(F.concat_ws(" ", s["t0"], s["t1"], s["t2"])) % 16,
+        lambda s: md5_prefix_hash(F.concat_ws(" ", s["t0"], s["t1"], s["t2"])) % 16,
     )
     # boundary AFTER token i (1-based, i >= 3) iff hash(gram ending at i) == 0;
     # cut positions = [0] + boundaries + [n] -> chunks = slices between cuts
@@ -4287,28 +4265,33 @@ FROM x
 
 
 def q_boilerplate_clean(spark, sf_dir):
-    """Per-document jusText-lite cleaning in the MAP-ONLY form the
-    filter pipeline ships (`boilerplate.clean_text_col`): the context
+    """Per-document jusText-lite cleaning through the exact MAP-ONLY
+    stage --boilerplate splices into the single-shuffle filter
+    pipeline (`boilerplate.with_boilerplate_removed`): the context
     pass is a per-row array prefix scan (forward + over the reversed
     array), so the plan has NO Exchange at all — cross-engine
-    equality here certifies the exact expression --boilerplate
-    splices into the single-shuffle pipeline. Same derived
+    equality here certifies the shipped expression. Same derived
     multi-block corpus as boilerplate_blocks (which certifies the
     window form block-by-block); pytest proves the two forms
     identical on adversarial shapes."""
-    from .boilerplate import clean_text_col
+    from .boilerplate import with_boilerplate_removed
 
     docs = _docs(spark, sf_dir)
     blocks = _boiler_blocks(F.col("doc_id"), tokens_col(F.col("text")))
     staged = docs.filter(F.size(tokens_col(F.col("text"))) > 0).select(
-        "doc_id", F.array_join(blocks, "\n").alias("text")
-    )
-    c = clean_text_col(F.col("text"))
-    return staged.select(
         "doc_id",
-        c["clean_text"].alias("clean_text"),
-        c["n_blocks"].alias("n_blocks"),
-        c["n_good_blocks"].alias("n_good_blocks"),
+        F.array_join(blocks, "\n").alias("text"),
+        F.size(blocks).cast("bigint").alias("n_blocks"),
+    )
+    # fixture blocks are never empty (each holds >= 1 token), so the
+    # kept blocks are exactly the '\n'-pieces of a non-empty clean text
+    clean = F.col("text")
+    n_good = F.when(clean == "", F.lit(0)).otherwise(F.size(F.split(clean, "\n")))
+    return with_boilerplate_removed(staged, "text").select(
+        "doc_id",
+        clean.alias("clean_text"),
+        "n_blocks",
+        n_good.cast("bigint").alias("n_good_blocks"),
     )
 
 
@@ -4653,9 +4636,11 @@ def q_quality_classifier(spark, sf_dir):
     classifier, `kernels/qualityclf.py`) per document — model-based,
     no SQL oracle; tests/test_quality.py holds golden accuracy,
     determinism and batch-size invariance."""
-    from .quality import with_quality_prob
+    from .scoring import with_model_scores
 
-    return with_quality_prob(_docs(spark, sf_dir)).select(
+    return with_model_scores(
+        _docs(spark, sf_dir), "text", extract=False, scrub=False
+    ).select(
         "doc_id", r6(F.col("quality_prob")).alias("quality_prob")
     )
 

@@ -13,10 +13,8 @@ baseline JPEG (from-scratch entropy decode + IDCT; grayscale, 4:4:4
 and 4:2:0) and MJPEG video frames (AVI '##dc' chunks through the
 JPEG decoder — ``sample_frames`` hashes genuinely decoded pixels).
 What remains a deploy-time library swap is decode of codecs outside
-that set (H.26x video, progressive JPEG, compressed audio):
-``extract_features`` documents its byte-histogram embedding as the
-model stub for those. Unknown formats surface err='unknown_format' —
-never fake values.
+that set (H.26x video, progressive JPEG, compressed audio). Unknown
+formats surface err='unknown_format' — never fake values.
 """
 
 from __future__ import annotations
@@ -135,20 +133,10 @@ def decode_audio_meta(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=AUDIO_META_SCHEMA)
 
 
-EMBED_DIM = 32
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
 def _decode_any_pixels(b):
     """First-successful-decoder pixel chain (uncompressed 24bpp BMP,
     8-bit non-interlaced PNG, non-interlaced GIF, baseline JPEG) —
-    (h, w, c) uint8 or None. Shared by the embedding and
-    perceptual-hash stages."""
+    (h, w, c) uint8 or None. Feeds the perceptual-hash stage."""
     for dec in (
         mediakernel.decode_bmp_pixels,
         mediakernel.decode_png_pixels,
@@ -159,48 +147,6 @@ def _decode_any_pixels(b):
         if px is not None:
             return px
     return None
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature-extraction stage. For uncompressed 24bpp BMPs, 8-bit
-    non-interlaced PNGs, non-interlaced GIFs AND baseline JPEGs
-    (grayscale, 4:4:4 and 4:2:0-family color) the embedding is
-    computed from REAL decoded pixels (kernels.media:
-    decode_bmp_pixels — padded-row BGR unpack;
-    decode_png_pixels — stdlib zlib inflate + unfiltering;
-    decode_gif_pixels — from-scratch GIF-LZW; decode_jpeg_pixels —
-    from-scratch baseline entropy decode + IDCT): an L2-normalized
-    EMBED_DIM-bin pixel histogram. WAV audio (PCM16 and mono
-    IMA-ADPCM) is embedded from REAL decoded int16 samples
-    (kernels.media.decode_wav_samples — from-scratch 4-bit ADPCM
-    nibble recurrence for tag 0x11) as an L2-normalized amplitude
-    histogram over the full int16 range. Remaining formats keep the
-    documented byte-histogram stand-in (real impl: a vision model
-    over decoded pixels — video codec frames are the deploy-time
-    library swap). Batched numpy."""
-    from .kernels.media import decode_wav_samples
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf["bytes"]:
-                px = _decode_any_pixels(b)
-                rng = (0, 256)
-                if px is None:
-                    px = decode_wav_samples(b)
-                    if px is not None:
-                        rng = (-32768, 32768)
-                if px is not None:
-                    arr = px.reshape(-1)
-                else:
-                    arr = np.frombuffer((b or b"\x00")[:4096], dtype=np.uint8)
-                hist, _ = np.histogram(arr, bins=EMBED_DIM, range=rng)
-                v = hist.astype(np.float32)
-                n = float(np.linalg.norm(v)) or 1.0
-                feats.append((v / n).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(

@@ -22,17 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-def host_col(url: Column) -> Column:
-    """THE per-host key — delegates to urls.host_col so the host
-    audit/salting key can never diverge from the host_rank and
-    robots joins (code-review r4c6 finding #1: an inline
-    case-sensitive regex here kept port/userinfo and returned ''
-    instead of NULL, splitting one host's metrics across keys that
-    no longer joined back to the rank/robots dimensions)."""
-    from .urls import host_col as _urls_host_col
-
-    return _urls_host_col(url)
-
 
 def bucket_col(url: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(url), F.lit(n_buckets)).cast("int")

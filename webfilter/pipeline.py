@@ -35,8 +35,9 @@ from pyspark.sql import functions as F
 
 from . import rules, scoring, scrub
 from .manifest import DONE, PENDING, RUNNING, Manifest
-from .partitioning import host_col, salted_count_by_key, with_bucket
+from .partitioning import salted_count_by_key, with_bucket
 from .tables import ParquetCatalog, latest_per_url
+from .urls import host_col
 
 DECISION_COLS = [
     "url", "bucket_id", "warc_ts", "text", "title", "extract_err",
@@ -146,7 +147,6 @@ def filtered_frame(
         )
     if host_prior or cfg.min_host_rank is not None:
         from .graph import host_pagerank_from_pages
-        from .urls import host_col as url_host
 
         ranks = host_pagerank_from_pages(
             prior_pages if prior_pages is not None else pages,
@@ -157,7 +157,7 @@ def filtered_frame(
             F.col("node").alias("_wf_host"), F.col("rank").alias("host_rank")
         )
         df = (
-            df.withColumn("_wf_host", url_host(F.col("url")))
+            df.withColumn("_wf_host", host_col(F.col("url")))
             .join(F.broadcast(hosts), "_wf_host", "left")
             .drop("_wf_host")
         )
@@ -170,13 +170,12 @@ def filtered_frame(
         # Column HOFs — map-only on the page side, no window, no
         # shuffle. cfg.obey_robots turns the column into a drop rule.
         from .robots import allowed_expr, parse_robots, rules_dim, url_path
-        from .urls import host_col as url_host
 
         dim = rules_dim(parse_robots(robots), robots_agent).withColumnRenamed(
             "host", "_wf_rhost"
         )
         df = (
-            df.withColumn("_wf_rhost", url_host(F.col("url")))
+            df.withColumn("_wf_rhost", host_col(F.col("url")))
             .join(F.broadcast(dim), "_wf_rhost", "left")
             .withColumn(
                 "robots_allowed",
@@ -318,6 +317,8 @@ def run_filter(
     same fused score kernels run over the given text; decisions are
     identical to the html path for identical text (test-proved).
     host_prior is unavailable (no html to mine outlinks from).
+    With ``"pages"``, a ``pages_path`` holding a ``_meta/`` dir is
+    read as a snapshot table (read_snaptable_pages).
 
     ``layout_sort``: optional columns to sort by WITHIN each bucket
     before the write (sortWithinPartitions — a per-partition SortExec,
@@ -348,6 +349,8 @@ def run_filter(
     if not pending:
         return {"run_id": run_id, "buckets": 0, "docs": 0}
 
+    import os as _os
+
     if input_format == "wet":
         if host_prior or cfg.min_host_rank is not None:
             raise ValueError(
@@ -363,56 +366,42 @@ def run_filter(
             "text",
             F.lit(None).cast("string").alias("lang"),
         )
-        pages_all = with_bucket(raw, n_buckets)
-    elif input_format == "snaptable":
-        # pages_all must be the FULL corpus: host_prior's link graph
-        # is built from it, and ranks computed from a pruned corpus
-        # would break the resume-equals-clean invariant (code-review
-        # r4c2 finding #3). The manifest-layer file pruning applies
-        # to the per-run scan (`pages`) below instead — both reads
-        # pinned to ONE snapshot so a concurrent commit cannot skew
-        # the host graph against the scan.
-        import os as _os
-
-        from .snaptable import SnapshotTable as _ST
-
-        _ap = _os.path.abspath(pages_path)
-        _snap_pin = _ST(
-            spark, _os.path.dirname(_ap), _os.path.basename(_ap)
-        ).current_snapshot()
-        pages_all = with_bucket(
-            read_snaptable_pages(
-                spark, pages_path, n_buckets, None, snapshot=_snap_pin
-            ),
-            n_buckets,
-        )
-    elif input_format == "pages":
-        import os as _os
-
-        if _os.path.isdir(_os.path.join(pages_path, "_meta")):
-            # auto-detect a snapshot-table root (the north-star input
-            # shape: the pages corpus AS a table, not a file dir)
-            return run_filter(
-                spark, pages_path, out_root, n_buckets=n_buckets,
-                cfg=cfg, run_id=run_id, only_buckets=only_buckets,
-                canonical=canonical, host_prior=host_prior,
-                boilerplate=boilerplate, layout_sort=layout_sort,
-                robots_path=robots_path, robots_agent=robots_agent,
-                input_format="snaptable", dq_check=dq_check,
-            )
-        pages_all = with_bucket(spark.read.parquet(pages_path), n_buckets)
-    else:
+        pages_all = pages = with_bucket(raw, n_buckets)
+    elif input_format != "pages":
         raise ValueError(f"unknown input_format {input_format!r}")
-    pages = pages_all
-    if input_format == "snaptable" and len(pending) < n_buckets:
-        # manifest-layer file pruning for the per-run scan (full
-        # fallback inside when the bucketing contract doesn't match)
-        pages = with_bucket(
+    elif not _os.path.isdir(_os.path.join(pages_path, "_meta")):
+        pages_all = pages = with_bucket(spark.read.parquet(pages_path), n_buckets)
+    else:
+        # a snapshot-table root (the north-star input shape: the pages
+        # corpus AS a table, not a file dir). pages_all must be the
+        # FULL corpus: host_prior's link graph is built from it, and
+        # ranks computed from a pruned corpus would break the
+        # resume-equals-clean invariant (code-review r4c2 finding #3).
+        # The manifest-layer file pruning applies to the per-run scan
+        # (`pages`) instead — both reads pinned to ONE snapshot so a
+        # concurrent commit cannot skew the host graph against the
+        # scan.
+        from .snaptable import SnapshotTable
+
+        ap = _os.path.abspath(pages_path)
+        snap_pin = SnapshotTable(
+            spark, _os.path.dirname(ap), _os.path.basename(ap)
+        ).current_snapshot()
+        pages_all = pages = with_bucket(
             read_snaptable_pages(
-                spark, pages_path, n_buckets, pending, snapshot=_snap_pin
+                spark, pages_path, n_buckets, None, snapshot=snap_pin
             ),
             n_buckets,
         )
+        if len(pending) < n_buckets:
+            # full fallback inside when the bucketing contract
+            # doesn't match
+            pages = with_bucket(
+                read_snaptable_pages(
+                    spark, pages_path, n_buckets, pending, snapshot=snap_pin
+                ),
+                n_buckets,
+            )
     if len(pending) < n_buckets:
         # pushed-down IN-filter == partition pruning on the bucket
         # spec (still applied over the file-pruned snaptable scan:
@@ -872,6 +861,8 @@ def _drops_from_pairs(pairs: DataFrame, policy: str) -> DataFrame:
         return comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias("url")
         )
+    # greedy survivor rule: url_b (the larger key) of every verified
+    # pair is dropped; the caller's left-anti join keeps the rest
     return pairs.select(F.col("url_b").alias("url")).distinct()
 
 
@@ -1022,17 +1013,7 @@ def run_near_dedup(
     # runs' rows in buckets this run produced no pairs for
     cur_pairs = catalog.read("dup_pairs").filter(F.col("run_id") == pairs_run)
 
-    if policy == "components":
-        from .dedup import connected_components
-
-        comp = connected_components(cur_pairs, id_a="url_a", id_b="url_b")
-        drops = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("url")
-        )
-    else:
-        # greedy survivor rule: url_b (the larger key) of every
-        # verified pair is dropped; left-anti join keeps the rest
-        drops = cur_pairs.select(F.col("url_b").alias("url")).distinct()
+    drops = _drops_from_pairs(cur_pairs, policy)
 
     # ---- stage 2: per-bucket survivor writes (prunable) -------------
     dec = catalog.read("decisions").filter(F.col("keep"))

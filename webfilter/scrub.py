@@ -3,9 +3,9 @@
 The hot path is 100% JVM (whole-stage codegen, no Python): the same
 ordered pattern list as the python oracle
 (webfilter/kernels/scrubber.py) folded into nested regexp_replace
-calls. Per-rule hit flags for the audit table are computed on the
-*pre-scrub* text with ``regexp_count`` (hit accounting is lineage
-metadata; replacement order semantics are owned by the fold).
+calls. Whether a row had PII is one string comparison of the
+scrubbed text against the original; replacement order semantics are
+owned by the fold.
 """
 
 from __future__ import annotations
@@ -23,22 +23,10 @@ def scrubbed_col(text: Column) -> Column:
     return out
 
 
-def hits_map_col(text: Column) -> Column:
-    """MAP<STRING,BOOLEAN> of per-rule hits on the original text —
-    the audit table's rule_hits shape (FIXTURES.md §3)."""
-    names = [F.lit(name) for name, _p, _r in SCRUB_PATTERNS]
-    flags = [F.regexp_count(text, F.lit(pat)) > 0 for _n, pat, _r in SCRUB_PATTERNS]
-    return F.map_from_arrays(F.array(*names), F.array(*flags))
-
-
-def with_scrubbed(
-    df: DataFrame, text_col: str = "text", include_hits_map: bool = False
-) -> DataFrame:
-    """Adds scrubbed_text + pii_found (and optionally the per-rule
-    hits map). pii_found is a plain string comparison — computing the
-    full hits map costs 6 extra regexp passes per row, so the
-    pipeline keeps it off and the audit counts pii via the
-    comparison; pass include_hits_map=True for per-rule lineage."""
+def with_scrubbed(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Adds scrubbed_text + pii_found. pii_found is a plain string
+    comparison — no per-rule regexp passes — and the audit counts
+    pii from it."""
     # NULL text -> ('', no hits): the golden python kernel
     # (kernels/scrubber.scrub_one(None)) returns ("", {}), and the
     # three consumers must agree byte-for-byte — NULL/NULL here broke
@@ -48,10 +36,7 @@ def with_scrubbed(
         "scrubbed_text",
         F.coalesce(scrubbed_col(F.col(text_col)), F.lit("")),
     )
-    out = out.withColumn(
+    return out.withColumn(
         "pii_found",
         F.col("scrubbed_text") != F.coalesce(F.col(text_col), F.lit("")),
     )
-    if include_hits_map:
-        out = out.withColumn("scrub_hits", hits_map_col(F.col(text_col)))
-    return out

@@ -27,7 +27,7 @@ _W_BITS = 52
 def md5_prefix_hash(s: Column, n_hex: int = 15) -> Column:
     """Cross-engine bigint hash: first n_hex hex chars of md5 as a
     base-16 int (15 hex = 60 bits, positive in int64 on both
-    engines)."""
+    engines). DuckDB replay: ('0x' || substr(md5(s),1,15))::BIGINT."""
     return F.conv(F.substring(F.md5(s), 1, n_hex), 16, 10).cast("bigint")
 
 

@@ -50,7 +50,7 @@ scale — as executed, tested code:
   per partition value, split at max_rows_per_file) and materializes
   pending deletes in one replace-commit — the maintenance pass that
   bounds file count and keeps read-time delete joins empty under
-  streaming epoch commits.
+  many small commits.
 
 Partition handling: the writer duplicates the partition column into
 `__pv` and writes with `partitionBy("__pv")`, so the directory name
@@ -501,7 +501,9 @@ class SnapshotTable:
         order_cols: list[str],
         part_col: str,
     ) -> int:
-        """Executed conditional MERGE as one atomic snapshot commit:
+        """Kept for SCALING.md "Snapshot table format" (MERGE cost).
+
+        Executed conditional MERGE as one atomic snapshot commit:
         ``WHEN MATCHED AND s.order > t.order UPDATE SET *`` /
         ``WHEN NOT MATCHED INSERT *`` (the reference's
         01_Metadata_Sync.py:59-65 rule, MERGE_INTO_SQL in tables.py).
@@ -713,34 +715,6 @@ class SnapshotTable:
         seq = self.current_snapshot() if snapshot is None else snapshot
         return len(self._resolve(seq)[0])
 
-    def foreach_batch_merge(
-        self,
-        key_cols: list[str],
-        order_cols: list[str],
-        part_col: str,
-    ):
-        """Streaming sink: a ``foreachBatch`` function that MERGEs
-        each micro-batch into the table as one atomic snapshot
-        commit — the S7 upsert sink (streaming.upsert_batch) on the
-        snapshot format.
-
-        Exactly-once composition: the stream checkpoint makes
-        delivery at-least-once across restarts; the merge is
-        latest-wins per key, so a REPLAYED batch commits a snapshot
-        with identical visible content (idempotent), and a crash
-        between data-file staging and the manifest-list rename leaves
-        the table at the previous epoch's snapshot — no torn epoch is
-        ever readable.  Each epoch is one snapshot: `snapshots()` is
-        the stream's commit history and time travel replays the table
-        as of any epoch."""
-
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            self.merge_upsert(batch_df, key_cols, order_cols, part_col)
-
-        return _sink
-
     def delete_rows(
         self, keys_df: DataFrame, key_cols: list[str]
     ) -> int:
@@ -801,8 +775,8 @@ class SnapshotTable:
         new commit's seq, so no earlier delete applies to them; the
         delete files themselves drop out of the manifest chain and
         become vacuum-reclaimable).  This is the maintenance pass that
-        keeps a 10^12-doc table's file count bounded under streaming
-        epoch commits and keeps the read-time delete joins empty.
+        keeps a 10^12-doc table's file count bounded under many small
+        commits and keeps the read-time delete joins empty.
 
         Partitioned tables repartition BY the partition column so
         each value's rows land in one task (one file per value, split

@@ -233,7 +233,10 @@ class ParquetCatalog:
         part_col: str | None = None,
         min_files: int = 2,
     ) -> dict:
-        """Small-file compaction — the Iceberg rewrite_data_files /
+        """Kept for SCALING.md "Layout & retrieval" (small-file
+        compaction).
+
+        Small-file compaction — the Iceberg rewrite_data_files /
         Delta OPTIMIZE analog for the parquet catalog. Every append
         and streaming micro-batch leaves one-or-more files; at 10^12
         docs a day of micro-batches is millions of tiny files whose
