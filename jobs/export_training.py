@@ -82,13 +82,9 @@ def main(argv: list[str] | None = None) -> int:
     if not in_root:
         ap.error("either --in or --synth N is required")
 
+    from webfilter.sketches import md5_prefix_hash
     from webfilter.tables import ParquetCatalog
-    from webfilter.trainprep import (
-        _md5_prefix32,
-        dataset_split_col,
-        decontaminate,
-        pack_sequences,
-    )
+    from webfilter.trainprep import dataset_split_col, decontaminate, pack_sequences
 
     catalog = ParquetCatalog(spark, in_root)
     if catalog.exists("kept_pages"):
@@ -106,7 +102,7 @@ def main(argv: list[str] | None = None) -> int:
         # demo benchmark: exact slices of every 37th kept doc -> those
         # docs MUST be dropped (eval leakage by construction)
         bench = (
-            docs.withColumn("_h", _md5_prefix32(F.col("url")))
+            docs.withColumn("_h", md5_prefix_hash(F.col("url"), 8))
             .filter(F.col("_h") % 37 == 0)
             .select(F.substring("text", 1, 400).alias("text"))
         )

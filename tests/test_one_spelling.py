@@ -1,0 +1,59 @@
+"""Two determinism-critical Column constructions have exactly one
+spelling each:
+
+* the k-gram builder — ``rules.sliding`` is the only ``arrays_zip``
+  call in webfilter/ (its docstring says why the shifted-slice form
+  is the only fast one);
+* the cross-engine md5-prefix hash — ``sketches.md5_prefix_hash`` is
+  the only ``conv(substring(md5(...)))`` in webfilter/ and jobs/
+  (every DuckDB oracle replays it bit for bit).
+
+Pure AST, so comments and docstrings do not count: no Spark session.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _callee(node: ast.AST) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _is_md5_prefix(node: ast.AST) -> bool:
+    """conv(substring(md5(...), ...), ...) — any spelling of the calls."""
+    for name in ("conv", "substring", "md5"):
+        if _callee(node) != name:
+            return False
+        node = node.args[0] if node.args else None
+    return True
+
+
+def _offenders(dirs: tuple[str, ...], owner: str, hit) -> list[str]:
+    out = []
+    for d in dirs:
+        for path in sorted((REPO / d).rglob("*.py")):
+            rel = path.relative_to(REPO).as_posix()
+            if rel == owner:
+                continue
+            tree = ast.parse(path.read_text(), filename=rel)
+            out += [f"{rel}:{n.lineno}" for n in ast.walk(tree) if hit(n)]
+    return out
+
+
+def test_arrays_zip_only_in_rules_sliding():
+    found = _offenders(
+        ("webfilter",), "webfilter/rules.py", lambda n: _callee(n) == "arrays_zip"
+    )
+    assert not found, f"build k-grams with rules.sliding, not arrays_zip: {found}"
+
+
+def test_md5_prefix_only_in_sketches():
+    found = _offenders(("webfilter", "jobs"), "webfilter/sketches.py", _is_md5_prefix)
+    assert not found, f"use sketches.md5_prefix_hash: {found}"

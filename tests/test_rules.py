@@ -3,6 +3,7 @@ mirror (webfilter/kernels/heuristics.py) — exact parity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from webfilter import rules
@@ -191,3 +192,23 @@ def test_scrub_null_text_matches_python_kernel(spark):
     assert got[0]["scrubbed_text"] == scrub_one(None)[0] == ""
     assert got[0]["pii_found"] is False
     assert got[1]["pii_found"] is True
+
+
+@pytest.mark.parametrize(
+    "arr, k, want",
+    [
+        (None, 2, None),
+        (["a", "b"], 3, []),
+        (["a", "b", "c"], 1, ["a", "b", "c"]),
+        (["a", "b", "c", "d"], 3, ["a|b|c", "b|c|d"]),
+        (["d", "c", "b", "a"], 2, ["d|c", "c|b", "b|a"]),
+    ],
+)
+def test_sliding_windows(spark, arr, k, want):
+    """rules.sliding: NULL -> NULL, size < k -> [], windows in array
+    order, combine sees the window's fields as t0..t{k-1}."""
+    df = spark.createDataFrame([(arr,)], "arr array<string>")
+    got = df.select(
+        rules.sliding(F.col("arr"), k, lambda *t: F.concat_ws("|", *t)).alias("w")
+    ).first()["w"]
+    assert got == want

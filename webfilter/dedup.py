@@ -25,7 +25,7 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .rules import tokens_col
+from .rules import sliding, tokens_col
 
 # Frames persisted by the operators below (signature/fingerprint
 # tables consumed twice by their self-joins) route through the shared
@@ -89,18 +89,10 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 def shingles_col(text: Column, k: int = 3) -> Column:
     """Distinct word k-shingles as array<string> (JVM-side, no UDF).
     Human-readable and SQL-oracle-checkable; the hot paths use
-    shingle_hashes_col.
-
-    Built from k shifted slices zipped together (arrays_zip), NOT
-    slice(toks, i, k) with the captured token array inside a
-    transform lambda — Catalyst does no CSE inside HOF lambdas, so
-    the captured form re-evaluates the split per element and goes
-    O(n_tokens^2) per row (same fix as shingle_hashes_col below)."""
+    shingle_hashes_col."""
     toks = tokens_col(text)
     n = F.size(toks)
-    m = n - k + 1
-    z = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(k)])
-    grams = F.transform(z, lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(k)]))
+    grams = sliding(toks, k, lambda *t: F.concat_ws(" ", *t))
     # zero-token docs carry NO shingles (the repo-wide contract, cf.
     # the md5 dedup family): without this, every empty/whitespace doc
     # shares the phantom shingle '' and pairs at jaccard 1.0 — found
@@ -127,19 +119,10 @@ def shingle_hashes_col(text: Column, k: int = 3) -> Column:
 
     Tokenization matches shingles_col (case-SENSITIVE; simhash's
     token_hashes_col lowercases and is a different contract).
-
-    Construction note: the k-gram zip is built from k shifted slices
-    of the token-hash array (arrays_zip), NOT element_at(th, i+j)
-    inside a transform lambda — Catalyst does no common-subexpression
-    elimination inside higher-order-function lambdas, so a captured
-    expression re-evaluates the whole split+hash subtree per element
-    (measured O(n_tokens^2) per row: 9.5s -> 1s at sf0.1).
     """
     th = F.transform(tokens_col(text), lambda t: F.xxhash64(t))
     n = F.size(th)
-    m = n - k + 1
-    z = F.arrays_zip(*[F.slice(th, j + 1, m).alias(f"t{j}") for j in range(k)])
-    grams = F.transform(z, lambda s: F.xxhash64(*[s[f"t{j}"] for j in range(k)]))
+    grams = sliding(th, k, F.xxhash64)
     whole = F.aggregate(
         th, F.lit(42).cast("bigint"), lambda acc, h: F.xxhash64(acc, h)
     )
@@ -153,15 +136,6 @@ def shingle_hashes_col(text: Column, k: int = 3) -> Column:
 
 
 # -------------------------------------------------------- MinHash + LSH
-
-
-def _splitmix64(x):
-    """Vectorized splitmix64 finalizer over a uint64 numpy array —
-    the per-seed hash family for the minhash kernel (the one shared
-    definition: kernels/mix.py)."""
-    from .kernels.mix import splitmix64
-
-    return splitmix64(x)
 
 
 #: signature value for docs with NULL text / zero shingles — uint64
@@ -183,6 +157,8 @@ def _minhash_kernel(hash_lists, n_hashes: int):
     the kernel path must too)."""
     import numpy as np
 
+    from .kernels.mix import splitmix64
+
     nd = len(hash_lists)
     lens = np.fromiter(
         ((0 if h is None else len(h)) for h in hash_lists), dtype=np.int64, count=nd
@@ -198,7 +174,7 @@ def _minhash_kernel(hash_lists, n_hashes: int):
         ).view(np.uint64)
         starts = np.zeros(len(ne_lens), dtype=np.int64)
         np.cumsum(ne_lens[:-1], out=starts[1:])
-        seeds = _splitmix64(
+        seeds = splitmix64(
             np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
         )
         sub = np.empty((len(ne_lens), n_hashes), dtype=np.uint64)
@@ -225,7 +201,7 @@ def _minhash_kernel(hash_lists, n_hashes: int):
             st = starts[d0:d1] - f0
             for j in range(n_hashes):
                 sub[d0:d1, j] = np.minimum.reduceat(
-                    _splitmix64(fl ^ seeds[j]), st
+                    splitmix64(fl ^ seeds[j]), st
                 )
             d0 = d1
         out[nonempty] = sub
@@ -956,12 +932,7 @@ def remove_duplicate_windows(
             F.col("_toks")
         ),
     )
-    toks = F.col("_toks")
-    m = F.size(toks) - w + 1
-    z = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(w)])
-    whashes = F.when(m < 1, F.array().cast("array<bigint>")).otherwise(
-        F.transform(z, lambda s: F.xxhash64(F.concat_ws(" ", *[s[f"t{j}"] for j in range(w)])))
-    )
+    whashes = sliding(F.col("_toks"), w, lambda *t: F.xxhash64(F.concat_ws(" ", *t)))
     occ = base.select(F.col(id_col), F.posexplode(whashes).alias("pos", "wh"))
     byhash = Window.partitionBy("wh").orderBy(id_col, "pos")
     removed = (

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .kernels.corpora import EN_STOPWORDS
 from .kernels.scrubber import SCRUB_PATTERNS
-from .rules import SYMBOL_CLASS, tokens_col
+from .rules import SYMBOL_CLASS, sliding, tokens_col
 from .sketches import SQL_MD5_LSH_BUCKETS, md5_prefix_hash, shingles3_lower
 
 # ---------------------------------------------------------------- utils
@@ -1137,9 +1137,7 @@ def q_hash_sample(spark, sf_dir):
     we refuse to ship; a content-hash sample is reproducible AND
     cross-engine verifiable, unlike RNG-based sample(fraction,seed))."""
     docs = _docs(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8)
     return docs.filter(h % 10 == 0).select("doc_id", "lang")
 
 
@@ -1758,10 +1756,7 @@ def q_stratified_sample(spark, sf_dir):
     reproducible AND cross-engine-verifiable (unlike sampleBy's RNG).
     The training-data use: balanced per-language subsets."""
     docs = _docs(spark, sf_dir)
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", "lang", F.col("doc_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("bigint")
+    h = md5_prefix_hash(F.concat_ws("|", "lang", F.col("doc_id").cast("string")), 8)
     return docs.filter(h % 5 == 0).select("doc_id", "lang")
 
 
@@ -1773,16 +1768,15 @@ WHERE ('0x' || substr(md5(lang || '|' || doc_id::VARCHAR), 1, 8))::BIGINT % 5 = 
 
 def q_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprints with the cross-engine md5-prefix hash
-    (conv(substr(md5(gram),1,8),16,10)) so DuckDB replays the exact
+    (md5_prefix_hash(gram, 8)) so DuckDB replays the exact
     selected fingerprints — the selection algebra (k-gram window-min
     distinct-sort, textstats.py) is hash-agnostic; production keeps
     the faster xxhash64 default."""
     from .textstats import winnowing_fingerprints_col
 
-    def md5_hash(s):
-        return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-
-    fps = winnowing_fingerprints_col(F.col("text"), hash_fn=md5_hash)
+    fps = winnowing_fingerprints_col(
+        F.col("text"), hash_fn=lambda s: md5_prefix_hash(s, 8)
+    )
     # F.get, not getItem/element_at: a token-less doc has fps = []
     # and must yield NULL min/max (getItem(0) raises on empty arrays)
     return _docs(spark, sf_dir).select(
@@ -1849,9 +1843,7 @@ def q_decontaminate(spark, sf_dir):
     from .trainprep import decontaminate
 
     docs = _docs(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8)
     bench = docs.filter(h % 37 == 0)
     probe = docs.filter(h % 37 != 0)
     return decontaminate(probe, bench, n=3)
@@ -1908,9 +1900,7 @@ def q_bloom_anti_frontier(spark, sf_dir):
     from .trainprep import bloom_anti_join
 
     docs = _docs(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8)
     processed = docs.filter(h % 7 == 0).select("doc_id")
     return bloom_anti_join(
         docs.select("doc_id", "lang"), processed, "doc_id", m_bits=1 << 16
@@ -2038,9 +2028,7 @@ def q_string_agg_docs(spark, sf_dir):
     'small groups only' — unbounded text concat per group is a
     driver-OOM shape at 100 TB."""
     docs = _docs(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8)
     return (
         docs.filter(h % 11 == 0)
         .groupBy("lang")
@@ -2880,10 +2868,7 @@ def q_bpe_tokenize(spark, sf_dir):
     dim; docs never re-run the merge scan."""
     docs = _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0)
     state, _ = _bpe_train_chain(docs)
-    sym = F.filter(
-        F.split(F.expr("trim(BOTH '·' FROM repr)"), "··"), lambda x: x != ""
-    )
-    wsyms = state.select("word", F.size(sym).cast("bigint").alias("n_syms"))
+    wsyms = state.select("word", F.size(_bpe_symbols()).cast("bigint").alias("n_syms"))
     e = docs.select(
         "doc_id",
         F.explode(tokens_col(F.lower(F.col("text")))).alias("word"),
@@ -2902,6 +2887,15 @@ def q_bpe_tokenize(spark, sf_dir):
                 F.col("n_chars").cast("double") / F.col("n_bpe_tokens")
             ).alias("chars_per_token"),
         )
+    )
+
+
+def _bpe_symbols():
+    """The BPE state's current symbols: `repr` is each symbol wrapped
+    in '·' marks ('·a··b·'), so trimming the outer marks and
+    splitting on '··' recovers them."""
+    return F.filter(
+        F.split(F.expr("trim(BOTH '·' FROM repr)"), "··"), lambda x: x != ""
     )
 
 
@@ -2938,12 +2932,8 @@ def _bpe_train_chain(docs):
     state = _bpe_persist(state)
     merges = []
     for rnd in range(_BPE_ROUNDS):
-        sym = F.filter(
-            F.split(F.expr("trim(BOTH '·' FROM repr)"), "··"), lambda x: x != ""
-        )
-        n = F.size(sym)
-        z = F.arrays_zip(
-            F.slice(sym, 1, n - 1).alias("s1"), F.slice(sym, 2, n - 1).alias("s2")
+        z = sliding(
+            _bpe_symbols(), 2, lambda a, b: F.struct(a.alias("s1"), b.alias("s2"))
         )
         pairs = state.select("freq", F.explode(z).alias("p")).select(
             "freq", F.col("p.s1").alias("s1"), F.col("p.s2").alias("s2")
@@ -3927,16 +3917,7 @@ def q_cdc_chunk_dedup(spark, sf_dir):
     docs = _docs(spark, sf_dir).filter(F.length(F.trim(F.col("text"))) > 0)
     toks = tokens_col(F.lower(F.col("text")))
     n = F.size(toks)
-    m = n - 2
-    z = F.arrays_zip(
-        F.slice(toks, 1, m).alias("t0"),
-        F.slice(toks, 2, m).alias("t1"),
-        F.slice(toks, 3, m).alias("t2"),
-    )
-    gram_hash = F.transform(
-        z,
-        lambda s: md5_prefix_hash(F.concat_ws(" ", s["t0"], s["t1"], s["t2"])) % 16,
-    )
+    gram_hash = sliding(toks, 3, lambda *t: md5_prefix_hash(F.concat_ws(" ", *t)) % 16)
     # boundary AFTER token i (1-based, i >= 3) iff hash(gram ending at i) == 0;
     # cut positions = [0] + boundaries + [n] -> chunks = slices between cuts
     cuts = F.when(n < 3, F.array(F.lit(0), n)).otherwise(
@@ -4930,9 +4911,7 @@ def q_edit_distance_pairs(spark, sf_dir):
     the first 40 chars. Blocking bounds the pair count; the distance
     itself is a JVM builtin (no UDF)."""
     docs = _docs(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8)
     w = Window.partitionBy("lang", "source").orderBy(h, "doc_id")
     ranked = docs.select(
         "doc_id", "lang", "source", F.substring("text", 1, 40).alias("head"),
@@ -5141,18 +5120,11 @@ FROM a
 def q_bigram_counts(spark, sf_dir):
     """KenLM-style LM training counts: corpus-wide (w1, w2) bigram
     frequencies with a min-count cutoff — the table the perplexity
-    kernel's class of model trains from. Bigrams come from the
-    shifted-slice arrays_zip idiom (textstats.py:104 — no captured
-    array inside a HOF lambda, which Catalyst re-evaluates per
-    element, O(n^2)/row); one explode + one count shuffle."""
+    kernel's class of model trains from. Bigrams come from
+    rules.sliding; one explode + one count shuffle."""
     docs = _docs(spark, sf_dir)
     toks = tokens_col(F.lower(F.col("text")))
-    m = F.size(toks) - 1
-    pairs = F.when(m < 1, F.array().cast("array<struct<w1:string,w2:string>>")).otherwise(
-        F.arrays_zip(
-            F.slice(toks, 1, m).alias("w1"), F.slice(toks, 2, m).alias("w2")
-        ).cast("array<struct<w1:string,w2:string>>")
-    )
+    pairs = sliding(toks, 2, lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
     return (
         docs.select(F.explode(pairs).alias("bg"))
         .groupBy(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
@@ -5195,12 +5167,7 @@ def q_pmi_collocations(spark, sf_dir):
     candidate set BEFORE the joins."""
     docs = _docs(spark, sf_dir)
     toks = tokens_col(F.lower(F.col("text")))
-    m = F.size(toks) - 1
-    pairs = F.when(m < 1, F.array().cast("array<struct<w1:string,w2:string>>")).otherwise(
-        F.arrays_zip(
-            F.slice(toks, 1, m).alias("w1"), F.slice(toks, 2, m).alias("w2")
-        ).cast("array<struct<w1:string,w2:string>>")
-    )
+    pairs = sliding(toks, 2, lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
     tokens = docs.select(F.explode(toks).alias("t"))
     uni = tokens.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     bg = docs.select(F.explode(pairs).alias("bg")).select("bg.w1", "bg.w2")
@@ -5883,12 +5850,7 @@ def q_bigram_lm_score(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     k = 0.5
     toks = tokens_col(F.lower(F.col("text")))
-    m = F.size(toks) - 1
-    pairs = F.when(m < 1, F.array().cast("array<struct<w1:string,w2:string>>")).otherwise(
-        F.arrays_zip(
-            F.slice(toks, 1, m).alias("w1"), F.slice(toks, 2, m).alias("w2")
-        ).cast("array<struct<w1:string,w2:string>>")
-    )
+    pairs = sliding(toks, 2, lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
     bg = docs.select("doc_id", F.explode(pairs).alias("b")).select(
         "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
@@ -5959,12 +5921,7 @@ def q_kneser_ney_lm_score(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     D = 0.75
     toks = tokens_col(F.lower(F.col("text")))
-    m = F.size(toks) - 1
-    pairs = F.when(m < 1, F.array().cast("array<struct<w1:string,w2:string>>")).otherwise(
-        F.arrays_zip(
-            F.slice(toks, 1, m).alias("w1"), F.slice(toks, 2, m).alias("w2")
-        ).cast("array<struct<w1:string,w2:string>>")
-    )
+    pairs = sliding(toks, 2, lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
     bg = docs.select("doc_id", F.explode(pairs).alias("b")).select(
         "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
@@ -6389,15 +6346,9 @@ def q_rendezvous_shards(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id")
 
     def h(s):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.col("doc_id").cast("string"), F.lit(str(s)))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_prefix_hash(
+            F.concat_ws("|", F.col("doc_id").cast("string"), F.lit(str(s))), 8
+        )
 
     def shard(n):
         arr = F.array(

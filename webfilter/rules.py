@@ -101,6 +101,27 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != F.lit(""))
 
 
+def sliding(arr: Column, k: int, combine) -> Column:
+    """Every length-k window of ``arr`` in order, each mapped through
+    ``combine(t0, ..., t{k-1})`` — THE k-gram builder (shingles,
+    winnowing, repetition, decontamination n-grams, LM bigrams).
+
+    Built from k shifted slices joined by arrays_zip, never from
+    slice/element_at over the array captured inside a transform
+    lambda: Catalyst does no common-subexpression elimination inside
+    higher-order-function lambdas, so the captured form re-evaluates
+    the whole array subtree per element and goes O(n_tokens^2) per
+    row (measured twice: shingle hashes 9.5 s -> 1 s at sf0.1;
+    winnowing on 48 x 500-token docs took 206 s).
+
+    [] when size(arr) < k (the slice length is clamped at 0: slice()
+    raises on a negative length); NULL when arr is NULL. Any other
+    edge contract (empty doc, doc shorter than k) is the caller's."""
+    m = F.greatest(F.lit(0), F.size(arr) - k + 1)
+    z = F.arrays_zip(*[F.slice(arr, j + 1, m).alias(f"t{j}") for j in range(k)])
+    return F.transform(z, lambda s: combine(*[s[f"t{j}"] for j in range(k)]))
+
+
 def with_heuristics(
     df: DataFrame, text_col: str = "text", cfg: RuleConfig = DEFAULT_RULES
 ) -> DataFrame:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rules import tokens_col
+from .rules import sliding, tokens_col
 
 #: register count (p=8 -> m=256) — the documented estimate error is
 #: ~1.04/sqrt(m) = 6.5%
@@ -25,25 +25,19 @@ _W_BITS = 52
 
 
 def md5_prefix_hash(s: Column, n_hex: int = 15) -> Column:
-    """Cross-engine bigint hash: first n_hex hex chars of md5 as a
-    base-16 int (15 hex = 60 bits, positive in int64 on both
-    engines). DuckDB replay: ('0x' || substr(md5(s),1,15))::BIGINT."""
+    """THE cross-engine bigint hash, spelled only here: first n_hex
+    hex chars of md5 as a base-16 int (15 hex = 60 bits for the
+    sketches; 8 hex = 32 bits for samples, splits, buckets and shard
+    routing; positive in int64 on both engines). Every DuckDB oracle
+    replays it bit for bit as ('0x' || substr(md5(s),1,n_hex))::BIGINT."""
     return F.conv(F.substring(F.md5(s), 1, n_hex), 16, 10).cast("bigint")
 
 
 def shingles3_lower(text_col: Column) -> Column:
-    """Word 3-grams over lowercase whitespace tokens as array<string>
-    (shifted-slice arrays_zip construction — no captured-array HOF
-    re-evaluation)."""
+    """Word 3-grams over lowercase whitespace tokens as array<string>."""
     toks = tokens_col(F.lower(text_col))
     n = F.size(toks)
-    m = n - 2
-    z = F.arrays_zip(
-        F.slice(toks, 1, m).alias("t0"),
-        F.slice(toks, 2, m).alias("t1"),
-        F.slice(toks, 3, m).alias("t2"),
-    )
-    grams = F.transform(z, lambda s: F.concat_ws(" ", s["t0"], s["t1"], s["t2"]))
+    grams = sliding(toks, 3, lambda *t: F.concat_ws(" ", *t))
     # zero tokens -> NO shingles (an empty-string shingle would count
     # a phantom distinct element for every whitespace-only doc, and
     # the DuckDB replay NULLs out instead — text-fuzz finding); 1-2

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rules import tokens_col
+from .rules import sliding, tokens_col
 
 # BPE-ish subword proxy: runs of letters, runs of digits, or single
 # non-space symbols — a deterministic regex both Spark and DuckDB can
@@ -73,18 +73,9 @@ def dup_ngram_fraction_col(text: Column, k: int = 2) -> Column:
     """Gopher-style repetition signal: fraction of word k-gram
     OCCURRENCES that are repeats of an earlier occurrence
     ((total - distinct) / total; 0.0 when fewer than k words).
-
-    Built from k shifted slices zipped together — not element_at
-    inside a lambda (no CSE inside higher-order-function lambdas; see
-    dedup.shingle_hashes_col). Fully SQL-expressible -> DuckDB oracle.
+    Fully SQL-expressible -> DuckDB oracle.
     """
-    toks = tokens_col(text)
-    n = F.size(toks)
-    # slice() raises on negative length (docs with < k tokens — e.g.
-    # an empty doc has n=0, m=-1); clamp to 0 so they yield [] grams
-    m = F.greatest(F.lit(0), n - k + 1)
-    z = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(k)])
-    grams = F.transform(z, lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(k)]))
+    grams = sliding(tokens_col(text), k, lambda *t: F.concat_ws(" ", *t))
     total = F.size(grams)
     return (
         F.when(total > 0, (total - F.size(F.array_distinct(grams))) / total)
@@ -113,18 +104,11 @@ def winnowing_fingerprints_col(
 
     `hash_fn` maps a string Column (the space-joined k-gram) to an
     integer Column. Default is xxhash64 — the fast JVM production
-    hash. The registry oracle passes the md5-prefix form instead
-    (conv(substr(md5(s),1,8),16,10)) so DuckDB can replay the exact
-    fingerprints cross-engine; the selection algebra (k-gram, sliding
-    min, distinct-sort) is hash-agnostic and identical on both paths.
-
-    Both the k-gram pass and the sliding-min pass are built from
-    shifted array SLICES zipped together — never slice(arr, i, k)
-    with a captured array inside a transform lambda: Catalyst does no
-    CSE inside higher-order-function lambdas, so the captured
-    expression re-evaluates per element and the whole thing goes
-    O(n_tokens^2) per row (measured: 48 x 500-token docs took 206 s;
-    this form is linear).
+    hash. The registry oracle passes sketches.md5_prefix_hash(s, 8)
+    instead so DuckDB can replay the exact fingerprints cross-engine;
+    the selection algebra (k-gram, sliding min, distinct-sort) is
+    hash-agnostic and identical on both paths. Both the k-gram pass
+    and the sliding-min pass are rules.sliding.
     """
     if hash_fn is None:
         hash_fn = F.xxhash64
@@ -134,15 +118,9 @@ def winnowing_fingerprints_col(
     # DuckDB oracle correctly emits none)
     toks = tokens_col(F.lower(text))
     n = F.size(toks)
-    m = F.greatest(F.lit(0), n - k + 1)
-    gz = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(k)])
-    grams = F.transform(
-        gz, lambda s: hash_fn(F.concat_ws(" ", *[s[f"t{j}"] for j in range(k)]))
-    )
+    grams = sliding(toks, k, lambda *t: hash_fn(F.concat_ws(" ", *t)))
     kh = F.when(n < k, F.array(hash_fn(F.concat_ws(" ", toks)))).otherwise(grams)
-    mm = F.size(kh) - window + 1
-    wz = F.arrays_zip(*[F.slice(kh, j + 1, mm).alias(f"h{j}") for j in range(window)])
-    mins = F.transform(wz, lambda s: F.least(*[s[f"h{j}"] for j in range(window)]))
+    mins = sliding(kh, window, F.least)
     out = F.when(F.size(kh) < window, F.array(F.array_min(kh))).otherwise(mins)
     empty = F.array().cast("array<bigint>")
     return F.when(n == 0, empty).otherwise(F.array_sort(F.array_distinct(out)))
@@ -178,7 +156,7 @@ def gopher_repetition_signals(
     (id, n, gram) followed by one keyed on id — both uniform keys;
     per-row HOF counting of gram frequencies is exactly the
     captured-array-in-lambda O(n * distinct) pattern this repo bans
-    (see dup_ngram_fraction_col), hence the explode + groupBy form.
+    (see rules.sliding), hence the explode + groupBy form.
     """
     toks = tokens_col(F.lower(F.col(text_col)))
     base = df.select(
@@ -186,15 +164,7 @@ def gopher_repetition_signals(
     )
     parts = []
     for n in sorted(set(top_ns) | set(dup_ns)):
-        t = F.col("_tk")
-        m = F.size(t) - n + 1
-        z = F.arrays_zip(*[F.slice(t, j + 1, m).alias(f"t{j}") for j in range(n)])
-        def _gram_joiner(_n):  # bind n outside the lambda: PySpark passes
-            return lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(_n)])
-
-        grams = F.when(m < 1, F.array().cast("array<string>")).otherwise(
-            F.transform(z, _gram_joiner(n))
-        )
+        grams = sliding(F.col("_tk"), n, lambda *t: F.concat_ws(" ", *t))
         parts.append(
             base.select(
                 id_col, F.lit(n).alias("_n"), F.explode(grams).alias("_gram")

@@ -26,7 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .rules import tokens_col
+from .rules import sliding, tokens_col
+from .sketches import md5_prefix_hash
 
 __all__ = [
     "ngram_strings_col",
@@ -40,32 +41,17 @@ __all__ = [
     "gumbel_topk_sample",
 ]
 
-def _md5_prefix32(col: Column) -> Column:
-    """THE cross-engine 32-bit md5-prefix hash (first 8 hex chars as
-    a base-16 bigint) — one definition for every consumer in this
-    module (pack buckets, split pcts, mixture sampling, DSIR feature
-    buckets); it must stay bit-identical to the DuckDB oracles'
-    ('0x' || substr(md5(x),1,8))::BIGINT replay (code-review r4c4
-    finding #8: four inline copies of a determinism-critical
-    expression)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
 
 def ngram_strings_col(text: Column, n: int) -> Column:
-    """Distinct word n-grams of lower(text) as space-joined strings.
-
-    Shifted-slice arrays_zip form (see textstats.py:104 for why a
-    slice captured inside a transform lambda is O(tokens^2): Catalyst
-    does no CSE inside HOF lambdas). Docs with < n tokens yield [] —
+    """Distinct word n-grams of lower(text) as space-joined strings
+    (rules.sliding). Docs with < n tokens, and NULL text, yield [] —
     a doc too short to contain a full n-gram cannot be contaminated
     by one.
     """
     toks = tokens_col(F.lower(text))
-    m = F.size(toks) - n + 1
-    z = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(n)])
-    grams = F.transform(z, lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(n)]))
+    grams = sliding(toks, n, lambda *t: F.concat_ws(" ", *t))
     empty = F.array().cast("array<string>")
-    return F.when(m >= 1, F.array_distinct(grams)).otherwise(empty)
+    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(empty)
 
 
 def decontaminate(
@@ -316,7 +302,7 @@ def pack_sequences(
         .otherwise(F.lit(0))
         .cast("bigint")
     )
-    bucket = _md5_prefix32(F.col(id_col).cast("string")) % n_buckets
+    bucket = md5_prefix_hash(F.col(id_col).cast("string"), 8) % n_buckets
     w = (
         Window.partitionBy("pack_bucket")
         .orderBy(id_col)
@@ -351,7 +337,7 @@ def dataset_split_col(id_col: Column, train: int = 80, val: int = 10) -> Column:
     runs, engines and cluster sizes, and stable under corpus growth
     (a doc's split never changes when other docs are added — the
     property RNG-based randomSplit lacks)."""
-    pct = _md5_prefix32(id_col.cast("string")) % 100
+    pct = md5_prefix_hash(id_col.cast("string"), 8) % 100
     return (
         F.when(pct < train, F.lit("train"))
         .when(pct < train + val, F.lit("val"))
@@ -404,7 +390,7 @@ def domain_mixture_sample(
             F.lit(1.0), F.col("weight") * F.lit(float(target_docs)) / F.col("n_docs")
         ),
     )
-    h = _md5_prefix32(F.col(id_col).cast("string")) % 1_000_000
+    h = md5_prefix_hash(F.col(id_col).cast("string"), 8) % 1_000_000
     # NULL-SAFE join: a NULL domain is a real group — its count
     # participates in the weight normalization, so dropping its docs
     # via a plain equi-join would deflate every real domain's
@@ -433,7 +419,7 @@ def _md5_bucket(col: Column, n_buckets: int) -> Column:
     """Cross-engine-stable hashed feature bucket (md5 prefix -> int,
     the dataset_split_col discipline — xxhash64 would be cheaper but
     is not reproducible in the DuckDB oracle)."""
-    return _md5_prefix32(col) % F.lit(int(n_buckets))
+    return md5_prefix_hash(col, 8) % F.lit(int(n_buckets))
 
 
 def dsir_log_ratio_table(
@@ -532,16 +518,8 @@ def gumbel_topk_sample(
     Scale shape: one narrow projection + a global top-k
     (TakeOrderedAndProject — per-partition heaps, only k rows ever
     cross to the driver-side reduce; no full sort materializes)."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(seed_tag))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 0.5
-    ) / F.lit(4294967296.0)
+    h = md5_prefix_hash(F.concat(F.col(id_col).cast("string"), F.lit(seed_tag)), 8)
+    u = (h.cast("double") + 0.5) / F.lit(4294967296.0)
     key = F.col(score_col) / F.lit(float(temperature)) - F.log(-F.log(u))
     return (
         scored.withColumn("sample_key", key)
