@@ -37,14 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--dedup", action="store_true",
         help="after the filter stage, run the near-dup dedup stage "
-        "(minhash pairs -> dup_pairs + kept_pages tables)",
-    )
-    ap.add_argument(
-        "--dedup-incremental", action="store_true",
-        help="with --dedup: dedup only decision rows of filter runs "
-        "not yet ingested, against the persisted dedup_bands state "
-        "(daily-increment mode; do not mix with full --dedup runs "
-        "on the same output)",
+        "(minhash pairs -> dup_pairs + kept_pages tables); it resumes "
+        "from the persisted dedup state, ingesting only filter runs "
+        "not yet deduped",
     )
     ap.add_argument(
         "--min-quality-prob", type=float, default=None,
@@ -132,8 +127,6 @@ def main(argv: list[str] | None = None) -> int:
         "python-worker warmup) so the reported timing is steady-state",
     )
     args = ap.parse_args(argv)
-    if args.dedup_incremental and not args.dedup:
-        ap.error("--dedup-incremental requires --dedup")
 
     if not args.pages and not args.synth:
         ap.error("either --pages or --synth N is required")
@@ -276,8 +269,7 @@ def main(argv: list[str] | None = None) -> int:
     res["docs_per_s"] = round(res["docs"] / max(res["wall_s"], 1e-9), 1)
     if args.dedup:
         res["dedup"] = pipeline.run_near_dedup(
-            spark, args.out, n_buckets=args.buckets, run_id=args.run_id,
-            incremental=args.dedup_incremental,
+            spark, args.out, n_buckets=args.buckets, run_id=args.run_id
         )
     print(json.dumps(res))
     return 0

@@ -298,6 +298,11 @@ def test_minhash_collapse_exact_is_linear_on_boilerplate(spark):
     assert flood.count() == m - 1  # star, not clique (m(m-1)/2 = 79800)
     # rep = min doc_id, every member pairs to it at jaccard exactly 1.0
     assert flood.filter((F.col("id_a") != 0) | (F.col("jaccard") != 1.0)).count() == 0
+    # threshold > 1.0: identical texts do not meet the bar, so neither
+    # the one-shot nor the incremental path may emit star pairs
+    no_bands = spark.createDataFrame([], "doc_id long, band_idx int, band_hash bigint")
+    assert dedup.minhash_dedup_pairs(docs, threshold=1.01, collapse_exact=True).count() == 0
+    assert dedup.incremental_minhash_pairs(docs, no_bands, docs, threshold=1.01)[0].count() == 0
     dedup.release_cached()
 
 

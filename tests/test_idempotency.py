@@ -182,9 +182,9 @@ def test_dedup_stage_chains_and_resumes(spark, synth_dir, tmp_path):
 
 def test_dedup_kill_mid_write_resumes_per_bucket(spark, synth_dir, tmp_path):
     """VERDICT r2 #4: the survivor-write stage resumes at BUCKET
-    granularity while candidate generation resumes at STAGE
     granularity — a crash after the pairs table completed must not
-    recompute pairs, and must rewrite only the unfinished buckets."""
+    recompute pairs (the filter run is already ingested), and must
+    rewrite only the unfinished buckets."""
     from webfilter.manifest import Manifest
     from webfilter.tables import ParquetCatalog
 
@@ -199,14 +199,13 @@ def test_dedup_kill_mid_write_resumes_per_bucket(spark, synth_dir, tmp_path):
     r1 = pipeline.run_near_dedup(
         spark, out, n_buckets=8, threshold=0.6, run_id="d1", only_buckets=[0, 1, 2]
     )
-    assert r1["buckets"] == 3 and r1["pairs_recomputed"]
+    assert r1["buckets"] == 3 and r1["new_runs"] == ["f1"]
     m = Manifest(ParquetCatalog(spark, out))
-    assert m.status("dedup_pairs", pipeline.GLOBAL_UNIT) == "DONE"
     assert sorted(m.pending_buckets(8, stage="dedup")) == [3, 4, 5, 6, 7]
 
     # resume: pairs NOT recomputed, remaining buckets written
     r2 = pipeline.run_near_dedup(spark, out, n_buckets=8, threshold=0.6, run_id="d2")
-    assert r2["buckets"] == 5 and not r2["pairs_recomputed"]
+    assert r2["buckets"] == 5 and r2["new_runs"] == []
     # pairs rows still carry the run that built them
     cat = ParquetCatalog(spark, out)
     runs = {r["run_id"] for r in cat.read("dup_pairs").select("run_id").distinct().collect()}
@@ -242,24 +241,39 @@ def test_incremental_dedup_equals_full_recompute(spark, synth_dir, tmp_path):
     pipeline.run_filter(
         spark, pages, str(inc), n_buckets=8, run_id="a", only_buckets=[0, 1, 2, 3]
     )
-    r1 = pipeline.run_near_dedup(
-        spark, str(inc), n_buckets=8, run_id="i1", incremental=True
-    )
+    r1 = pipeline.run_near_dedup(spark, str(inc), n_buckets=8, run_id="i1")
     assert r1["new_runs"] == ["a"] and r1["buckets"] > 0
 
     pipeline.run_filter(spark, pages, str(inc), n_buckets=8, run_id="b")
-    r2 = pipeline.run_near_dedup(
-        spark, str(inc), n_buckets=8, run_id="i2", incremental=True
-    )
+    r2 = pipeline.run_near_dedup(spark, str(inc), n_buckets=8, run_id="i2")
     assert r2["new_runs"] == ["b"]
 
     assert _kept_urls(spark, str(full)) == _kept_urls(spark, str(inc))
 
     # nothing new -> no-op (no rewrites, no state growth)
-    r3 = pipeline.run_near_dedup(
-        spark, str(inc), n_buckets=8, run_id="i3", incremental=True
-    )
+    r3 = pipeline.run_near_dedup(spark, str(inc), n_buckets=8, run_id="i3")
     assert r3["buckets"] == 0 and r3["new_runs"] == []
+
+
+def test_dedup_force_after_increments_equals_clean_run(spark, synth_dir, tmp_path):
+    """force=True resets the dedup state and ingests every filter run
+    as one cold start: on a root already through two increments, a
+    forced run at a new threshold keeps what a clean run keeps."""
+    pages = f"{synth_dir}/pages.parquet"
+    clean = str(tmp_path / "clean")
+    pipeline.run_filter(spark, pages, clean, n_buckets=8, run_id="f")
+    pipeline.run_near_dedup(spark, clean, n_buckets=8, threshold=0.6, run_id="dc")
+
+    inc = str(tmp_path / "inc")
+    pipeline.run_filter(spark, pages, inc, n_buckets=8, run_id="a", only_buckets=[0, 1, 2, 3])
+    pipeline.run_near_dedup(spark, inc, n_buckets=8, run_id="i1")
+    pipeline.run_filter(spark, pages, inc, n_buckets=8, run_id="b")
+    pipeline.run_near_dedup(spark, inc, n_buckets=8, run_id="i2")
+    r = pipeline.run_near_dedup(
+        spark, inc, n_buckets=8, threshold=0.6, run_id="i3", force=True
+    )
+    assert r["new_runs"] == ["a", "b"] and r["buckets"] == 8
+    assert _kept_urls(spark, inc) == _kept_urls(spark, clean)
 
 
 def test_incremental_dedup_resumes_crashed_rewrite(spark, synth_dir, tmp_path):
@@ -270,16 +284,12 @@ def test_incremental_dedup_resumes_crashed_rewrite(spark, synth_dir, tmp_path):
     pages = f"{synth_dir}/pages.parquet"
     out = tmp_path / "crash"
     pipeline.run_filter(spark, pages, str(out), n_buckets=8, run_id="f")
-    pipeline.run_near_dedup(
-        spark, str(out), n_buckets=8, run_id="i1", incremental=True
-    )
+    pipeline.run_near_dedup(spark, str(out), n_buckets=8, run_id="i1")
     before = _kept_urls(spark, str(out))
 
     m = Manifest(ParquetCatalog(spark, str(out)))
     m.mark("crashed", "dedup", [3], RUNNING)
-    r = pipeline.run_near_dedup(
-        spark, str(out), n_buckets=8, run_id="i2", incremental=True
-    )
+    r = pipeline.run_near_dedup(spark, str(out), n_buckets=8, run_id="i2")
     assert r["buckets"] == 1 and r["new_runs"] == []
     assert _kept_urls(spark, str(out)) == before
 
@@ -305,7 +315,7 @@ def test_dedup_force_rerun_ignores_stale_pairs(spark, synth_dir, tmp_path):
     r2 = pipeline.run_near_dedup(
         spark, out, n_buckets=8, threshold=1.01, run_id="d2", force=True
     )
-    assert r2["pairs_recomputed"] and r2["dup_pairs"] == 0
+    assert r2["new_runs"] == ["f1"] and r2["dup_pairs"] == 0
     assert cat.read("kept_pages").count() == n_dec_kept
 
 

@@ -235,6 +235,21 @@ def test_minhash_candidate_join_is_equi(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
+def test_minhash_cold_start_has_no_band_state_join(spark):
+    """A cold start (no persisted band table) takes its candidates
+    from the batch's own bands. A join keyed on band_hash here is the
+    cross join against band state, which on a cold start would
+    broadcast the whole corpus band table."""
+    from webfilter.dedup import incremental_minhash_pairs, release_cached
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    pairs, _ = incremental_minhash_pairs(docs, None, docs, k=2)
+    keys = [ln for ln in _plan(pairs).splitlines() if " keys " in ln]
+    release_cached()
+    assert keys  # the verify joins are planned
+    assert not [ln for ln in keys if "band_hash" in ln], keys
+
+
 def test_decontaminate_corpus_side_never_shuffles(spark):
     """The 100 TB corpus side must reach the benchmark-gram join via
     broadcast — a SortMergeJoin here means the full exploded gram

@@ -486,7 +486,7 @@ def _collapse_exact(
 
 def incremental_minhash_pairs(
     new_df: DataFrame,
-    old_bands: DataFrame,
+    old_bands: DataFrame | None,
     corpus_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -501,9 +501,13 @@ def incremental_minhash_pairs(
 
     ``new_df``      the increment's (id, text) rows
     ``old_bands``   the persisted band table (id, band_idx, band_hash)
-                    of everything already ingested (band_table output)
+                    of everything already ingested (band_table
+                    output), or None on a cold start: the batch is the
+                    whole corpus, so candidates come from the batch's
+                    own bands and no cross join is planned
     ``corpus_df``   (id, text) covering BOTH sides — only rows that
                     land in candidate pairs are ever shingled/joined
+                    (not read on a cold start)
 
     Returns ``(pairs, new_bands)``; the caller appends ``new_bands``
     to the band state so the next increment sees this one.
@@ -515,28 +519,39 @@ def incremental_minhash_pairs(
     SHAPE ((rep_new, member) vs (rep_global, member)) but not the
     drop set under greedy (url_b of some pair ⇔ non-minimal member)
     or components (same connected components) — survivors identical.
+    The collapse is skipped when threshold > 1.0, as in
+    minhash_dedup_pairs (identical texts would not meet the bar).
 
     Scale shape: the increment's band rows (|new| × n_bands, ~24 B
     each) broadcast to the corpus band table, so the 100 TB side is
     ONE narrow scan with a map-side join — no corpus shuffle, no
-    corpus re-signing."""
-    reps, star = _collapse_exact(new_df, id_col, text_col)
-    sig = _persist(minhash_signature_df(reps, id_col, text_col, k, n_hashes))
+    corpus re-signing. A cold start never broadcasts: its band side
+    would be the whole corpus."""
+    star = None
+    if threshold <= 1.0:
+        new_df, star = _collapse_exact(new_df, id_col, text_col)
+    sig = minhash_signature_df(new_df, id_col, text_col, k, n_hashes)
     nb = _persist(band_table(sig, id_col, n_bands, n_hashes // n_bands))
-    a, b = F.broadcast(nb).alias("a"), old_bands.alias("b")
-    cross = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-    ).select(
-        F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-        F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-    )
-    within = _pairs_from_bands(nb, id_col)
-    cand = cross.unionByName(within).distinct()
+    cand = _pairs_from_bands(nb, id_col)
+    if old_bands is None:
+        # cold start: every candidate is in the batch, so verify
+        # against it (the cached exact-collapse reps) instead of
+        # re-reading the corpus
+        corpus_df = new_df
+    else:
+        a, b = F.broadcast(nb).alias("a"), old_bands.alias("b")
+        cross = a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
+        ).select(
+            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
+            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
+        )
+        cand = cross.unionByName(cand).distinct()
     near = jaccard_verify(corpus_df, cand, id_col, text_col, k, threshold)
-    return near.unionByName(star), nb
+    return (near if star is None else near.unionByName(star)), nb
 
 
 # -------------------------------------------------------- exact Jaccard

@@ -57,7 +57,10 @@ def get_spark(
         # dynamic partition overwrite = per-bucket idempotent rewrite
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("WEBFILTER_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("WEBFILTER_DRIVER_MEM", default_driver_mem()),
+        )
         # staged rule projections (webfilter.rules.with_heuristics)
         # materialize the token array once; CollapseProject would
         # re-inline it into every consumer (~15x re-evaluation of
@@ -93,6 +96,15 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def default_driver_mem() -> str:
+    """Half of physical RAM, capped at 48g: a local-mode driver runs
+    every task, and the Python workers and Arrow buffers need the
+    other half. A fixed 48g lets the heap grow past what a small host
+    has."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(ram // 2, 48 << 30) >> 20}m"
 
 
 def ship_package(spark: SparkSession) -> None:
