@@ -78,7 +78,7 @@ def test_simhash_identical_and_mutated(spark):
         [(1, base), (2, base), (3, mutated), (4, unrelated)],
         "doc_id long, text string",
     )
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in dedup.simhash_near_dup_pairs(df, max_hamming=10, n_chunks=11).collect()}
+    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in dedup.simhash_near_dup_pairs(df, max_hamming=10, n_chunks=11)[0].collect()}
     assert pairs.get((1, 2)) == 0  # identical docs: hamming 0
     assert (1, 3) in pairs  # one-word mutation: small hamming
     assert (1, 4) not in pairs and (2, 4) not in pairs
@@ -96,7 +96,7 @@ def test_embedding_near_dup_matches_brute_force(spark, sf_small="/root/testdata/
         .filter(F.col("cosine") >= 0.9)
     )
     n_brute = brute.count()
-    lsh = dedup.embedding_near_dup_pairs(emb, threshold=0.9, n_planes=8, dim=64)
+    lsh, _ = dedup.embedding_near_dup_pairs(emb, threshold=0.9, n_planes=8, dim=64)
     found = lsh.join(
         brute.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")),
         ["id_a", "id_b"],
@@ -125,35 +125,39 @@ def test_incremental_embedding_equals_full_recompute(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     full = {
-        (r["id_a"], r["id_b"])
+        (r["id_a"], r["id_b"], r["cosine"])
         for r in dedup.embedding_near_dup_pairs(
             emb, threshold=0.9, n_planes=8, dim=64
-        ).collect()
+        )[0].collect()
     }
     assert full, "fixture must contain embedding near-dups at 0.9"
 
     base = emb.filter(F.col("vec_id") % 3 != 0)
     inc = emb.filter(F.col("vec_id") % 3 == 0)
-    state = dedup.embedding_bucket_table(base, n_planes=8, dim=64)
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_near_dup_pairs(
-            base, threshold=0.9, n_planes=8, dim=64
-        ).collect()
-    }
-    p2, nb = dedup.incremental_embedding_pairs(
-        inc, state, emb, threshold=0.9, n_planes=8, dim=64
+    p1, state = dedup.embedding_near_dup_pairs(
+        base, threshold=0.9, n_planes=8, dim=64
     )
-    got |= {(r["id_a"], r["id_b"]) for r in p2.collect()}
+    got = {(r["id_a"], r["id_b"], r["cosine"]) for r in p1.collect()}
+    p2, nb = dedup.embedding_near_dup_pairs(
+        inc, threshold=0.9, n_planes=8, dim=64, old_buckets=state, corpus_emb=emb
+    )
+    got |= {(r["id_a"], r["id_b"], r["cosine"]) for r in p2.collect()}
     assert got == full
 
     # append-only state growth: an empty increment adds nothing
     state2 = state.unionByName(nb)
     empty = emb.filter(F.lit(False))
-    p3, _ = dedup.incremental_embedding_pairs(
-        empty, state2, emb, threshold=0.9, n_planes=8, dim=64
+    p3, _ = dedup.embedding_near_dup_pairs(
+        empty, threshold=0.9, n_planes=8, dim=64, old_buckets=state2, corpus_emb=emb
     )
     assert p3.count() == 0
+
+    # a warm call against empty state equals the cold call
+    p4, _ = dedup.embedding_near_dup_pairs(
+        emb, threshold=0.9, n_planes=8, dim=64,
+        old_buckets=state.filter(F.lit(False)), corpus_emb=emb,
+    )
+    assert {(r["id_a"], r["id_b"], r["cosine"]) for r in p4.collect()} == full
 
 
 def test_incremental_embedding_requires_dim(spark):
@@ -161,7 +165,7 @@ def test_incremental_embedding_requires_dim(spark):
     import pytest
 
     with pytest.raises(ValueError, match="dim is required"):
-        dedup.embedding_bucket_table(emb)
+        dedup.embedding_near_dup_pairs(emb, old_buckets=emb, corpus_emb=emb)
 
 
 def test_simhash_kernel_parity_with_column_impl(spark, near_dup_docs):
@@ -185,12 +189,12 @@ def test_simhash_kernel_parity_with_column_impl(spark, near_dup_docs):
 def test_simhash_pairs_same_for_both_impls(spark, near_dup_docs):
     docs = near_dup_docs.select("doc_id", "text")
     k = {(r["id_a"], r["id_b"], r["hamming"])
-         for r in dedup.simhash_near_dup_pairs(docs, max_hamming=5, n_chunks=6).collect()}
+         for r in dedup.simhash_near_dup_pairs(docs, max_hamming=5, n_chunks=6)[0].collect()}
     # hash_fn selects the pure Column path (simhash_col) with the
     # kernel's own token hash
     c = {(r["id_a"], r["id_b"], r["hamming"])
          for r in dedup.simhash_near_dup_pairs(
-             docs, max_hamming=5, n_chunks=6, hash_fn=F.xxhash64).collect()}
+             docs, max_hamming=5, n_chunks=6, hash_fn=F.xxhash64)[0].collect()}
     assert k == c
 
 
@@ -205,14 +209,29 @@ def _rand_emb_df(spark, n, dim=16, seed=7):
 
 def test_embedding_candidates_scale_linearly(spark):
     """VERDICT r1: with auto_n_planes the candidate count must grow
-    ~linearly in n (a fixed plane count grows quadratically)."""
+    ~linearly in n (a fixed plane count grows quadratically).
+    Candidates are the i<j pairs sharing a (table_id, bucket) key of
+    the returned bucket frame."""
+
+    def n_candidates(n):
+        _, buckets = dedup.embedding_near_dup_pairs(
+            _rand_emb_df(spark, n), n_planes=dedup.auto_n_planes(n), n_tables=2, dim=16
+        )
+        a, b = buckets.alias("a"), buckets.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.table_id") == F.col("b.table_id"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .select("a.id", "b.id")
+            .distinct()
+            .count()
+        )
+
     n1, n2 = 1500, 15000
-    c1 = dedup.embedding_candidate_pairs(
-        _rand_emb_df(spark, n1), n_planes=dedup.auto_n_planes(n1), n_tables=2, dim=16
-    ).count()
-    c2 = dedup.embedding_candidate_pairs(
-        _rand_emb_df(spark, n2), n_planes=dedup.auto_n_planes(n2), n_tables=2, dim=16
-    ).count()
+    c1, c2 = n_candidates(n1), n_candidates(n2)
     # 10x docs -> way below the 100x quadratic blowup; allow 2x slack
     # over perfectly-linear for bucket-occupancy variance
     assert c2 <= 20 * max(c1, 1), f"candidates {c1} -> {c2} (superlinear)"
@@ -387,7 +406,7 @@ def test_kernels_tolerate_null_text(spark):
     # under ANSI mode the pre-fix verify crashed outright here
     mh = dedup.minhash_dedup_pairs(df, k=2, threshold=0.3).collect()
     assert {(r["id_a"], r["id_b"]) for r in mh} == {(2, 4)}
-    sh = dedup.simhash_near_dup_pairs(df, max_hamming=3).collect()
+    sh = dedup.simhash_near_dup_pairs(df, max_hamming=3)[0].collect()
     assert {(r["id_a"], r["id_b"]) for r in sh} == {(2, 4)}
     # signature/state frames: no crash, rows ONLY for token-bearing
     # docs — both minhash formulations agree (the kernel path used to
@@ -412,7 +431,7 @@ def test_embedding_pairs_require_dim(spark):
 
     emb = _rand_emb_df(spark, 10)
     with pytest.raises(ValueError, match="dim is required"):
-        dedup.embedding_candidate_pairs(emb)
+        dedup.embedding_near_dup_pairs(emb, n_planes=12)
     with pytest.raises(ValueError, match="dim is required"):
         dedup.embedding_near_dup_pairs(emb)
 
@@ -455,7 +474,7 @@ def test_remove_duplicate_spans_cuts_cross_doc_boilerplate(spark):
         ],
         "doc_id string, text string",
     )
-    out = {r.doc_id: r for r in remove_duplicate_spans(df, span=4, min_docs=2).collect()}
+    out = {r.doc_id: r for r in remove_duplicate_spans(df, span=4, min_docs=2)[0].collect()}
     assert set(out) == {"a", "b", "c", "d", "e"}
     assert out["a"].clean_text == "now unique alpha words here"
     assert out["a"].n_removed == 1
@@ -513,27 +532,20 @@ def test_incremental_simhash_equals_full_recompute(spark, near_dup_docs):
     reproduce the one-shot simhash pair set EXACTLY (fingerprints are
     deterministic per text; the verify reads fps from state, so no
     corpus text is touched)."""
-    from webfilter.dedup import (
-        incremental_simhash_pairs,
-        simhash_near_dup_pairs,
-        simhash_state_table,
-    )
+    from webfilter.dedup import simhash_near_dup_pairs
 
     docs = near_dup_docs
     full = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(docs, max_hamming=8, n_chunks=9).collect()
+        for r in simhash_near_dup_pairs(docs, max_hamming=8, n_chunks=9)[0].collect()
     }
     assert full, "fixture must contain simhash near-dups"
 
     base = docs.filter(F.col("doc_id") % 3 != 0)
     inc = docs.filter(F.col("doc_id") % 3 == 0)
-    state = simhash_state_table(base, n_chunks=9)
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(base, max_hamming=8, n_chunks=9).collect()
-    }
-    p2, nc = incremental_simhash_pairs(inc, state, max_hamming=8, n_chunks=9)
+    p1, state = simhash_near_dup_pairs(base, max_hamming=8, n_chunks=9)
+    got = {(r["id_a"], r["id_b"], r["hamming"]) for r in p1.collect()}
+    p2, nc = simhash_near_dup_pairs(inc, max_hamming=8, n_chunks=9, old_chunks=state)
     got |= {(r["id_a"], r["id_b"], r["hamming"]) for r in p2.collect()}
     assert got == full
 
@@ -541,8 +553,14 @@ def test_incremental_simhash_equals_full_recompute(spark, near_dup_docs):
     # must add nothing (state growth is append-only, no rescoring)
     state2 = state.unionByName(nc)
     empty = docs.filter(F.lit(False))
-    p3, _ = incremental_simhash_pairs(empty, state2, max_hamming=8, n_chunks=9)
+    p3, _ = simhash_near_dup_pairs(empty, max_hamming=8, n_chunks=9, old_chunks=state2)
     assert p3.count() == 0
+
+    # a warm call against empty state equals the cold call
+    p4, _ = simhash_near_dup_pairs(
+        docs, max_hamming=8, n_chunks=9, old_chunks=state.filter(F.lit(False))
+    )
+    assert {(r["id_a"], r["id_b"], r["hamming"]) for r in p4.collect()} == full
 
 
 def test_soft_dedup_weights_invariants(spark):
@@ -569,11 +587,7 @@ def test_incremental_span_dedup_equals_full_on_increment(spark):
     get EXACTLY the cuts a full recompute over history+batch gives
     them (counts add across disjoint batches), and the merged state
     equals the state a from-scratch build would produce."""
-    from webfilter.dedup import (
-        incremental_remove_spans,
-        remove_duplicate_spans,
-        span_state_table,
-    )
+    from webfilter.dedup import remove_duplicate_spans
 
     boiler = "the quick brown fox"  # exactly span=4 tokens
     a_rows = [
@@ -588,10 +602,10 @@ def test_incremental_span_dedup_equals_full_on_increment(spark):
     mk = lambda rows: spark.createDataFrame(rows, "doc_id bigint, text string")
     A, B = mk(a_rows), mk(b_rows)
 
-    state = span_state_table(A, span=4)
-    cleaned_b, new_state = incremental_remove_spans(B, state, span=4, min_docs=2)
+    _, state = remove_duplicate_spans(A, span=4)
+    cleaned_b, new_state = remove_duplicate_spans(B, span=4, min_docs=2, state=state)
 
-    full = remove_duplicate_spans(mk(a_rows + b_rows), span=4, min_docs=2)
+    full, union_state = remove_duplicate_spans(mk(a_rows + b_rows), span=4, min_docs=2)
     want = {
         r["doc_id"]: (r["clean_text"], r["n_removed"])
         for r in full.filter("doc_id >= 3").collect()
@@ -605,16 +619,13 @@ def test_incremental_span_dedup_equals_full_on_increment(spark):
     assert got[3][1] == 1 and got[4][1] == 2 and got[5][1] == 0
 
     # merged state == from-scratch state over the union
-    scratch = {
-        (r["span_hash"], r["nd"])
-        for r in span_state_table(mk(a_rows + b_rows), span=4).collect()
-    }
+    rebuilt = {(r["span_hash"], r["nd"]) for r in union_state.collect()}
     merged = {(r["span_hash"], r["nd"]) for r in new_state.collect()}
-    assert merged == scratch
+    assert merged == rebuilt
 
 
 def test_incremental_span_dedup_empty_state_equals_batch_only(spark):
-    from webfilter.dedup import incremental_remove_spans, remove_duplicate_spans
+    from webfilter.dedup import remove_duplicate_spans
 
     rows = [
         (1, "shared span here now alpha beta gamma delta"),
@@ -622,8 +633,10 @@ def test_incremental_span_dedup_empty_state_equals_batch_only(spark):
         (3, "totally different content with no repeats at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    inc, _ = incremental_remove_spans(df, None, span=4, min_docs=2)
-    ref = remove_duplicate_spans(df, span=4, min_docs=2)
+    ref, state = remove_duplicate_spans(df, span=4, min_docs=2)
+    inc, _ = remove_duplicate_spans(
+        df, span=4, min_docs=2, state=state.filter(F.lit(False))
+    )
     assert sorted(map(tuple, inc.collect())) == sorted(map(tuple, ref.collect()))
 
 
@@ -653,6 +666,6 @@ def test_simhash_recall_guard(spark):
     with pytest.raises(ValueError, match="only guarantees recall"):
         dedup.simhash_near_dup_pairs(df, max_hamming=4, n_chunks=4)
     with pytest.raises(ValueError, match="only guarantees recall"):
-        dedup.incremental_simhash_pairs(
-            df, dedup.simhash_state_table(df), max_hamming=4, n_chunks=4
+        dedup.simhash_near_dup_pairs(
+            df, max_hamming=4, n_chunks=4, old_chunks=dedup.simhash_state_table(df)
         )

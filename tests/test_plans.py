@@ -57,6 +57,61 @@ def test_bucket_filter_is_pushed(spark, synth_dir):
     assert "bucket_id" in seg
 
 
+def test_resumed_lineage_scan_prunes_buckets(spark, synth_dir, tmp_path, monkeypatch):
+    """A resumed run's audit re-read of the decisions it just wrote
+    scans only its pending buckets (a partition filter on bucket_id),
+    like the pages scan."""
+    from webfilter import pipeline
+
+    pages, out = f"{synth_dir}/pages.parquet", str(tmp_path / "resume")
+    pipeline.run_filter(spark, pages, out, n_buckets=8, run_id="r1",
+                        only_buckets=[0, 1, 2, 3, 4, 5])
+    seen = []
+    run_rows = pipeline._run_rows
+
+    def spy(*args):
+        dec = run_rows(*args)
+        seen.append(_plan(dec.select("url")))
+        return dec
+
+    monkeypatch.setattr(pipeline, "_run_rows", spy)
+    r = pipeline.run_filter(spark, pages, out, n_buckets=8, run_id="r2")
+    assert r["buckets"] == 2 and len(seen) == 1
+    seg = seen[0].split("PartitionFilters")[1][:200]
+    assert "bucket_id" in seg, seen[0]
+
+
+def test_host_audit_is_one_exchange_over_partial_agg(spark, synth_dir, tmp_path, monkeypatch):
+    """The per-host audit needs no salt: its plan has exactly one
+    Exchange, with the partial HashAggregate below it, so a hot host
+    (~35% of rows) sends one row per map task."""
+    import contextlib
+
+    from webfilter import pipeline
+    from webfilter.tables import ParquetCatalog
+
+    plans = []
+    append = ParquetCatalog.append
+
+    def spy(self, df, name, part_col=None):
+        if name == "host_audit":
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain()
+            plans.append(buf.getvalue())
+        return append(self, df, name, part_col)
+
+    monkeypatch.setattr(ParquetCatalog, "append", spy)
+    pipeline.run_filter(spark, f"{synth_dir}/pages.parquet",
+                        str(tmp_path / "hosts"), n_buckets=8, run_id="h")
+    lines = plans[0].splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    partial = [i for i, ln in enumerate(lines)
+               if "HashAggregate" in ln and "partial_count" in ln]
+    assert len(exchanges) == 1, plans[0]
+    assert partial and partial[0] > exchanges[0], plans[0]
+
+
 def test_broadcast_in_topk(spark):
     from webfilter.entry_queries import q_cosine_topk
 

@@ -29,12 +29,6 @@ _PROTOCOL = {"eval"}
 KEEP: dict[str, str] = {
     # SCALING.md claims
     "dedup.auto_n_planes": _SCALING.format("Dedup family"),
-    "dedup.embedding_candidate_pairs": _SCALING.format("Dedup family"),
-    "dedup.incremental_simhash_pairs": _SCALING.format("Incremental near-dup"),
-    "dedup.incremental_embedding_pairs": _SCALING.format("Incremental near-dup"),
-    "dedup.embedding_bucket_table": _SCALING.format("Incremental near-dup"),
-    "dedup.incremental_remove_spans": _SCALING.format("Robustness guards"),
-    "dedup.span_state_table": _SCALING.format("Robustness guards"),
     "warc.stream_wet": _SCALING.format("Web-transport & compliance"),
     "tables.merge_upsert_pages": _SCALING.format("Snapshot table format"),
     "snaptable.SnapshotTable.merge_upsert": _SCALING.format("Snapshot table format"),

@@ -720,7 +720,8 @@ def remove_duplicate_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> DataFrame:
+    state: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """C4-style corpus-wide span dedup (C4 removed any three-sentence
     span occurring more than once in the corpus; here the unit is a
     fixed `span`-token chunk, the tokenizer-only analog): every
@@ -733,128 +734,42 @@ def remove_duplicate_spans(
     emitted (nothing to dedup). The trailing partial chunk (< span
     tokens) is never boilerplate.
 
-    Scale shape: tokens shuffle once to form chunks (keyed on
-    (doc, chunk_id) — perfectly uniform), chunk texts shuffle once
-    for the cross-doc count, and the boilerplate set (tiny: only
-    spans repeated across documents — C4 measured a small fraction)
-    broadcasts back. At 10^12 docs, key the count/join on
-    xxhash64(chunk) instead of the string to cut shuffle bytes; the
-    string form here is what makes the op oracle-checkable.
+    Returns ``(cleaned, new_state)``: cleaned is (id_col, clean_text,
+    n_removed); new_state is one row per distinct full-length span
+    hash with its distinct-doc count (span_hash, nd), ~16 B/row.
+    ``state`` is the persisted new_state of earlier batches; a call
+    without it is the one-shot corpus run (the first increment
+    against empty state). With it, the batch's docs receive EXACTLY
+    the cuts a full recompute over history+batch would give them —
+    distinct-doc counts add across batches because a doc belongs to
+    exactly one batch — while already-emitted historical docs are
+    never retroactively re-cut (forward-only, same as every
+    incremental stage here). Proven equal to the full recompute on
+    the increment in tests/test_dedup.py.
 
-    Output: id_col, clean_text, n_removed.
+    Scale shape: the batch chunks once (uniform (doc, chunk) keys),
+    counts are keyed on xxhash64(chunk) (8-byte shuffle key instead
+    of the chunk string; same rows as string keys), join the state on
+    span_hash (state rows ∝ distinct corpus spans), and the
+    boilerplate set (tiny: only spans repeated across documents — C4
+    measured a small fraction) broadcasts back — the history is
+    touched only through its span table.
     """
-    chunks = _span_chunks(df, span, id_col, text_col)
-    boiler = (
-        chunks.filter(F.col("clen") == span)
-        .groupBy("chunk")
-        .agg(F.count_distinct(id_col).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("chunk", F.lit(True).alias("removed"))
-    )
-    marked = chunks.join(F.broadcast(boiler), "chunk", "left")
-    kept_struct = F.when(
-        F.col("removed").isNull(), F.struct("chunk_id", "chunk")
-    )  # no otherwise: collect_list drops NULLs -> only kept chunks
-    return marked.groupBy(id_col).agg(
-        F.concat_ws(
-            " ",
-            F.transform(F.array_sort(F.collect_list(kept_struct)), lambda s: s.chunk),
-        ).alias("clean_text"),
-        F.sum(F.when(F.col("removed"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_removed"),
-    )
-
-
-def _span_chunks(
-    df: DataFrame, span: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, chunk_id, chunk, clen) — the shared chunking stage of the
-    C4 span-dedup family (see remove_duplicate_spans)."""
-    toks = tokens_col(F.col(text_col))
-    ex = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
-        .withColumn("chunk_id", (F.col("pos") / span).cast("bigint"))
-    )
-    return ex.groupBy(id_col, "chunk_id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                lambda s: s.tok,
-            ),
-        ).alias("chunk"),
-        F.count(F.lit(1)).alias("clen"),
-    )
-
-
-def span_state_table(
-    df: DataFrame, span: int = 4, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Kept for SCALING.md "Robustness guards" (incremental span dedup).
-
-    Persistable span state for incremental C4 dedup: one row per
-    distinct full-length span hash with its distinct-doc count.
-    ~16 B/row — the compact corpus memory a daily increment joins
-    against (the state analog of the minhash band table)."""
     ch = _span_chunks(df, span, id_col, text_col)
-    return (
-        ch.filter(F.col("clen") == span)
-        .groupBy(F.xxhash64("chunk").alias("span_hash"))
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-    )
-
-
-def incremental_remove_spans(
-    batch: DataFrame,
-    state: DataFrame | None,
-    span: int = 4,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """Kept for SCALING.md "Robustness guards" (incremental span dedup).
-
-    Incremental C4 span dedup — completes the incremental family
-    (minhash bands, simhash chunks, embedding buckets, now spans): a
-    new crawl batch is cleaned against the PERSISTED span counts plus
-    its own, without re-chunking the historical corpus.
-
-    Contract (forward-only, same as every incremental stage here):
-    the increment's docs receive EXACTLY the cuts a full recompute
-    over history+batch would give them — distinct-doc counts add
-    across batches because a doc belongs to exactly one batch —
-    while already-emitted historical docs are never retroactively
-    re-cut (a span that only now crossed min_docs is removed from
-    the new docs and from everything that follows). Proven equal to
-    the full recompute on the increment in tests/test_dedup.py.
-
-    Returns (cleaned_batch, new_state). Scale shape: the batch
-    chunks once (uniform (doc, chunk) keys), counts join the state on
-    span_hash (hash-keyed equi-join; state rows ∝ distinct corpus
-    spans), and the boilerplate set broadcasts back — the 100 TB
-    history is touched only through its ~16 B/row span table.
-    """
-    ch = _span_chunks(batch, span, id_col, text_col)
     full = ch.filter(F.col("clen") == span).withColumn(
         "span_hash", F.xxhash64("chunk")
     )
-    batch_counts = full.groupBy("span_hash").agg(
-        F.count_distinct(F.col(id_col)).alias("nd_batch")
+    counts = full.groupBy("span_hash").agg(
+        F.count_distinct(F.col(id_col)).alias("nd")
     )
+    totals = counts.withColumnRenamed("nd", "nd_total")
     if state is not None:
         hist = state.select("span_hash", F.col("nd").alias("nd_hist"))
-        totals = batch_counts.join(hist, "span_hash", "left").select(
+        totals = counts.join(hist, "span_hash", "left").select(
             "span_hash",
-            "nd_batch",
-            (F.col("nd_batch") + F.coalesce(F.col("nd_hist"), F.lit(0))).alias(
+            (F.col("nd") + F.coalesce(F.col("nd_hist"), F.lit(0))).alias(
                 "nd_total"
             ),
-        )
-    else:
-        totals = batch_counts.select(
-            "span_hash", "nd_batch", F.col("nd_batch").alias("nd_total")
         )
     boiler = totals.filter(F.col("nd_total") >= min_docs).select(
         "span_hash", F.lit(True).alias("removed")
@@ -871,7 +786,7 @@ def incremental_remove_spans(
     )
     kept_struct = F.when(
         F.col("removed").isNull(), F.struct("chunk_id", "chunk")
-    )
+    )  # no otherwise: collect_list drops NULLs -> only kept chunks
     cleaned = all_chunks.groupBy(id_col).agg(
         F.concat_ws(
             " ",
@@ -881,16 +796,39 @@ def incremental_remove_spans(
         .cast("bigint")
         .alias("n_removed"),
     )
-    merged = totals.select("span_hash", F.col("nd_batch").alias("nd"))
-    if state is not None:
-        # one row per span hash: counts add (disjoint doc sets), and
-        # spans only in history carry over unchanged
-        merged = (
-            merged.unionByName(state.select("span_hash", "nd"))
-            .groupBy("span_hash")
-            .agg(F.sum("nd").cast("bigint").alias("nd"))
-        )
+    if state is None:
+        return cleaned, counts
+    # one row per span hash: counts add (disjoint doc sets), and
+    # spans only in history carry over unchanged
+    merged = (
+        counts.unionByName(state.select("span_hash", "nd"))
+        .groupBy("span_hash")
+        .agg(F.sum("nd").cast("bigint").alias("nd"))
+    )
     return cleaned, merged
+
+
+def _span_chunks(
+    df: DataFrame, span: int, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, chunk_id, chunk, clen) — the chunking stage of
+    remove_duplicate_spans."""
+    toks = tokens_col(F.col(text_col))
+    ex = (
+        df.filter(F.length(F.trim(F.col(text_col))) > 0)
+        .select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
+        .withColumn("chunk_id", (F.col("pos") / span).cast("bigint"))
+    )
+    return ex.groupBy(id_col, "chunk_id").agg(
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+                lambda s: s.tok,
+            ),
+        ).alias("chunk"),
+        F.count(F.lit(1)).alias("clen"),
+    )
 
 
 def remove_duplicate_windows(
@@ -1115,10 +1053,10 @@ def simhash_state_table(
     hash_fn=None,
 ) -> DataFrame:
     """(id, fp, chunk_idx, chunk_val) — the simhash pigeonhole
-    blocking state, shared by the one-shot pairs path and the
-    incremental path (persist it as a catalog table and each new
-    crawl increment joins against it instead of re-fingerprinting
-    the corpus). fp rides along so hamming verification never needs
+    blocking state that simhash_near_dup_pairs joins and returns
+    (persist it as a catalog table and each new crawl increment
+    joins against it instead of re-fingerprinting the corpus). fp
+    rides along so hamming verification never needs
     the corpus text at all — unlike minhash, whose exact-Jaccard
     verify must re-shingle candidate texts.
 
@@ -1133,8 +1071,8 @@ def simhash_state_table(
     hamming 0: semantically false "near-dups", and at corpus scale a
     quadratic output blow-up inside one bucket (millions of empty
     docs on a real crawl -> m^2/2 pairs) that no skew handling can
-    absorb. Gating here covers every caller: the one-shot pairs
-    path, the incremental path, and direct state-table persists."""
+    absorb. Gating here covers both the batch side and the
+    persisted state of simhash_near_dup_pairs."""
     df = df.filter(F.size(tokens_col(F.col(text_col))) > 0)
     if hash_fn is None and bits == 64:
         fp = with_simhash(
@@ -1150,6 +1088,14 @@ def simhash_state_table(
             F.col(id_col).alias("id"),
             simhash_col(F.col(text_col), bits=bits, hash_fn=hash_fn).alias("fp"),
         )
+    return _fp_chunks(fp, n_chunks, bits)
+
+
+def _fp_chunks(fp: DataFrame, n_chunks: int, bits: int) -> DataFrame:
+    """(id, fp, chunk_idx, chunk_val): each ``bits``-bit fingerprint
+    split into n_chunks equal chunks, one row per chunk — the
+    pigeonhole blocking rows of the simhash family and
+    fp_pigeonhole_pairs."""
     chunk_bits = bits // n_chunks
     return fp.select(
         "id",
@@ -1167,58 +1113,13 @@ def simhash_state_table(
     )
 
 
-def incremental_simhash_pairs(
-    new_df: DataFrame,
-    old_chunks: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-) -> tuple[DataFrame, DataFrame]:
-    """Kept for SCALING.md "Incremental near-dup" (SimHash family).
-
-    SimHash twin of incremental_minhash_pairs: dedup a NEW batch
-    against persisted chunk state without re-fingerprinting the
-    corpus. Returns ``(pairs, new_chunks)``; the caller appends
-    ``new_chunks`` to the state table.
-
-    Fingerprints are deterministic per text, so (x, y) is a
-    candidate here iff it is one in the one-shot run, and the
-    hamming verify reads fps straight from the state — full-recompute
-    equivalence is exact (tested), with NO corpus text scan: the
-    100 TB side is one narrow (id, fp, chunk) scan with a map-side
-    join against the broadcast increment."""
-    _pigeonhole_recall_guard(max_hamming, n_chunks)
-    nc = _persist(simhash_state_table(new_df, id_col, text_col, n_chunks=n_chunks))
-    a, b = F.broadcast(nc).alias("a"), old_chunks.alias("b")
-    swap = F.col("a.id") > F.col("b.id")
-    cross = a.join(
-        b,
-        (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-        & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-        F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        F.when(swap, F.col("b.fp")).otherwise(F.col("a.fp")).alias("fp_a"),
-        F.when(swap, F.col("a.fp")).otherwise(F.col("b.fp")).alias("fp_b"),
-    )
-    cross_h = cross.select(
-        "id_a", "id_b",
-        F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-    within = _chunk_within_pairs(nc, max_hamming)
-    pairs = cross_h.unionByName(within).distinct()
-    return pairs, nc
-
-
-def _chunk_within_pairs(chunks: DataFrame, max_hamming: int | None = None) -> DataFrame:
+def _chunk_within_pairs(chunks: DataFrame, max_hamming: int) -> DataFrame:
     """The pigeonhole candidate join shared by the simhash family and
-    fp_pigeonhole_pairs: same-chunk equi-join, id_a < id_b, fps
-    carried for the exact hamming verify (one definition so a fix
-    can never miss a variant).
+    fp_pigeonhole_pairs: same-chunk equi-join, id_a < id_b, exact
+    hamming verify (one definition so a fix can never miss a
+    variant).
 
-    ``max_hamming`` (r6, opt guide §2.3): verify INSIDE the join
+    r6, opt guide §2.3: verify INSIDE the join
     projection — emit (id_a, id_b, hamming) already filtered, so the
     caller's cross-chunk distinct shuffles only surviving pairs.
     hamming is a pure function of the pair (fps are functionally
@@ -1234,13 +1135,6 @@ def _chunk_within_pairs(chunks: DataFrame, max_hamming: int | None = None) -> Da
         & (F.col("a.chunk_val") == F.col("b.chunk_val"))
         & (F.col("a.id") < F.col("b.id")),
     )
-    if max_hamming is None:
-        return j.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
     return j.select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
@@ -1268,7 +1162,8 @@ def simhash_near_dup_pairs(
     n_chunks: int = 4,
     bits: int = 64,
     hash_fn=None,
-) -> DataFrame:
+    old_chunks: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
     Pigeonhole blocking: split the `bits`-bit fingerprint into
@@ -1280,6 +1175,17 @@ def simhash_near_dup_pairs(
 
     bits/hash_fn: oracle hook (see simhash_col) — forces the pure
     Column path so a DuckDB replay sees the identical fingerprints.
+
+    Returns ``(pairs, chunks)``; chunks is the batch's
+    simhash_state_table, which the caller appends to its state.
+    ``old_chunks`` is that persisted state for everything already
+    ingested: the batch's chunk rows broadcast against it and the
+    cross pairs join the within-batch ones, without re-fingerprinting
+    the corpus. Fingerprints are deterministic per text, so (x, y) is
+    a candidate here iff it is one in the one-shot run, and the
+    hamming verify reads fps straight from the state — equal to the
+    full recompute (tested), with no corpus text scan. A call without
+    ``old_chunks`` is the one-shot run.
     """
     _pigeonhole_recall_guard(max_hamming, n_chunks)
     chunks = simhash_state_table(
@@ -1287,7 +1193,21 @@ def simhash_near_dup_pairs(
     )
     # hamming verify inside the join, distinct only over survivors
     # (see _chunk_within_pairs max_hamming note)
-    return _chunk_within_pairs(chunks, max_hamming).distinct()
+    pairs = _chunk_within_pairs(chunks, max_hamming)
+    if old_chunks is not None:
+        a, b = F.broadcast(chunks).alias("a"), old_chunks.alias("b")
+        cross = a.join(
+            b,
+            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
+            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
+            & (F.col("a.id") != F.col("b.id")),
+        ).select(
+            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
+            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
+            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp"))).alias("hamming"),
+        ).filter(F.col("hamming") <= max_hamming)
+        pairs = cross.unionByName(pairs)
+    return pairs.distinct(), chunks
 
 
 def fp_pigeonhole_pairs(
@@ -1306,22 +1226,7 @@ def fp_pigeonhole_pairs(
     a degenerate common chunk value is a hot key — AQE skew-split
     handles it."""
     _pigeonhole_recall_guard(max_hamming, n_chunks)
-    chunk_bits = bits // n_chunks
-    chunks = fp.select(
-        "id",
-        "fp",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("fp"), c * chunk_bits).bitwiseAND(
-                        F.lit((1 << chunk_bits) - 1)
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    return _chunk_within_pairs(chunks, max_hamming).distinct()
+    return _chunk_within_pairs(_fp_chunks(fp, n_chunks, bits), max_hamming).distinct()
 
 
 # ------------------------------------------------- connected components
@@ -1413,48 +1318,6 @@ def auto_n_planes(n_docs: int, target_bucket: int = 32, floor: int = 6) -> int:
     return max(floor, math.ceil(math.log2(max(n_docs, 2) / target_bucket)))
 
 
-def embedding_candidate_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Kept for SCALING.md "Dedup family" (embedding row: candidates
-    stay ~linear under auto_n_planes).
-
-    Candidate (id_a, id_b) pairs sharing a hyperplane sign-pattern
-    bucket in ANY of n_tables independent tables — the MinHash
-    banding pattern applied to hyperplane bits. The equi-join is on
-    the short (table_id, bucket) key; vectors do NOT travel through
-    it (they are re-joined by id in the verify step)."""
-    from .simsearch import bucket_codes_udf
-
-    if dim is None:
-        raise ValueError(
-            "dim is required: array<float> schemas carry no length, and a "
-            "first() probe would run a Spark job during query construction "
-            "(no actions at construction time — VERDICT r2 #5)"
-        )
-    codes = bucket_codes_udf(dim, n_planes, n_tables)
-    buckets = emb.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(codes(F.col(vec_col))).alias("table_id", "bucket"),
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.table_id") == F.col("b.table_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -1463,7 +1326,9 @@ def embedding_near_dup_pairs(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int | None = None,
-) -> DataFrame:
+    old_buckets: DataFrame | None = None,
+    corpus_emb: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """Pairs with cosine >= threshold: multi-table hyperplane-LSH
     candidate generation (banded equi-join, never all-pairs-in-
     bucket) + exact cosine verification on candidates only.
@@ -1471,8 +1336,25 @@ def embedding_near_dup_pairs(
     Size n_planes with auto_n_planes(corpus size) — candidate volume
     is ~n * occupancy * n_tables; recall for a pair at angle theta is
     1-(1-(1-theta/pi)^n_planes)^n_tables (more tables -> recall,
-    more planes -> selectivity)."""
-    from .simsearch import bucket_codes_udf, with_norm
+    more planes -> selectivity).
+
+    Returns ``(pairs, buckets)``: buckets is the batch's (id,
+    table_id, bucket) hyperplane-LSH state, ~24 B per row (the
+    vectors do NOT live in it). Buckets are computed over the
+    normalized vector with seeded planes (deterministic in (dim,
+    n_planes, n_tables)), so state persisted today equi-joins
+    against buckets computed tomorrow. Zero-norm rows drop (with_norm
+    contract: no direction, no cosine).
+
+    ``old_buckets`` is the persisted buckets of everything already
+    ingested, and ``corpus_emb`` the (id, vector) rows covering both
+    sides: the batch's bucket rows broadcast against the state (no
+    corpus re-bucketing), and only the new x old candidates re-join
+    their vectors by id for the exact-cosine verify. Candidate
+    equivalence to the one-shot run is exact (tested). A call without
+    ``old_buckets`` is the one-shot run.
+    """
+    from .simsearch import bucket_codes_udf, cosine_sim_col, with_norm
 
     if dim is None:
         raise ValueError(
@@ -1540,121 +1422,34 @@ def embedding_near_dup_pairs(
         )
 
     id_dt = emb.schema[id_col].dataType.simpleString()
-    return (
-        buckets.groupBy("table_id", "bucket")
-        .applyInPandas(
-            _bucket_pairs, f"id_a {id_dt}, id_b {id_dt}, cosine double"
+    pairs = buckets.groupBy("table_id", "bucket").applyInPandas(
+        _bucket_pairs, f"id_a {id_dt}, id_b {id_dt}, cosine double"
+    )
+    state = buckets.select("id", "table_id", "bucket")
+    if old_buckets is not None:
+        if corpus_emb is None:
+            raise ValueError("old_buckets needs corpus_emb (the old side's vectors)")
+        a, b = F.broadcast(state).alias("a"), old_buckets.alias("b")
+        cand = a.join(
+            b,
+            (F.col("a.table_id") == F.col("b.table_id"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") != F.col("b.id")),
+        ).select(
+            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
+            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
+        ).distinct()
+        vc = _persist(
+            with_norm(corpus_emb, vec_col).select(F.col(id_col).alias("id"), "vec_n")
         )
-        .select("id_a", "id_b", "cosine")
-        .distinct()
-    )
-
-
-def embedding_bucket_table(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Kept for SCALING.md "Incremental near-dup" (embedding family).
-
-    (id, table_id, bucket) hyperplane-LSH state rows for
-    INCREMENTAL embedding dedup — the vector twin of
-    `band_table` (MinHash) and `simhash_state_table`.
-
-    Buckets are computed over the NORMALIZED vector exactly as
-    `embedding_near_dup_pairs` computes them (the seeded plane matrix
-    is deterministic in (dim, n_planes, n_tables)), so state rows
-    persisted today equi-join against buckets computed tomorrow and
-    candidate sets match the one-shot run. Zero-norm rows drop here
-    (with_norm contract: no direction, no cosine). ~24 B per row —
-    the 512 B vectors do NOT live in the state; the verify step
-    re-joins them by id from the corpus table."""
-    from .simsearch import bucket_codes_udf, with_norm
-
-    if dim is None:
-        raise ValueError(
-            "dim is required: array<float> schemas carry no length, and a "
-            "first() probe would run a Spark job during state construction"
+        cross = (
+            cand.join(vc.select(F.col("id").alias("id_a"), F.col("vec_n").alias("va")), "id_a")
+            .join(vc.select(F.col("id").alias("id_b"), F.col("vec_n").alias("vb")), "id_b")
+            .select("id_a", "id_b", cosine_sim_col(F.col("va"), F.col("vb")).alias("cosine"))
+            .filter(F.col("cosine") >= threshold)
         )
-    codes = bucket_codes_udf(dim, n_planes, n_tables)
-    return with_norm(emb, vec_col).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(codes(F.col("vec_n"))).alias("table_id", "bucket"),
-    )
-
-
-def incremental_embedding_pairs(
-    new_emb: DataFrame,
-    old_buckets: DataFrame,
-    corpus_emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Kept for SCALING.md "Incremental near-dup" (embedding family).
-
-    Embedding twin of incremental_minhash_pairs: dedup a NEW batch
-    of vectors against persisted hyperplane-bucket state without
-    re-bucketing the corpus (a daily crawl increment must not pay the
-    full-corpus LSH join — VERDICT r3 #3 promoted to the vector
-    family, completing the minhash/simhash/embedding triad).
-
-    ``new_emb``      the increment's (id, vector) rows
-    ``old_buckets``  persisted (id, table_id, bucket) state
-                     (embedding_bucket_table output for everything
-                     already ingested)
-    ``corpus_emb``   (id, vector) covering BOTH sides — only rows
-                     landing in candidate pairs are re-joined for the
-                     exact-cosine verify
-
-    Returns ``(pairs, new_buckets)``; append ``new_buckets`` to the
-    state so the next increment sees this one. Candidate equivalence
-    to the one-shot run is exact (deterministic seeded planes);
-    verify cosine reads corpus vectors by id. Scale shape: the
-    increment's bucket rows broadcast against the state scan — no
-    corpus shuffle, no corpus re-bucketing."""
-    from .simsearch import cosine_sim_col, with_norm
-
-    nb = _persist(
-        embedding_bucket_table(new_emb, id_col, vec_col, n_planes, n_tables, dim)
-    )
-    a, b = F.broadcast(nb).alias("a"), old_buckets.alias("b")
-    cross = a.join(
-        b,
-        (F.col("a.table_id") == F.col("b.table_id"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") != F.col("b.id")),
-    ).select(
-        F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-        F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-    )
-    x, y = nb.alias("a"), nb.alias("b")
-    within = x.join(
-        y,
-        (F.col("a.table_id") == F.col("b.table_id"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    cand = cross.unionByName(within).distinct()
-    v = _persist(
-        with_norm(corpus_emb, vec_col).select(F.col(id_col).alias("id"), "vec_n")
-    )
-    j = (
-        cand.join(v.select(F.col("id").alias("id_a"), F.col("vec_n").alias("va")), "id_a")
-        .join(v.select(F.col("id").alias("id_b"), F.col("vec_n").alias("vb")), "id_b")
-    )
-    pairs = (
-        j.withColumn("cosine", cosine_sim_col(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-    return pairs, nb
+        pairs = cross.unionByName(pairs)
+    return pairs.select("id_a", "id_b", "cosine").distinct(), state
 
 
 def soft_dedup_weights(

@@ -19,9 +19,11 @@ Scale notes (100 TB / 10^12 docs):
   everything after it is narrow until the partitioned write;
 * pending-bucket filtering is a pushed-down ``bucket_id IN (...)``
   (partition pruning against the Iceberg bucket spec — here the
-  parquet partition dirs);
-* per-host audit aggregation is salted two-phase (hot hosts hold
-  ~35% of rows);
+  parquet partition dirs), on the pages scan and on the re-read of
+  this run's decisions;
+* per-host audit aggregation is a plain groupBy: its partial
+  HashAggregate combines hot hosts (~35% of rows) map-side, so a hot
+  host sends one row per map task through the single exchange;
 * the model-stage UDF sees Arrow batches of 4096 docs; model init is
   once per python worker (module import cache).
 """
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F
 
 from . import rules, scoring, scrub
 from .manifest import DONE, RUNNING, Manifest
-from .partitioning import salted_count_by_key, with_bucket
+from .partitioning import with_bucket
 from .tables import ParquetCatalog, latest_per_url
 from .urls import host_col
 
@@ -286,6 +288,17 @@ def read_snaptable_pages(
     return t.read(snapshot=cur)
 
 
+def _run_rows(catalog, schema, run_id, pending, n_buckets) -> DataFrame:
+    """This run's rows of the decisions table it just wrote. The
+    schema is the written frame's: a zero-row write leaves no file to
+    infer one from. Rows of this run exist only in pending buckets, so
+    a resumed run prunes the scan to them (partition filter)."""
+    dec = catalog.spark.read.schema(schema).parquet(catalog.path("decisions"))
+    if len(pending) < n_buckets:
+        dec = dec.filter(F.col("bucket_id").isin(pending))
+    return dec.filter(F.col("run_id") == run_id)
+
+
 def run_filter(
     spark: SparkSession,
     pages_path: str,
@@ -451,7 +464,7 @@ def run_filter(
     timings["write_decisions"] = round(_time.time() - t0, 2)
 
     t0 = _time.time()
-    dec = catalog.read("decisions").filter(F.col("run_id") == run_id)
+    dec = _run_rows(catalog, out.schema, run_id, pending, n_buckets)
     # per-bucket lineage metrics: ONE job, collected driver-side
     # (<= n_buckets rows by construction) and reused for the audit
     # append, the DONE marks and the run summary
@@ -513,14 +526,17 @@ def run_filter(
     )
     timings["audit"] = round(_time.time() - t0, 2)
 
-    # skew-safe per-host metrics (hot hosts!) — salted two-phase agg
+    # per-host metrics: hot hosts are combined by the partial
+    # aggregate before the exchange (plan-asserted in test_plans.py)
     t0 = _time.time()
-    host_stats = salted_count_by_key(
-        dec.withColumn("host", host_col(F.col("url"))),
-        "host",
-        aggs={"n_kept": F.sum(F.col("keep").cast("bigint"))},
-        salt_from="url",  # varies within a hot host -> real spread
-    ).withColumn("run_id", F.lit(run_id))
+    host_stats = (
+        dec.groupBy(host_col(F.col("url")).alias("host"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("keep").cast("bigint")).alias("n_kept"),
+        )
+        .withColumn("run_id", F.lit(run_id))
+    )
     catalog.append(host_stats, "host_audit")
     timings["host_audit"] = round(_time.time() - t0, 2)
 
