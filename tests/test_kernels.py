@@ -9,9 +9,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from webfilter.kernels import langid, perplexity
+from webfilter.kernels import langid, perplexity, scrubber
 from webfilter.kernels.extract import extract_one, sniff_charset
-from webfilter.kernels.scrubber import SCRUB_PATTERNS, scrub_batch, scrub_one
+from webfilter.kernels.scrubber import SCRUB_PATTERNS, scrub_one, scrub_texts
 
 
 class TestExtract:
@@ -143,8 +143,53 @@ class TestScrubber:
 
     def test_batch_matches_single(self):
         texts = [c[0] for c in self.CASES]
-        out = scrub_batch(pd.Series(texts))
-        assert out["scrubbed"].tolist() == [scrub_one(t)[0] for t in texts]
+        out = scrub_texts(pd.Series(texts))
+        assert out.tolist() == [scrub_one(t)[0] for t in texts]
+
+    def test_batch_mixed_rows_keep_index(self):
+        """ASCII rows (RE2) and non-ASCII rows (Python fold) land back
+        on their own index labels, NULL -> ''."""
+        texts = [
+            None, "", "ssn 123-45-6789 and phone 555-123-4567 ok",
+            "ssn café555-12-3456 end", "ſmeghead here", "belgıum",
+            "fra\u212a x", "card 1234-5678-9012-3456 ip 192.168.0.1",
+            "naïve 555-12-3456é tail", "you frak this FRAK",
+        ]
+        index = [5, 3, 9, 0, 7, 2, 8, 1, 6, 4]
+        out = scrub_texts(pd.Series(texts, index=index))
+        assert out.index.tolist() == index
+        assert out.tolist() == [scrub_one(t)[0] for t in texts]
+
+    @given(st.lists(
+        st.lists(
+            st.sampled_from([
+                "123-45-6789", "555-123-4567", "(555) 123-4567", "+1 ",
+                "1234-5678-9012-3456", "10.0.0.1", "a.b+c@ex.co", "frak",
+                "GORRAM", "Belgium", " ", "-", ".", "@", "1",
+            ])
+            | st.text(alphabet="abzAZ09_ éſıK中", max_size=4),
+            max_size=12,
+        ).map("".join),
+        max_size=20,
+    ))
+    @settings(max_examples=300, deadline=None)
+    def test_batch_equals_golden_on_pii_fragments(self, texts):
+        assert scrub_texts(pd.Series(texts, dtype=object)).tolist() == [
+            scrub_one(t)[0] for t in texts
+        ]
+
+    def test_ascii_batch_never_runs_python_fold(self, monkeypatch):
+        """ASCII rows, and rows no pattern can match, never reach the
+        Python fold; a silent fallback to it would cost ~5x or more."""
+        texts = [c[0] for c in self.CASES] + [None, "", "naïve café", "中文 1-2 x@y"]
+        expected = [scrub_one(t)[0] for t in texts]
+
+        class _NoFold:
+            def __iter__(self):
+                raise AssertionError("Python fold ran on an all-ASCII batch")
+
+        monkeypatch.setattr(scrubber, "_COMPILED", _NoFold())
+        assert scrub_texts(pd.Series(texts)).tolist() == expected
 
     @given(st.text(max_size=300))
     @settings(max_examples=200, deadline=None)
@@ -159,8 +204,9 @@ class TestScrubber:
 
 
 def test_scrub_parity_tricky_boundaries(spark):
-    """ADVICE r1: \\b placement around non-ASCII word chars must agree
-    between the Python oracle (re.ASCII) and Spark's Java regex."""
+    """ADVICE r1: \\b placement and case folding around non-ASCII word
+    chars must agree between the Python oracle (default Unicode-aware
+    compile), Spark's Java regex and scrub_texts."""
     from pyspark.sql import functions as F
 
     from webfilter.kernels.scrubber import scrub_one
@@ -175,12 +221,20 @@ def test_scrub_parity_tricky_boundaries(spark):
         "10.172.61.131 566-566-9299",     # IP ending in 1, then a phone
         "3051-3051-3051-3051 452-452-3044",  # card ending in 1, then a phone
         "10.5.146.116 1606-1606-1606-1606",  # IP ending in 1, then a card
+        "ſmeghead here",                  # long s: Unicode case-folds to s
+        "belgıum",                        # dotless i: folds to i
+        "fra\u212a x",                     # Kelvin sign: folds to k
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = {r["text"]: r["s"] for r in df.select("text", scrubbed_col(F.col("text")).alias("s")).collect()}
     for t in texts:
         assert got[t] == scrub_one(t)[0], repr(t)
+    assert scrub_texts(pd.Series(texts)).tolist() == [got[t] for t in texts]
     assert got["10.5.146.116 1606-1606-1606-1606"] == "<IP> <CC>"
+    assert got["ssn café555-12-3456 end"] == "ssn café555-12-3456 end"
+    assert got["ſmeghead here"] == "ſmeghead here"
+    assert got["belgıum"] == "belgıum"
+    assert got["fra\u212a x"] == "fra\u212a x"
 
 
 def test_perplexity_word_spans_match_reference_tokenizer():

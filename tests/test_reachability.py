@@ -46,8 +46,6 @@ KEEP: dict[str, str] = {
     "tables.MERGE_INTO_SQL": "Iceberg DDL",
     "tables.iceberg_available": "Iceberg DDL",
     # references and fixtures that tests compare against
-    "kernels.scrubber.scrub_one": "tests/test_kernels.py golden scrub oracle",
-    "kernels.scrubber.scrub_batch": "tests/test_kernels.py golden scrub oracle",
     "kernels.perplexity.tokenize": "tests/test_kernels.py word-split reference",
     "kernels.extract._HSPACE": "tests/test_kernels.py whitespace-collapse reference",
     "clustering.exact_assign_col": "tests/test_clustering.py exact-assign reference",

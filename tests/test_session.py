@@ -1,8 +1,11 @@
-"""Session defaults that depend on the host."""
+"""Session setup: defaults that depend on the host, and shipping the
+package to executors."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from webfilter.session import default_driver_mem
 
@@ -14,3 +17,22 @@ def test_default_driver_mem_fits_host_ram():
     mem = default_driver_mem()
     assert mem.endswith("m")
     assert 0 < int(mem[:-1]) << 20 <= ram
+
+
+def test_ship_package_refuses_changed_package_under_live_context():
+    """Spark refuses a same-named zip with different bytes; that must
+    fail the ship with a restart hint, not surface later as task
+    failures on a stale package."""
+    from webfilter.session import ship_package
+
+    class _Ctx:
+        def addPyFile(self, path):
+            raise Exception(
+                f"File webfilter_pkg.zip exists and does not match contents of file:{path}"
+            )
+
+    class _Spark:
+        sparkContext = _Ctx()
+
+    with pytest.raises(RuntimeError, match="restart the Spark session"):
+        ship_package(_Spark())

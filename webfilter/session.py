@@ -140,10 +140,18 @@ def ship_package(spark: SparkSession) -> None:
     try:
         spark.sparkContext.addPyFile(str(archive))
     except Exception as e:
-        # the one benign case is re-adding the same filename in this
-        # context; anything else must be visible NOW, not later as a
+        # a re-add of identical bytes succeeds silently; different
+        # bytes under the same name mean webfilter/*.py changed under
+        # this live context, and executors would go on running the
+        # stale zip until tasks fail much later — refuse NOW
+        if "does not match contents" in str(e):
+            raise RuntimeError(
+                "the webfilter package changed since this SparkContext "
+                "first shipped it; restart the Spark session (spark.stop() "
+                "and get_spark again) to ship the new code"
+            ) from e
+        # anything else must be visible NOW, not later as a
         # ModuleNotFoundError on an executor (finding #5)
-        if "has already been" not in str(e) and "exists" not in str(e):
-            logging.getLogger(__name__).warning(
-                "addPyFile(%s) failed: %s", archive, e
-            )
+        logging.getLogger(__name__).warning(
+            "addPyFile(%s) failed: %s", archive, e
+        )
