@@ -325,6 +325,25 @@ def test_minhash_collapse_exact_is_linear_on_boilerplate(spark):
     dedup.release_cached()
 
 
+def test_persisted_window_output_is_coalesced(spark):
+    """A cache filled by a small window shuffle (_collapse_exact's
+    marked rows) keeps only the partitions AQE coalesced it to. Spark
+    otherwise pins a cached plan's output to every shuffle partition,
+    and each later scan of the cache, the MinHash pandas UDF over the
+    reps included, starts one Python task per partition, empty or
+    not."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i % 5}") for i in range(40)], "doc_id long, text string"
+    )
+    reps, _ = dedup._collapse_exact(docs, "doc_id", "text")
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        assert reps.rdd.getNumPartitions() < n_shuffle
+        assert reps.count() == 5
+    finally:
+        dedup.release_cached()
+
+
 def test_minhash_collapse_survivors_match_plain_path(spark):
     """Collapsed and plain pipelines must produce the SAME survivor
     sets under both policies (the star pairs carry exactly the drop

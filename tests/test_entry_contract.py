@@ -198,3 +198,79 @@ def test_rendezvous_minimal_movement(spark):
     moved = pdf[pdf["moved"]]
     assert (moved["shard9"] == 8).all()
     assert (pdf[~pdf["moved"]]["shard8"] == pdf[~pdf["moved"]]["shard9"]).all()
+
+
+@pytest.fixture(scope="module")
+def planted_sf(tmp_path_factory):
+    """sf0.01 plus one planted row per query that returns nothing on
+    sf0.01 itself (dedup_exact_groups, join_anti_frontier,
+    dedup_embedding_pairs), so their comparisons cover real rows: one
+    document repeating another's text, one customer with no orders,
+    and a new embedding plus a near copy of it."""
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("planted_sf")
+
+    def plant(name: str, row: dict) -> None:
+        t = pq.read_table(f"{SF_DIR}/{name}.parquet")
+        extra = pa.Table.from_pylist([row], schema=t.schema)
+        pq.write_table(pa.concat_tables([t, extra]), d / f"{name}.parquet")
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").to_pylist()
+    plant("documents", {**docs[1], "doc_id": max(r["doc_id"] for r in docs) + 1})
+    cust = pq.read_table(f"{SF_DIR}/customer.parquet").to_pylist()
+    plant("customer", {**cust[0], "c_custkey": max(r["c_custkey"] for r in cust) + 1})
+    shutil.copy(f"{SF_DIR}/orders.parquet", d / "orders.parquet")
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    top = max(emb.column("vec_id").to_pylist())
+    rng = np.random.default_rng(7)
+    v = rng.standard_normal(64)
+    w = v + 0.05 * rng.standard_normal(64)
+    rows = emb.to_pylist() + [
+        {"vec_id": top + 1, "embedding": v.astype(np.float32).tolist(), "label": 0},
+        {"vec_id": top + 2, "embedding": w.astype(np.float32).tolist(), "label": 0},
+    ]
+    pq.write_table(pa.Table.from_pylist(rows, schema=emb.schema), d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["dedup_exact_groups", "join_anti_frontier"])
+def test_planted_rows_match_oracle(spark, planted_sf, name):
+    spark_pdf = entry_mod.queries()[name](spark, planted_sf).toPandas()
+    con = duckdb.connect()
+    for t in ("documents", "customer", "orders"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{planted_sf}/{t}.parquet')"
+        )
+    duck_pdf = con.execute(entry_mod.oracle_sql()[name]).df()
+    assert len(spark_pdf) >= 1, name
+    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns)
+    assert _value_multiset(spark_pdf) == _value_multiset(duck_pdf)
+
+
+def test_planted_embedding_pairs_match_brute_force(spark, planted_sf):
+    """Every pair at cosine >= 0.9, by brute force over all vectors."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from webfilter.caching import release_cached
+
+    got = entry_mod.queries()["dedup_embedding_pairs"](spark, planted_sf).toPandas()
+    release_cached()
+    t = pq.read_table(f"{planted_sf}/embeddings.parquet").to_pandas()
+    t = t.sort_values("vec_id")
+    V = np.stack([np.asarray(x, dtype=np.float64) for x in t["embedding"]])
+    norms = np.linalg.norm(V, axis=1)
+    ids, V = t["vec_id"].to_numpy()[norms > 0], V[norms > 0] / norms[norms > 0, None]
+    C = V @ V.T
+    ii, jj = np.triu_indices(len(ids), 1)
+    hit = C[ii, jj] >= 0.9
+    want = {(int(a), int(b)): c for a, b, c in zip(ids[ii[hit]], ids[jj[hit]], C[ii, jj][hit])}
+    have = {(int(a), int(b)): c for a, b, c in zip(got["id_a"], got["id_b"], got["cosine"])}
+    assert len(have) >= 1
+    assert have.keys() == want.keys()
+    assert all(abs(have[k] - want[k]) <= 1e-6 for k in want)

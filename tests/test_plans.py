@@ -6,6 +6,7 @@ between a scan that reads 2 columns and one that reads the whole
 from __future__ import annotations
 
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -130,25 +131,60 @@ def test_single_shuffle_in_filter_transform(spark, synth_dir):
     assert n_exchanges <= 2, f"expected <=2 Exchange nodes, got {n_exchanges}\n{plan[:2000]}"
 
 
-def test_run_filter_shape_is_single_shuffle(spark, synth_dir):
-    """The full run_filter frame — bucket repartition, then the
+@pytest.fixture(scope="module")
+def written_frame(spark, synth_dir, tmp_path_factory):
+    """(frame, plan): the frame run_filter hands to the decisions
+    write, caught by a spy on ParquetCatalog.overwrite_partitions, and
+    its formatted plan taken before anything runs it. 4 buckets over
+    the suite's 8 shuffle partitions leave at least 4 of them empty."""
+    from webfilter import pipeline
+    from webfilter.tables import ParquetCatalog
+
+    caught = []
+    overwrite = ParquetCatalog.overwrite_partitions
+
+    def spy(self, df, name, part_col):
+        if name == "decisions":
+            caught.append((df, _plan(df)))
+        return overwrite(self, df, name, part_col)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ParquetCatalog, "overwrite_partitions", spy)
+        pipeline.run_filter(spark, f"{synth_dir}/pages.parquet",
+                            str(tmp_path_factory.mktemp("written")),
+                            n_buckets=4, run_id="w")
+    assert len(caught) == 1
+    return caught[0]
+
+
+def test_run_filter_shape_is_single_shuffle(written_frame):
+    """The frame run_filter writes — bucket repartition, then the
     (bucket_id, url) dedup window — must plan exactly ONE exchange:
     the window's ClusteredDistribution is satisfied by the existing
     HashPartitioning(bucket_id) because bucket_id is a pure function
     of url. A second exchange means the write-alignment re-shuffle of
     finished decision rows is back (the pre-round-4 plan)."""
-    from webfilter import pipeline
-    from webfilter.partitioning import with_bucket
+    _, plan = written_frame
+    # formatted explain lists each physical node once in its details
+    # section, as "(<id>) <Node>"
+    n = len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
+    assert n == 1, f"expected 1 physical Exchange, got {n}:\n{plan[:2000]}"
 
-    pages = with_bucket(spark.read.parquet(f"{synth_dir}/pages.parquet"), 16)
-    out = pipeline.filtered_frame(
-        pages.repartition(32, "bucket_id"), bucket_clustered=True
-    )
-    plan = _plan(out)
-    # formatted explain prints each node once in the tree and once in
-    # the details section -> a single physical node appears twice
-    n = plan.count("Exchange hashpartitioning")
-    assert n <= 2, f"expected 1 physical Exchange (2 mentions), got:\n{plan[:2000]}"
+
+def test_run_filter_bucket_shuffle_is_coalesced(written_frame):
+    """AQE may coalesce the bucket shuffle, so the fused-UDF stage runs
+    no task on an empty partition: each such task costs a Python
+    worker ~0.2 CPU-s whatever it holds. A repartition pinned to a
+    count is never coalesced."""
+    df, _ = written_frame
+    df.collect()  # runs this frame's own adaptive plan to its final form
+    final = str(df._jdf.queryExecution().executedPlan().toString())
+    final = final.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, final
+    reads = [i for i, ln in enumerate(lines) if "AQEShuffleRead coalesced" in ln]
+    assert reads and reads[0] < exchanges[0], final
 
 
 def test_whole_stage_codegen_covers_rules(spark):

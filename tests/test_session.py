@@ -4,6 +4,9 @@ package to executors."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -36,3 +39,30 @@ def test_ship_package_refuses_changed_package_under_live_context():
 
     with pytest.raises(RuntimeError, match="restart the Spark session"):
         ship_package(_Spark())
+
+
+def test_ship_package_staging_dir_is_removed_at_exit():
+    """Each ship stages a ~1 MB zip in a fresh temp dir. The context
+    serves it while it lives, so the dir goes at interpreter exit,
+    and no dir outlives the process."""
+    code = (
+        "import os\n"
+        "from webfilter.session import ship_package\n"
+        "class _Ctx:\n"
+        "    def addPyFile(self, path):\n"
+        "        print(os.path.isfile(path), path)\n"
+        "class _Spark:\n"
+        "    sparkContext = _Ctx()\n"
+        "ship_package(_Spark())\n"
+    )
+    root = Path(__file__).resolve().parent.parent
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=60, check=True,
+    )
+    existed, path = res.stdout.split()
+    staged = Path(path)
+    assert existed == "True", res.stdout
+    assert staged.name == "webfilter_pkg.zip", res.stdout
+    assert staged.parent.name.startswith("webfilter_pyfiles_")
+    assert not staged.parent.exists()

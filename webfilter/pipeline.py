@@ -15,8 +15,13 @@ With ``boilerplate=True`` the UDF does not scrub: block cleaning runs
 after it, and the JVM regexp fold (scrub.py) scrubs the cleaned text.
 
 Scale notes (100 TB / 10^12 docs):
-* one shuffle total in the hot path (latest-per-url window on url);
-  everything after it is narrow until the partitioned write;
+* one shuffle total in the hot path (the bucket_id repartition, which
+  also serves the latest-per-url window); everything after it is
+  narrow until the partitioned write;
+* that repartition names no partition count, so AQE coalesces it by
+  bytes: the fused UDF runs no Python task on an empty partition
+  (each costs ~0.2 CPU-s of worker overhead), and a bucket still
+  lands whole in one task;
 * pending-bucket filtering is a pushed-down ``bucket_id IN (...)``
   (partition pruning against the Iceberg bucket spec — here the
   parquet partition dirs), on the pages scan and on the re-read of
@@ -431,15 +436,18 @@ def run_filter(
     # bucket directory gets exactly one output file (no (tasks x
     # buckets) small-file explosion). It moves the RAW pages once;
     # the old plan re-shuffled the finished decision rows (extracted
-    # + scrubbed text) a second time just for write alignment. 2x
-    # partitions over buckets reduces two-buckets-hash-to-one-task
-    # collisions (empty tasks are free); it does NOT split a bucket.
-    # At 10^12 scale buckets >> cores so every stage stays parallel.
+    # + scrubbed text) a second time just for write alignment. No
+    # partition count: a count-pinned repartition is never coalesced,
+    # so every empty hash partition would still start a fused-UDF
+    # task, ~0.2 CPU-s of Python worker overhead each. Hashing on the
+    # column alone lets AQE merge whole hash partitions by bytes:
+    # empties vanish, a bucket is never split. At 10^12 scale
+    # buckets >> cores so every stage stays parallel.
     # canonical=True dedups on canon_url (a DIFFERENT key) first,
     # which breaks bucket clustering — that path keeps the explicit
     # pre-write repartition instead.
     if not canonical:
-        pages = pages.repartition(2 * len(pending), "bucket_id")
+        pages = pages.repartition("bucket_id")
 
     robots = (
         spark.read.parquet(robots_path) if robots_path is not None else None
@@ -452,7 +460,7 @@ def run_filter(
     ).withColumn("run_id", F.lit(run_id))
     out = out.select(*DECISION_COLS)
     if canonical:
-        out = out.repartition(2 * len(pending), "bucket_id")
+        out = out.repartition("bucket_id")
     if layout_sort:
         out = out.sortWithinPartitions("bucket_id", *layout_sort)
 
