@@ -79,11 +79,17 @@ def test_oracle_match(spark, duck, name):
         pytest.fail(f"{name}: value mismatch\n spark-only: {only_s}\n duck-only: {only_d}")
 
 
+#: rows-only queries that may return no rows at sf0.01; each is checked
+#: on planted rows instead (test_planted_embedding_pairs_match_brute_force)
+EMPTY_AT_SF = {"dedup_embedding_pairs"}
+
+
 @pytest.mark.parametrize("name", [k for k in ALL_KEYS if k not in ORACLE_KEYS])
 def test_rows_only_smoke(spark, name):
     df = entry_mod.queries()[name](spark, SF_DIR)
     assert len(df.columns) > 0
-    assert df.count() >= 0
+    n = df.count()
+    assert n >= 1 or name in EMPTY_AT_SF, f"{name}: no rows"
 
 
 def test_entry_flagship(spark):

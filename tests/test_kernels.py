@@ -93,6 +93,22 @@ class TestLangid:
         b = langid.predict_batch(s)
         pd.testing.assert_frame_equal(a, b)
 
+    def test_batch_equals_single(self):
+        """A doc's label and confidence must not depend on which docs
+        share its batch: no trigram window may cross the NUL joints."""
+        texts = [
+            "the time of people and water", "", "ab", None, "x",
+            "Größe und Übung für die Straße", "的一是不了人我在有他这为之",
+            "señor niño año el mundo", "İstanbul", "le la les école",
+            "mixed 日本 text with a\x00nul",
+        ]
+        batch = langid.predict_batch(pd.Series(texts))
+        singles = pd.concat(
+            [langid.predict_batch(pd.Series([t])) for t in texts], ignore_index=True
+        )
+        pd.testing.assert_frame_equal(batch, singles)
+        assert (batch["langid"].iloc[1:5] == "und").all()
+
 
 class TestPerplexity:
     def test_separation(self):

@@ -1,12 +1,15 @@
-"""Two determinism-critical Column constructions have exactly one
-spelling each:
+"""Three determinism-critical constructions have exactly one spelling
+each:
 
 * the k-gram builder — ``rules.sliding`` is the only ``arrays_zip``
   call in webfilter/ (its docstring says why the shifted-slice form
   is the only fast one);
 * the cross-engine md5-prefix hash — ``sketches.md5_prefix_hash`` is
   the only ``conv(substring(md5(...)))`` in webfilter/ and jobs/
-  (every DuckDB oracle replays it bit for bit).
+  (every DuckDB oracle replays it bit for bit);
+* the char-n-gram featurizer's codepoint layout — ``kernels/mix.py``
+  is the only module in webfilter/ that encodes to utf-32-le, so
+  langid and the quality classifier train and score on one layout.
 
 Pure AST, so comments and docstrings do not count: no Spark session.
 """
@@ -35,6 +38,17 @@ def _is_md5_prefix(node: ast.AST) -> bool:
     return True
 
 
+def _is_utf32_encode(node: ast.AST) -> bool:
+    if _callee(node) != "encode":
+        return False
+    args = node.args[:1] + [k.value for k in node.keywords if k.arg == "encoding"]
+    return any(
+        isinstance(a, ast.Constant) and isinstance(a.value, str)
+        and a.value.lower().replace("_", "-") == "utf-32-le"
+        for a in args
+    )
+
+
 def _offenders(dirs: tuple[str, ...], owner: str, hit) -> list[str]:
     out = []
     for d in dirs:
@@ -57,3 +71,8 @@ def test_arrays_zip_only_in_rules_sliding():
 def test_md5_prefix_only_in_sketches():
     found = _offenders(("webfilter", "jobs"), "webfilter/sketches.py", _is_md5_prefix)
     assert not found, f"use sketches.md5_prefix_hash: {found}"
+
+
+def test_utf32_encode_only_in_featurizer():
+    found = _offenders(("webfilter",), "webfilter/kernels/mix.py", _is_utf32_encode)
+    assert not found, f"featurize with kernels.mix.codepoints: {found}"

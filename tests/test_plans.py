@@ -23,6 +23,21 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _exchanges(plan: str) -> int:
+    """Physical shuffle exchanges in a formatted plan: its details
+    section lists each node once, as "(<id>) <Node>" (a broadcast is
+    "(<id>) BroadcastExchange", so it does not count)."""
+    return len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
+
+
+def test_exchange_count_reads_a_known_shuffle(spark):
+    """Positive control for _exchanges: one groupBy is one exchange."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert _exchanges(_plan(docs.select("doc_id"))) == 0
+    plan = _plan(docs.groupBy("lang").count())
+    assert _exchanges(plan) == 1, plan
+
+
 def test_filter_pushdown_to_parquet(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(docs.filter(F.col("lang") == "en").select("doc_id"))
@@ -127,8 +142,8 @@ def test_single_shuffle_in_filter_transform(spark, synth_dir):
 
     pages = spark.read.parquet(f"{synth_dir}/pages.parquet")
     plan = _plan(pipeline.filtered_frame(pages))
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges <= 2, f"expected <=2 Exchange nodes, got {n_exchanges}\n{plan[:2000]}"
+    n_exchanges = _exchanges(plan)
+    assert n_exchanges <= 1, f"expected <=1 Exchange nodes, got {n_exchanges}\n{plan[:2000]}"
 
 
 @pytest.fixture(scope="module")
@@ -165,9 +180,7 @@ def test_run_filter_shape_is_single_shuffle(written_frame):
     of url. A second exchange means the write-alignment re-shuffle of
     finished decision rows is back (the pre-round-4 plan)."""
     _, plan = written_frame
-    # formatted explain lists each physical node once in its details
-    # section, as "(<id>) <Node>"
-    n = len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
+    n = _exchanges(plan)
     assert n == 1, f"expected 1 physical Exchange, got {n}:\n{plan[:2000]}"
 
 
@@ -213,7 +226,7 @@ def test_asof_join_has_no_cartesian(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "Window" in plan
     # exactly one wide exchange: the per-user window partitioning
-    assert plan.count("Exchange hashpartitioning") <= 1, plan[:1500]
+    assert _exchanges(plan) <= 1, plan[:1500]
 
 
 def test_lsh_probe_side_is_broadcast(spark):
@@ -351,7 +364,7 @@ def test_decontaminate_corpus_side_never_shuffles(spark):
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
     # wide exchanges: benchmark-gram distinct + per-doc hit count only
-    assert plan.count("Exchange hashpartitioning") <= 2, plan[:1500]
+    assert _exchanges(plan) <= 2, plan[:1500]
 
 
 def test_frequent_terms_verify_join_is_broadcast(spark):

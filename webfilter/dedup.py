@@ -146,6 +146,26 @@ def shingle_hashes_col(text: Column, k: int = 3) -> Column:
 _EMPTY_SIG = 0xFFFFFFFFFFFFFFFF
 
 
+def _flat_hashes(hash_lists):
+    """(lens, nonempty, flat, starts) of a batch of per-doc int64 hash
+    arrays, None counting as empty: each doc's length, which docs have
+    any hash, the non-empty docs' hashes as ONE int64 array, and each
+    non-empty doc's offset into it — the layout both hash kernels
+    reduce over."""
+    import numpy as np
+
+    lens = np.fromiter(
+        ((0 if h is None else len(h)) for h in hash_lists), dtype=np.int64,
+        count=len(hash_lists),
+    )
+    nonempty = lens > 0
+    parts = [np.asarray(h, dtype=np.int64) for h in hash_lists if h is not None and len(h)]
+    flat = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+    starts = np.zeros(len(parts), dtype=np.int64)
+    np.cumsum(lens[nonempty][:-1], out=starts[1:])
+    return lens, nonempty, flat, starts
+
+
 def _minhash_kernel(hash_lists, n_hashes: int):
     """Whole-batch minhash from per-doc shingle-hash arrays: one
     concatenated uint64 array, n_hashes vectorized mix passes, minima
@@ -159,21 +179,11 @@ def _minhash_kernel(hash_lists, n_hashes: int):
 
     from .kernels.mix import splitmix64
 
-    nd = len(hash_lists)
-    lens = np.fromiter(
-        ((0 if h is None else len(h)) for h in hash_lists), dtype=np.int64, count=nd
-    )
-    if nd == 0:
-        return np.empty((0, n_hashes), dtype=np.int64)
-    out = np.full((nd, n_hashes), np.uint64(_EMPTY_SIG), dtype=np.uint64)
-    nonempty = lens > 0
+    lens, nonempty, flat, starts = _flat_hashes(hash_lists)
+    out = np.full((len(lens), n_hashes), np.uint64(_EMPTY_SIG), dtype=np.uint64)
     if nonempty.any():
         ne_lens = lens[nonempty]
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h in hash_lists if h is not None and len(h)]
-        ).view(np.uint64)
-        starts = np.zeros(len(ne_lens), dtype=np.int64)
-        np.cumsum(ne_lens[:-1], out=starts[1:])
+        flat = flat.view(np.uint64)
         seeds = splitmix64(
             np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
         )
@@ -946,21 +956,10 @@ def _simhash_kernel(hash_lists) -> "np.ndarray":  # noqa: F821
     (ADVICE r2 NULL-safety)."""
     import numpy as np
 
-    nd = len(hash_lists)
-    lens = np.fromiter(
-        ((0 if h is None else len(h)) for h in hash_lists), dtype=np.int64, count=nd
-    )
-    if nd == 0:
-        return np.empty(0, dtype=np.int64)
-    out = np.zeros(nd, dtype=np.int64)
-    nonempty = lens > 0
+    lens, nonempty, flat, starts = _flat_hashes(hash_lists)
+    out = np.zeros(len(lens), dtype=np.int64)
     if nonempty.any():
         ne_lens = lens[nonempty]
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h in hash_lists if h is not None and len(h)]
-        )
-        starts = np.zeros(len(ne_lens), dtype=np.int64)
-        np.cumsum(ne_lens[:-1], out=starts[1:])
         # bits[t, j] = bit j of token-hash t (uint64 little-endian view)
         bits = np.unpackbits(
             flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"

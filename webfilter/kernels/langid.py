@@ -2,8 +2,10 @@
 
 Model = one log-probability profile vector per language over a
 2**14-dim hashed char-trigram space (multinomial Naive Bayes with
-add-k smoothing), trained deterministically at import time from the
-embedded corpora — no external model files, no randomness.
+add-k smoothing), trained deterministically on first use from the
+embedded corpora — no external model files, no randomness.  Training
+and scoring share one featurizer, ``mix.codepoints`` +
+``mix.char_ngrams`` (the quality classifier's too).
 
 Scoring is fully vectorized: a batch of documents becomes one sparse
 count pass in numpy; per-language scores are a dense mat-vec. This is
@@ -16,139 +18,80 @@ idiom of _setup/utils.py:61-63.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
 from .corpora import LANGS, lang_training_text
+from .mix import char_ngrams, codepoints
 
 DIM = 1 << 14
 _MASK = DIM - 1
 NGRAM = 3
 
-# FNV-1a over uint32 lanes — stable across platforms/python versions
-# (never use python hash(): PYTHONHASHSEED would break determinism).
-_FNV_PRIME = np.uint32(16777619)
-_FNV_OFFSET = np.uint32(2166136261)
 
-
-def _normalize(texts: pd.Series) -> pd.Series:
-    return texts.fillna("").str.lower()
-
-
-def _trigram_hash_counts(text: str) -> np.ndarray:
-    """Return hashed trigram ids for one document (uint32 array)."""
-    if len(text) < NGRAM:
-        return np.empty(0, dtype=np.int64)
-    cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-    h = np.full(cp.shape[0] - NGRAM + 1, _FNV_OFFSET, dtype=np.uint32)
-    with np.errstate(over="ignore"):
-        for k in range(NGRAM):
-            h = (h ^ cp[k : cp.shape[0] - NGRAM + 1 + k]) * _FNV_PRIME
-    return (h & np.uint32(_MASK)).astype(np.int64)
-
-
-def _train() -> tuple[np.ndarray, list[str]]:
+@functools.cache
+def _train() -> np.ndarray:
+    """One log-prob profile per ``LANGS`` entry, trained once per
+    process on first use from one featurizer batch of every language's
+    training text; rounded to float32, the model's precision, and
+    upcast once to float64 for scoring."""
+    ids, lang_of = char_ngrams(
+        *codepoints(pd.Series([lang_training_text(l) for l in LANGS]))[:2], NGRAM, _MASK
+    )
     profiles = np.zeros((len(LANGS), DIM), dtype=np.float64)
-    for i, lang in enumerate(LANGS):
-        ids = _trigram_hash_counts(lang_training_text(lang).lower())
-        np.add.at(profiles[i], ids, 1.0)
+    np.add.at(profiles, (lang_of, ids), 1.0)
     k = 0.5  # add-k smoothing
     counts = profiles + k
     logp = np.log(counts / counts.sum(axis=1, keepdims=True))
-    return logp.astype(np.float32), list(LANGS)
-
-
-_LOGP, _LABELS = _train()
-# upcast ONCE at import (bit-identical to the old per-batch
-# `.astype(float64)` inside the scoring loop, minus the per-batch copy)
-_LOGP = _LOGP.astype(np.float64)
+    return logp.astype(np.float32).astype(np.float64)
 
 
 def predict_batch(texts: pd.Series) -> pd.DataFrame:
     """Batch predict -> DataFrame(langid: str, langid_conf: float64).
 
     Whole-batch vectorization: every document's codepoints are
-    concatenated into ONE uint32 array (separated by a NUL that can
-    never form a valid trigram window); trigram hashing, per-doc
-    per-language scoring (bincount with log-prob weights), the CJK
-    script shortcut, softmax and argmax are all array ops — zero
-    per-document python in the scoring path.
+    concatenated into ONE uint32 array (``mix.codepoints``); trigram
+    hashing (``mix.char_ngrams``), per-doc per-language scoring
+    (bincount with log-prob weights), the CJK script shortcut, softmax
+    and argmax are all array ops — zero per-document python in the
+    scoring path.
 
     conf is the softmax posterior of the winning language over the
     per-ngram-normalized class log-likelihoods; CJK-dominated docs
     take the script-unique shortcut (standard langid practice).
     """
-    texts = _normalize(texts)
     n = len(texts)
     langs = np.full(n, "und", dtype=object)
     confs = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return pd.DataFrame({"langid": langs, "langid_conf": confs})
-
-    # ONE C-level encode of the whole batch (utf-32-le has no BOM, so
-    # codepoint i of the joined string is lane i of the uint32 view);
-    # len(str) == codepoint count, so per-doc offsets need no per-doc
-    # encode at all.
-    texts_list = list(texts)
-    joined = "\x00".join(texts_list)
-    doc_lens = np.fromiter(map(len, texts_list), dtype=np.int64, count=n)
-    cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    total = len(cp)
-    # doc_of via repeat (O(total), no log-factor): doc i owns its own
-    # codepoints plus its trailing NUL separator — identical attribution
-    # to searchsorted(ends, pos, side="left") since ends are strictly
-    # increasing (each width >= 1).
-    widths = doc_lens + 1
-    widths[-1] -= 1
-    doc_of = np.repeat(np.arange(n, dtype=np.int64), widths)
+    logp = _train()
+    cp, doc_of, doc_lens = codepoints(texts)
 
     # CJK ratio per doc (script-unique shortcut); skip the weighted
     # bincount entirely for the common all-non-CJK batch
     cjk_ratio = np.zeros(n)
-    if total:
-        is_cjk = (cp >= 0x4E00) & (cp <= 0x9FFF)
-        if is_cjk.any():
-            cjk_sum = np.bincount(
-                doc_of, weights=is_cjk.astype(np.float64), minlength=n
-            )
-            cjk_ratio = np.divide(
-                cjk_sum, np.maximum(doc_lens, 1), where=doc_lens > 0,
-                out=np.zeros(n),
-            )
+    is_cjk = (cp >= 0x4E00) & (cp <= 0x9FFF)
+    if is_cjk.any():
+        cjk_sum = np.bincount(doc_of, weights=is_cjk.astype(np.float64), minlength=n)
+        cjk_ratio = np.divide(
+            cjk_sum, np.maximum(doc_lens, 1), where=doc_lens > 0, out=np.zeros(n),
+        )
 
-    # trigram hashing over the whole batch; windows crossing a doc
-    # boundary (or touching the NUL separator) are masked out
-    if total >= NGRAM:
-        h = np.full(total - NGRAM + 1, _FNV_OFFSET, dtype=np.uint32)
-        with np.errstate(over="ignore"):
-            for k in range(NGRAM):
-                h = (h ^ cp[k : total - NGRAM + 1 + k]) * _FNV_PRIME
-        ids = (h & np.uint32(_MASK)).astype(np.int64)
-        valid = doc_of[: total - NGRAM + 1] == doc_of[NGRAM - 1 :]
-        # exclude windows containing the separator itself
-        nul = cp == 0
-        if nul.any():
-            bad = nul[: total - NGRAM + 1].copy()
-            for k in range(1, NGRAM):
-                bad |= nul[k : total - NGRAM + 1 + k]
-            valid &= ~bad
-        ids = ids[valid]
-        tri_doc = doc_of[: total - NGRAM + 1][valid]
-        tri_counts = np.bincount(tri_doc, minlength=n).astype(np.float64)
-        scores = np.empty((n, len(_LABELS)), dtype=np.float64)
-        for l in range(len(_LABELS)):
-            scores[:, l] = np.bincount(
-                tri_doc, weights=_LOGP[l][ids], minlength=n
-            )
-        with np.errstate(invalid="ignore", divide="ignore"):
-            scores = scores / np.maximum(tri_counts, 1.0)[:, None]
-        scores -= scores.max(axis=1, keepdims=True)
-        p = np.exp(scores * 8.0)
-        p /= p.sum(axis=1, keepdims=True)
-        best = np.argmax(p, axis=1)
-        has_tri = tri_counts > 0
-        langs[has_tri] = np.array(_LABELS, dtype=object)[best[has_tri]]
-        confs[has_tri] = p[np.arange(n), best][has_tri]
+    ids, tri_doc = char_ngrams(cp, doc_of, NGRAM, _MASK)
+    tri_counts = np.bincount(tri_doc, minlength=n).astype(np.float64)
+    scores = np.empty((n, len(LANGS)), dtype=np.float64)
+    for l in range(len(LANGS)):
+        scores[:, l] = np.bincount(tri_doc, weights=logp[l][ids], minlength=n)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        scores = scores / np.maximum(tri_counts, 1.0)[:, None]
+    scores -= scores.max(axis=1, keepdims=True)
+    p = np.exp(scores * 8.0)
+    p /= p.sum(axis=1, keepdims=True)
+    best = np.argmax(p, axis=1)
+    has_tri = tri_counts > 0
+    langs[has_tri] = np.array(LANGS, dtype=object)[best[has_tri]]
+    confs[has_tri] = p[np.arange(n), best][has_tri]
 
     # script shortcut overrides the n-gram vote
     zh_mask = cjk_ratio >= 0.30

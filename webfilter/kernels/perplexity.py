@@ -1,7 +1,7 @@
 """KenLM-style n-gram perplexity on hashed word bigrams.
 
 Model: interpolated bigram/unigram LM over a 2**16-dim hashed word
-space, trained deterministically at import from the embedded English
+space, trained deterministically on first use from the embedded English
 corpus. ppl(doc) = exp(-mean log P(w_i | w_{i-1})) with
 P = lam * P_bigram + (1-lam) * P_unigram_smoothed, so unseen words /
 incoherent sequences score high.
@@ -19,6 +19,8 @@ LM); determinism and train/score consistency are what matter.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
@@ -26,8 +28,6 @@ from .corpora import lang_training_text
 
 DIM = 1 << 16
 _MASK = np.uint64(DIM - 1)
-
-from .mix import _C1, _C2  # the one shared splitmix64 constant set
 
 # ASCII whitespace byte values (utf-8 multibyte sequences never
 # contain these, so byte-level splitting is utf-8-safe)
@@ -84,7 +84,12 @@ def tokenize(text: str) -> list[str]:
     return text.lower().split()
 
 
+@functools.cache
 def _train() -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
+    """Trained once per process on first scoring call, as every kernel
+    model is (ADVICE r3): import-time training added fixed startup
+    latency to every executor python worker even when the scorer was
+    unused (code-review r4c11 finding #7)."""
     ids, _ = _batch_token_ids([lang_training_text("en")])
     uni = np.bincount(ids, minlength=DIM).astype(np.float64)
     k = 0.1
@@ -98,23 +103,11 @@ def _train() -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
     return log_uni.astype(np.float64), uk, probs.astype(np.float64), floor
 
 
-_MODEL: tuple | None = None
 _LAM = 0.7
 
 
-def _model() -> tuple:
-    """Train lazily on first scoring call (cached) — the qualityclf
-    discipline (ADVICE r3): import-time training added fixed startup
-    latency to every executor python worker even when the scorer was
-    unused (code-review r4c11 finding #7)."""
-    global _MODEL
-    if _MODEL is None:
-        _MODEL = _train()
-    return _MODEL
-
-
 def _lookup_bigram(keys: np.ndarray) -> np.ndarray:
-    _lu, bi_keys, bi_probs, _f = _model()
+    _lu, bi_keys, bi_probs, _f = _train()
     pos = np.searchsorted(bi_keys, keys)
     pos = np.minimum(pos, len(bi_keys) - 1)
     hit = bi_keys[pos] == keys
@@ -126,7 +119,7 @@ def score_batch(texts: pd.Series) -> pd.Series:
     max penalty exp(-floor)."""
     texts = texts.fillna("")
     n_docs = len(texts)
-    log_uni, _bk, _bp, floor = _model()
+    log_uni, _bk, _bp, floor = _train()
     out = np.full(n_docs, float(np.exp(-floor)), dtype=np.float64)
     if n_docs == 0:
         return pd.Series(out)

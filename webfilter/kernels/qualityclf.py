@@ -11,71 +11,60 @@ corpora (positives: the per-language natural-prose training texts;
 negatives: the keyword-stuffed spam text) with full-batch gradient
 descent from a zero init — no external model files, no randomness.
 
-Scoring follows the `langid.py` whole-batch discipline: one uint32
-codepoint array for the entire Arrow batch, one hashing pass, one
-bincount per doc, one mat-vec — zero per-document Python.
+Training and scoring share langid's featurizer (``mix.codepoints`` +
+``mix.char_ngrams``): one uint32 codepoint array for the entire Arrow
+batch, one hashing pass, one bincount per doc, one mat-vec — zero
+per-document Python.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
 
 from .corpora import LANGS, lang_training_text, spam_training_text
+from .mix import char_ngrams, codepoints
 
 DIM = 1 << 12
 _MASK = DIM - 1
 NGRAM = 4
 
-_FNV_PRIME = np.uint32(16777619)
-_FNV_OFFSET = np.uint32(2166136261)
-
-
-def _gram_ids(text: str) -> np.ndarray:
-    """Hashed char-4gram ids for one training snippet (int64)."""
-    cp = np.frombuffer(text.lower().encode("utf-32-le"), dtype=np.uint32)
-    if cp.shape[0] < NGRAM:
-        return np.empty(0, dtype=np.int64)
-    h = np.full(cp.shape[0] - NGRAM + 1, _FNV_OFFSET, dtype=np.uint32)
-    with np.errstate(over="ignore"):
-        for k in range(NGRAM):
-            h = (h ^ cp[k : cp.shape[0] - NGRAM + 1 + k]) * _FNV_PRIME
-    return (h & np.uint32(_MASK)).astype(np.int64)
-
-
-def _featurize(ids: np.ndarray) -> np.ndarray:
-    """L2-normalized hashed-count vector for one snippet."""
-    v = np.zeros(DIM, dtype=np.float64)
-    np.add.at(v, ids, 1.0)
-    norm = np.linalg.norm(v)
-    return v / norm if norm > 0 else v
-
 
 def _training_set() -> tuple[np.ndarray, np.ndarray]:
     """Deterministic windows over the embedded corpora: positives are
     overlapping slices of each language's prose text, negatives are
-    slices of the spam text (cycled so every slice index exists)."""
-    xs: list[np.ndarray] = []
-    ys: list[float] = []
+    slices of the spam text (cycled so every slice index exists).
+    Each row is the window's L2-normalized hashed-count vector."""
     win, step = 160, 40
+    snippets = []
     for lang in LANGS:
         t = lang_training_text(lang)
-        for s in range(0, max(len(t) - win, 1), step):
-            xs.append(_featurize(_gram_ids(t[s : s + win])))
-            ys.append(1.0)
+        snippets += [t[s : s + win] for s in range(0, max(len(t) - win, 1), step)]
+    n_pos = len(snippets)
     spam = spam_training_text()
-    spam = spam * (1 + (len(xs) * win) // max(len(spam), 1))
-    n_neg = len(xs)  # balanced classes
-    for i in range(n_neg):
+    spam = spam * (1 + (n_pos * win) // max(len(spam), 1))
+    for i in range(n_pos):  # balanced classes
         s = (i * step) % max(len(spam) - win, 1)
-        xs.append(_featurize(_gram_ids(spam[s : s + win])))
-        ys.append(0.0)
-    return np.vstack(xs), np.array(ys, dtype=np.float64)
+        snippets.append(spam[s : s + win])
+    ids, gram_doc = char_ngrams(*codepoints(pd.Series(snippets))[:2], NGRAM, _MASK)
+    X = np.zeros((len(snippets), DIM), dtype=np.float64)
+    np.add.at(X, (gram_doc, ids), 1.0)
+    norm = np.linalg.norm(X, axis=1, keepdims=True)
+    np.divide(X, norm, out=X, where=norm > 0)
+    return X, np.repeat([1.0, 0.0], n_pos)
 
 
+@functools.cache
 def _train(iters: int = 300, lr: float = 4.0, l2: float = 1e-4) -> tuple[np.ndarray, float]:
     """Full-batch logistic regression GD from a zero init —
-    deterministic given the corpora (no shuffling, no RNG)."""
+    deterministic given the corpora (no shuffling, no RNG).  Trained
+    once per process on first scoring call (ADVICE r3: import-time
+    training added ~fixed startup latency to every executor Python
+    worker even when the quality gate is off).  The weights are rounded
+    to float32, the model's precision, and upcast once to float64 for
+    scoring."""
     X, y = _training_set()
     w = np.zeros(DIM, dtype=np.float64)
     b = 0.0
@@ -85,24 +74,7 @@ def _train(iters: int = 300, lr: float = 4.0, l2: float = 1e-4) -> tuple[np.ndar
         g = p - y
         w -= lr * ((X.T @ g) / m + l2 * w)
         b -= lr * float(g.mean())
-    return w.astype(np.float32), float(b)
-
-
-_MODEL: tuple[np.ndarray, float] | None = None
-
-
-def _weights() -> tuple[np.ndarray, float]:
-    """Train lazily on first scoring call, cached per process
-    (ADVICE r3: import-time training added ~fixed startup latency to
-    every executor Python worker even when the quality gate is off).
-    Still deterministic — same corpora, same zero init, no RNG."""
-    global _MODEL
-    if _MODEL is None:
-        w, b = _train()
-        # upcast once (bit-identical to the old per-batch
-        # `_W[ids].astype(float64)`, minus the per-batch copy)
-        _MODEL = (w.astype(np.float64), b)
-    return _MODEL
+    return w.astype(np.float32).astype(np.float64), float(b)
 
 
 def quality_prob_batch(texts: pd.Series) -> pd.Series:
@@ -113,44 +85,14 @@ def quality_prob_batch(texts: pd.Series) -> pd.Series:
     """
     n = len(texts)
     out = np.full(n, 0.5, dtype=np.float64)
-    if n == 0:
-        return pd.Series(out)
-    _W, _B = _weights()
-    # ONE C-level encode of the whole batch (see langid.predict_batch:
-    # utf-32-le has no BOM and len(str) == codepoint count, so the
-    # per-doc offsets need no per-doc encode); doc_of via repeat is
-    # O(total) vs searchsorted's O(total log n)
-    texts_list = [t.lower() for t in texts.fillna("")]
-    joined = "\x00".join(texts_list)
-    doc_lens = np.fromiter(map(len, texts_list), dtype=np.int64, count=n)
-    cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    total = len(cp)
-    if total < NGRAM:
-        return pd.Series(out)
-    widths = doc_lens + 1
-    widths[-1] -= 1
-    doc_of = np.repeat(np.arange(n, dtype=np.int64), widths)
-
-    h = np.full(total - NGRAM + 1, _FNV_OFFSET, dtype=np.uint32)
-    with np.errstate(over="ignore"):
-        for k in range(NGRAM):
-            h = (h ^ cp[k : total - NGRAM + 1 + k]) * _FNV_PRIME
-    ids = (h & np.uint32(_MASK)).astype(np.int64)
-    valid = doc_of[: total - NGRAM + 1] == doc_of[NGRAM - 1 :]
-    nul = cp == 0
-    if nul.any():
-        bad = nul[: total - NGRAM + 1].copy()
-        for k in range(1, NGRAM):
-            bad |= nul[k : total - NGRAM + 1 + k]
-        valid &= ~bad
-    ids = ids[valid]
-    gram_doc = doc_of[: total - NGRAM + 1][valid]
+    w, b = _train()
+    ids, gram_doc = char_ngrams(*codepoints(texts)[:2], NGRAM, _MASK)
 
     # per-doc dot(w, counts) / ||counts|| == w . x  in one pass:
     # bincount(doc, w[ids]) gives dot with UNnormalized counts; the
     # L2 norm needs per-doc gram counts per id — get it from a sparse
     # (doc, id) pair count
-    dot = np.bincount(gram_doc, weights=_W[ids], minlength=n)
+    dot = np.bincount(gram_doc, weights=w[ids], minlength=n)
     pair = gram_doc * DIM + ids
     uniq, cnt = np.unique(pair, return_counts=True)
     sq = np.bincount(
@@ -160,6 +102,6 @@ def quality_prob_batch(texts: pd.Series) -> pd.Series:
     norm = np.sqrt(sq)
     has = norm > 0
     z = np.zeros(n, dtype=np.float64)
-    z[has] = dot[has] / norm[has] + _B
+    z[has] = dot[has] / norm[has] + b
     out[has] = 1.0 / (1.0 + np.exp(-z[has]))
     return pd.Series(out)

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from . import rules, scoring, scrub
 from .manifest import DONE, RUNNING, Manifest
-from .partitioning import with_bucket
+from .partitioning import bucket_col, with_bucket
 from .tables import ParquetCatalog, latest_per_url
 from .urls import host_col
 
@@ -807,7 +807,7 @@ def run_near_dedup(
         pairs = pairs.select(
             F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b"), "jaccard"
         ).withColumn("run_id", F.lit(run_id)).withColumn(
-            "bucket_id", F.pmod(F.xxhash64("url_b"), F.lit(n_buckets)).cast("int")
+            "bucket_id", bucket_col(F.col("url_b"), n_buckets)
         )
         # bands first: that write fills the exact-collapse and band
         # caches, so the pairs write (several consumers of both) reads
