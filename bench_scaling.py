@@ -51,19 +51,6 @@ def merge_manual(new_md: str, old_md: str | None) -> str:
     return new_md
 
 
-def _package_zip(work: Path) -> str:
-    """Build the --py-files package (the north-rule ship form): the
-    measured job runs from the zip, exactly as a cluster would."""
-    import zipfile
-
-    zp = work / "webfilter_pkg.zip"
-    zp.parent.mkdir(parents=True, exist_ok=True)
-    with zipfile.ZipFile(zp, "w", zipfile.ZIP_DEFLATED) as z:
-        for f in sorted((REPO / "webfilter").rglob("*.py")):
-            z.write(f, f.relative_to(REPO))
-    return str(zp)
-
-
 _PKG_ZIP: str | None = None
 
 
@@ -306,8 +293,10 @@ def main() -> None:
 
     # build AFTER the work-dir reset; measured levels then run from
     # the --py-files zip, the north-rule ship form
+    from webfilter.session import package_zip
+
     global _PKG_ZIP
-    _PKG_ZIP = _package_zip(work)
+    _PKG_ZIP = str(package_zip(work))
 
     # the sandbox host is shared (load spikes from other tenants show
     # up with zero local processes) — run the levels alternately

@@ -1,167 +1,165 @@
-"""Simultaneous pinned A/B between two source trees.
+"""Paired A/B of the benchmark between two source trees.
 
-The only trustworthy cross-tree comparison on this shared host
-(BENCH/BASELINE.md measurement-validity note): run tree A pinned to
-cores 0-(w-1) and tree B pinned to cores w-(2w-1) AT THE SAME TIME on
-the same pre-generated corpus, for k paired rounds — co-tenant load
-hits both sides of a pair equally, so the within-pair delta isolates
-the code difference.
+    python jobs/ab_pinned.py [--parent HEAD] [--change REF] [--workload W] [--pairs 10]
 
-Usage:
-    python jobs/ab_pinned.py --old-ref HEAD [--docs 60000] \
-        [--rounds 3] [--width 8] [--label fused-scrub]
+Both refs are ``git archive``d into a temporary directory removed at
+exit; the change defaults to the working tree's tracked and staged
+content (``git stash create``, or HEAD on a clean tree).  Pair k runs
+``perfbench/run.py --seed k --trace 0`` in each tree for
+``BENCHMARK.json``'s ``run_seconds``, in turn, the first side alternating
+by pair.  Not at once: perfbench sizes Spark from the cores it may use,
+so two sides pinned side by side on a 4-core host would each measure a
+2-core machine on a shared memory bus.  In turn each gets the whole
+host, and the alternation spreads co-tenant drift over both sides.
 
-Tree A = `git archive <old-ref>` of webfilter/ + jobs/run_filter.py;
-tree B = the working tree. Writes BENCH/ab_<label>.json.
+Per ``end_to_end`` metric: both medians, the parent IQR, change wins
+(ties count for neither; a failed run loses to any value), whether the
+change median is within the bound, and whether it is a gain (>= 9/10
+wins, median gap > parent IQR).  ``op_cpu_s`` is a median over however
+many operations fit the loop, and operations get cheaper as the JVM
+compiles, so a tree that fits one more reads lower with no saving per
+operation: ``op_cpu_s@1-2`` compares operations 1-2, which every run
+has, beside each side's operation counts.  The last line is one JSON
+object; nothing is written into the repository.  Exit 2 if the trees'
+benchmarks differ or the change tree would miss untracked files under
+webfilter/ or jobs/; exit 1 if a run failed or a metric is out of bound.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
-import shutil
+import statistics
 import subprocess
 import sys
-import time
-import zipfile
+import tarfile
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+#: operation positions every run has: op 0 is the warm-up, at least two follow
+POSITIONS = (1, 2)
+SIDES = ("parent", "change")
 
 
-def _zip_worktree(dst: Path) -> Path:
-    zp = dst / "pkg.zip"
-    with zipfile.ZipFile(zp, "w", zipfile.ZIP_DEFLATED) as z:
-        for f in sorted((REPO / "webfilter").rglob("*.py")):
-            z.write(f, f.relative_to(REPO))
-    shutil.copy(REPO / "jobs" / "run_filter.py", dst / "run_filter.py")
-    return zp
+def _git(*args: str) -> str:
+    return subprocess.run(["git", "-C", str(REPO), *args], capture_output=True,
+                          text=True, check=True).stdout.strip()
 
 
-def _zip_ref(ref: str, dst: Path) -> Path:
-    """Package webfilter/ + jobs/run_filter.py exactly as committed at
-    `ref` (git archive keeps us honest: no working-tree leakage)."""
-    tar = dst / "old.tar"
-    with open(tar, "wb") as fh:
-        subprocess.run(
-            ["git", "-C", str(REPO), "archive", ref, "webfilter",
-             "jobs/run_filter.py"],
-            stdout=fh, check=True,
-        )
-    exdir = dst / "tree"
-    exdir.mkdir()
-    subprocess.run(["tar", "-xf", str(tar), "-C", str(exdir)], check=True)
-    zp = dst / "pkg.zip"
-    with zipfile.ZipFile(zp, "w", zipfile.ZIP_DEFLATED) as z:
-        for f in sorted((exdir / "webfilter").rglob("*.py")):
-            z.write(f, f.relative_to(exdir))
-    shutil.copy(exdir / "jobs" / "run_filter.py", dst / "run_filter.py")
-    return zp
+def bench_diff(a: Path, b: Path) -> list[str]:
+    """The benchmark's files (perfbench/, BENCHMARK.json) that differ between two trees."""
+    fa, fb = ({p.relative_to(t).as_posix(): p.read_bytes()
+               for p in [t / "BENCHMARK.json", *(t / "perfbench").rglob("*")] if p.is_file()}
+              for t in (a, b))
+    return sorted(k for k in fa.keys() | fb.keys() if fa.get(k) != fb.get(k))
 
 
-def _launch(side: Path, pages: str, out: str, cores: str, width: int,
-            run_id: str) -> subprocess.Popen:
-    cmd = [
-        "taskset", "-c", cores,
-        "spark-submit", "--driver-memory", "24g",
-        "--py-files", str(side / "pkg.zip"),
-        str(side / "run_filter.py"),
-        "--pages", pages, "--out", out,
-        "--buckets", "16", "--cores", str(width),
-        "--run-id", run_id, "--warmup",
-    ]
-    env = dict(
-        os.environ,
-        OMP_NUM_THREADS="1", OPENBLAS_NUM_THREADS="1",
-        MKL_NUM_THREADS="1", NUMEXPR_NUM_THREADS="1",
-    )
-    env.pop("PYTHONPATH", None)  # each side runs ONLY from its zip
-    return subprocess.Popen(
-        cmd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-        text=True, env=env,
-    )
+def spec(bench: dict) -> list[tuple[str, str, float | None]]:
+    """(name, better, bound) of every gated metric, then the ungated same-position one."""
+    gated = [(m["name"], m["better"], m["bound"]) for m in bench["end_to_end"]]
+    return gated + [("op_cpu_s@1-2", "lower", None)]
 
 
-def _collect(p: subprocess.Popen) -> dict:
-    out, _ = p.communicate(timeout=1800)
-    if p.returncode != 0:
-        raise RuntimeError(f"side failed rc={p.returncode}")
-    line = [l for l in out.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+def digest(rec: dict, summary: dict) -> dict:
+    """One run from its .out record and the summary perfbench printed for it."""
+    cpu = [o["cpu_s"] for o in rec["ops"] if o["i"] in POSITIONS and o.get("ok")]
+    out = {"metrics": {k: m["value"] for k, m in summary["metrics"].items()},
+           "ops": len(rec["ops"])}
+    out["metrics"]["op_cpu_s@1-2"] = statistics.fmean(cpu) if len(cpu) == len(POSITIONS) else None
+    if not summary["correct"]:
+        out["error"] = f"{summary['failed']} of {summary['attempted']} checks failed"
+    return out
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--old-ref", default="HEAD")
-    ap.add_argument("--docs", type=int, default=60000)
-    ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--width", type=int, default=8)
-    ap.add_argument("--label", default="ab")
+def run(tree: Path, workload: str, seed: int, seconds: float) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    try:
+        p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=900)
+        rec = tree / "perfbench" / ".out" / f"{workload}-seed{seed}-trace0.json"
+        if p.returncode == 0:
+            return digest(json.loads(rec.read_text()), json.loads(p.stdout.splitlines()[-1]))
+        error = f"exit {p.returncode}: {p.stderr.strip()[-300:]}"
+    except (subprocess.TimeoutExpired, OSError, ValueError, IndexError) as e:
+        error = f"{type(e).__name__}: {e}"
+    return {"metrics": {}, "ops": 0, "error": error}
+
+
+def compare(metrics: list, pairs: list[tuple[dict, dict]]) -> dict:
+    rows = {}
+    for name, better, bound in metrics:
+        sign = 1 if better == "higher" else -1
+        vals = [(p["metrics"].get(name), c["metrics"].get(name)) for p, c in pairs]
+        side = [[v[i] for v in vals if v[i] is not None] for i in (0, 1)]
+        pm, cm = (statistics.median(xs) if xs else None for xs in side)
+        q = statistics.quantiles(side[0], n=4) if len(side[0]) > 1 else [0.0] * 3
+        wins = sum(c is not None and (p is None or sign * (c - p) > 0) for p, c in vals)
+        gap = None if pm is None or cm is None else sign * (cm - pm)
+        within = None if bound is None else gap is not None and gap >= -bound * pm
+        rows[name] = {"parent": pm, "change": cm, "parent_iqr": q[2] - q[0], "pairs": len(pairs),
+                      "wins": wins, "ties": sum(p == c for p, c in vals), "within_bound": within,
+                      "gain": gap is not None and wins >= 0.9 * len(pairs) and gap > q[2] - q[0]}
+    return rows
+
+
+def report(workload: str, metrics: list, pairs: list[tuple[dict, dict]]) -> dict:
+    rows = compare(metrics, pairs)
+    ops = {s: [pair[i]["ops"] for pair in pairs] for i, s in enumerate(SIDES)}
+    failed = [{"seed": k, "side": s, "error": r["error"]}
+              for k, pair in enumerate(pairs, 1) for s, r in zip(SIDES, pair) if "error" in r]
+    print(f"## {workload}: {len(pairs)} pairs, change against parent")
+    for name, r in rows.items():
+        nums = " ".join(f"{k}={'-' if r[k] is None else format(r[k], '.4g')}"
+                        for k in ("parent", "change", "parent_iqr"))
+        print(f"{name:<16} {nums} wins={r['wins']}/{r['pairs']} ties={r['ties']} "
+              f"within_bound={r['within_bound']} gain={r['gain']}")
+    print(f"ops parent={ops['parent']} change={ops['change']}")
+    for f in failed:
+        print(f"FAILED seed={f['seed']} {f['side']}: {f['error']}")
+    ok = not failed and False not in [r["within_bound"] for r in rows.values()]
+    return {"metrics": rows, "ops": ops, "failed": failed, "ok": ok}
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--parent", default="HEAD")
+    ap.add_argument("--change", help="default: the working tree's tracked and staged content")
+    ap.add_argument("--workload", help="default: every BENCHMARK.json workload")
+    ap.add_argument("--pairs", type=int, default=10)
     args = ap.parse_args()
-
-    work = Path("/dev/shm/webfilter_ab")
-    shutil.rmtree(work, ignore_errors=True)
-    (work / "old").mkdir(parents=True)
-    (work / "new").mkdir(parents=True)
-    _zip_ref(args.old_ref, work / "old")
-    _zip_worktree(work / "new")
-
-    # one corpus, generated once, shared by both sides
-    sys.path.insert(0, str(REPO))
-    from webfilter.session import get_spark
-    from webfilter.synth import write_dataset
-
-    spark = get_spark("ab-synth", cores=8)
-    write_dataset(spark, args.docs, str(work / "data"))
-    spark.stop()
-    pages = str(work / "data" / "pages.parquet")
-
-    w = args.width
-    cores_a, cores_b = f"0-{w - 1}", f"{w}-{2 * w - 1}"
-    pairs = []
-    for r in range(args.rounds):
-        pa = _launch(work / "old", pages, str(work / f"oa{r}"), cores_a,
-                     w, f"a{r}")
-        pb = _launch(work / "new", pages, str(work / f"ob{r}"), cores_b,
-                     w, f"b{r}")
-        ra, rb = _collect(pa), _collect(pb)
-        pair = {
-            "round": r,
-            "old_wall_s": ra["wall_s"], "new_wall_s": rb["wall_s"],
-            "old_docs_per_s": ra["docs_per_s"],
-            "new_docs_per_s": rb["docs_per_s"],
-            "speedup_new_over_old": round(ra["wall_s"] / rb["wall_s"], 3),
-        }
-        pairs.append(pair)
-        print(json.dumps(pair))
-        # alternate core ranges so a side never owns the "good" cores
-        cores_a, cores_b = cores_b, cores_a
-        for d in (f"oa{r}", f"ob{r}"):
-            shutil.rmtree(work / d, ignore_errors=True)
-        time.sleep(2)
-
-    geo = 1.0
-    for p in pairs:
-        geo *= p["speedup_new_over_old"]
-    geo **= 1.0 / len(pairs)
-    rec = {
-        "label": args.label,
-        "old_ref": args.old_ref,
-        "docs": args.docs,
-        "width_cores": w,
-        "protocol": "simultaneous pinned pairs, alternated core ranges",
-        "pairs": pairs,
-        "geomean_speedup_new_over_old": round(geo, 3),
-        "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    out = REPO / "BENCH" / f"ab_{args.label}.json"
-    out.write_text(json.dumps(rec, indent=1))
-    print(json.dumps({"geomean_speedup_new_over_old": rec
-                      ["geomean_speedup_new_over_old"],
-                      "record": str(out)}))
-    shutil.rmtree(work, ignore_errors=True)
+    missed = args.change is None and _git("ls-files", "--others", "--exclude-standard",
+                                          "webfilter", "jobs")
+    if missed:
+        print(f"refused: untracked files the change tree would miss:\n{missed}", file=sys.stderr)
+        return 2
+    refs = [args.parent, args.change or _git("stash", "create") or "HEAD"]
+    refs = {s: _git("rev-parse", "--verify", f"{r}^{{commit}}") for s, r in zip(SIDES, refs)}
+    with tempfile.TemporaryDirectory(prefix="ab_pinned_") as tmp:
+        trees = {s: Path(tmp) / s for s in SIDES}
+        for s, ref in refs.items():
+            _git("archive", "-o", f"{tmp}/{s}.tar", ref)
+            with tarfile.open(f"{tmp}/{s}.tar") as t:
+                t.extractall(trees[s], filter="data")
+        differ = bench_diff(trees["parent"], trees["change"])
+        if differ:
+            print(f"refused: the benchmark differs between the trees: {differ}", file=sys.stderr)
+            return 2
+        bench = json.loads((trees["parent"] / "BENCHMARK.json").read_text())
+        result = {**refs, "pairs": args.pairs, "workloads": {}}
+        for w in [args.workload] if args.workload else [w["name"] for w in bench["workloads"]]:
+            pairs = []
+            for seed in range(1, args.pairs + 1):
+                order = SIDES if seed % 2 else SIDES[::-1]
+                runs = {s: run(trees[s], w, seed, bench["run_seconds"]) for s in order}
+                pairs.append((runs["parent"], runs["change"]))
+                print(f"# {w} seed={seed} first={order[0]} ops parent={runs['parent']['ops']} "
+                      f"change={runs['change']['ops']}", flush=True)
+            result["workloads"][w] = report(w, spec(bench), pairs)
+    result["ok"] = all(r["ok"] for r in result["workloads"].values())
+    print(json.dumps(result))
+    return 0 if result["ok"] else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

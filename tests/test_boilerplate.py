@@ -11,6 +11,7 @@ and the empty-block division guards.
 from __future__ import annotations
 
 import pytest
+from _plan import formatted, nodes
 from pyspark.sql import functions as F
 
 from webfilter.boilerplate import (
@@ -108,8 +109,8 @@ def test_single_exchange_plan(spark):
     """Both window frames must reuse one hash shuffle on doc_id —
     the scale contract in the module docstring."""
     df = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
-    plan = justext_blocks(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
+    plan = formatted(justext_blocks(df))
+    assert nodes(plan, "Exchange") == 1, plan
 
 
 def test_map_only_form_equals_window_form(spark):
@@ -160,13 +161,8 @@ def test_map_only_form_adds_no_exchange(spark):
     from webfilter.boilerplate import with_boilerplate_removed
 
     df = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
-    plan = (
-        with_boilerplate_removed(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
+    plan = formatted(with_boilerplate_removed(df))
+    assert nodes(plan, "Exchange") + nodes(plan, "BroadcastExchange") == 0, plan
 
 
 # ------------------------------------------------ pipeline integration
@@ -212,11 +208,8 @@ def test_pipeline_flag_adds_no_exchange(spark, pages):
     from webfilter import pipeline
 
     def census(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return (
-            plan.count("Exchange") - plan.count("BroadcastExchange"),
-            plan.count("BroadcastExchange"),
-        )
+        plan = formatted(df)
+        return nodes(plan, "Exchange"), nodes(plan, "BroadcastExchange")
 
     assert census(
         pipeline.filtered_frame(pages, boilerplate=True)

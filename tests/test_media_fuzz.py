@@ -10,16 +10,14 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from _media import make_gif, make_jpeg, make_jpeg_color
 from webfilter.kernels.media import (
     decode_avi_frames,
     decode_wav_samples,
     decode_gif_pixels,
     decode_jpeg_pixels,
     make_avi_mjpeg,
-    make_jpeg_color,
     decode_png_pixels,
-    make_gif,
-    make_jpeg,
     make_wav_adpcm,
     make_mp4,
     make_png,

@@ -190,7 +190,8 @@ def test_gif_pixel_decode_matches_generator():
     boundaries plus a 4096-entry table reset)."""
     import numpy as np
 
-    from webfilter.kernels.media import decode_gif_pixels, make_gif
+    from _media import make_gif
+    from webfilter.kernels.media import decode_gif_pixels
 
     for w, h, seed in [(7, 5, 1), (33, 7, 5), (1, 1, 3), (128, 128, 3)]:
         g = make_gif(w, h, seed=seed)
@@ -204,7 +205,8 @@ def test_gif_pixel_decode_matches_generator():
 
 
 def test_gif_decode_rejects_malformed():
-    from webfilter.kernels.media import decode_gif_pixels, make_gif
+    from _media import make_gif
+    from webfilter.kernels.media import decode_gif_pixels
 
     assert decode_gif_pixels(None) is None
     assert decode_gif_pixels(b"") is None
@@ -253,11 +255,8 @@ def test_jpeg_pixel_decode_real_entropy_data():
     shapes it documents."""
     import numpy as np
 
-    from webfilter.kernels.media import (
-        decode_jpeg_pixels,
-        make_jpeg,
-        parse_image,
-    )
+    from _media import make_jpeg
+    from webfilter.kernels.media import decode_jpeg_pixels, parse_image
 
     for w, h, seed in [(8, 8, 0), (17, 9, 3), (64, 48, 7), (1, 1, 2)]:
         raw, px = make_jpeg(w, h, seed=seed, flat_q=True)
@@ -289,7 +288,8 @@ def test_jpeg_420_decode_matches_subsampling_model():
     per-component sampling grid and the upsample are all real."""
     import numpy as np
 
-    from webfilter.kernels.media import decode_jpeg_pixels, make_jpeg_color
+    from _media import make_jpeg_color
+    from webfilter.kernels.media import decode_jpeg_pixels
 
     def model(rgb):
         r, g, b = (rgb[:, :, i].astype(np.float64) for i in range(3))

@@ -9,7 +9,12 @@ each:
   (every DuckDB oracle replays it bit for bit);
 * the char-n-gram featurizer's codepoint layout — ``kernels/mix.py``
   is the only module in webfilter/ that encodes to utf-32-le, so
-  langid and the quality classifier train and score on one layout.
+  langid and the quality classifier train and score on one layout;
+* the plan-node count — ``tests/_plan.py`` ``nodes`` is the only
+  ``.count("...Exchange...")`` in tests/: a raw substring count of
+  plan text reads each node of a formatted plan twice, counts a
+  BroadcastExchange as an Exchange, and reads 0 whatever the plan
+  once the spelling it counts is no longer printed.
 
 Pure AST, so comments and docstrings do not count: no Spark session.
 """
@@ -49,6 +54,17 @@ def _is_utf32_encode(node: ast.AST) -> bool:
     )
 
 
+def _is_exchange_count(node: ast.AST) -> bool:
+    return (
+        _callee(node) == "count"
+        and isinstance(node.func, ast.Attribute)
+        and any(
+            isinstance(a, ast.Constant) and isinstance(a.value, str) and "Exchange" in a.value
+            for a in node.args
+        )
+    )
+
+
 def _offenders(dirs: tuple[str, ...], owner: str, hit) -> list[str]:
     out = []
     for d in dirs:
@@ -76,3 +92,8 @@ def test_md5_prefix_only_in_sketches():
 def test_utf32_encode_only_in_featurizer():
     found = _offenders(("webfilter",), "webfilter/kernels/mix.py", _is_utf32_encode)
     assert not found, f"featurize with kernels.mix.codepoints: {found}"
+
+
+def test_plan_nodes_counted_only_by_plan_helper():
+    found = _offenders(("tests",), "tests/_plan.py", _is_exchange_count)
+    assert not found, f"count plan nodes with _plan.nodes: {found}"

@@ -6,41 +6,40 @@ between a scan that reads 2 columns and one that reads the whole
 from __future__ import annotations
 
 import io
-import re
 
 import pytest
+from _plan import formatted, nodes
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
 
 
-def _plan(df) -> str:
-    import contextlib
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def _exchanges(plan: str) -> int:
-    """Physical shuffle exchanges in a formatted plan: its details
-    section lists each node once, as "(<id>) <Node>" (a broadcast is
-    "(<id>) BroadcastExchange", so it does not count)."""
-    return len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
-
-
 def test_exchange_count_reads_a_known_shuffle(spark):
-    """Positive control for _exchanges: one groupBy is one exchange."""
+    """Positive control for nodes(): a scan plans no exchange, a
+    groupBy one; a broadcast join one BroadcastExchange and one
+    BroadcastHashJoin and no shuffle; a merge join one SortMergeJoin
+    over two shuffles. A change to the explain format fails here
+    instead of zeroing every plan gate."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    assert _exchanges(_plan(docs.select("doc_id"))) == 0
-    plan = _plan(docs.groupBy("lang").count())
-    assert _exchanges(plan) == 1, plan
+    ids, langs = docs.select("doc_id"), docs.select("doc_id", "lang")
+    kinds = ("Exchange", "BroadcastExchange", "BroadcastHashJoin", "SortMergeJoin")
+
+    def census(df):
+        plan = formatted(df)
+        return tuple(nodes(plan, k) for k in kinds), plan
+
+    assert census(ids)[0] == (0, 0, 0, 0)
+    got, plan = census(docs.groupBy("lang").count())
+    assert got == (1, 0, 0, 0), plan
+    got, plan = census(ids.join(F.broadcast(langs), "doc_id"))
+    assert got == (0, 1, 1, 0), plan
+    got, plan = census(ids.hint("merge").join(langs, "doc_id"))
+    assert got == (2, 0, 0, 1), plan
 
 
 def test_filter_pushdown_to_parquet(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(docs.filter(F.col("lang") == "en").select("doc_id"))
+    plan = formatted(docs.filter(F.col("lang") == "en").select("doc_id"))
     assert "PushedFilters" in plan
     assert "EqualTo(lang,en)" in plan or "lang" in plan.split("PushedFilters")[1][:200]
 
@@ -48,7 +47,7 @@ def test_filter_pushdown_to_parquet(spark):
 def test_column_pruning(spark):
     from webfilter.entry_queries import q_token_counts
 
-    plan = _plan(q_token_counts(spark, SF))
+    plan = formatted(q_token_counts(spark, SF))
     # the scan must read only doc_id + text, not the whole schema
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" in read_schema and "doc_id" in read_schema
@@ -66,7 +65,7 @@ def test_bucket_filter_is_pushed(spark, synth_dir):
     dec = ParquetCatalog(spark, out).read("decisions").filter(
         F.col("bucket_id").isin([1, 2])
     )
-    plan = _plan(dec.select("url"))
+    plan = formatted(dec.select("url"))
     # bucket_id is the physical partition column -> partition pruning
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters")[1][:200]
@@ -87,7 +86,7 @@ def test_resumed_lineage_scan_prunes_buckets(spark, synth_dir, tmp_path, monkeyp
 
     def spy(*args):
         dec = run_rows(*args)
-        seen.append(_plan(dec.select("url")))
+        seen.append(formatted(dec.select("url")))
         return dec
 
     monkeypatch.setattr(pipeline, "_run_rows", spy)
@@ -131,7 +130,7 @@ def test_host_audit_is_one_exchange_over_partial_agg(spark, synth_dir, tmp_path,
 def test_broadcast_in_topk(spark):
     from webfilter.entry_queries import q_cosine_topk
 
-    plan = _plan(q_cosine_topk(spark, SF))
+    plan = formatted(q_cosine_topk(spark, SF))
     assert "Broadcast" in plan  # probe side broadcast, no shuffle join
 
 
@@ -141,8 +140,8 @@ def test_single_shuffle_in_filter_transform(spark, synth_dir):
     from webfilter import pipeline
 
     pages = spark.read.parquet(f"{synth_dir}/pages.parquet")
-    plan = _plan(pipeline.filtered_frame(pages))
-    n_exchanges = _exchanges(plan)
+    plan = formatted(pipeline.filtered_frame(pages))
+    n_exchanges = nodes(plan, "Exchange")
     assert n_exchanges <= 1, f"expected <=1 Exchange nodes, got {n_exchanges}\n{plan[:2000]}"
 
 
@@ -160,7 +159,7 @@ def written_frame(spark, synth_dir, tmp_path_factory):
 
     def spy(self, df, name, part_col):
         if name == "decisions":
-            caught.append((df, _plan(df)))
+            caught.append((df, formatted(df)))
         return overwrite(self, df, name, part_col)
 
     with pytest.MonkeyPatch.context() as mp:
@@ -180,7 +179,7 @@ def test_run_filter_shape_is_single_shuffle(written_frame):
     of url. A second exchange means the write-alignment re-shuffle of
     finished decision rows is back (the pre-round-4 plan)."""
     _, plan = written_frame
-    n = _exchanges(plan)
+    n = nodes(plan, "Exchange")
     assert n == 1, f"expected 1 physical Exchange, got {n}:\n{plan[:2000]}"
 
 
@@ -206,7 +205,7 @@ def test_whole_stage_codegen_covers_rules(spark):
     df = rules.with_heuristics(
         spark.read.parquet(f"{SF}/documents.parquet")
     )
-    plan = _plan(rules.with_decision(
+    plan = formatted(rules.with_decision(
         rules.model_rule_columns(
             df.withColumns({"langid": F.lit("en"), "langid_conf": F.lit(1.0), "perplexity": F.lit(1.0)})
         )
@@ -222,17 +221,17 @@ def test_asof_join_has_no_cartesian(spark):
     cross-join (the naive formulation explodes at scale)."""
     from webfilter.entry_queries import q_asof_join
 
-    plan = _plan(q_asof_join(spark, SF))
+    plan = formatted(q_asof_join(spark, SF))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "Window" in plan
     # exactly one wide exchange: the per-user window partitioning
-    assert _exchanges(plan) <= 1, plan[:1500]
+    assert nodes(plan, "Exchange") <= 1, plan[:1500]
 
 
 def test_lsh_probe_side_is_broadcast(spark):
     from webfilter.entry_queries import q_lsh_topk
 
-    plan = _plan(q_lsh_topk(spark, SF))
+    plan = formatted(q_lsh_topk(spark, SF))
     assert "Broadcast" in plan  # probes broadcast; corpus never shuffled for the join
 
 
@@ -323,7 +322,7 @@ def test_semdedup_kmeans_pair_join_is_cluster_local(spark):
     which is the plan that dies at corpus scale."""
     from webfilter.entry_queries import q_semdedup_kmeans
 
-    plan = _plan(q_semdedup_kmeans(spark, SF))
+    plan = formatted(q_semdedup_kmeans(spark, SF))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -335,7 +334,7 @@ def test_minhash_candidate_join_is_equi(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sig = minhash_signature_df(docs, k=2)
-    plan = _plan(lsh_candidate_pairs(sig))
+    plan = formatted(lsh_candidate_pairs(sig))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -348,7 +347,7 @@ def test_minhash_cold_start_has_no_band_state_join(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     pairs, _ = incremental_minhash_pairs(docs, None, docs, k=2)
-    keys = [ln for ln in _plan(pairs).splitlines() if " keys " in ln]
+    keys = [ln for ln in formatted(pairs).splitlines() if " keys " in ln]
     release_cached()
     assert keys  # the verify joins are planned
     assert not [ln for ln in keys if "band_hash" in ln], keys
@@ -360,11 +359,11 @@ def test_decontaminate_corpus_side_never_shuffles(spark):
     stream shuffles, which is the plan that dies at scale."""
     from webfilter.entry_queries import q_decontaminate
 
-    plan = _plan(q_decontaminate(spark, SF))
+    plan = formatted(q_decontaminate(spark, SF))
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
     # wide exchanges: benchmark-gram distinct + per-doc hit count only
-    assert _exchanges(plan) <= 2, plan[:1500]
+    assert nodes(plan, "Exchange") <= 2, plan[:1500]
 
 
 def test_frequent_terms_verify_join_is_broadcast(spark):
@@ -372,7 +371,7 @@ def test_frequent_terms_verify_join_is_broadcast(spark):
     candidates — the full vocabulary never shuffles."""
     from webfilter.entry_queries import q_frequent_terms
 
-    plan = _plan(q_frequent_terms(spark, SF))
+    plan = formatted(q_frequent_terms(spark, SF))
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
 
@@ -383,7 +382,7 @@ def test_bloom_anti_probe_is_broadcast_routed(spark):
     maybe sliver — the probe table itself must not sort-merge."""
     from webfilter.entry_queries import q_bloom_anti_frontier
 
-    plan = _plan(q_bloom_anti_frontier(spark, SF))
+    plan = formatted(q_bloom_anti_frontier(spark, SF))
     assert "BroadcastNestedLoopJoin" in plan, plan[:1500]
     assert "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
@@ -397,7 +396,7 @@ def test_allpairs_join_is_equi_never_cartesian(spark):
     brute force is separately proven by the DuckDB oracle."""
     from webfilter.entry_queries import q_allpairs_jaccard
 
-    plan = _plan(q_allpairs_jaccard(spark, SF))
+    plan = formatted(q_allpairs_jaccard(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     # every join in the plan is hash-keyed (at sf0.01 AQE broadcasts
@@ -413,22 +412,19 @@ def test_shipping_priority_plan_shape(spark):
     and top-10 via TakeOrderedAndProject — never a global Sort."""
     from webfilter.entry_queries import q_shipping_priority
 
-    plan = _plan(q_shipping_priority(spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 1
+    plan = formatted(q_shipping_priority(spark, SF))
+    assert nodes(plan, "BroadcastHashJoin") >= 1
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
     # pushed date/segment predicates reach the parquet scans
     assert plan.count("PushedFilters: [") >= 3
-    body = plan.split("== Physical Plan ==")[1]
-    # formatted plans print each node twice (tree + detail section)
-    n_exchanges = (body.count("Exchange") - body.count("BroadcastExchange")) // 2
-    assert n_exchanges <= 1, plan
+    assert nodes(plan, "Exchange") <= 1, plan
 
 
 def test_triangle_count_has_no_cartesian(spark):
     from webfilter.entry_queries import q_triangle_counts
 
-    plan = _plan(q_triangle_counts(spark, SF))
+    plan = formatted(q_triangle_counts(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -439,7 +435,7 @@ def test_fuzzy_name_pairs_joins_on_variant(spark):
     neighborhood stopped doing its job."""
     from webfilter.entry_queries import q_fuzzy_name_pairs
 
-    plan = _plan(q_fuzzy_name_pairs(spark, SF))
+    plan = formatted(q_fuzzy_name_pairs(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -450,19 +446,19 @@ def test_semdedup_centroid_dim_is_broadcast(spark):
     an equi-join on the cluster key."""
     from webfilter.entry_queries import q_semdedup_drops
 
-    plan = _plan(q_semdedup_drops(spark, SF))
+    plan = formatted(q_semdedup_drops(spark, SF))
     assert "CartesianProduct" not in plan
     # the assignment subtree (with its one centroid crossJoin) feeds
     # BOTH sides of the pair self-join, so the plan duplicates it:
-    # 2 BNLJ nodes, each printed twice (tree + detail) = 4 mentions.
-    # Anything beyond that means a non-broadcast nested loop crept in.
-    assert plan.count("BroadcastNestedLoopJoin") <= 4
+    # 2 BNLJ nodes. Anything beyond that means a non-broadcast nested
+    # loop crept in.
+    assert nodes(plan, "BroadcastNestedLoopJoin") <= 2, plan
 
 
 def test_minhash_md5_bands_equijoin(spark):
     from webfilter.entry_queries import q_minhash_md5
 
-    plan = _plan(q_minhash_md5(spark, SF))
+    plan = formatted(q_minhash_md5(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -475,10 +471,10 @@ def test_bm25_topk_plan_shape(spark):
     a broadcast nested loop, which is fine)."""
     from webfilter.entry_queries import q_bm25_rank
 
-    plan = _plan(q_bm25_rank(spark, SF))
+    plan = formatted(q_bm25_rank(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastExchange") >= 2, plan
+    assert nodes(plan, "BroadcastExchange") >= 2, plan
 
 
 def test_pmi_topk_plan_shape(spark):
@@ -489,10 +485,10 @@ def test_pmi_topk_plan_shape(spark):
     one task at 100 TB."""
     from webfilter.entry_queries import q_pmi_collocations
 
-    plan = _plan(q_pmi_collocations(spark, SF))
+    plan = formatted(q_pmi_collocations(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastExchange") >= 1, plan
+    assert nodes(plan, "BroadcastExchange") >= 1, plan
 
 
 def test_script_profile_is_map_only(spark):
@@ -501,7 +497,7 @@ def test_script_profile_is_map_only(spark):
     projection."""
     from webfilter.entry_queries import q_script_profile
 
-    plan = _plan(q_script_profile(spark, SF))
+    plan = formatted(q_script_profile(spark, SF))
     body = plan.split("== Physical Plan ==")[1]
     assert "Exchange" not in body, plan
     assert "pythonUDF" not in body.lower(), plan
@@ -513,12 +509,9 @@ def test_char_entropy_two_uniform_shuffles(spark):
     prefix bound keeps the explode amplification constant."""
     from webfilter.entry_queries import q_char_entropy
 
-    plan = _plan(q_char_entropy(spark, SF))
-    body = plan.split("== Physical Plan ==")[1]
-    # formatted explain names each node twice (tree + detail section)
-    n_exchanges = (body.count("Exchange") - body.count("BroadcastExchange")) // 2
-    assert n_exchanges == 2, plan
-    assert body.count("HashAggregate") // 2 == 4, plan  # 2 aggs x partial+final
+    plan = formatted(q_char_entropy(spark, SF))
+    assert nodes(plan, "Exchange") == 2, plan
+    assert nodes(plan, "HashAggregate") == 4, plan  # 2 aggs x partial+final
 
 
 def test_url_templates_single_count_pipeline(spark):
@@ -528,11 +521,9 @@ def test_url_templates_single_count_pipeline(spark):
     prune to the two columns the synth needs."""
     from webfilter.entry_queries import q_url_templates
 
-    plan = _plan(q_url_templates(spark, SF))
-    body = plan.split("== Physical Plan ==")[1]
-    n_exchanges = (body.count("Exchange") - body.count("BroadcastExchange")) // 2
-    assert n_exchanges == 2, plan
-    assert "ReadSchema: struct<doc_id:bigint,source:string>" in body, plan
+    plan = formatted(q_url_templates(spark, SF))
+    assert nodes(plan, "Exchange") == 2, plan
+    assert "ReadSchema: struct<doc_id:bigint,source:string>" in plan, plan
 
 
 def test_runtime_shuffle_audit_measures_broadcast_claim(spark):
@@ -565,15 +556,13 @@ def test_host_lang_outliers_one_corpus_pass(spark):
     side must reach the join without an Exchange (broadcast dim)."""
     from webfilter.entry_queries import q_host_lang_outliers
 
-    plan = _plan(q_host_lang_outliers(spark, SF))
-    body = plan.split("== Physical Plan ==")[1]
-    assert body.count("Scan parquet") // 2 == 2, plan
-    assert "BroadcastHashJoin" in body, plan
+    plan = formatted(q_host_lang_outliers(spark, SF))
+    assert nodes(plan, "Scan parquet") == 2, plan
+    assert nodes(plan, "BroadcastHashJoin") >= 1, plan
     # only the dim build shuffles: the (source, lang) count exchange
     # plus the window's (source) re-key of the ALREADY-AGGREGATED dim
     # — both move host-cardinality rows, never corpus rows
-    n_exchanges = (body.count("Exchange") - body.count("BroadcastExchange")) // 2
-    assert n_exchanges == 2, plan
+    assert nodes(plan, "Exchange") == 2, plan
 
 
 def test_zorder_key_is_map_only_over_the_scan(spark):
@@ -584,16 +573,14 @@ def test_zorder_key_is_map_only_over_the_scan(spark):
     from webfilter.zorder import with_zorder
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(with_zorder(ev, ["user_id", "event_id"], bits=12))
-    body = plan.split("== Physical Plan ==")[1]
+    plan = formatted(with_zorder(ev, ["user_id", "event_id"], bits=12))
     assert "CartesianProduct" not in plan
     # the only allowed non-broadcast exchange is the scalar agg's
     # partial->final SinglePartition merge (it moves one 4-value row
     # per input split, never scan data); any hash/range exchange
     # would mean the scan side shuffled
-    n_exchanges = (body.count("Exchange") - body.count("BroadcastExchange")) // 2
-    n_scalar = body.count("Arguments: SinglePartition")
-    assert n_exchanges == n_scalar == 1, plan
+    n_scalar = plan.count("Arguments: SinglePartition")
+    assert nodes(plan, "Exchange") == n_scalar == 1, plan
 
 
 def test_crawl_frontier_broadcasts_reputation(spark):
@@ -602,7 +589,7 @@ def test_crawl_frontier_broadcasts_reputation(spark):
     cartesian product may appear anywhere in the composition."""
     from webfilter.entry_queries import q_crawl_frontier
 
-    plan = _plan(q_crawl_frontier(spark, SF))
+    plan = formatted(q_crawl_frontier(spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
 
@@ -612,6 +599,6 @@ def test_cdx_roundtrip_is_shuffle_free(spark):
     index round-trips as a scan with ZERO exchanges of any kind."""
     from webfilter.entry_queries import q_cdx_roundtrip
 
-    plan = _plan(q_cdx_roundtrip(spark, SF))
+    plan = formatted(q_cdx_roundtrip(spark, SF))
     body = plan.split("== Physical Plan ==")[1]
     assert "Exchange" not in body, plan

@@ -51,9 +51,6 @@ KEEP: dict[str, str] = {
     "clustering.exact_assign_col": "tests/test_clustering.py exact-assign reference",
     "clustering.exact_min_key_col": "tests/test_clustering.py exact-assign reference",
     "boilerplate.final_classes_col": "tests/test_boilerplate.py map-vs-window reference",
-    "kernels.media.make_gif": "tests/test_media_fuzz.py fixture encoder",
-    "kernels.media.make_jpeg": "tests/test_media_fuzz.py fixture encoder",
-    "kernels.media.make_jpeg_color": "tests/test_media_fuzz.py fixture encoder",
     "caching.cached_count": "tests/test_advice_r5.py cache-leak regression probe",
     "dq.refresh": "tests/test_dq.py differential refresh (ICDE 2019), "
     "which ROADMAP Direction 2 builds on",

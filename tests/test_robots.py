@@ -4,9 +4,10 @@ default allow, and the parser's line-algebra edge cases."""
 
 from __future__ import annotations
 
+from _plan import formatted, nodes
 from pyspark.sql import functions as F
 
-from webfilter.robots import parse_robots, robots_decisions
+from webfilter.robots import parse_robots, robots_decisions, rules_dim
 
 ROBOTS = """# demo
 User-agent: *
@@ -190,18 +191,14 @@ def test_pipeline_robots_join_is_broadcast(spark, synth_dir):
         [("h.example", "User-agent: *\nDisallow: /x")],
         "host string, robots_txt string",
     )
-    base = pipeline.filtered_frame(pages)
-    withr = pipeline.filtered_frame(pages, robots=robots)
-    p0 = base._jdf.queryExecution().executedPlan().toString()
-    p1 = withr._jdf.queryExecution().executedPlan().toString()
-    assert p1.count("BroadcastHashJoin") == p0.count("BroadcastHashJoin") + 1
-    # the robots SIDE contributes its own tiny host-window exchanges;
-    # they are bounded (rules ∝ hosts) — assert the growth is exactly
-    # that subplan, not a page-side reshuffle: page side still has the
-    # same number of url-window sorts
-    assert p1.count("Exchange rangepartitioning") == p0.count(
-        "Exchange rangepartitioning"
-    )
+    p0 = formatted(pipeline.filtered_frame(pages))
+    p1 = formatted(pipeline.filtered_frame(pages, robots=robots))
+    assert nodes(p1, "BroadcastHashJoin") == nodes(p0, "BroadcastHashJoin") + 1
+    # the robots SIDE contributes its own tiny exchanges; they are
+    # bounded (rules ∝ hosts) — assert the growth is exactly that
+    # subplan's, not a page-side reshuffle
+    dim = formatted(rules_dim(parse_robots(robots), "webfilter"))
+    assert nodes(p1, "Exchange") == nodes(p0, "Exchange") + nodes(dim, "Exchange"), p1
 
 
 def test_obey_robots_without_frame_raises(spark, synth_dir):

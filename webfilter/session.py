@@ -19,6 +19,7 @@ reaches a Python stage is not free.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -127,6 +128,25 @@ def default_driver_mem() -> str:
     return f"{min(ram // 2, 48 << 30) >> 20}m"
 
 
+def package_zip(dst_dir) -> Path:
+    """Zip this source checkout's webfilter/*.py into
+    ``dst_dir/webfilter_pkg.zip`` and return its path. Every entry has
+    a PINNED timestamp, so any two zips of the same tree are
+    byte-identical: Spark accepts a re-add of the same filename iff
+    the contents match."""
+    import zipfile
+
+    pkg_root = Path(__file__).resolve().parent.parent
+    archive = Path(dst_dir) / "webfilter_pkg.zip"
+    with zipfile.ZipFile(archive, "w", zipfile.ZIP_DEFLATED) as zf:
+        for f in sorted((pkg_root / "webfilter").rglob("*.py")):
+            zi = zipfile.ZipInfo(
+                str(f.relative_to(pkg_root)), date_time=(2020, 1, 1, 0, 0, 0)
+            )
+            zf.writestr(zi, f.read_bytes())
+    return archive
+
+
 def ship_package(spark: SparkSession) -> None:
     """addPyFile the webfilter package so executor python workers can
     unpickle UDF kernels regardless of how the driver was launched
@@ -137,31 +157,19 @@ def ship_package(spark: SparkSession) -> None:
     import atexit
     import shutil
     import tempfile
-    from pathlib import Path
 
     import logging
-    import zipfile
 
-    pkg_root = Path(__file__).resolve().parent.parent
-    if not (pkg_root / "webfilter" / "__init__.py").exists():
+    if not (Path(__file__).resolve().parent / "__init__.py").exists():
         return  # running from a zip already shipped via --py-files
     # per-process staging dir: a fixed shared path raced concurrent
     # drivers (one ships a mid-rewrite zip) and failed cross-user on
-    # ownership (code-review r4c9 finding #4). Entries are *.py only
-    # with a PINNED timestamp so any two shippings of the same tree
-    # are byte-identical — Spark accepts a re-add of the same
-    # filename iff the contents match, and __spark_entry__ delegates
-    # here so there is exactly one packager (r4c10 findings #5/#9).
+    # ownership (code-review r4c9 finding #4). __spark_entry__
+    # delegates here so there is exactly one shipper (r4c10
+    # findings #5/#9).
     zdir = Path(tempfile.mkdtemp(prefix="webfilter_pyfiles_"))
     atexit.register(shutil.rmtree, zdir, ignore_errors=True)
-    archive = zdir / "webfilter_pkg.zip"
-    src = pkg_root / "webfilter"
-    with zipfile.ZipFile(archive, "w", zipfile.ZIP_DEFLATED) as zf:
-        for f in sorted(src.rglob("*.py")):
-            zi = zipfile.ZipInfo(
-                str(f.relative_to(pkg_root)), date_time=(2020, 1, 1, 0, 0, 0)
-            )
-            zf.writestr(zi, f.read_bytes())
+    archive = package_zip(zdir)
     try:
         spark.sparkContext.addPyFile(str(archive))
     except Exception as e:
