@@ -57,7 +57,7 @@ def run_once(spark, n: int, dim: int, iters: int) -> dict:
 
     df = synth_vectors(spark, n, dim)
     t0 = time.time()
-    out = kmeans_exact(df, iters=iters, scale=100, init_ids=8)
+    out = kmeans_exact(df, iters=iters)
     counts = {
         int(r["cluster"]): int(r["n"])
         for r in out.groupBy("cluster").agg(F.count("*").alias("n")).collect()

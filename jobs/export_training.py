@@ -110,7 +110,7 @@ def main(argv: list[str] | None = None) -> int:
         bench = None
     if bench is not None:
         contaminated = decontaminate(
-            docs, bench, n=args.ngram, id_col="url", text_col="text"
+            docs, bench, n=args.ngram, id_col="url"
         ).select("url")
         # persist: the decontamination join is the job's most
         # expensive stage and both the count and the shard write
@@ -134,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
     for sp in ("train", "val", "test"):
         sub = docs.filter(F.col("split") == sp)
         layout = pack_sequences(
-            sub, capacity=args.capacity, id_col="url", text_col="text",
+            sub, capacity=args.capacity, id_col="url",
             n_buckets=args.buckets,
         )
         parts.append(sub.join(layout, "url"))

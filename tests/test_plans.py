@@ -5,10 +5,8 @@ between a scan that reads 2 columns and one that reads the whole
 
 from __future__ import annotations
 
-import io
-
 import pytest
-from _plan import formatted, nodes
+from _plan import blocks, final_plan, formatted, nodes
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -100,8 +98,6 @@ def test_host_audit_is_one_exchange_over_partial_agg(spark, synth_dir, tmp_path,
     """The per-host audit needs no salt: its plan has exactly one
     Exchange, with the partial HashAggregate below it, so a hot host
     (~35% of rows) sends one row per map task."""
-    import contextlib
-
     from webfilter import pipeline
     from webfilter.tables import ParquetCatalog
 
@@ -110,21 +106,18 @@ def test_host_audit_is_one_exchange_over_partial_agg(spark, synth_dir, tmp_path,
 
     def spy(self, df, name, part_col=None):
         if name == "host_audit":
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain()
-            plans.append(buf.getvalue())
+            plans.append(formatted(df))
         return append(self, df, name, part_col)
 
     monkeypatch.setattr(ParquetCatalog, "append", spy)
     pipeline.run_filter(spark, f"{synth_dir}/pages.parquet",
                         str(tmp_path / "hosts"), n_buckets=8, run_id="h")
-    lines = plans[0].splitlines()
-    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
-    partial = [i for i, ln in enumerate(lines)
-               if "HashAggregate" in ln and "partial_count" in ln]
+    exchanges = blocks(plans[0], "Exchange")
+    partial = [i for i, b in blocks(plans[0], "HashAggregate").items()
+               if "partial_count" in b]
     assert len(exchanges) == 1, plans[0]
-    assert partial and partial[0] > exchanges[0], plans[0]
+    # the partial aggregate is the exchange's child
+    assert [i - 1 for i in exchanges] == partial, plans[0]
 
 
 def test_broadcast_in_topk(spark):
@@ -190,13 +183,13 @@ def test_run_filter_bucket_shuffle_is_coalesced(written_frame):
     count is never coalesced."""
     df, _ = written_frame
     df.collect()  # runs this frame's own adaptive plan to its final form
-    final = str(df._jdf.queryExecution().executedPlan().toString())
-    final = final.split("== Initial Plan ==")[0]
-    lines = final.splitlines()
-    exchanges = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    final = final_plan(formatted(df))
+    exchanges = [i for i, b in blocks(final, "Exchange").items() if "hashpartitioning" in b]
     assert len(exchanges) == 1, final
-    reads = [i for i, ln in enumerate(lines) if "AQEShuffleRead coalesced" in ln]
-    assert reads and reads[0] < exchanges[0], final
+    reads = [i for i, b in blocks(final, "AQEShuffleRead").items()
+             if "Arguments: coalesced" in b]
+    # Exchange -> ShuffleQueryStage -> the coalesced read of that stage
+    assert [i + 2 for i in exchanges] == reads, final
 
 
 def test_whole_stage_codegen_covers_rules(spark):
@@ -498,9 +491,8 @@ def test_script_profile_is_map_only(spark):
     from webfilter.entry_queries import q_script_profile
 
     plan = formatted(q_script_profile(spark, SF))
-    body = plan.split("== Physical Plan ==")[1]
-    assert "Exchange" not in body, plan
-    assert "pythonUDF" not in body.lower(), plan
+    assert nodes(plan, r"\w*Exchange") == 0, plan
+    assert "pythonUDF" not in plan.split("== Physical Plan ==")[1].lower(), plan
 
 
 def test_char_entropy_two_uniform_shuffles(spark):
@@ -600,5 +592,4 @@ def test_cdx_roundtrip_is_shuffle_free(spark):
     from webfilter.entry_queries import q_cdx_roundtrip
 
     plan = formatted(q_cdx_roundtrip(spark, SF))
-    body = plan.split("== Physical Plan ==")[1]
-    assert "Exchange" not in body, plan
+    assert nodes(plan, r"\w*Exchange") == 0, plan

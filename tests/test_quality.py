@@ -110,7 +110,7 @@ def test_pipeline_quality_gate_optional(spark):
 
 
 def test_und_threshold_follows_config(spark):
-    """The 'und' rewrite threshold is RuleConfig.min_langid_conf, not
+    """The 'und' rewrite threshold is rules.MIN_LANGID_CONF, not
     a hardcoded 0.5 (code-review r4c6 finding #2): at a configured
     floor of 0.0 no prediction is rewritten to 'und' by confidence."""
     from webfilter import scoring
@@ -229,6 +229,5 @@ def test_benchmark_imported_names_are_pinned():
     for fn in (scoring.with_extract_scores_scrub, scoring.with_extract_and_scores):
         params = inspect.signature(fn).parameters
         assert [(p.name, p.default) for p in params.values()] == [
-            ("df", inspect.Parameter.empty), ("html_col", "html"),
-            ("und_threshold", 0.5),
+            ("df", inspect.Parameter.empty), ("und_threshold", 0.5),
         ]

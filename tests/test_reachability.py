@@ -53,7 +53,7 @@ KEEP: dict[str, str] = {
     "boilerplate.final_classes_col": "tests/test_boilerplate.py map-vs-window reference",
     "caching.cached_count": "tests/test_advice_r5.py cache-leak regression probe",
     "dq.refresh": "tests/test_dq.py differential refresh (ICDE 2019), "
-    "which ROADMAP Direction 2 builds on",
+    'which the ROADMAP item "Fold the dq scalars into the audit" builds on',
 }
 
 

@@ -121,13 +121,8 @@ def _sep_pattern(sep: str) -> str:
     return "\\Q" + sep + "\\E"
 
 
-def justext_blocks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """Classify every ``sep``-separated block of ``text_col``.
+def justext_blocks(df: DataFrame, sep: str = "\n") -> DataFrame:
+    """Classify every ``sep``-separated block of ``text``.
 
     Returns one row per block: (id, block_id, n_chars, n_tokens,
     link_density, stop_density, cls_raw, cls_final). ``cls_raw`` is
@@ -137,7 +132,7 @@ def justext_blocks(
     either side (within the document) is good, with document edges
     counting as bad (jusText's edge convention).
 
-    One hash shuffle on ``id_col``; the preceding- and following-
+    One hash shuffle on ``doc_id``; the preceding- and following-
     frame windows share its partitioning and sort order, so Catalyst
     emits a single Exchange for both.
 
@@ -146,14 +141,14 @@ def justext_blocks(
     as n_blocks=0, the same convention as the dedup signature
     tables."""
     blk = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
-            F.split(F.col(text_col), _sep_pattern(sep))
+            F.split(F.col("text"), _sep_pattern(sep))
         ).alias("block_id", "_line"),
     )
     feats = block_features(F.col("_line"))
     blk = blk.select(
-        id_col,
+        "doc_id",
         "block_id",
         *[c.alias(n) for n, c in feats.items()],
     ).withColumn(
@@ -162,7 +157,7 @@ def justext_blocks(
             F.col("n_chars"), F.col("link_density"), F.col("stop_density")
         ),
     )
-    w = Window.partitionBy(id_col).orderBy("block_id")
+    w = Window.partitionBy("doc_id").orderBy("block_id")
     edge = F.when(F.col("cls_raw").isin("good", "bad"), F.col("cls_raw"))
     prev_ctx = F.last(edge, ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
@@ -229,11 +224,11 @@ def _final_from_codes(codes: Column) -> Column:
     )
 
 
-def final_classes_col(text: Column, sep: str = "\n") -> Column:
+def final_classes_col(text: Column) -> Column:
     """Kept as the class-level reference tests/test_boilerplate.py
     compares with the window form.
 
-    Array of final good/bad classes for the ``sep``-separated
+    Array of final good/bad classes for the newline-separated
     blocks of ``text`` — the MAP-ONLY form of the jusText context
     pass (with_boilerplate_removed stages the same pass). The window form (justext_blocks) shuffles once on doc_id
     because its output is per-block rows; when the consumer only
@@ -242,7 +237,7 @@ def final_classes_col(text: Column, sep: str = "\n") -> Column:
     array), so boilerplate removal composes into the filter pipeline
     WITHOUT adding an Exchange. Equality with the window form is
     pytest-proven block-for-block."""
-    blocks = F.split(text, _sep_pattern(sep))
+    blocks = F.split(text, _sep_pattern("\n"))
     return _final_from_codes(F.transform(blocks, _raw_class_of_block))
 
 

@@ -24,28 +24,26 @@ TARGET_CHARS = 500     # reference new_after_n_chars
 MAX_CHARS = 4000       # reference max_characters
 
 
-def fixed_chunks_col(text: Column, size: int = TARGET_CHARS, min_chars: int = MIN_CHUNK_CHARS) -> Column:
+def fixed_chunks_col(text: Column) -> Column:
     """Non-overlapping fixed-size char windows, short tail dropped by
     the reference's 110-char gate."""
     n = F.length(text)
-    n_chunks = F.greatest(F.ceil(n / F.lit(size)).cast("int"), F.lit(1))
+    n_chunks = F.greatest(F.ceil(n / F.lit(TARGET_CHARS)).cast("int"), F.lit(1))
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.substring(text, i * size + 1, size),
+        lambda i: F.substring(text, i * TARGET_CHARS + 1, TARGET_CHARS),
     )
-    return F.filter(chunks, lambda c: F.length(c) >= min_chars)
+    return F.filter(chunks, lambda c: F.length(c) >= MIN_CHUNK_CHARS)
 
 
-def explode_chunks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def explode_chunks(df: DataFrame) -> DataFrame:
     """1 doc -> N (pos, chunk) rows with the reference's concat id."""
     return (
         df.select(
-            F.col(id_col),
-            F.posexplode(fixed_chunks_col(F.col(text_col))).alias("pos", "chunk"),
+            F.col("doc_id"),
+            F.posexplode(fixed_chunks_col(F.col("text"))).alias("pos", "chunk"),
         )
-        .withColumn("chunk_id", F.concat_ws("-", id_col, "pos"))
+        .withColumn("chunk_id", F.concat_ws("-", "doc_id", "pos"))
     )
 
 
@@ -83,13 +81,11 @@ def paragraph_chunks_udf(text: pd.Series) -> pd.Series:
     return text.fillna("").map(pack)
 
 
-def explode_paragraph_chunks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def explode_paragraph_chunks(df: DataFrame) -> DataFrame:
     return (
         df.select(
-            F.col(id_col),
-            F.posexplode(paragraph_chunks_udf(F.col(text_col))).alias("pos", "chunk"),
+            F.col("doc_id"),
+            F.posexplode(paragraph_chunks_udf(F.col("text"))).alias("pos", "chunk"),
         )
-        .withColumn("chunk_id", F.concat_ws("-", id_col, "pos"))
+        .withColumn("chunk_id", F.concat_ws("-", "doc_id", "pos"))
     )

@@ -183,8 +183,6 @@ def kmeans_fit(
     dim: int,
     k: int = 8,
     iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[np.ndarray, Callable[[Column], Column]]:
     """Distributed float Lloyd's. Returns (centers ndarray [k, dim],
     assign) where `assign(col)` is a map-side Column assigning any
@@ -207,20 +205,20 @@ def kmeans_fit(
     # does this)
     from .dedup import _persist
 
-    df = _persist(df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull()))
+    df = _persist(df.select("vec_id", "embedding").filter(F.col("embedding").isNotNull()))
     init = (
-        df.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
+        df.select(F.col("embedding"), F.xxhash64(F.col("vec_id")).alias("_h"))
         .orderBy("_h")
         .limit(k)
         .collect()
     )
     centers = np.array([list(r[0]) for r in init], dtype=np.float64)
     k = len(centers)
-    sums = [F.sum(F.col(vec_col)[i]).alias(f"s{i}") for i in range(dim)]
+    sums = [F.sum(F.col("embedding")[i]).alias(f"s{i}") for i in range(dim)]
     for _ in range(iters):
         asg = df.select(
-            assign_col(F.col(vec_col), centers.tolist()).alias("cluster"),
-            vec_col,
+            assign_col(F.col("embedding"), centers.tolist()).alias("cluster"),
+            "embedding",
         )
         rows = asg.groupBy("cluster").agg(F.count("*").alias("n"), *sums).collect()
         for r in rows:  # <= k rows: bounded driver collect
@@ -354,8 +352,6 @@ def kmeans_exact_centroids(
     df: DataFrame,
     iters: int = 2,
     scale: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     init_ids: int = 8,
 ) -> tuple[DataFrame, list[tuple[int, list[int], int]]]:
     """Exact-arithmetic Lloyd's: `iters` assign+update rounds from the
@@ -367,8 +363,8 @@ def kmeans_exact_centroids(
     partial-agg shuffle whose result (<= k rows) is collected to the
     driver to build the next round's literal centroids — the bounded-
     iterative pattern shared with graph.pagerank."""
-    qdf = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), quantized_vec(F.col(vec_col), scale).alias("qv")
+    qdf = df.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("_id"), quantized_vec(F.col("embedding"), scale).alias("qv")
     )
     # every training round (and the caller's final assignment) scans
     # this frame — persist once so quantization runs one pass, not
@@ -386,7 +382,7 @@ def kmeans_exact_centroids(
     cents = [(int(r["_id"]), [int(x) for x in r["qv"]], 1) for r in init]
     if not cents:
         raise ValueError(
-            f"no rows with {id_col} < init_ids={init_ids} — exact k-means "
+            f"no rows with vec_id < init_ids={init_ids} — exact k-means "
             "init requires small sequential integer ids covering "
             "0..init_ids-1 (code-review r4c7 finding #7)"
         )
@@ -416,34 +412,23 @@ def kmeans_exact_assignments(
     df: DataFrame,
     iters: int = 2,
     scale: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     init_ids: int = 8,
 ) -> DataFrame:
     """Final (id, cluster) assignment against the trained exact
     centroids (see kmeans_exact_centroids)."""
-    qdf, cents = kmeans_exact_centroids(
-        df, iters, scale, vec_col, id_col, init_ids
-    )
+    qdf, cents = kmeans_exact_centroids(df, iters, scale, init_ids)
     return qdf.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("vec_id"),
         exact_assign_udf(cents)(F.col("qv"))["cluster"].alias("cluster"),
     )
 
 
-def kmeans_exact(
-    df: DataFrame,
-    iters: int = 2,
-    scale: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    init_ids: int = 8,
-) -> DataFrame:
+def kmeans_exact(df: DataFrame, iters: int = 2) -> DataFrame:
     """`kmeans_exact_assignments` + per-cluster size (one window)."""
-    asg = kmeans_exact_assignments(df, iters, scale, vec_col, id_col, init_ids)
+    asg = kmeans_exact_assignments(df, iters)
     w = Window.partitionBy("cluster")
     return asg.select(
-        id_col, "cluster", F.count("*").over(w).alias("cluster_size")
+        "vec_id", "cluster", F.count("*").over(w).alias("cluster_size")
     )
 
 
@@ -453,8 +438,6 @@ def semdedup_pairs_scaled(
     tau: float = 0.9,
     target_cluster: int = 256,
     iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) with the cluster COUNT scaled to
     the corpus: k = ceil(n / target_cluster), so expected cluster size
@@ -484,17 +467,17 @@ def semdedup_pairs_scaled(
     the quadratic term at scale (see inline comment)."""
     import math
 
-    src = df.filter(F.col(vec_col).isNotNull())
+    src = df.filter(F.col("embedding").isNotNull())
     n = src.count()
     if n == 0:
         return src.select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id"),
             F.lit(0).cast("bigint").alias("cluster"),
         ).limit(0)
     k = max(8, math.ceil(n / target_cluster))
     norm = F.sqrt(
         F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x * x),
+            F.transform(F.col("embedding"), lambda x: x * x),
             F.lit(0.0),
             lambda a, x: a + x,
         )
@@ -502,16 +485,15 @@ def semdedup_pairs_scaled(
     if k <= 32:
         # flat Lloyd: assignment is k literal sq-dist exprs per row —
         # fine while k is small
-        centers, assign = kmeans_fit(src, dim, k=k, iters=iters,
-                                     vec_col=vec_col, id_col=id_col)
+        centers, assign = kmeans_fit(src, dim, k=k, iters=iters)
         dists = F.array(
-            *[_sq_dist_lit(F.col(vec_col), list(c)) for c in centers]
+            *[_sq_dist_lit(F.col("embedding"), list(c)) for c in centers]
         )
         asg = src.select(
-            F.col(id_col).alias("vec_id"),
-            assign(F.col(vec_col)).alias("cluster"),
+            F.col("vec_id"),
+            assign(F.col("embedding")).alias("cluster"),
             F.array_min(dists).alias("cdist"),
-            F.col(vec_col).alias("v"),
+            F.col("embedding").alias("v"),
             norm.alias("vn"),
         ).filter(F.col("vn") > 0)
     else:
@@ -530,13 +512,12 @@ def semdedup_pairs_scaled(
 
         k1 = max(2, math.ceil(math.sqrt(k)))
         k2 = max(1, math.ceil(k / k1))
-        centers, assign = kmeans_fit(src, dim, k=k1, iters=iters,
-                                     vec_col=vec_col, id_col=id_col)
+        centers, assign = kmeans_fit(src, dim, k=k1, iters=iters)
         coarse = _persist(src.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id"),
+            F.col("embedding").alias("v"),
             norm.alias("vn"),
-            assign(F.col(vec_col)).alias("coarse"),
+            assign(F.col("embedding")).alias("coarse"),
         ).filter(F.col("vn") > 0))
         w = Window.partitionBy("coarse").orderBy(
             F.xxhash64(F.col("vec_id")), F.col("vec_id")

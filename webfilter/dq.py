@@ -218,9 +218,9 @@ def refresh(
     df_changed: DataFrame,
     constraints: list[Constraint],
     changed: list,
-    part_col: str = "bucket_id",
 ) -> tuple[DataFrame, DataFrame]:
-    """Kept for the ICDE 2019 differential refresh that ROADMAP Direction 2 builds on.
+    """Kept for the ICDE 2019 differential refresh that the ROADMAP
+    item "Fold the dq scalars into the audit" builds on.
 
     Differential update: recompute state ONLY for the buckets in
     ``changed`` (from ``df_changed``, which must hold exactly those
@@ -241,9 +241,7 @@ def refresh(
         return F.coalesce(m, F.lit(False))
 
     new_scalars, new_regs = bucket_state(
-        df_changed.filter(_in_changed(F.col(part_col))),
-        constraints,
-        part_col,
+        df_changed.filter(_in_changed(F.col("bucket_id"))), constraints
     )
     keep = ~_in_changed(F.col("part"))
     return (
@@ -255,13 +253,12 @@ def refresh(
 def dedupe_state_runs(
     scalars: DataFrame,
     regs: DataFrame,
-    order_cols: tuple[str, ...] = ("processed_at", "run_id"),
 ) -> tuple[DataFrame, DataFrame]:
     """Crash-retry tolerance for BATCH state accumulation: a run that
     crashed after persisting a bucket's state but before marking the
     bucket done gets that bucket reprocessed under a new run_id, so
     the state tables can hold two rows for one part.  Keep only the
-    NEWEST run's rows per part (``order_cols`` descending, run_id as
+    NEWEST run's rows per part (processed_at descending, run_id as
     the deterministic tiebreak) — sound because batch runs recompute
     a bucket's state WHOLE, never partially.
 
@@ -272,7 +269,7 @@ def dedupe_state_runs(
     from pyspark.sql import Window
 
     w = Window.partitionBy("part").orderBy(
-        *[F.col(c).desc() for c in order_cols]
+        F.col("processed_at").desc(), F.col("run_id").desc()
     )
     scal = (
         scalars.withColumn("_rn", F.row_number().over(w))

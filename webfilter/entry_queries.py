@@ -388,7 +388,7 @@ def q_allpairs_jaccard(spark, sf_dir):
     from .dedup import allpairs_jaccard_pairs
 
     docs = _docs(spark, sf_dir).filter(F.size(tokens_col(F.col("text"))) > 0)
-    return allpairs_jaccard_pairs(docs, k=3, threshold=0.5).select(
+    return allpairs_jaccard_pairs(docs).select(
         "id_a", "id_b", r6(F.col("jaccard")).alias("jaccard")
     )
 
@@ -433,9 +433,7 @@ def q_minhash_md5(spark, sf_dir):
         return md5_prefix_hash(F.concat_ws("|", s, F.lit(str(j))))
 
     sig = minhash_signature_df(docs, k=3, n_hashes=16, hash_fn=seed_hash)
-    pairs = lsh_candidate_pairs(
-        sig, n_bands=4, rows_per_band=4, band_hash_fn=md5_prefix_hash
-    )
+    pairs = lsh_candidate_pairs(sig, n_bands=4, band_hash_fn=md5_prefix_hash)
     return jaccard_verify(docs, pairs, k=3, threshold=0.6).select(
         "id_a", "id_b", r6(F.col("jaccard")).alias("jaccard")
     )
@@ -558,28 +556,6 @@ SELECT query_id, vec_id, round(cos, 6) AS cosine, rank::INT AS rank
 FROM r WHERE rank <= 3
 """
 
-
-# ------------------------------- model-based ops (no SQL oracle)
-
-
-# Exact replay of chunking.paragraph_chunks_udf's greedy packing
-# (TARGET 500 / MAX 4000 / MIN 110 — reference 04:59-79 params):
-# items = paragraphs hard-split into 4000-char forced heads + a normal
-# tail; the recursive fold carries cur (NULL == empty list; otherwise
-# the '\n'-joined current chunk, so cur_len == length(cur)+1) and the
-# emitted chunk list. Flush rules mirror the UDF line for line.
-
-
-# DuckDB replay of the winnowing selection: same tokenization
-# (trim/lower/split on whitespace), same k=5-gram md5-prefix hash,
-# same window=4 sliding min, same distinct+sort. List slices in
-# DuckDB are 1-based END-INCLUSIVE, so toks[i:i+4] is 5 tokens.
-
-
-# ---------------------------------------------- training-prep operators
-# (webfilter/trainprep.py — the post-filter stages of a pretraining
-# pipeline: decontamination, vocabulary heavy hitters, bloom-routed
-# frontier anti-join, sequence packing, dataset splits)
 
 def q_agg_lang_source(spark, sf_dir):
     return (
@@ -938,7 +914,7 @@ FROM range(200) AS t(i)
 """
 
 
-def _contrast_fixture(spark, n: int = 100):
+def _contrast_fixture(spark):
     """Deterministic (doc_id, text_in, text_gib) pairs: text_in draws
     from the English model vocabulary, text_gib is a consonant-soup
     LCG stream sharing no vocabulary — the behavioral-contrast
@@ -965,7 +941,7 @@ def _contrast_fixture(spark, n: int = 100):
         (i,
          " ".join(words[(i * 7 + j) % nw] for j in range(40)),
          gib(i))
-        for i in range(n)
+        for i in range(100)
     ]
     return spark.createDataFrame(
         rows, "doc_id long, text_in string, text_gib string"
@@ -1655,7 +1631,7 @@ def q_dup_ngram_fraction(spark, sf_dir):
     from .textstats import dup_ngram_fraction_col
 
     return _docs(spark, sf_dir).select(
-        "doc_id", r6(dup_ngram_fraction_col(F.col("text"), 2)).alias("dup_2gram_frac")
+        "doc_id", r6(dup_ngram_fraction_col(F.col("text"))).alias("dup_2gram_frac")
     )
 
 
@@ -2146,7 +2122,7 @@ def q_hll_distinct_terms(spark, sf_dir):
         .select("lang", F.explode(shingles3_lower(F.col("text"))).alias("tok"))
     )
     est = hll_estimate(
-        hll_registers(docs, text_col="text", group_col="lang"),
+        hll_registers(docs),
         group_col="lang",
         with_raw=True,
     )
@@ -2233,7 +2209,7 @@ def q_cms_term_counts(spark, sf_dir):
             ) % 512,
         )
     ).alias("r", "col")
-    cells = cms_cells(docs, d=4, w=512)
+    cells = cms_cells(docs)
     top = (
         e.groupBy("tok")
         .agg(F.count("*").alias("exact_n"))
@@ -5813,7 +5789,7 @@ def q_graph_components(spark, sf_dir):
         (cls + ((F.col("user_id") + F.col("event_id")) % 10) * 6).alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
     universe = spark.range(60).select(F.col("id").alias("node"))
-    return connected_components_bounded(edges, iters=10, nodes=universe)
+    return connected_components_bounded(edges, nodes=universe)
 
 
 SQL_GRAPH_COMPONENTS = """
@@ -6141,7 +6117,7 @@ def q_dsir_scores(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     staged = docs.withColumn("is_en", F.col("lang") == "en")
-    out = dsir_scores(staged, "is_en", n_buckets=512, alpha=0.5)
+    out = dsir_scores(staged, "is_en", n_buckets=512)
     return out.select(
         "doc_id",
         "n_toks",
@@ -6189,8 +6165,8 @@ def q_dsir_gumbel_sample(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     staged = docs.withColumn("is_en", F.col("lang") == "en")
-    scored = dsir_scores(staged, "is_en", n_buckets=512, alpha=0.5)
-    out = gumbel_topk_sample(scored, "llr_sum", k=50, temperature=1.0)
+    scored = dsir_scores(staged, "is_en", n_buckets=512)
+    out = gumbel_topk_sample(scored, "llr_sum", k=50)
     return out.select("doc_id", r6(F.col("sample_key")).alias("sample_key"))
 
 
@@ -6981,7 +6957,7 @@ def q_kmeans_assign(spark, sf_dir):
     bounded per-iteration driver collect (pagerank's exception)."""
     from .clustering import kmeans_exact
 
-    return kmeans_exact(_emb(spark, sf_dir), iters=2, scale=100, init_ids=8)
+    return kmeans_exact(_emb(spark, sf_dir), iters=2)
 
 
 def _kmeans_sql_round(i: int, prev: str) -> str:

@@ -27,9 +27,6 @@ from pyspark.sql import functions as F
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
     iters: int = 12,
     checkpoint_every: int = 4,
     n_nodes: int | None = None,
@@ -67,11 +64,11 @@ def pagerank(
     already-normalized weights: no action runs here to normalize
     (the construction-is-plan-only rule).
     """
-    d = float(damping)
+    d = 0.85  # damping
     if nodes is None:
         nodes = (
-            edges.select(F.col(src).alias("node"))
-            .union(edges.select(F.col(dst).alias("node")))
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
             .distinct()
         )
     else:
@@ -85,7 +82,7 @@ def pagerank(
         # the remaining ones (a src with only out-of-universe links
         # correctly becomes dangling).
         edges = edges.join(
-            nodes.select(F.col("node").alias(dst)), dst, "left_semi"
+            nodes.select(F.col("node").alias("dst")), "dst", "left_semi"
         )
     # deferred: the teleport branch never uses n, and counting nodes
     # at construction is a full distinct-node job (code-review r4c4
@@ -110,7 +107,7 @@ def pagerank(
     # and rank outputs are consumed at r6 rounding (oracle-verified
     # unchanged at every sf; see OPTIMIZATION_r06.md).
     weights = (
-        edges.groupBy(F.col(src).alias("node"), F.col(dst).alias("dst"))
+        edges.groupBy(F.col("src").alias("node"), "dst")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
     out_deg = weights.groupBy("node").agg(F.sum("w").alias("deg"))
@@ -202,9 +199,6 @@ def pagerank(
 
 def host_pagerank_from_pages(
     pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    damping: float = 0.85,
     iters: int = 12,
 ) -> DataFrame:
     """End-to-end host authority from a raw pages corpus: extract
@@ -216,12 +210,12 @@ def host_pagerank_from_pages(
 
     from .urls import host_col, outlink_urls_col
 
-    html_as_str = F.col(html_col)
-    if dict(pages.dtypes).get(html_col) == "binary":
-        html_as_str = F.col(html_col).cast(StringType())
+    html_as_str = F.col("html")
+    if dict(pages.dtypes).get("html") == "binary":
+        html_as_str = F.col("html").cast(StringType())
     edges = (
         pages.select(
-            host_col(F.col(url_col)).alias("src"),
+            host_col(F.col("url")).alias("src"),
             F.explode(outlink_urls_col(html_as_str)).alias("href"),
         )
         .select("src", host_col(F.col("href")).alias("dst"))
@@ -233,20 +227,16 @@ def host_pagerank_from_pages(
         # -> ~19 s on the 2000-doc host-prior job)
         .localCheckpoint(eager=False)
     )
-    return pagerank(edges, damping=damping, iters=iters)
+    return pagerank(edges, iters=iters)
 
 
 def connected_components_bounded(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 10,
-    nodes: DataFrame | None = None,
+    edges: DataFrame, nodes: DataFrame | None = None
 ) -> DataFrame:
     """(id, component) by FIXED-round min-label propagation —
-    component = min node id reachable within ``iters`` hops, which is
-    the exact connected component whenever ``iters`` >= the graph
-    diameter (the caller's contract, like ``pagerank(iters=...)``).
+    component = min node id reachable within 10 hops, which is the
+    exact connected component whenever the graph diameter is <= 10
+    (the caller's contract, like ``pagerank(iters=...)``).
 
     The registry-safe sibling of ``dedup.connected_components``: no
     convergence probe, so construction stays action-free (only the
@@ -265,9 +255,9 @@ def connected_components_bounded(
     ``nodes`` rule).
     """
     und = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .unionByName(
-            edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
         .localCheckpoint(eager=False)
@@ -277,7 +267,7 @@ def connected_components_bounded(
     else:
         labels = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
     labels = labels.withColumn("label", F.col("id"))
-    for _ in range(iters):
+    for _ in range(10):
         msgs = und.join(
             labels.withColumnRenamed("id", "src"), "src"
         ).select(F.col("dst").alias("id"), "label")
@@ -290,9 +280,7 @@ def connected_components_bounded(
     return labels.select("id", F.col("label").alias("component"))
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts via degree-ordered edge orientation
     (the compact-forward / Latapy algorithm, the shape GraphX's
     TriangleCount and Cohen's MapReduce formulation use).
@@ -313,7 +301,7 @@ def triangle_count(
     they are canonicalized away first.
     """
     und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")

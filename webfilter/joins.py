@@ -20,11 +20,10 @@ def asof_join(
     by: str,
     ts: str = "ts",
     right_cols: list[str] | None = None,
-    suffix: str = "_r",
 ) -> DataFrame:
     """For every left row, attach the most recent right row with
     right.ts <= left.ts within the same ``by`` key (NULLs when no
-    right row precedes).
+    right row precedes); right columns come out suffixed ``_r``.
 
     Implementation: union both sides with a side tag, one window per
     by-key ordered by (ts, side) carrying last(right ROW STRUCT,
@@ -71,5 +70,5 @@ def asof_join(
     out = carried.filter(F.col("_side") == 1)
     return out.select(
         *[F.col("_lrow").getField(c).alias(c) for c in left.columns],
-        *[F.col("_rrow").getField(c).alias(f"{c}{suffix}") for c in right_cols],
+        *[F.col("_rrow").getField(c).alias(f"{c}_r") for c in right_cols],
     )

@@ -21,6 +21,18 @@ WS_RE = re.compile(r"\s+", re.ASCII)
 
 _STOPSET = frozenset(EN_STOPWORDS)
 
+# The thresholds, kept apart from rules.py's on purpose: this mirror is
+# the independent oracle the golden labels come from.
+MIN_WORDS = 50
+MAX_WORDS = 100_000
+MIN_CHARS = 110
+MEAN_WORD_LEN_LO = 2.0
+MEAN_WORD_LEN_HI = 12.0
+MAX_SYMBOL_RATIO = 0.10
+MIN_DISTINCT_STOPWORDS = 2
+MIN_ALPHA_TOKEN_RATIO = 0.70
+MAX_DUP_LINE_RATIO = 0.30
+
 
 def stats(text: str) -> dict[str, float]:
     # maximal non-whitespace runs of the RAW text (empties dropped) —
@@ -50,34 +62,23 @@ def stats(text: str) -> dict[str, float]:
     }
 
 
-def heuristic_reasons(
-    text: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_chars: int = 110,
-    mean_word_len_lo: float = 2.0,
-    mean_word_len_hi: float = 12.0,
-    max_symbol_ratio: float = 0.10,
-    min_distinct_stopwords: int = 2,
-    min_alpha_token_ratio: float = 0.70,
-    max_dup_line_ratio: float = 0.30,
-) -> list[str]:
+def heuristic_reasons(text: str) -> list[str]:
     s = stats(text)
     reasons = []
-    if not s["n_words"] >= min_words:
+    if not s["n_words"] >= MIN_WORDS:
         reasons.append("min_words")
-    if not s["n_words"] <= max_words:
+    if not s["n_words"] <= MAX_WORDS:
         reasons.append("max_words")
-    if not s["n_chars"] >= min_chars:
+    if not s["n_chars"] >= MIN_CHARS:
         reasons.append("min_chars")
-    if not (mean_word_len_lo <= s["mean_word_len"] <= mean_word_len_hi):
+    if not (MEAN_WORD_LEN_LO <= s["mean_word_len"] <= MEAN_WORD_LEN_HI):
         reasons.append("mean_word_len")
-    if not s["symbol_ratio"] <= max_symbol_ratio:
+    if not s["symbol_ratio"] <= MAX_SYMBOL_RATIO:
         reasons.append("symbol_ratio")
-    if not s["n_stopwords"] >= min_distinct_stopwords:
+    if not s["n_stopwords"] >= MIN_DISTINCT_STOPWORDS:
         reasons.append("stopwords")
-    if not s["alpha_ratio"] >= min_alpha_token_ratio:
+    if not s["alpha_ratio"] >= MIN_ALPHA_TOKEN_RATIO:
         reasons.append("alpha_ratio")
-    if not s["dup_line_ratio"] <= max_dup_line_ratio:
+    if not s["dup_line_ratio"] <= MAX_DUP_LINE_RATIO:
         reasons.append("dup_lines")
     return reasons

@@ -586,14 +586,14 @@ def make_wav_adpcm(
     return encode_wav_adpcm(src, sample_rate, block_align)
 
 
-def encode_wav_pcm16(samples, sample_rate: int = 8000) -> bytes:
-    """Arbitrary int16 samples -> valid mono PCM16 WAV bytes
+def encode_wav_pcm16(samples) -> bytes:
+    """Arbitrary int16 samples -> valid mono 8 kHz PCM16 WAV bytes
     (deterministic; the encode twin of decode_wav_samples' PCM
     path)."""
     import numpy as np
 
     data = np.asarray(samples, dtype=np.int16).reshape(-1).tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -986,20 +986,19 @@ def make_avi_mjpeg(
     n_frames: int,
     us_per_frame: int = 100_000,
     seed: int = 0,
-    flat_q: bool = True,
 ) -> tuple:
     """Valid RIFF-AVI with MJPEG '00dc' frames (each a real baseline
     JPEG from encode_jpeg_gray) + idx1 index — the deterministic
     ground truth for parse_avi/decode_avi_frames. Returns (avi_bytes,
-    [frame pixel arrays]); flat_q keeps the per-frame round-trip
-    error at rounding-only."""
+    [frame pixel arrays]); flat quantization keeps the per-frame
+    round-trip error at rounding-only."""
 
     def chunk(tag: bytes, payload: bytes) -> bytes:
         pad = b"\x00" if len(payload) & 1 else b""
         return tag + struct.pack("<I", len(payload)) + payload + pad
 
     pixels = [_synth_pixels(width, height, seed + 31 * k) for k in range(n_frames)]
-    jpegs = [encode_jpeg_gray(p, flat_q=flat_q) for p in pixels]
+    jpegs = [encode_jpeg_gray(p, flat_q=True) for p in pixels]
     bufsz = max(map(len, jpegs), default=0)
     avih = chunk(
         b"avih",

@@ -57,8 +57,9 @@ def _training_set() -> tuple[np.ndarray, np.ndarray]:
 
 
 @functools.cache
-def _train(iters: int = 300, lr: float = 4.0, l2: float = 1e-4) -> tuple[np.ndarray, float]:
-    """Full-batch logistic regression GD from a zero init —
+def _train() -> tuple[np.ndarray, float]:
+    """Full-batch logistic regression GD from a zero init (300 steps,
+    learning rate 4.0, L2 1e-4) —
     deterministic given the corpora (no shuffling, no RNG).  Trained
     once per process on first scoring call (ADVICE r3: import-time
     training added ~fixed startup latency to every executor Python
@@ -69,11 +70,11 @@ def _train(iters: int = 300, lr: float = 4.0, l2: float = 1e-4) -> tuple[np.ndar
     w = np.zeros(DIM, dtype=np.float64)
     b = 0.0
     m = len(y)
-    for _ in range(iters):
+    for _ in range(300):
         p = 1.0 / (1.0 + np.exp(-(X @ w + b)))
         g = p - y
-        w -= lr * ((X.T @ g) / m + l2 * w)
-        b -= lr * float(g.mean())
+        w -= 4.0 * ((X.T @ g) / m + 1e-4 * w)
+        b -= 4.0 * float(g.mean())
     return w.astype(np.float32).astype(np.float64), float(b)
 
 

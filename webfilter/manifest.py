@@ -61,15 +61,14 @@ class Manifest:
     strictly-increasing per-manifest counter so two marks written in
     the same microsecond still order deterministically."""
 
-    def __init__(self, catalog: ParquetCatalog, name: str = "manifest"):
+    def __init__(self, catalog: ParquetCatalog):
         self.catalog = catalog
-        self.name = name
         self._state_cache: dict[tuple[str, int], tuple[str, int, str]] | None = None
         self._max_seq = 0
 
     @property
     def _dir(self) -> str:
-        return self.catalog.path(self.name)
+        return self.catalog.path("manifest")
 
     def _read_state(self) -> dict[tuple[str, int], tuple[str, int, str]]:
         """(stage, bucket_id) -> (status, attempt, run_id), latest row

@@ -23,5 +23,5 @@ def bucket_col(url: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(url), F.lit(n_buckets)).cast("int")
 
 
-def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
-    return df.withColumn("bucket_id", bucket_col(F.col(url_col), n_buckets))
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn("bucket_id", bucket_col(F.col("url"), n_buckets))

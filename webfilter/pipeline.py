@@ -99,7 +99,7 @@ def filtered_frame(
         from .urls import canonical_dedup
 
         pages = (
-            canonical_dedup(pages, url_col="url", order_col="warc_ts", descending=True)
+            canonical_dedup(pages, order_col="warc_ts", descending=True)
             .filter(F.col("canon_rep"))
             .drop("canon_url", "canon_rep")
         )
@@ -137,7 +137,7 @@ def filtered_frame(
         src,
         extract=not pre_extracted,
         scrub=not boilerplate,
-        und_threshold=cfg.min_langid_conf,
+        und_threshold=rules.MIN_LANGID_CONF,
     )
     if pre_extracted:
         df = df.withColumn("title", F.lit(None).cast("string")).withColumn(
@@ -156,9 +156,7 @@ def filtered_frame(
         from .graph import host_pagerank_from_pages
 
         ranks = host_pagerank_from_pages(
-            prior_pages if prior_pages is not None else pages,
-            html_col="html",
-            url_col="url",
+            prior_pages if prior_pages is not None else pages
         )
         hosts = ranks.select(
             F.col("node").alias("_wf_host"), F.col("rank").alias("host_rank")
@@ -212,7 +210,7 @@ def filtered_frame(
         from .boilerplate import with_boilerplate_removed
 
         df = with_boilerplate_removed(df, "text")
-    df = rules.with_heuristics(df, cfg=cfg)
+    df = rules.with_heuristics(df)
     df = rules.model_rule_columns(df, cfg)
     df = rules.with_decision(df, rules.rule_names_for(cfg))
     if not boilerplate:

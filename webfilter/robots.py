@@ -40,14 +40,12 @@ from pyspark.sql import functions as F
 RULES_COLS = ["host", "group_id", "agent", "path", "allow"]
 
 
-def parse_robots(
-    robots: DataFrame, host_col: str = "host", text_col: str = "robots_txt"
-) -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, group_id, agent, path, allow).
     One window shuffle on host; everything else is JVM Column ops."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "raw"),
+        "host",
+        F.posexplode(F.split(F.col("robots_txt"), "\n")).alias("pos", "raw"),
     ).withColumn("line", F.trim(F.regexp_replace("raw", "#.*$", "")))
     directive = F.lower(F.regexp_extract("line", r"^([A-Za-z-]+)\s*:", 1))
     value = F.trim(F.regexp_extract("line", r"^[A-Za-z-]+\s*:(.*)$", 1))
@@ -175,9 +173,7 @@ def allowed_expr(upath: Column, rules_col: Column) -> Column:
     return F.coalesce(best["allow"], F.lit(True))
 
 
-def parse_sitemaps(
-    df: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
-) -> DataFrame:
+def parse_sitemaps(df: DataFrame) -> DataFrame:
     """Sitemap ingestion — the crawl-discovery companion to robots:
     (host, sitemap_xml) -> one row per <url> entry with
     (host, loc, lastmod timestamp, priority double). Uses Spark's
@@ -208,9 +204,9 @@ def parse_sitemaps(
     )
     return (
         df.select(
-            F.col(host_col).alias("host"),
+            "host",
             F.explode_outer(
-                F.from_xml(F.col(xml_col), schema)["url"]
+                F.from_xml(F.col("sitemap_xml"), schema)["url"]
             ).alias("u"),
         )
         .filter(F.col("u.loc").isNotNull())
@@ -247,12 +243,7 @@ def synth_robots_text(source: Column, h: Column) -> Column:
     )
 
 
-def politeness_schedule(
-    df: DataFrame,
-    host_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def politeness_schedule(df: DataFrame) -> DataFrame:
     """Per-host polite fetch scheduling: rank each host's pending
     fetches by a deterministic content-hash priority and space them
     `crawl_delay_s` seconds apart (fetch_offset_s), so no host is
@@ -273,14 +264,14 @@ def politeness_schedule(
     engine, and the scheduler emits offsets, not sleeps, so the
     compute itself never blocks.
     """
-    delay = (F.lit(1) + F.length(F.col(host_col)) % 4).cast("bigint")
-    w = Window.partitionBy(F.col(host_col)).orderBy(
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))), F.col(id_col)
+    delay = (F.lit(1) + F.length(F.col("source")) % 4).cast("bigint")
+    w = Window.partitionBy(F.col("source")).orderBy(
+        F.md5(F.coalesce(F.col("text"), F.lit(""))), F.col("doc_id")
     )
     rn = F.row_number().over(w).cast("bigint")
     return df.select(
-        F.col(id_col),
-        F.col(host_col).alias("host"),
+        F.col("doc_id"),
+        F.col("source").alias("host"),
         rn.alias("fetch_rank"),
         delay.alias("crawl_delay_s"),
         ((rn - F.lit(1)) * delay).alias("fetch_offset_s"),

@@ -17,7 +17,7 @@ webfilter/oracles.py): tokens = regexp-split of trimmed text on
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -26,22 +26,32 @@ from .kernels.corpora import EN_STOPWORDS
 
 SYMBOL_CLASS = r"[#$%^&*|~{}<>=+_\\]"
 
+# The rule thresholds. kernels/heuristics.py keeps its own copy of the
+# heuristic ones: it is the independent oracle the golden labels come
+# from, so tests/test_rules.py checks the two decide alike instead of
+# sharing one definition.
+MIN_WORDS = 50
+MAX_WORDS = 100_000
+MIN_CHARS = 110
+MEAN_WORD_LEN_LO = 2.0
+MEAN_WORD_LEN_HI = 12.0
+MAX_SYMBOL_RATIO = 0.10
+MIN_DISTINCT_STOPWORDS = 2
+MIN_ALPHA_TOKEN_RATIO = 0.70
+MAX_DUP_LINE_RATIO = 0.30
+MAX_PERPLEXITY = 30_000.0
+MIN_LANGID_CONF = 0.50
+KEEP_LANGS = ("en",)
+
 
 @dataclass(frozen=True)
 class RuleConfig:
-    min_words: int = 50
-    max_words: int = 100_000
-    min_chars: int = 110
-    mean_word_len_lo: float = 2.0
-    mean_word_len_hi: float = 12.0
-    max_symbol_ratio: float = 0.10
-    min_distinct_stopwords: int = 2
-    min_alpha_token_ratio: float = 0.70
-    max_dup_line_ratio: float = 0.30
-    max_perplexity: float = 30_000.0
-    min_langid_conf: float = 0.50
-    keep_langs: tuple[str, ...] = ("en",)
-    stopwords: tuple[str, ...] = field(default=EN_STOPWORDS)
+    """The optional gates a run switches on; every other threshold is
+    a module constant."""
+
+    # not a field, since no caller sets it: perfbench/layers.py reads
+    # the langid threshold off DEFAULT_RULES
+    min_langid_conf = MIN_LANGID_CONF
     # optional model-based quality gate (kernels/qualityclf.py);
     # None (default) keeps the classic rule set and golden labels
     min_quality_prob: float | None = None
@@ -122,9 +132,7 @@ def sliding(arr: Column, k: int, combine) -> Column:
     return F.transform(z, lambda s: combine(*[s[f"t{j}"] for j in range(k)]))
 
 
-def with_heuristics(
-    df: DataFrame, text_col: str = "text", cfg: RuleConfig = DEFAULT_RULES
-) -> DataFrame:
+def with_heuristics(df: DataFrame) -> DataFrame:
     """Staged projection: token/line arrays are materialized ONCE and
     stats/rules reference them, instead of one giant projection that
     re-evaluates split(trim(text)) per stat (~15x). Requires
@@ -134,7 +142,7 @@ def with_heuristics(
     Adds the stat columns (n_words, n_chars, mean_word_len,
     symbol_ratio, n_stopwords, alpha_ratio, dup_line_ratio), then the
     rule_<name> booleans."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks, lines = F.col("_toks"), F.col("_lines")
     n_words, n_chars = F.col("n_words"), F.col("n_chars")
     out = (
@@ -151,7 +159,7 @@ def with_heuristics(
                 "n_stopwords": F.size(
                     F.array_intersect(
                         F.transform(toks, F.lower),
-                        F.lit(list(cfg.stopwords)).cast("array<string>"),
+                        F.lit(list(EN_STOPWORDS)).cast("array<string>"),
                     )
                 ).cast("bigint"),
                 "_n_alpha": F.size(F.filter(toks, lambda w: w.rlike("[A-Za-z]"))),
@@ -180,15 +188,15 @@ def with_heuristics(
         )
         .withColumns(
             {
-                "rule_min_words": n_words >= cfg.min_words,
-                "rule_max_words": n_words <= cfg.max_words,
-                "rule_min_chars": n_chars >= cfg.min_chars,
-                "rule_mean_word_len": (F.col("mean_word_len") >= cfg.mean_word_len_lo)
-                & (F.col("mean_word_len") <= cfg.mean_word_len_hi),
-                "rule_symbol_ratio": F.col("symbol_ratio") <= cfg.max_symbol_ratio,
-                "rule_stopwords": F.col("n_stopwords") >= cfg.min_distinct_stopwords,
-                "rule_alpha_ratio": F.col("alpha_ratio") >= cfg.min_alpha_token_ratio,
-                "rule_dup_lines": F.col("dup_line_ratio") <= cfg.max_dup_line_ratio,
+                "rule_min_words": n_words >= MIN_WORDS,
+                "rule_max_words": n_words <= MAX_WORDS,
+                "rule_min_chars": n_chars >= MIN_CHARS,
+                "rule_mean_word_len": (F.col("mean_word_len") >= MEAN_WORD_LEN_LO)
+                & (F.col("mean_word_len") <= MEAN_WORD_LEN_HI),
+                "rule_symbol_ratio": F.col("symbol_ratio") <= MAX_SYMBOL_RATIO,
+                "rule_stopwords": F.col("n_stopwords") >= MIN_DISTINCT_STOPWORDS,
+                "rule_alpha_ratio": F.col("alpha_ratio") >= MIN_ALPHA_TOKEN_RATIO,
+                "rule_dup_lines": F.col("dup_line_ratio") <= MAX_DUP_LINE_RATIO,
             }
         )
         .drop("_toks", "_lines", "_sum_wl", "_n_sym", "_n_alpha", "_n_lines", "_n_dlines")
@@ -200,9 +208,9 @@ def model_rule_columns(df: DataFrame, cfg: RuleConfig = DEFAULT_RULES) -> DataFr
     """Rules over the scoring-stage outputs (langid/conf/perplexity,
     plus the optional quality-classifier gate when configured)."""
     cols = {
-        "rule_lang": F.col("langid").isin(list(cfg.keep_langs)),
-        "rule_langid_conf": F.col("langid_conf") >= cfg.min_langid_conf,
-        "rule_perplexity": F.col("perplexity") <= cfg.max_perplexity,
+        "rule_lang": F.col("langid").isin(list(KEEP_LANGS)),
+        "rule_langid_conf": F.col("langid_conf") >= MIN_LANGID_CONF,
+        "rule_perplexity": F.col("perplexity") <= MAX_PERPLEXITY,
     }
     if cfg.min_quality_prob is not None:
         cols["rule_quality_prob"] = F.col("quality_prob") >= cfg.min_quality_prob
@@ -269,12 +277,9 @@ C4_BOILERPLATE_RE = r"javascript|lorem ipsum|cookie policy|privacy policy|terms 
 C4_TERMINAL_PUNCT_RE = r"""[.!?"']$"""
 
 
-def c4_kept_lines_col(
-    text: Column,
-    min_line_words: int = C4_LINE_MIN_WORDS,
-) -> Column:
+def c4_kept_lines_col(text: Column) -> Column:
     """Array of the lines of ``text`` that survive C4's line rules:
-    terminal punctuation, >= min_line_words whitespace tokens, no
+    terminal punctuation, >= C4_LINE_MIN_WORDS whitespace tokens, no
     boilerplate marker (case-insensitive)."""
     # FULL whitespace trim per line: Spark's trim strips only the
     # space character (measured — see tokens_col), so a CRLF corpus
@@ -288,29 +293,24 @@ def c4_kept_lines_col(
     return F.filter(
         lines,
         lambda l: l.rlike(C4_TERMINAL_PUNCT_RE)
-        & (F.size(F.split(l, r"\s+")) >= min_line_words)
+        & (F.size(F.split(l, r"\s+")) >= C4_LINE_MIN_WORDS)
         & ~F.lower(l).rlike(C4_BOILERPLATE_RE),
     )
 
 
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    min_line_words: int = C4_LINE_MIN_WORDS,
-    min_kept_lines: int = C4_MIN_KEPT_LINES,
-) -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """C4 cleaning as lineage-preserving columns: ``clean_text`` (the
     surviving lines rejoined), ``n_lines`` / ``n_kept_lines``, and
     ``c4_keep`` (enough lines survived AND no '{' on the page —
     C4's code-page drop). Rows are flagged, not dropped; callers
     filter on ``c4_keep``."""
-    t = F.col(text_col)
-    kept = c4_kept_lines_col(t, min_line_words)
+    t = F.col("text")
+    kept = c4_kept_lines_col(t)
     return df.withColumns(
         {
             "n_lines": F.size(F.split(t, "\n")).cast("bigint"),
             "n_kept_lines": F.size(kept).cast("bigint"),
             "clean_text": F.array_join(kept, "\n"),
-            "c4_keep": (F.size(kept) >= min_kept_lines) & ~t.contains("{"),
+            "c4_keep": (F.size(kept) >= C4_MIN_KEPT_LINES) & ~t.contains("{"),
         }
     )

@@ -88,7 +88,7 @@ def with_model_scores(
     pass over ``src_col``. Pre-existing output columns are replaced,
     not duplicated (code-review r4c6 finding #6). Low-confidence
     language ids become 'und' (the fastText convention) as a COLUMN
-    expression, so the threshold follows RuleConfig.min_langid_conf
+    expression, so the threshold follows rules.MIN_LANGID_CONF
     instead of a hardcoded 0.5 (code-review r4c6 finding #2)."""
     names = score_schema(extract, scrub).fieldNames()
     keep = [c for c in df.columns if c not in names]
@@ -107,13 +107,13 @@ extract_score_scrub_udf = make_score_udf(True, True)
 EXTRACT_SCORE_SCRUB_SCHEMA = score_schema(True, True)
 
 
-def with_extract_scores_scrub(df, html_col="html", und_threshold=0.5):
+def with_extract_scores_scrub(df, und_threshold=0.5):
     return with_model_scores(
-        df, html_col, extract=True, scrub=True, und_threshold=und_threshold
+        df, "html", extract=True, scrub=True, und_threshold=und_threshold
     )
 
 
-def with_extract_and_scores(df, html_col="html", und_threshold=0.5):
+def with_extract_and_scores(df, und_threshold=0.5):
     return with_model_scores(
-        df, html_col, extract=True, scrub=False, und_threshold=und_threshold
+        df, "html", extract=True, scrub=False, und_threshold=und_threshold
     )

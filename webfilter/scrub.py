@@ -23,7 +23,7 @@ def scrubbed_col(text: Column) -> Column:
     return out
 
 
-def with_scrubbed(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_scrubbed(df: DataFrame) -> DataFrame:
     """Adds scrubbed_text + pii_found. pii_found is a plain string
     comparison — no per-rule regexp passes — and the audit counts
     pii from it."""
@@ -34,9 +34,9 @@ def with_scrubbed(df: DataFrame, text_col: str = "text") -> DataFrame:
     # finding #4)
     out = df.withColumn(
         "scrubbed_text",
-        F.coalesce(scrubbed_col(F.col(text_col)), F.lit("")),
+        F.coalesce(scrubbed_col(F.col("text")), F.lit("")),
     )
     return out.withColumn(
         "pii_found",
-        F.col("scrubbed_text") != F.coalesce(F.col(text_col), F.lit("")),
+        F.col("scrubbed_text") != F.coalesce(F.col("text"), F.lit("")),
     )

@@ -47,7 +47,7 @@ def norm_col(a: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def with_norm(df: DataFrame) -> DataFrame:
     """Adds vec_n = L2-normalized vector (double[]) so cosine becomes
     a plain dot product downstream.
 
@@ -66,11 +66,11 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     (webfilter.session.get_spark) to keep the stage from re-inlining.
     """
     return (
-        df.withColumn("_wf_norm", norm_col(F.col(vec_col)))
+        df.withColumn("_wf_norm", norm_col(F.col("embedding")))
         .filter(F.col("_wf_norm") > 0)
         .withColumn(
             "vec_n",
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_wf_norm")),
+            F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("_wf_norm")),
         )
         .drop("_wf_norm")
     )
@@ -84,9 +84,6 @@ def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
@@ -94,18 +91,18 @@ def brute_force_topk(
     at scale it is always the small side (a probe set, not the
     corpus). Result: (query_id, vec_id, cosine, rank).
     """
-    corpus = with_norm(emb, vec_col).select(F.col(id_col), F.col("vec_n").alias("c_vec"))
-    probes = with_norm(queries, vec_col).select(
-        F.col(query_id_col), F.col("vec_n").alias("q_vec")
+    corpus = with_norm(emb).select(F.col("vec_id"), F.col("vec_n").alias("c_vec"))
+    probes = with_norm(queries).select(
+        F.col("query_id"), F.col("vec_n").alias("q_vec")
     )
     scored = corpus.join(F.broadcast(probes)).withColumn(
         "cosine", cosine_sim_col(F.col("c_vec"), F.col("q_vec"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -131,22 +128,22 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 0x91A5) -> np.ndarray:
 _PLANE_CACHE: dict = {}  # per python-worker process
 
 
-def _plane_matrix(dim: int, n_planes: int, n_tables: int, seed: int = 0x91A5):
+def _plane_matrix(dim: int, n_planes: int, n_tables: int):
     """(n_tables*n_planes, dim) stacked deterministic hyperplanes —
-    table t uses seed ``seed + 7919*t``, an independent plane set per
+    table t uses seed ``0x91A5 + 7919*t``, an independent plane set per
     table (standard multi-table LSH: OR of tables boosts recall, each
     table stays selective)."""
-    key = (dim, n_planes, n_tables, seed)
+    key = (dim, n_planes, n_tables)
     m = _PLANE_CACHE.get(key)
     if m is None:
         m = np.vstack(
-            [_hyperplanes(dim, n_planes, seed=seed + 7919 * t) for t in range(n_tables)]
+            [_hyperplanes(dim, n_planes, seed=0x91A5 + 7919 * t) for t in range(n_tables)]
         )
         _PLANE_CACHE[key] = m
     return m
 
 
-def bucket_codes_udf(dim: int, n_planes: int, n_tables: int, seed: int = 0x91A5):
+def bucket_codes_udf(dim: int, n_planes: int, n_tables: int):
     """array<float|double> -> array<int>: the n_tables sign-pattern
     bucket codes for one vector, computed as ONE numpy matmul per
     Arrow batch ((batch, dim) @ (dim, n_tables*n_planes)).
@@ -162,7 +159,7 @@ def bucket_codes_udf(dim: int, n_planes: int, n_tables: int, seed: int = 0x91A5)
         raise ValueError("bucket codes are int32: n_planes must be <= 31")
 
     def _fn(vecs):
-        planes = _plane_matrix(dim, n_planes, n_tables, seed)
+        planes = _plane_matrix(dim, n_planes, n_tables)
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         m = np.vstack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
@@ -179,14 +176,11 @@ def bucket_codes_udf(dim: int, n_planes: int, n_tables: int, seed: int = 0x91A5)
 
 def train_ivf_centroids(
     emb: DataFrame,
-    vec_col: str = "embedding",
     n_centroids: int = 64,
     sample_cap: int = 20_000,
-    iters: int = 8,
-    seed: int = 0xC3A7,
     id_col: str = "vec_id",
 ):
-    """Deterministic IVF codebook: Lloyd iterations in numpy over a
+    """Deterministic IVF codebook: 8 Lloyd iterations in numpy over a
     bounded deterministic hash-sample of the corpus (collected to the
     driver — index BUILD is an action by nature; the sample is capped,
     never the corpus). Returns an (n_centroids, dim) float64 matrix of
@@ -201,10 +195,10 @@ def train_ivf_centroids(
     per partition + driver merge), not a full sort. Deterministic:
     hash order + splitmix64 init, no RNG state."""
     sample = (
-        emb.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
+        emb.select(F.col("embedding"), F.xxhash64(F.col(id_col)).alias("_h"))
         .orderBy("_h")
         .limit(sample_cap)
-        .toPandas()[vec_col]
+        .toPandas()["embedding"]
     )
     m = np.vstack(sample.to_numpy()).astype(np.float64)
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
@@ -212,9 +206,9 @@ def train_ivf_centroids(
     # deterministic init: splitmix64-ranked rows
     from .kernels.mix import splitmix64
 
-    x = splitmix64(np.arange(len(m), dtype=np.uint64) + np.uint64(seed))
+    x = splitmix64(np.arange(len(m), dtype=np.uint64) + np.uint64(0xC3A7))
     cents = m[np.argsort(x)[:n_centroids]].copy()
-    for _ in range(iters):
+    for _ in range(8):
         assign = np.argmax(m @ cents.T, axis=1)  # cosine == dot (normalized)
         for c in range(n_centroids):
             pts = m[assign == c]
@@ -251,8 +245,6 @@ def ivf_topk(
     n_centroids: int = 64,
     n_probe: int = 8,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     centroids=None,
 ) -> DataFrame:
     """IVF approximate top-k — the coarse-quantizer scale path next to
@@ -266,26 +258,26 @@ def ivf_topk(
     ``centroids`` matrix to keep query construction action-free; when
     omitted, train_ivf_centroids runs the bounded sample job."""
     if centroids is None:
-        centroids = train_ivf_centroids(emb, vec_col, n_centroids, id_col=id_col)
-    corpus = with_norm(emb, vec_col).select(
+        centroids = train_ivf_centroids(emb, n_centroids, id_col=id_col)
+    corpus = with_norm(emb).select(
         id_col,
         F.col("vec_n").alias("c_vec"),
-        F.explode(_cell_udf(centroids, top=1)(F.col(vec_col))).alias("cell"),
+        F.explode(_cell_udf(centroids, top=1)(F.col("embedding"))).alias("cell"),
     )
-    probes = with_norm(queries, vec_col).select(
-        query_id_col,
+    probes = with_norm(queries).select(
+        "query_id",
         F.col("vec_n").alias("q_vec"),
-        F.explode(_cell_udf(centroids, top=n_probe)(F.col(vec_col))).alias("cell"),
+        F.explode(_cell_udf(centroids, top=n_probe)(F.col("embedding"))).alias("cell"),
     )
     cand = corpus.join(F.broadcast(probes), "cell").select(
-        query_id_col, id_col, "c_vec", "q_vec"
+        "query_id", id_col, "c_vec", "q_vec"
     )
     scored = cand.withColumn("cosine", cosine_sim_col(F.col("c_vec"), F.col("q_vec")))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", id_col, "cosine", "rank")
     )
 
 
@@ -295,9 +287,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: a corpus vector is scored iff it shares a
@@ -317,20 +306,20 @@ def lsh_topk(
     if dim is None:
         raise ValueError(_DIM_REQUIRED)
     codes = bucket_codes_udf(dim, n_planes, n_tables)
-    c = with_norm(emb, vec_col)
+    c = with_norm(emb)
     corpus = c.select(
-        id_col,
+        "vec_id",
         F.col("vec_n").alias("c_vec"),
-        F.posexplode(codes(F.col(vec_col))).alias("table_id", "bucket"),
+        F.posexplode(codes(F.col("embedding"))).alias("table_id", "bucket"),
     )
-    p = with_norm(queries, vec_col)
+    p = with_norm(queries)
     # per table: exact bucket + all 1-bit flips (multiprobe)
     probe_rows = p.select(
-        query_id_col,
+        "query_id",
         F.col("vec_n").alias("q_vec"),
-        F.posexplode(codes(F.col(vec_col))).alias("table_id", "bucket0"),
+        F.posexplode(codes(F.col("embedding"))).alias("table_id", "bucket0"),
     ).select(
-        query_id_col,
+        "query_id",
         "q_vec",
         "table_id",
         F.explode(
@@ -344,15 +333,15 @@ def lsh_topk(
     )
     cand = (
         corpus.join(F.broadcast(probe_rows), ["table_id", "bucket"])
-        .select(query_id_col, id_col, "c_vec", "q_vec")
-        .dropDuplicates([query_id_col, id_col])
+        .select("query_id", "vec_id", "c_vec", "q_vec")
+        .dropDuplicates(["query_id", "vec_id"])
     )
     scored = cand.withColumn("cosine", cosine_sim_col(F.col("c_vec"), F.col("q_vec")))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -381,8 +370,6 @@ def _sq_dist_int(a: Column, b: Column) -> Column:
 def pq_codebook(
     emb: DataFrame,
     n_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """One-row broadcastable PQ codebook: the first ``n_codes`` corpus
     vectors (by id), quantized — the RNG-free deterministic-codebook
@@ -395,8 +382,8 @@ def pq_codebook(
     i+1 holds centroid i; construction is action-free (the single
     groupBy row materializes lazily inside the consuming plan)."""
     return (
-        emb.filter(F.col(id_col) < n_codes)
-        .select(F.col(id_col).alias("cid"), quantized_vec(F.col(vec_col)).alias("cv"))
+        emb.filter(F.col("vec_id") < n_codes)
+        .select(F.col("vec_id").alias("cid"), quantized_vec(F.col("embedding")).alias("cv"))
         .groupBy()
         .agg(F.array_sort(F.collect_list(F.struct("cid", "cv"))).alias("cbook"))
     )
@@ -418,8 +405,6 @@ def pq_encode(
     codebook: DataFrame,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     with_cell: bool = False,
 ) -> DataFrame:
     """PQ encode (Jégou, Douze & Schmid 2011, "Product Quantization
@@ -444,7 +429,7 @@ def pq_encode(
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub = dim // n_sub
     df = (
-        emb.select(id_col, quantized_vec(F.col(vec_col)).alias("qv"))
+        emb.select("vec_id", quantized_vec(F.col("embedding")).alias("qv"))
         .crossJoin(F.broadcast(codebook))
     )
     for m in range(n_sub):
@@ -460,10 +445,10 @@ def pq_encode(
         ]
     )
     if not with_cell:
-        return df.select(id_col, codes.alias("codes"))
+        return df.select("vec_id", codes.alias("codes"))
     df = df.withColumn("_dc", _sub_dists(F.col("qv"), F.col("cbook"), 0, dim))
     cell = (F.array_position(F.col("_dc"), F.array_min(F.col("_dc"))) - 1).cast("int")
-    return df.select(id_col, cell.alias("cell"), codes.alias("codes"))
+    return df.select("vec_id", cell.alias("cell"), codes.alias("codes"))
 
 
 def pq_query_luts(
@@ -471,8 +456,6 @@ def pq_query_luts(
     codebook: DataFrame,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "query_id",
-    vec_col: str = "embedding",
     with_cell: bool = False,
 ) -> DataFrame:
     """(query_id, lut array<array<bigint>>): the ADC lookup tables —
@@ -484,17 +467,17 @@ def pq_query_luts(
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub = dim // n_sub
     df = (
-        queries.select(id_col, quantized_vec(F.col(vec_col)).alias("qv"))
+        queries.select("query_id", quantized_vec(F.col("embedding")).alias("qv"))
         .crossJoin(F.broadcast(codebook))
     )
     lut = F.array(
         *[_sub_dists(F.col("qv"), F.col("cbook"), m, sub) for m in range(n_sub)]
     )
     if not with_cell:
-        return df.select(id_col, lut.alias("lut"))
+        return df.select("query_id", lut.alias("lut"))
     df = df.withColumn("_dc", _sub_dists(F.col("qv"), F.col("cbook"), 0, dim))
     cell = (F.array_position(F.col("_dc"), F.array_min(F.col("_dc"))) - 1).cast("int")
-    return df.select(id_col, cell.alias("cell"), lut.alias("lut"))
+    return df.select("query_id", cell.alias("cell"), lut.alias("lut"))
 
 
 def pq_adc_topk(
@@ -502,8 +485,6 @@ def pq_adc_topk(
     luts: DataFrame,
     n_sub: int = 4,
     k: int = 3,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
     cell_restrict: bool = False,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: approx dist(q, x) =
@@ -521,11 +502,11 @@ def pq_adc_topk(
     the exhaustive scan, the single-probe recall-vs-cost knob."""
     if cell_restrict:
         j = codes.join(F.broadcast(luts), "cell").filter(
-            F.col(id_col) != F.col(query_id_col)
+            F.col("vec_id") != F.col("query_id")
         )
     else:
         j = codes.crossJoin(F.broadcast(luts)).filter(
-            F.col(id_col) != F.col(query_id_col)
+            F.col("vec_id") != F.col("query_id")
         )
     adc = None
     for m in range(n_sub):
@@ -534,10 +515,10 @@ def pq_adc_topk(
             F.element_at(F.col("codes"), m + 1) + F.lit(1),
         )
         adc = term if adc is None else adc + term
-    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_dist").asc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
     return (
-        j.select(query_id_col, id_col, adc.cast("bigint").alias("adc_dist"))
+        j.select("query_id", "vec_id", adc.cast("bigint").alias("adc_dist"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_dist", "rank")
+        .select("query_id", "vec_id", "adc_dist", "rank")
     )

@@ -64,20 +64,18 @@ def hll_reg_rho(h: Column) -> tuple[Column, Column]:
     return reg, rho
 
 
-def hll_registers(
-    df: DataFrame, text_col: str = "text", group_col: str = "lang"
-) -> DataFrame:
-    """(group, reg, m_j) HLL register state over the 3-gram shingle
-    universe (register algebra: hll_reg_rho).  One map-side-combining
-    groupBy; at most group_cardinality * 256 output rows regardless
+def hll_registers(df: DataFrame) -> DataFrame:
+    """(lang, reg, m_j) HLL register state over the 3-gram shingle
+    universe of ``text`` (register algebra: hll_reg_rho).  One
+    map-side-combining groupBy; at most n_langs * 256 output rows regardless
     of corpus size."""
     e = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(group_col, F.explode(shingles3_lower(F.col(text_col))).alias("tok"))
+        df.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select("lang", F.explode(shingles3_lower(F.col("text"))).alias("tok"))
     )
     reg, rho = hll_reg_rho(md5_prefix_hash(F.col("tok")))
-    t = e.select(group_col, reg.alias("reg"), rho.alias("rho"))
-    return t.groupBy(group_col, "reg").agg(F.max("rho").alias("m_j"))
+    t = e.select("lang", reg.alias("reg"), rho.alias("rho"))
+    return t.groupBy("lang", "reg").agg(F.max("rho").alias("m_j"))
 
 
 def hll_estimate(
@@ -128,25 +126,23 @@ def hll_estimate(
     return state.select(*cols)
 
 
-def cms_cells(
-    df: DataFrame, text_col: str = "text", d: int = 4, w: int = 512
-) -> DataFrame:
+def cms_cells(df: DataFrame) -> DataFrame:
     """(r, col, cell_n) Count-Min cells over the 3-gram shingle
-    universe — d rows x w columns of md5-derived counters, one
-    map-side-combining groupBy (constant d*w state regardless of
+    universe — 4 rows x 512 columns of md5-derived counters, one
+    map-side-combining groupBy (constant 4*512 state regardless of
     corpus size). Unlike HLL registers, CMS cells merge by SUM —
     NOT idempotent, so incremental/streaming use must dedupe epochs
     before merging."""
     e = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.explode(shingles3_lower(F.col(text_col))).alias("tok"))
+        df.filter(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.explode(shingles3_lower(F.col("text"))).alias("tok"))
     )
     rc = F.posexplode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(d - 1)),
+            F.sequence(F.lit(0), F.lit(3)),
             lambda r: md5_prefix_hash(
                 F.concat_ws("#", F.col("tok"), r.cast("string"))
-            ) % w,
+            ) % 512,
         )
     ).alias("r", "col")
     return (
@@ -167,30 +163,24 @@ def rademacher_sign(t: int, p: int, j: int) -> int:
     return 1 if int(h[0], 16) >= 8 else -1
 
 
-def md5_lsh_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """(id, table_id, bucket): multi-table hyperplane-LSH sign
-    buckets under the cross-engine family. Vectors are QUANTIZED to
+def md5_lsh_buckets(df: DataFrame) -> DataFrame:
+    """(vec_id, table_id, bucket): 2-table x 6-plane hyperplane-LSH
+    sign buckets of the 64-dim ``embedding`` under the cross-engine
+    family. Vectors are QUANTIZED to
     round(x*1000) int64 before the plane dot product so the sign bits
     are integer arithmetic — a float sum's last-ulp difference can
     never flip a near-zero dot across engines. Plane signs come from
     rademacher_sign and fold in as literals (Spark) / recompute as
     md5 (DuckDB, see _SQL_MD5_LSH_BUCKETS)."""
     qv = F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * 1000).cast("bigint")
+        F.col("embedding"), lambda x: F.round(x.cast("double") * 1000).cast("bigint")
     )
 
     def bucket(t: int) -> Column:
         b = F.lit(0)
-        for p in range(n_planes):
+        for p in range(6):
             plane = F.array(
-                *[F.lit(rademacher_sign(t, p, j)) for j in range(dim)]
+                *[F.lit(rademacher_sign(t, p, j)) for j in range(64)]
             )
             d = F.aggregate(
                 F.zip_with(F.col("qv"), plane, lambda x, y: x * y.cast("bigint")),
@@ -200,17 +190,17 @@ def md5_lsh_buckets(
             b = b + F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         return b
 
-    return df.select(id_col, qv.alias("qv")).select(
-        id_col,
-        F.posexplode(F.array(*[bucket(t) for t in range(n_tables)])).alias(
+    return df.select("vec_id", qv.alias("qv")).select(
+        "vec_id",
+        F.posexplode(F.array(*[bucket(t) for t in range(2)])).alias(
             "table_id", "bucket"
         ),
     )
 
 
-#: DuckDB replay of md5_lsh_buckets (defaults 2 tables x 6 planes x
-#: dim 64) — CTEs `planes`, `qv`, `dots`, `buckets(vec_id, table_id,
-#: bucket)`; prepend inside a WITH chain.
+#: DuckDB replay of md5_lsh_buckets (2 tables x 6 planes x dim 64) —
+#: CTEs `planes`, `qv`, `dots`, `buckets(vec_id, table_id, bucket)`;
+#: prepend inside a WITH chain.
 SQL_MD5_LSH_BUCKETS = """planes AS (
   SELECT t, p, j,
     CASE WHEN ('0x' || substr(md5('pl|' || t::VARCHAR || '|' || p::VARCHAR

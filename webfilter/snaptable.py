@@ -711,9 +711,8 @@ class SnapshotTable:
             )
         return df.drop("__apath", "__fseq")
 
-    def file_count(self, snapshot: int | None = None) -> int:
-        seq = self.current_snapshot() if snapshot is None else snapshot
-        return len(self._resolve(seq)[0])
+    def file_count(self) -> int:
+        return len(self._resolve(self.current_snapshot())[0])
 
     def delete_rows(
         self, keys_df: DataFrame, key_cols: list[str]
@@ -825,9 +824,8 @@ class SnapshotTable:
             "rows": sum(e["rows"] for e in added),
         }
 
-    def delete_file_count(self, snapshot: int | None = None) -> int:
-        seq = self.current_snapshot() if snapshot is None else snapshot
-        return len(self._resolve_full(seq)[1])
+    def delete_file_count(self) -> int:
+        return len(self._resolve_full(self.current_snapshot())[1])
 
     def compact_manifests(self) -> int:
         """Fold the current snapshot's resolved entries into ONE

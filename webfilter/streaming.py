@@ -438,19 +438,14 @@ def run_metrics_stream(
     )
 
 
-def streaming_sessionized_counts(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts: str = "warc_ts",
-    key: str = "lang",
-) -> DataFrame:
+def streaming_sessionized_counts(events_stream: DataFrame) -> DataFrame:
     """Kept for SCALING.md "Streaming" (watermarked sessionization).
 
     Watermarked STREAMING session windows (`F.session_window` in a
     streaming groupBy — beyond the reference, which has no streaming
-    aggregation at all): per-key dynamic-gap sessions whose state is
-    GC'd once the watermark passes a session's close. The batch twin
+    aggregation at all): per-``lang`` sessions over ``warc_ts`` with a
+    30-minute gap, whose state is GC'd once the 1-hour watermark passes
+    a session's close. The batch twin
     is `entry_queries.q_sessionize`; `tests/test_streaming.py`
     asserts the drained stream equals the batch `session_window`
     aggregation on the same input — the streaming/batch unification
@@ -460,12 +455,12 @@ def streaming_sessionized_counts(
     rate per key; the watermark is what keeps a 10^12-event stream's
     state finite."""
     return (
-        events_stream.withColumn(ts, F.col(ts).cast("timestamp"))
-        .withWatermark(ts, watermark)
-        .groupBy(F.session_window(F.col(ts), gap).alias("sw"), F.col(key))
+        events_stream.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+        .withWatermark("warc_ts", "1 hour")
+        .groupBy(F.session_window(F.col("warc_ts"), "30 minutes").alias("sw"), F.col("lang"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         .select(
-            F.col(key),
+            F.col("lang"),
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
@@ -474,16 +469,13 @@ def streaming_sessionized_counts(
 
 
 def run_sessionized_stream(
-    spark: SparkSession, src_path: str, out_table: str, checkpoint: str,
-    max_files: int = 1, gap: str = "30 minutes",
+    spark: SparkSession, src_path: str, out_table: str, checkpoint: str
 ):
     """Drain the file stream through streaming sessionization into an
     in-memory sink (tests); production sink = Iceberg append. Append
     mode emits a session only once the watermark closes it."""
     return _drain(
-        streaming_sessionized_counts(
-            read_pages_stream(spark, src_path, max_files), gap=gap
-        )
+        streaming_sessionized_counts(read_pages_stream(spark, src_path, 1))
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(out_table),

@@ -108,10 +108,9 @@ def _gibberish_words(doc_id: int, n: int) -> list[str]:
     return words
 
 
-def _to_lines(words: list[str], per_line: int = 12) -> str:
-    lines = [
-        " ".join(words[i : i + per_line]) for i in range(0, len(words), per_line)
-    ]
+def _to_lines(words: list[str]) -> str:
+    """12 words per line."""
+    lines = [" ".join(words[i : i + 12]) for i in range(0, len(words), 12)]
     return "\n".join(lines)
 
 
@@ -349,9 +348,8 @@ WIDE_SCHEMA = (
 )
 
 
-def synth_wide(spark: SparkSession, n_docs: int, parallelism: int | None = None) -> DataFrame:
+def synth_wide(spark: SparkSession, n_docs: int) -> DataFrame:
     """Distributed deterministic generation (partition-invariant)."""
-    parallelism = parallelism or spark.sparkContext.defaultParallelism
 
     def gen(it):
         for pdf in it:
@@ -360,7 +358,7 @@ def synth_wide(spark: SparkSession, n_docs: int, parallelism: int | None = None)
                 yield gen_batch(ids, n_docs)
 
     return (
-        spark.range(0, n_docs, numPartitions=parallelism)
+        spark.range(0, n_docs, numPartitions=spark.sparkContext.defaultParallelism)
         .mapInPandas(gen, schema=WIDE_SCHEMA)
     )
 

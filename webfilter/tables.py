@@ -226,13 +226,7 @@ class ParquetCatalog:
             stats[key] = (len(pf), n)
         return stats
 
-    def compact(
-        self,
-        name: str,
-        target_bytes: int = 128 << 20,
-        part_col: str | None = None,
-        min_files: int = 2,
-    ) -> dict:
+    def compact(self, name: str, part_col: str | None = None) -> dict:
         """Kept for SCALING.md "Layout & retrieval" (small-file
         compaction).
 
@@ -241,9 +235,8 @@ class ParquetCatalog:
         and streaming micro-batch leaves one-or-more files; at 10^12
         docs a day of micro-batches is millions of tiny files whose
         open/footer cost dominates the scan. Bin-pack each fragmented
-        partition (>= min_files files AND under target_bytes total)
-        back to one file; bigger fragmented partitions get
-        ceil(bytes/target) files.
+        partition (>= 2 files AND under 128 MiB total) back to one
+        file; an unpartitioned table gets ceil(bytes/128 MiB) files.
 
         Only fragmented partitions are rewritten (dynamic partition
         overwrite — untouched partitions keep their exact files, same
@@ -258,6 +251,7 @@ class ParquetCatalog:
 
         from pyspark.sql import functions as F
 
+        target_bytes = 128 << 20
         base = self.path(name)
         before = self._file_stats(name)
         files_before = sum(n for n, _ in before.values())
@@ -266,7 +260,7 @@ class ParquetCatalog:
         if part_col is None:
             total = sum(b for _, b in before.values())
             n_out = max(1, math.ceil(total / target_bytes))
-            if files_before <= max(n_out, min_files - 1):
+            if files_before <= n_out:
                 return {
                     "files_before": files_before,
                     "files_after": files_before,
@@ -298,7 +292,7 @@ class ParquetCatalog:
             # fragmented = several files that together still fit one
             # target file; bigger partitions are left to a ranged
             # rewrite (zorder_write) rather than a blind coalesce
-            if key and n >= min_files and b < target_bytes:
+            if key and n >= 2 and b < target_bytes:
                 frag.append(key)
         if not frag:
             return {

@@ -27,8 +27,8 @@ def bpe_token_count_col(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_REGEX))
 
 
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
+def with_token_counts(df: DataFrame) -> DataFrame:
+    t = F.col("text")
     return df.withColumns(
         {
             "n_ws_tokens": ws_token_count_col(t).cast("bigint"),
@@ -69,13 +69,13 @@ def quality_score_col(text: Column) -> Column:
     )
 
 
-def dup_ngram_fraction_col(text: Column, k: int = 2) -> Column:
-    """Gopher-style repetition signal: fraction of word k-gram
+def dup_ngram_fraction_col(text: Column) -> Column:
+    """Gopher-style repetition signal: fraction of word 2-gram
     OCCURRENCES that are repeats of an earlier occurrence
-    ((total - distinct) / total; 0.0 when fewer than k words).
+    ((total - distinct) / total; 0.0 when fewer than 2 words).
     Fully SQL-expressible -> DuckDB oracle.
     """
-    grams = sliding(tokens_col(text), k, lambda *t: F.concat_ws(" ", *t))
+    grams = sliding(tokens_col(text), 2, lambda *t: F.concat_ws(" ", *t))
     total = F.size(grams)
     return (
         F.when(total > 0, (total - F.size(F.array_distinct(grams))) / total)
@@ -92,15 +92,13 @@ def content_fingerprint_col(text: Column) -> Column:
     return F.md5(norm)
 
 
-def winnowing_fingerprints_col(
-    text: Column, k: int = 5, window: int = 4, hash_fn=None
-) -> Column:
+def winnowing_fingerprints_col(text: Column, hash_fn=None) -> Column:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03):
-    hash every k-gram of words, keep the min hash of each sliding
-    window of k-gram hashes, return the distinct selected hashes.
+    hash every 5-gram of words, keep the min hash of each sliding
+    window of 4 k-gram hashes, return the distinct selected hashes.
 
-    Pure Column algebra. Guarantees: any shared run of >= window+k-1
-    words between two docs yields a shared fingerprint.
+    Pure Column algebra. Guarantees: any shared run of >= 8 words
+    between two docs yields a shared fingerprint.
 
     `hash_fn` maps a string Column (the space-joined k-gram) to an
     integer Column. Default is xxhash64 — the fast JVM production
@@ -116,6 +114,7 @@ def winnowing_fingerprints_col(
     # empty/whitespace-only doc would fingerprint the empty string —
     # a doc with no tokens must emit NO fingerprints (fuzz-found: the
     # DuckDB oracle correctly emits none)
+    k, window = 5, 4
     toks = tokens_col(F.lower(text))
     n = F.size(toks)
     grams = sliding(toks, k, lambda *t: hash_fn(F.concat_ws(" ", *t)))
@@ -126,13 +125,11 @@ def winnowing_fingerprints_col(
     return F.when(n == 0, empty).otherwise(F.array_sort(F.array_distinct(out)))
 
 
-def gopher_repetition_signals(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-) -> DataFrame:
+_GOPHER_TOP_NS = (2, 3, 4)
+_GOPHER_DUP_NS = (5, 10)
+
+
+def gopher_repetition_signals(df: DataFrame) -> DataFrame:
     """The Gopher repetition-filter signal family (Rae et al. 2021,
     §A1.1), character-fraction forms:
 
@@ -158,23 +155,23 @@ def gopher_repetition_signals(
     captured-array-in-lambda O(n * distinct) pattern this repo bans
     (see rules.sliding), hence the explode + groupBy form.
     """
-    toks = tokens_col(F.lower(F.col(text_col)))
+    toks = tokens_col(F.lower(F.col("text")))
     base = df.select(
-        F.col(id_col), F.length(text_col).cast("double").alias("_nc"), toks.alias("_tk")
+        F.col("doc_id"), F.length("text").cast("double").alias("_nc"), toks.alias("_tk")
     )
     parts = []
-    for n in sorted(set(top_ns) | set(dup_ns)):
+    for n in sorted(set(_GOPHER_TOP_NS) | set(_GOPHER_DUP_NS)):
         grams = sliding(F.col("_tk"), n, lambda *t: F.concat_ws(" ", *t))
         parts.append(
             base.select(
-                id_col, F.lit(n).alias("_n"), F.explode(grams).alias("_gram")
+                "doc_id", F.lit(n).alias("_n"), F.explode(grams).alias("_gram")
             )
         )
     g = parts[0]
     for p in parts[1:]:
         g = g.unionByName(p)
-    counts = g.groupBy(id_col, "_n", "_gram").agg(F.count(F.lit(1)).alias("_cnt"))
-    per_n = counts.groupBy(id_col, "_n").agg(
+    counts = g.groupBy("doc_id", "_n", "_gram").agg(F.count(F.lit(1)).alias("_cnt"))
+    per_n = counts.groupBy("doc_id", "_n").agg(
         F.max(F.struct("_cnt", "_gram")).alias("_top"),
         F.sum(
             F.when(F.col("_cnt") >= 2, F.col("_cnt") * F.length("_gram")).otherwise(0)
@@ -182,23 +179,23 @@ def gopher_repetition_signals(
     )
     top_chars = F.col("_top._cnt") * F.length(F.col("_top._gram"))
     aggs = []
-    for n in top_ns:
+    for n in _GOPHER_TOP_NS:
         aggs.append(
             F.max(F.when(F.col("_n") == n, top_chars)).alias(f"_topc_{n}")
         )
-    for n in dup_ns:
+    for n in _GOPHER_DUP_NS:
         aggs.append(
             F.max(F.when(F.col("_n") == n, F.col("_dupchars"))).alias(f"_dupc_{n}")
         )
-    wide = per_n.groupBy(id_col).agg(*aggs)
-    out = base.select(id_col, "_nc").join(wide, id_col, "left")
-    cols = [F.col(id_col)]
-    for n in top_ns:
+    wide = per_n.groupBy("doc_id").agg(*aggs)
+    out = base.select("doc_id", "_nc").join(wide, "doc_id", "left")
+    cols = [F.col("doc_id")]
+    for n in _GOPHER_TOP_NS:
         frac = F.coalesce(F.col(f"_topc_{n}"), F.lit(0)) / F.greatest(
             F.col("_nc"), F.lit(1.0)
         )
         cols.append(frac.cast("double").alias(f"top_{n}gram_char_frac"))
-    for n in dup_ns:
+    for n in _GOPHER_DUP_NS:
         frac = F.coalesce(F.col(f"_dupc_{n}"), F.lit(0)) / F.greatest(
             F.col("_nc"), F.lit(1.0)
         )

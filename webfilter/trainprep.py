@@ -59,7 +59,6 @@ def decontaminate(
     benchmark: DataFrame,
     n: int = 8,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: for each corpus doc, count distinct
     word n-grams it shares with any benchmark document (the
@@ -79,13 +78,13 @@ def decontaminate(
     """
     bench_grams = (
         benchmark.select(
-            F.explode(ngram_strings_col(F.col(text_col), n)).alias("gram")
+            F.explode(ngram_strings_col(F.col("text"), n)).alias("gram")
         )
         .distinct()
     )
     doc_grams = docs.select(
         F.col(id_col),
-        F.explode(ngram_strings_col(F.col(text_col), n)).alias("gram"),
+        F.explode(ngram_strings_col(F.col("text"), n)).alias("gram"),
     )
     hits = doc_grams.join(F.broadcast(bench_grams), "gram", "inner")
     # grams are already distinct per doc (array_distinct upstream), so
@@ -98,7 +97,6 @@ def decontaminate(
 def frequent_terms(
     docs: DataFrame,
     min_per_mille: int = 1,
-    text_col: str = "text",
     max_broadcast_candidates: int | None = None,
 ) -> DataFrame:
     """EXACT heavy hitters: terms occurring in >= min_per_mille/1000
@@ -123,9 +121,9 @@ def frequent_terms(
     from scratch with a full GROUP BY and must agree row-for-row.
     """
     f = min_per_mille / 1000.0
-    toks = tokens_col(F.lower(F.col(text_col)))
+    toks = tokens_col(F.lower(F.col("text")))
     terms = docs.select(
-        F.explode(F.when(F.length(F.trim(F.col(text_col))) > 0, toks)).alias("term")
+        F.explode(F.when(F.length(F.trim(F.col("text"))) > 0, toks)).alias("term")
     )
 
     def local_heavy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -275,7 +273,6 @@ def pack_sequences(
     docs: DataFrame,
     capacity: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 16,
 ) -> DataFrame:
     """Deterministic sequence packing for pretraining batches:
@@ -296,9 +293,9 @@ def pack_sequences(
     Output: id_col, pack_bucket, n_tokens, pack_id (per bucket),
     start_off (token offset of this doc inside its pack), spans_packs.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     n_tokens = (
-        F.when(F.length(F.trim(F.col(text_col))) > 0, F.size(toks))
+        F.when(F.length(F.trim(F.col("text"))) > 0, F.size(toks))
         .otherwise(F.lit(0))
         .cast("bigint")
     )
@@ -347,7 +344,6 @@ def dataset_split_col(id_col: Column, train: int = 80, val: int = 10) -> Column:
 
 def domain_mixture_weights(
     df: DataFrame,
-    domain_col: str = "source",
     alpha: float = 0.7,
 ) -> DataFrame:
     """Temperature-scaled domain sampling weights: w_d ∝ n_d^alpha,
@@ -358,7 +354,7 @@ def domain_mixture_weights(
     over the post-agg domain dim (thousands of rows at web scale,
     not documents), via an unpartitioned window — fine BECAUSE it is
     post-agg; never apply this window pre-agg."""
-    counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("n_docs"))
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     wsum = Window.partitionBy()
     raw = F.pow(F.col("n_docs").cast("double"), F.lit(float(alpha)))
     return counts.withColumn(
@@ -368,8 +364,6 @@ def domain_mixture_weights(
 
 def domain_mixture_sample(
     df: DataFrame,
-    id_col: str = "doc_id",
-    domain_col: str = "source",
     alpha: float = 0.7,
     target_docs: int = 1000,
 ) -> DataFrame:
@@ -384,13 +378,13 @@ def domain_mixture_sample(
     table is touched by exactly one narrow filter pass after one
     count shuffle.
     """
-    weights = domain_mixture_weights(df, domain_col, alpha).withColumn(
+    weights = domain_mixture_weights(df, alpha=alpha).withColumn(
         "accept_rate",
         F.least(
             F.lit(1.0), F.col("weight") * F.lit(float(target_docs)) / F.col("n_docs")
         ),
     )
-    h = md5_prefix_hash(F.col(id_col).cast("string"), 8) % 1_000_000
+    h = md5_prefix_hash(F.col("doc_id").cast("string"), 8) % 1_000_000
     # NULL-SAFE join: a NULL domain is a real group — its count
     # participates in the weight normalization, so dropping its docs
     # via a plain equi-join would deflate every real domain's
@@ -398,11 +392,11 @@ def domain_mixture_sample(
     # finding #3)
     wdim = F.broadcast(
         weights.select(
-            F.col(domain_col).alias("_wf_dom"), "accept_rate"
+            F.col("source").alias("_wf_dom"), "accept_rate"
         )
     )
     return (
-        df.join(wdim, F.col(domain_col).eqNullSafe(F.col("_wf_dom")))
+        df.join(wdim, F.col("source").eqNullSafe(F.col("_wf_dom")))
         .filter(h < F.col("accept_rate") * 1_000_000)
         .drop("accept_rate", "_wf_dom")
     )
@@ -425,14 +419,12 @@ def _md5_bucket(col: Column, n_buckets: int) -> Column:
 def dsir_log_ratio_table(
     df: DataFrame,
     target_col: str,
-    text_col: str = "text",
     n_buckets: int = 512,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """(bucket, llr) — per-bucket log importance ratio between the
     target subset (rows where ``target_col`` is true) and the whole
-    corpus, over hashed lowercased unigram buckets with add-alpha
-    smoothing:
+    corpus, over hashed lowercased unigram buckets with add-a
+    smoothing (a = 0.5):
 
         llr(b) = ln((c_t(b)+a) / (N_t+a*B)) - ln((c_r(b)+a) / (N_r+a*B))
 
@@ -441,8 +433,8 @@ def dsir_log_ratio_table(
     normalizing totals ride the broadcast single-row cross-join idiom
     (domain_mixture_weights precedent). Output is <= n_buckets rows —
     a broadcastable dim no matter the corpus size."""
-    toks = tokens_col(F.lower(F.col(text_col)))
-    ex = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
+    toks = tokens_col(F.lower(F.col("text")))
+    ex = df.filter(F.length(F.trim(F.col("text"))) > 0).select(
         F.col(target_col).cast("boolean").alias("is_t"),
         F.explode(toks).alias("tok"),
     )
@@ -454,7 +446,7 @@ def dsir_log_ratio_table(
         F.sum("c_r").cast("double").alias("n_r"),
         F.sum("c_t").cast("double").alias("n_t"),
     )
-    a = F.lit(float(alpha))
+    a = F.lit(0.5)
     b = F.lit(float(n_buckets))
     llr = F.log((F.col("c_t") + a) / (F.col("n_t") + a * b)) - F.log(
         (F.col("c_r") + a) / (F.col("n_r") + a * b)
@@ -467,10 +459,7 @@ def dsir_log_ratio_table(
 def dsir_scores(
     df: DataFrame,
     target_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 512,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-doc DSIR log importance weight: sum (and mean) of the
     bucket log-ratios over the doc's tokens. Docs with no tokens have
@@ -479,18 +468,18 @@ def dsir_scores(
     Scale shape: the <= n_buckets log-ratio dim BROADCASTS to the
     exploded corpus (map-side join, no corpus shuffle for the
     lookup); the only wide exchange is the per-doc sum keyed on
-    ``id_col`` — uniform by construction. Nothing about the corpus
+    ``doc_id`` — uniform by construction. Nothing about the corpus
     size reaches the driver."""
-    lr = dsir_log_ratio_table(df, target_col, text_col, n_buckets, alpha)
-    toks = tokens_col(F.lower(F.col(text_col)))
-    ex = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col),
+    lr = dsir_log_ratio_table(df, target_col, n_buckets=n_buckets)
+    toks = tokens_col(F.lower(F.col("text")))
+    ex = df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id"),
         F.explode(toks).alias("tok"),
     )
     return (
         ex.withColumn("bucket", _md5_bucket(F.col("tok"), n_buckets))
         .join(F.broadcast(lr), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_toks"),
             F.sum("llr").alias("llr_sum"),
@@ -503,26 +492,24 @@ def gumbel_topk_sample(
     scored: DataFrame,
     score_col: str,
     k: int,
-    id_col: str = "doc_id",
-    temperature: float = 1.0,
     seed_tag: str = "dsir",
 ) -> DataFrame:
     """Deterministic Gumbel-top-k sampling: draw k rows with
-    probability proportional to exp(score/temperature), using the
+    probability proportional to exp(score), using the
     Gumbel-max trick with md5-derived uniforms instead of RNG —
     u = (md5_32(id || tag) + 0.5) / 2^32, g = -ln(-ln(u)),
-    key = score/T + g; the k largest keys ARE a weighted sample
+    key = score + g; the k largest keys ARE a weighted sample
     without replacement (Vieira 2014). Reproducible across engines,
     runs and cluster sizes; change ``seed_tag`` for a fresh draw.
 
     Scale shape: one narrow projection + a global top-k
     (TakeOrderedAndProject — per-partition heaps, only k rows ever
     cross to the driver-side reduce; no full sort materializes)."""
-    h = md5_prefix_hash(F.concat(F.col(id_col).cast("string"), F.lit(seed_tag)), 8)
+    h = md5_prefix_hash(F.concat(F.col("doc_id").cast("string"), F.lit(seed_tag)), 8)
     u = (h.cast("double") + 0.5) / F.lit(4294967296.0)
-    key = F.col(score_col) / F.lit(float(temperature)) - F.log(-F.log(u))
+    key = F.col(score_col) - F.log(-F.log(u))
     return (
         scored.withColumn("sample_key", key)
-        .orderBy(F.desc("sample_key"), F.col(id_col))
+        .orderBy(F.desc("sample_key"), F.col("doc_id"))
         .limit(int(k))
     )

@@ -85,7 +85,6 @@ def host_col(url: Column) -> Column:
 
 def canonical_dedup(
     df: DataFrame,
-    url_col: str = "url",
     order_col: str | None = None,
     descending: bool = False,
 ) -> DataFrame:
@@ -100,7 +99,7 @@ def canonical_dedup(
     10^12 rows the window runs per canonical-key group, never
     global.
     """
-    order = F.col(order_col) if order_col else F.col(url_col)
+    order = F.col(order_col) if order_col else F.col("url")
     if descending:
         order = order.desc()
     # NULL-url rows are all representatives of themselves: a NULL
@@ -116,8 +115,8 @@ def canonical_dedup(
             F.monotonically_increasing_id().cast("string"),
         ),
     )
-    w = Window.partitionBy(spread).orderBy(order, F.col(url_col))
-    return df.withColumn("canon_url", canonical_url_col(F.col(url_col))).withColumn(
+    w = Window.partitionBy(spread).orderBy(order, F.col("url"))
+    return df.withColumn("canon_url", canonical_url_col(F.col("url"))).withColumn(
         "canon_rep",
         F.when(F.col("canon_url").isNull(), F.lit(True)).otherwise(
             F.row_number().over(w) == 1
@@ -132,9 +131,7 @@ def outlink_urls_col(html: Column) -> Column:
     return F.regexp_extract_all(html, F.lit(r'<a[^>]+href="([^"]+)"'), 1)
 
 
-def outlink_host_counts(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def outlink_host_counts(df: DataFrame) -> DataFrame:
     """Per-host outlink stats over a page corpus: explode the
     extracted hrefs, key by lowercased host, count links and distinct
     linking docs. One shuffle on the host key (count-distinct of the
@@ -142,15 +139,15 @@ def outlink_host_counts(
     dropped. The web link graph's edge-aggregation step — feeds
     `graph.pagerank` at host granularity."""
     links = df.select(
-        F.col(id_col),
-        F.explode(outlink_urls_col(F.col(html_col))).alias("href"),
-    ).select(F.col(id_col), host_col(F.col("href")).alias("host"))
+        F.col("doc_id"),
+        F.explode(outlink_urls_col(F.col("html"))).alias("href"),
+    ).select(F.col("doc_id"), host_col(F.col("href")).alias("host"))
     return (
         links.filter(F.col("host").isNotNull())
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_links"),
-            F.countDistinct(F.col(id_col)).cast("bigint").alias("n_docs"),
+            F.countDistinct(F.col("doc_id")).cast("bigint").alias("n_docs"),
         )
     )
 
@@ -161,9 +158,7 @@ def outlink_host_counts(
 _ANCHOR_LINK_RE = r'<a[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
-def anchor_host_stats(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def anchor_host_stats(df: DataFrame) -> DataFrame:
     """Anchor-text aggregation per TARGET host — the classic link
     signal (anchor terms describe the landing page better than its
     own body; Brin & Page 1998 §2.2 use it exactly this way). Links
@@ -179,10 +174,10 @@ def anchor_host_stats(
     a join on the host key relies on AQE's skew-join split.
     """
     link = F.explode(
-        F.regexp_extract_all(F.col(html_col), F.lit(_ANCHOR_LINK_RE), F.lit(0))
+        F.regexp_extract_all(F.col("html"), F.lit(_ANCHOR_LINK_RE), F.lit(0))
     ).alias("link")
-    links = df.select(F.col(id_col), link).select(
-        F.col(id_col),
+    links = df.select(F.col("doc_id"), link).select(
+        F.col("doc_id"),
         host_col(F.regexp_extract(F.col("link"), _ANCHOR_LINK_RE, 1)).alias("host"),
         F.lower(F.trim(F.regexp_extract(F.col("link"), _ANCHOR_LINK_RE, 2))).alias(
             "anchor"
@@ -194,7 +189,7 @@ def anchor_host_stats(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_anchors"),
             F.countDistinct(F.col("anchor")).cast("bigint").alias("n_distinct_anchors"),
-            F.countDistinct(F.col(id_col)).cast("bigint").alias("n_source_docs"),
+            F.countDistinct(F.col("doc_id")).cast("bigint").alias("n_source_docs"),
             F.min(F.col("anchor")).alias("first_anchor"),
         )
     )

@@ -182,8 +182,7 @@ def wet_files(records: DataFrame, n_shards: int = 8,
     )
 
 
-def warc_files(pages: DataFrame, n_shards: int = 8,
-               prefix: str = "SYNTH-WARC") -> DataFrame:
+def warc_files(pages: DataFrame, n_shards: int = 8) -> DataFrame:
     """pages(url, warc_ts, html binary) -> response-record WARC
     containers with a minimal HTTP/1.1 header block per record (the
     ``application/http`` payload real crawls carry)."""
@@ -191,7 +190,7 @@ def warc_files(pages: DataFrame, n_shards: int = 8,
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("url", kind="mergesort")
         shard = int(pdf["shard"].iloc[0])
-        name = f"{prefix}-{shard:05d}.warc.gz"
+        name = f"SYNTH-WARC-{shard:05d}.warc.gz"
         first_date = _date_iso(pdf["warc_ts"].iloc[0])
         parts = [_gzip_member(_warcinfo(name, first_date))]
         for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
@@ -327,31 +326,25 @@ def parse_wet(files: DataFrame, strict: bool = True) -> DataFrame:
     return files.mapInPandas(run, schema=WET_SCHEMA)
 
 
-def parse_warc(files: DataFrame, strict: bool = True) -> DataFrame:
+def parse_warc(files: DataFrame) -> DataFrame:
     """files(file, content) -> one row per response record with the
     HTTP header block split off the payload (html = exact body
-    bytes)."""
+    bytes). A malformed container, record or WARC-Date raises."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for file, content in zip(pdf["file"], pdf["content"]):
-                try:
-                    members = list(iter_members(bytes(content)))
-                except ValueError:
-                    if strict:
-                        raise
-                    continue
-                for raw in members:
+                # list(): a corrupt container raises before any of its
+                # records becomes a row
+                for raw in list(iter_members(bytes(content))):
                     rec = parse_record(raw)
-                    if rec is None or rec["headers"].get("warc-type") != "response":
-                        if rec is None and strict:
-                            raise ValueError(f"malformed WARC record in {file}")
+                    if rec is None:
+                        raise ValueError(f"malformed WARC record in {file}")
+                    if rec["headers"].get("warc-type") != "response":
                         continue
                     h = rec["headers"]
-                    ts = _parse_warc_date(h, strict)
-                    if ts is None:
-                        continue  # quarantined: undateable record
+                    ts = _parse_warc_date(h, True)
                     status, ctype, body = _http_split(rec["body"])
                     rows.append(
                         {
@@ -372,8 +365,7 @@ def parse_warc(files: DataFrame, strict: bool = True) -> DataFrame:
     return files.mapInPandas(run, schema=WARC_SCHEMA)
 
 
-def read_wet(spark: SparkSession, path_glob: str,
-             strict: bool = True) -> DataFrame:
+def read_wet(spark: SparkSession, path_glob: str) -> DataFrame:
     """Disk ingestion: binaryFile source (one partition per .wet.gz —
     the Common Crawl parallelism unit) -> parse_wet."""
     files = (
@@ -381,7 +373,7 @@ def read_wet(spark: SparkSession, path_glob: str,
         .load(path_glob)
         .select(F.col("path").alias("file"), "content")
     )
-    return parse_wet(files, strict=strict)
+    return parse_wet(files)
 
 
 #: binaryFile's fixed schema — streaming file sources require it
@@ -396,8 +388,7 @@ _BINARY_FILE_SCHEMA = T.StructType(
 )
 
 
-def stream_wet(spark: SparkSession, path: str, max_files: int = 16,
-               strict: bool = True) -> DataFrame:
+def stream_wet(spark: SparkSession, path: str, max_files: int = 16) -> DataFrame:
     """Kept for SCALING.md "Web-transport & compliance".
 
     Incremental WET ingestion: the checkpointed file-discovery
@@ -415,7 +406,7 @@ def stream_wet(spark: SparkSession, path: str, max_files: int = 16,
         .load(path)
         .select(F.col("path").alias("file"), "content")
     )
-    return parse_wet(files, strict=strict)
+    return parse_wet(files)
 
 
 # ------------------------------------------------------------------ CDX index
@@ -467,12 +458,12 @@ def cdx_lines(captures: DataFrame) -> DataFrame:
     )
 
 
-def parse_cdx(lines: DataFrame, line_col: str = "line") -> DataFrame:
+def parse_cdx(lines: DataFrame) -> DataFrame:
     """CDXJ lines -> typed capture rows. split(limit=3) isolates the
     JSON block (which itself contains spaces), from_json binds the
     string fields, casts type them. Map-only; a 100 TB index parses
     as a pure scan."""
-    parts = F.split(F.col(line_col), " ", 3)
+    parts = F.split(F.col("line"), " ", 3)
     j = F.from_json(parts[2], CDX_JSON_SCHEMA)
     return lines.select(
         parts[0].alias("surt"),

@@ -98,9 +98,8 @@ def with_zorder(
     df: DataFrame,
     cols: list[str],
     bits: int = 12,
-    zcol: str = "zval",
 ) -> DataFrame:
-    """Append the z-order key for integer columns ``cols``.
+    """Append the z-order key ``zval`` for integer columns ``cols``.
 
     One broadcast scalar agg supplies each dim's (min, max); the big
     side is map-only. Column order matters only for tie-layout, not
@@ -117,7 +116,7 @@ def with_zorder(
         binned_col(F.col(c), F.col(f"_zmin_{c}"), F.col(f"_zmax_{c}"), bits)
         for c in cols
     ]
-    out = out.withColumn(zcol, interleave_bits(binned, bits))
+    out = out.withColumn("zval", interleave_bits(binned, bits))
     return out.drop(*[f"_zmin_{c}" for c in cols], *[f"_zmax_{c}" for c in cols])
 
 
